@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tailpipe_spark.queries import build_registry
-from tailpipe_spark.session import TEST_TABLES, build_session
+from tailpipe_spark.session import TEST_TABLES, active_cpus, build_session
 
 HEADLINE = [
     # The bench measures the engine a user gets: plain SUM() runs the
@@ -107,18 +107,6 @@ def _running_procs() -> int:
         return -1
 
 
-def _active_cpus() -> int:
-    """The core count this bench run is ACTUALLY allowed to use:
-    $SPARK_GRAFT_CPUS when set (the driver's scaling probe restricts
-    the Spark master with it), else the box's count. r14 verdict
-    "what's wrong" #2: split sizing and DuckDB threads read
-    os.cpu_count() directly, so the c8 probe ran 32-core-shaped scan
-    splits and a 32-thread DuckDB — the c8/c32 comparison could never
-    show parallelism. Measurement-bug fix, not a tuning change: at the
-    driver's main c32 capture env == os.cpu_count() and nothing moves."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
-
-
 def _input_bytes(sf_dir: str) -> int:
     # followlinks: a provisioned layout dir (e.g. the bucketed sf10
     # twin) serves tables via symlinks into an engine workspace; the
@@ -144,7 +132,7 @@ def _auto_max_partition_bytes(total_bytes: int) -> int:
     measured 30-40% off q01/q03 at both sf0.1 and sf1 from this alone.
     Clamped to [4 MB, 128 MB]: at cluster scale total_bytes/(2·cores)
     crosses the cap and the standard default applies."""
-    cores = _active_cpus()
+    cores = active_cpus()
     return max(4 << 20, min(128 << 20, total_bytes // (cores * 2)))
 
 
@@ -161,7 +149,7 @@ def _auto_advisory_bytes(total_bytes: int) -> int:
     cluster-scale dataset — Spark's default applies unchanged, where
     the guide's 100 MB-1 GB shuffle-partition sizing takes over via
     shuffle.partitions and AQE skew splitting."""
-    cores = _active_cpus()
+    cores = active_cpus()
     return max(4 << 20, min(64 << 20, total_bytes // (cores * 4)))
 
 
@@ -463,9 +451,9 @@ def main() -> int:
         import duckdb
 
         con = duckdb.connect()
-        # same active-core contract as the Spark side (_active_cpus):
+        # same active-core contract as the Spark side (active_cpus):
         # the scaling probe must restrict BOTH engines
-        con.execute(f"SET threads TO {_active_cpus()}")
+        con.execute(f"SET threads TO {active_cpus()}")
         for t in TEST_TABLES:
             # generated bench sets (tools/gen_sf.py) are directories of
             # part files; DuckDB needs the glob form for those. A

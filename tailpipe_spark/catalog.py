@@ -822,18 +822,4 @@ class Catalog:
         # bucketed precisely because they are too big to ship; the
         # conservative estimate encodes that. Dimension tables are path
         # reads and keep their normal file-size estimates/broadcasts.
-        #
-        # Sorted bucket scan: the layout writes each bucket pre-sorted
-        # by the bucket key (one file per bucket per hive cell —
-        # bucket_rewrite aligns task hashing with bucket hashing), so
-        # the scan may report its SORTED BY order and the co-located
-        # SortMergeJoin runs sort-free — measured at sf10: the
-        # lineitem⋈orders merge drops 4.08 -> 2.11 s with the flag on.
-        # Value-correctness is pinned by the bucketed-twin oracle sweep
-        # (CORRECTNESS_SF10_BUCKETED_r15) and an adversarial
-        # interleaved multi-file-bucket probe (Spark 4.1 plans the
-        # merge correctly either way).
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-        )
         return spark.table(reg)

@@ -7,24 +7,31 @@ Spark shape:
 - file stats (rows, min/max tp_timestamp) come from parquet footers —
   driver-side metadata, no data read (A20/A22)
 - the interval-overlap sweep is pure Python on those stats (A21)
-- the rewrite is ``repartitionByRange(tp_timestamp) +
-  sortWithinPartitions`` with dynamic partition overwrite, so files end
-  up time-clustered and non-overlapping — Parquet min/max row-group
-  skipping then prunes time ranges inside a month partition (A23)
-- small files merge by coalescing to a target size (A24)
-
-Guardrails match the reference: rewrites chunked per partition key
-(bounded memory), and a partition is only rewritten when it has
-overlapping or too-many-small files — compaction is idempotent.
+- a partition key is only rewritten when it has overlapping or
+  too-many-small files, so compaction is idempotent; each rewritten
+  key ends time-sorted (or z-ordered), so Parquet min/max row-group
+  skipping prunes time ranges inside a month partition (A23/A24)
+- keys that fit in one output file are rewritten in batches of at most
+  ``max_chunk_rows`` rows: one read over the batch's key dirs, a hash
+  repartition on the partition columns, a sort by key and time, and
+  one partitioned write. Spark's fixed cost per job dominates a small
+  key's rewrite, so a batch costs about what one key used to.
+- bigger keys keep the windowed rewrite: ``max_chunk_rows`` rows / >=1h
+  time windows per job (the reference's 5M-row insert guardrail), each
+  ``repartitionByRange(tp_timestamp) + sortWithinPartitions``
+- every rewrite stages outside the table; key dirs are swapped in, and
+  re-indexed, only once all rewrites have succeeded
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from tailpipe_spark.catalog import PARTITION_COLS, Catalog
 
@@ -244,8 +251,6 @@ def _bucket_rewrite_locked(
     sort_by: list[str] | None,
     force: bool,
 ) -> dict:
-    import shutil
-
     stats = catalog.file_stats(table)
     bytes_ = stats["bytes"]
     if num_buckets is None:
@@ -323,8 +328,13 @@ def compact_table(
     stats prune on every listed column (plans/zorder.py).
 
     Rewrites stage into ``catalog.staging_dir`` (never inside the table
-    tree — a crash must not leave tmp dirs a reader would scan) and are
-    chunked at ``max_chunk_rows`` rows / >=1h time windows per job.
+    tree — a crash must not leave tmp dirs a reader would scan). Keys
+    that fit in one output file are rewritten together, in batches of
+    at most ``max_chunk_rows`` rows and one Spark write each; a bigger
+    key is rewritten alone in ``max_chunk_rows`` rows / >=1h time
+    windows, one job per window. The staged keys replace the old ones
+    after the last write, so staging holds a copy of every rewritten
+    key at that point.
 
     A table with a recorded bucketed layout is STICKY: its compaction
     routes through :func:`bucket_rewrite` with the manifest's spec (a
@@ -335,8 +345,6 @@ def compact_table(
     pidfile+flock protocol with collect and the streaming rollup): a
     second live writer on this workspace is refused, never raced.
     """
-    import shutil
-
     with catalog.writer_lock(f"compact {table}"):
         return _compact_table_locked(
             spark, catalog, table, reindex_expr, small_file_bytes,
@@ -353,8 +361,6 @@ def _compact_table_locked(
     max_chunk_rows: int,
     zorder_by: list[str] | None,
 ) -> dict:
-    import shutil
-
     lay = catalog.table_layout(table)
     if lay and reindex_expr is None:
         return bucket_rewrite(
@@ -362,8 +368,7 @@ def _compact_table_locked(
         )
 
     keys = enumerate_partition_keys(catalog, table)
-    rewritten, merged_files, rows_total, chunk_jobs = 0, 0, 0, 0
-    rewritten_keys: list[str] = []
+    merged_files, rows_total, chunk_jobs = 0, 0, 0
 
     if reindex_expr is not None:
         df = catalog.read_table(spark, table)
@@ -388,49 +393,179 @@ def _compact_table_locked(
         return {"keys_rewritten": len(keys), "files_merged": 0, "rows": rows_total}
 
     base = catalog.table_dir(table)
-    for key in keys:
-        stats = file_stats(catalog, table, key)
-        overlaps = find_overlaps(stats)
-        small = [s for s in stats if s.bytes < small_file_bytes]
-        if not overlaps and len(small) <= 1:
-            continue
-        part_dir = os.path.join(base, key.relpath)
-        df = spark.read.parquet(part_dir)
-        total_bytes = sum(s.bytes for s in stats)
-        rows = sum(s.rows for s in stats)
-        windows = chunk_windows(stats, max_chunk_rows)
-        n_out = max(1, total_bytes // max(1, len(windows)) // TARGET_FILE_BYTES)
-        staged = catalog.new_staging_dir(f"{table}.compact")
-        for wi, (lo, hi) in enumerate(windows):
-            chunk = df
-            if lo is not None:
-                chunk = chunk.filter(F.col("tp_timestamp") >= F.lit(lo))
-            if hi is not None:
-                cond = F.col("tp_timestamp") < F.lit(hi)
-                if lo is None:  # first window keeps stat-less rows
-                    cond = cond | F.col("tp_timestamp").isNull()
-                chunk = chunk.filter(cond)
-            if zorder_by:
-                from tailpipe_spark.plans.zorder import zorder_rewrite
-
-                out = zorder_rewrite(chunk, zorder_by, int(n_out))
-            else:
-                out = chunk.repartitionByRange(
-                    int(n_out), F.col("tp_timestamp")
-                ).sortWithinPartitions("tp_timestamp")
-            out.write.mode("append").parquet(staged)
+    schema = None
+    small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
+    staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
+    staging_roots: list[str] = []
+    try:
+        for key in keys:
+            stats = file_stats(catalog, table, key)
+            n_small = sum(s.bytes < small_file_bytes for s in stats)
+            if not find_overlaps(stats) and n_small <= 1:
+                continue
+            merged_files += len(stats)
+            rows = sum(s.rows for s in stats)
+            rows_total += rows
+            windows = chunk_windows(stats, max_chunk_rows)
+            total_bytes = sum(s.bytes for s in stats)
+            n_out = max(1, total_bytes // len(windows) // TARGET_FILE_BYTES)
+            if len(windows) == 1 and n_out == 1:
+                small.append((key, rows))
+                continue
+            root = catalog.new_staging_dir(f"{table}.compact")
+            staging_roots.append(root)
+            _rewrite_windowed(spark, base, key, windows, n_out, zorder_by, root)
+            staged[key.relpath] = root
+            chunk_jobs += len(windows)
+        for batch in _batches(small, max_chunk_rows):
+            if schema is None:
+                schema = _batch_schema(spark, base, batch[0][0])
+            root = catalog.new_staging_dir(f"{table}.compact")
+            staging_roots.append(root)
+            staged.update(_rewrite_batch(spark, base, batch, schema, zorder_by, root))
             chunk_jobs += 1
-        shutil.rmtree(part_dir)
-        os.replace(staged, part_dir)
-        rewritten += 1
-        rewritten_keys.append(key.relpath)
-        merged_files += len(stats)
-        rows_total += rows
+        _swap_and_reindex(catalog, table, staged, merged_files, zorder_by)
+    finally:
+        for root in staging_roots:
+            shutil.rmtree(root, ignore_errors=True)
+    return {
+        "keys_rewritten": len(staged),
+        "files_merged": merged_files,
+        "rows": rows_total,
+        "chunk_jobs": chunk_jobs,
+    }
 
-    catalog.record_snapshot(
-        "compact", {"table": table, "keys": rewritten, "files": merged_files}
+
+def _batches(small: list[tuple[PartitionKey, int]], max_rows: int):
+    """Group single-file keys, in order, into batches of at most
+    ``max_rows`` rows (a key over the cap gets a batch of its own)."""
+    batch: list[tuple[PartitionKey, int]] = []
+    acc = 0
+    for key, rows in small:
+        if batch and acc + rows > max_rows:
+            yield batch
+            batch, acc = [], 0
+        batch.append((key, rows))
+        acc += rows
+    if batch:
+        yield batch
+
+
+def _batch_schema(spark: SparkSession, base: str, key: PartitionKey) -> StructType:
+    """Data columns from one key's files, plus the partition columns as
+    strings. A read with this schema takes partition values verbatim
+    from the paths whatever ``partitionColumnTypeInference`` says, so
+    ``tp_index=012345678901`` is written back under the same name."""
+    data = spark.read.parquet(os.path.join(base, key.relpath)).schema
+    return StructType(
+        [f for f in data.fields if f.name not in PARTITION_COLS]
+        + [StructField(c, StringType()) for c in PARTITION_COLS]
     )
-    if rewritten:
+
+
+def _rewrite_batch(
+    spark: SparkSession,
+    base: str,
+    batch: list[tuple[PartitionKey, int]],
+    schema: StructType,
+    zorder_by: list[str] | None,
+    root: str,
+) -> dict[str, str | None]:
+    """Rewrite a batch of keys, each into one time-sorted (or z-ordered)
+    file, with one read and one partitioned write into ``root``.
+    Returns each key's staged dir; None for a key whose files held no
+    rows, since no dir is written for it."""
+    df = (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, k.relpath) for k, _ in batch])
+        .repartition(len(batch), *PARTITION_COLS)
+    )
+    if zorder_by:
+        from tailpipe_spark.plans.zorder import with_zvalue
+
+        df = with_zvalue(df, zorder_by, over=list(PARTITION_COLS))
+        out = df.sortWithinPartitions(*PARTITION_COLS, "__z").drop("__z")
+    else:
+        out = df.sortWithinPartitions(*PARTITION_COLS, "tp_timestamp")
+    out.write.partitionBy(*PARTITION_COLS).mode("append").parquet(root)
+    found = {}
+    for key, rows in batch:
+        d = os.path.join(root, key.relpath)
+        if not os.path.isdir(d):
+            if rows:
+                raise RuntimeError(
+                    f"compaction wrote no {key.relpath} for its {rows} rows"
+                )
+            d = None
+        found[key.relpath] = d
+    return found
+
+
+def _rewrite_windowed(
+    spark: SparkSession,
+    base: str,
+    key: PartitionKey,
+    windows: list[tuple],
+    n_out: int,
+    zorder_by: list[str] | None,
+    root: str,
+) -> None:
+    """Rewrite one key into ``root``, one job per time window, each
+    window range-partitioned into ``n_out`` files."""
+    df = spark.read.parquet(os.path.join(base, key.relpath))
+    for lo, hi in windows:
+        chunk = df
+        if lo is not None:
+            chunk = chunk.filter(F.col("tp_timestamp") >= F.lit(lo))
+        if hi is not None:
+            cond = F.col("tp_timestamp") < F.lit(hi)
+            if lo is None:  # first window keeps stat-less rows
+                cond = cond | F.col("tp_timestamp").isNull()
+            chunk = chunk.filter(cond)
+        if zorder_by:
+            from tailpipe_spark.plans.zorder import zorder_rewrite
+
+            out = zorder_rewrite(chunk, zorder_by, int(n_out))
+        else:
+            out = chunk.repartitionByRange(
+                int(n_out), F.col("tp_timestamp")
+            ).sortWithinPartitions("tp_timestamp")
+        out.write.mode("append").parquet(root)
+
+
+def _swap_and_reindex(
+    catalog: Catalog,
+    table: str,
+    staged: dict[str, str | None],
+    files_in: int,
+    zorder_by: list[str] | None,
+) -> None:
+    """Replace each key dir by its staged rewrite (None: the key held no
+    rows and goes away), then re-index those keys and record the
+    snapshot. Runs only after every rewrite succeeded, so a failed
+    write leaves the table as it was."""
+    base = catalog.table_dir(table)
+    if staged:
+        # move the old dir aside before moving the new one in, so a
+        # crash between the two renames leaves the old files in staging
+        # rather than deleting them
+        old = catalog.new_staging_dir(f"{table}.replaced")
+        for i, (rel, new) in enumerate(sorted(staged.items())):
+            key_dir = os.path.join(base, rel)
+            os.replace(key_dir, os.path.join(old, str(i)))
+            if new is not None:
+                os.replace(new, key_dir)
+                continue
+            parent = os.path.dirname(key_dir)  # drop the emptied parents
+            while parent != base and not os.listdir(parent):
+                os.rmdir(parent)
+                parent = os.path.dirname(parent)
+        shutil.rmtree(old)
+    catalog.record_snapshot(
+        "compact", {"table": table, "keys": len(staged), "files": files_in}
+    )
+    if staged:
         # a z-ordered layout makes its companion columns selective per
         # file — index them so pruned_files() can skip on them too.
         # Only the rewritten partition keys are re-footer-read; the
@@ -439,12 +574,6 @@ def _compact_table_locked(
         # rebuild inside refresh_partition_index.
         catalog.refresh_partition_index(
             table,
-            rewritten_keys,
+            list(staged),
             columns=[c for c in (zorder_by or []) if c != "tp_timestamp"] or None,
         )
-    return {
-        "keys_rewritten": rewritten,
-        "files_merged": merged_files,
-        "rows": rows_total,
-        "chunk_jobs": chunk_jobs,
-    }

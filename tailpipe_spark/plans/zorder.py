@@ -70,21 +70,34 @@ def _orderable(df: DataFrame, name: str) -> Column:
 
 
 def with_zvalue(
-    df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS, out_col: str = "__z"
+    df: DataFrame,
+    cols: list[str],
+    bits: int = DEFAULT_BITS,
+    out_col: str = "__z",
+    over: list[str] | None = None,
 ) -> DataFrame:
     """Add the interleaved z-value column (plus nothing else).
 
     Scaling bounds are a broadcast 1-row aggregate over ``df`` itself —
-    the whole thing stays one lazy plan.
+    the whole thing stays one lazy plan. With ``over``, the bounds are
+    taken per group of those columns instead (a window aggregate), so
+    each group gets the z-values it would get if z-ordered alone.
     """
     if not 2 <= len(cols) <= 4:
         raise ValueError("z-order needs 2-4 columns")
     longs = {c: _orderable(df, c) for c in cols}
-    bounds = df.agg(
-        *[F.min(longs[c]).alias(f"__lo_{c}") for c in cols],
-        *[F.max(longs[c]).alias(f"__hi_{c}") for c in cols],
-    )
-    with_bounds = df.crossJoin(F.broadcast(bounds))
+    aggs = {f"__lo_{c}": F.min(longs[c]) for c in cols}
+    aggs.update({f"__hi_{c}": F.max(longs[c]) for c in cols})
+    if over:
+        from pyspark.sql import Window
+
+        group = Window.partitionBy(*over)
+        with_bounds = df.select(
+            "*", *[a.over(group).alias(n) for n, a in aggs.items()]
+        )
+    else:
+        bounds = df.agg(*[a.alias(n) for n, a in aggs.items()])
+        with_bounds = df.crossJoin(F.broadcast(bounds))
     scaled = [
         _scaled(longs[c], F.col(f"__lo_{c}"), F.col(f"__hi_{c}"), bits)
         for c in cols

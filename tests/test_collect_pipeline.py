@@ -622,3 +622,207 @@ def test_collect_drops_and_reports_corrupt_jsonl_rows(spark, workspace, tmp_path
     assert "tp_timestamp" in res.null_columns
     back = workspace.read_table(spark, "corrupt_t")
     assert sorted(r["server_id"] for r in back.collect()) == ["s1", "s2"]
+
+
+def _idx_table(name):
+    return TableConfig(
+        name=name,
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="idx", type="varchar"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+
+
+def _collect_rows(spark, workspace, tmp_path, name, batches):
+    """One collect per batch of (id, idx, time) rows, tp_index = idx."""
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    part = PartitionConfig(name, "default", tp_index="idx")
+    for b, rows in enumerate(batches):
+        p = tmp_path / f"{name}_{b}.jsonl"
+        p.write_text("\n".join(
+            json.dumps({"id": i, "idx": idx, "time": t}) for i, idx, t in rows
+        ))
+        collect(spark, workspace, _idx_table(name), part,
+                source_df=read_jsonl(spark, [str(p)]))
+
+
+def _key_files(workspace, table):
+    """{key relpath: sorted parquet file paths} for every key dir."""
+    import os
+
+    from tailpipe_spark.compact import enumerate_partition_keys as keys_of
+
+    base = workspace.table_dir(table)
+    out = {}
+    for k in keys_of(workspace, table):
+        d = os.path.join(base, k.relpath)
+        out[k.relpath] = sorted(
+            os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
+        )
+    return out
+
+
+def _key_facts(spark, workspace, table):
+    rows = (
+        workspace.read_table(spark, table)
+        .groupBy("tp_index", "tp_year", "tp_month")
+        .agg(F.count("*").alias("n"), F.min("tp_timestamp").alias("lo"),
+             F.max("tp_timestamp").alias("hi"))
+        .collect()
+    )
+    return {(r.tp_index, r.tp_year, r.tp_month): (r.n, r.lo, r.hi) for r in rows}
+
+
+def _assert_index_fresh(workspace, table):
+    by_path = lambda idx: sorted(idx, key=lambda e: e["path"])  # noqa: E731
+    maintained = by_path(workspace.load_file_index(table))
+    workspace.refresh_file_index(table)
+    assert maintained == by_path(workspace.load_file_index(table))
+
+
+def test_compaction_batches_small_keys(spark, workspace, tmp_path):
+    """Every small key is rewritten by one write, into one time-sorted
+    file per key; an already-compact key is left byte-for-byte alone."""
+    import pyarrow.parquet as pq
+
+    batches = [
+        [
+            (b * 100 + d, idx, f"2024-{m:02d}-{3 * d + b + 1:02d}T00:00:00")
+            for m in (1, 2, 3) for idx in ("a:b", "x") for d in range(3)
+        ]
+        for b in range(3)
+    ]
+    batches[0].append((999, "x", "2024-04-01T00:00:00"))  # a single file
+    _collect_rows(spark, workspace, tmp_path, "t_batch", batches)
+    files = _key_files(workspace, "t_batch")
+    assert len(files) == 7
+    assert any("tp_index=a%3Ab" in k for k in files)
+    compact_key = "tp_partition=default/tp_index=x/tp_year=2024/tp_month=4"
+    assert len(files[compact_key]) == 1
+    untouched = open(files[compact_key][0], "rb").read()
+    facts = _key_facts(spark, workspace, "t_batch")
+
+    summary = compact_table(spark, workspace, "t_batch")
+    assert summary["keys_rewritten"] == 6
+    assert summary["files_merged"] == 18
+    assert summary["chunk_jobs"] == 1
+    after = _key_files(workspace, "t_batch")
+    assert set(after) == set(files)
+    for key, paths in after.items():
+        assert len(paths) == 1, key
+        ts = pq.read_table(paths[0], columns=["tp_timestamp"]).column(0).to_pylist()
+        assert ts == sorted(ts), key
+    assert after[compact_key] == files[compact_key]
+    assert open(after[compact_key][0], "rb").read() == untouched
+    assert _key_facts(spark, workspace, "t_batch") == facts
+    _assert_index_fresh(workspace, "t_batch")
+    assert compact_table(spark, workspace, "t_batch")["keys_rewritten"] == 0
+
+
+def test_compaction_mixes_windowed_and_batched_keys(spark, workspace, tmp_path):
+    """Under a small max_chunk_rows the oversized key takes the windowed
+    rewrite while the rest still batch; a key whose files hold no rows
+    is dropped without error."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark.compact import chunk_windows, enumerate_partition_keys, file_stats
+
+    batches = [
+        [(b * 100 + i, "big", f"2024-05-01T{2 * b + i % 2:02d}:30:00") for i in range(40)]
+        + [(b * 100 + 50 + i, idx, f"2024-05-0{i + 1}T0{b}:00:00")
+           for idx in ("s1", "s2") for i in range(4)]
+        for b in range(3)
+    ]
+    _collect_rows(spark, workspace, tmp_path, "t_mix", batches)
+    base = workspace.table_dir("t_mix")
+    big = "tp_partition=default/tp_index=big/tp_year=2024/tp_month=5"
+    # a key of two zero-row files (small, so it needs compaction)
+    empty = "tp_partition=default/tp_index=empty/tp_year=2024/tp_month=5"
+    src = _key_files(workspace, "t_mix")[big][0]
+    os.makedirs(os.path.join(base, empty))
+    for n in ("part-0.parquet", "part-1.parquet"):
+        pq.write_table(pq.read_table(src).slice(0, 0), os.path.join(base, empty, n))
+    workspace.refresh_file_index("t_mix")
+    big_key = next(
+        k for k in enumerate_partition_keys(workspace, "t_mix") if k.relpath == big
+    )
+    n_windows = len(chunk_windows(file_stats(workspace, "t_mix", big_key), 50))
+    assert n_windows >= 2
+    facts = _key_facts(spark, workspace, "t_mix")
+
+    summary = compact_table(spark, workspace, "t_mix", max_chunk_rows=50)
+    assert summary["keys_rewritten"] == 4
+    assert summary["chunk_jobs"] == n_windows + 1
+    after = _key_files(workspace, "t_mix")
+    assert empty not in after
+    assert not os.path.exists(os.path.join(base, "tp_partition=default/tp_index=empty"))
+    assert len(after[big]) == n_windows
+    for key in set(after) - {big}:
+        assert len(after[key]) == 1, key
+    assert _key_facts(spark, workspace, "t_mix") == facts
+    _assert_index_fresh(workspace, "t_mix")
+    assert not os.listdir(workspace.staging_dir)
+
+
+def test_compaction_keeps_partition_values_verbatim(spark, workspace, tmp_path):
+    """Partition values are read as strings even when the session infers
+    partition column types, so a leading-zero account id survives."""
+    import os
+
+    acct = "012345678901"
+    _collect_rows(spark, workspace, tmp_path, "t_acct", [
+        [(b * 10 + i, acct, f"2024-05-0{i + 1}T0{b}:00:00") for i in range(3)]
+        for b in range(2)
+    ])
+    key = f"tp_partition=default/tp_index={acct}/tp_year=2024/tp_month=5"
+    conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(conf, "true")
+    try:
+        assert compact_table(spark, workspace, "t_acct")["keys_rewritten"] == 1
+    finally:
+        spark.conf.set(conf, "false")
+    assert list(_key_files(workspace, "t_acct")) == [key]
+    assert os.listdir(os.path.join(workspace.table_dir("t_acct"), "tp_partition=default")) == [
+        f"tp_index={acct}"
+    ]
+    df = workspace.read_table(spark, "t_acct")
+    assert {r.tp_index for r in df.select("tp_index").collect()} == {acct}
+    assert df.count() == 6
+
+
+def test_batched_zorder_matches_single_key_rewrite(spark, workspace, tmp_path):
+    """A batched z-order rewrite gives each key the row order that
+    zorder_rewrite gives that key's rows alone (per-key scaling bounds)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark.plans.zorder import zorder_rewrite
+
+    cols = ["tp_timestamp", "id"]
+    _collect_rows(spark, workspace, tmp_path, "t_z", [
+        # ids run against time; y's far-off ids would flatten x's to
+        # one z-level under table-wide bounds
+        [(100 - 5 * i - b + (10**9 if idx == "y" else 0), idx,
+          f"2024-0{m}-{2 * i + b + 1:02d}T00:00:00")
+         for m in (1, 2) for idx in ("x", "y") for i in range(4)]
+        for b in range(3)
+    ])
+    base = workspace.table_dir("t_z")
+    expected = {
+        key: [r.id for r in zorder_rewrite(
+            spark.read.parquet(os.path.join(base, key)), cols, 1
+        ).collect()]
+        for key in _key_files(workspace, "t_z")
+    }
+    summary = compact_table(spark, workspace, "t_z", zorder_by=cols)
+    assert summary["keys_rewritten"] == 4 and summary["chunk_jobs"] == 1
+    for key, paths in _key_files(workspace, "t_z").items():
+        assert len(paths) == 1, key
+        assert pq.read_table(paths[0], columns=["id"]).column(0).to_pylist() == expected[key]

@@ -89,3 +89,25 @@ def test_transform_runs_through_filter_guard():
         ColumnConfig(name="x", transform="reflect('a','b')")
     with pytest.raises(ConfigValidationError):
         ColumnConfig(name="x", transform="1; drop table t")
+
+
+@pytest.mark.parametrize("value", ["four", "-2", ""])
+def test_bad_cpu_env_falls_back_to_core_count(spark, monkeypatch, value):
+    import os
+
+    import bench
+    from tailpipe_spark.session import active_cpus, build_session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    assert active_cpus() == (os.cpu_count() or 8)
+    assert bench._auto_max_partition_bytes(1 << 30) > 0
+    # returns the running session; only the env parse is under test
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert build_session(shuffle_partitions=shuffle) is spark
+
+
+def test_cpu_env_sets_the_count(monkeypatch):
+    from tailpipe_spark.session import active_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert active_cpus() == 3
