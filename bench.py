@@ -20,7 +20,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tailpipe_spark.queries import build_registry
-from tailpipe_spark.session import TEST_TABLES, active_cpus, build_session
+from tailpipe_spark.session import (
+    TEST_TABLES,
+    active_cpus,
+    build_session,
+    input_bytes,
+    tune_scan_splits,
+)
 
 HEADLINE = [
     # The bench measures the engine a user gets: plain SUM() runs the
@@ -107,45 +113,15 @@ def _running_procs() -> int:
         return -1
 
 
-def _input_bytes(sf_dir: str) -> int:
-    # followlinks: a provisioned layout dir (e.g. the bucketed sf10
-    # twin) serves tables via symlinks into an engine workspace; the
-    # auto-tuning must size from the REAL bytes behind them
-    total = 0
-    seen: set[str] = set()
-    for root, _dirs, names in os.walk(sf_dir, followlinks=True):
-        real = os.path.realpath(root)
-        if real in seen:  # symlink cycle guard
-            continue
-        seen.add(real)
-        for n in names:
-            if n.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, n))
-    return total
-
-
-def _auto_max_partition_bytes(total_bytes: int) -> int:
-    """Scan-split size targeting ~2 splits per core for the ACTIVE
-    dataset. The 128 MB default packs a small benchmark's files into a
-    handful of scan tasks (and never splits a single-file table at
-    all), so the whole scan+map pipeline ran on 1-2 cores of 32 —
-    measured 30-40% off q01/q03 at both sf0.1 and sf1 from this alone.
-    Clamped to [4 MB, 128 MB]: at cluster scale total_bytes/(2·cores)
-    crosses the cap and the standard default applies."""
-    cores = active_cpus()
-    return max(4 << 20, min(128 << 20, total_bytes // (cores * 2)))
-
-
 def _auto_advisory_bytes(total_bytes: int) -> int:
     """AQE post-shuffle coalescing target, sized to keep ~4 coalesced
     partitions per core for the ACTIVE dataset instead of Spark's flat
-    64 MB (r15 measured pass, interleaved sweep at sf10/32 cores,
-    tools/ab_r15_aqe.py: advisory 64m -> 8m moved dedup_ngram_jaccard
-    27.3 -> 25.0 s, dedup_minhash_fast 6.6 -> 4.3 s, q_range_join
-    5.5 -> 3.2 s, q03 3.4 -> 2.5 s; parallelismFirst=false and AQE-off
-    both measured worse on at least one entry). The flat default
-    coalesces a ~1 GB workload's exploded shuffles onto a fraction of
-    the cores. Clamped to [4 MB, 64 MB]: past the cap — any real
+    64 MB (interleaved sweep at sf10 on 32 cores: advisory 64m -> 8m
+    moved dedup_ngram_jaccard 27.3 -> 25.0 s, dedup_minhash_fast
+    6.6 -> 4.3 s, q_range_join 5.5 -> 3.2 s, q03 3.4 -> 2.5 s;
+    parallelismFirst=false and AQE-off both measured worse on at least
+    one entry). The flat default coalesces a ~1 GB workload's exploded
+    shuffles onto a fraction of the cores. Clamped to [4 MB, 64 MB]: past the cap — any real
     cluster-scale dataset — Spark's default applies unchanged, where
     the guide's 100 MB-1 GB shuffle-partition sizing takes over via
     shuffle.partitions and AQE skew splitting."""
@@ -355,7 +331,7 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.0
 
-    total_bytes = _input_bytes(sf_dir)
+    total_bytes = input_bytes(sf_dir) or 0
     spark = build_session(
         "tailpipe-bench", shuffle_partitions=_auto_shuffle_partitions(total_bytes)
     )
@@ -366,10 +342,7 @@ def main() -> int:
         "spark.sql.adaptive.enabled",
         "false" if total_bytes < (1 << 30) else "true",
     )
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        str(_auto_max_partition_bytes(total_bytes)),
-    )
+    tune_scan_splits(spark, total_bytes)
     spark.conf.set(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         str(_auto_advisory_bytes(total_bytes)),

@@ -21,7 +21,6 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,11 +71,32 @@ class FooterInfo:
 
             md = pq.read_metadata(path)
             self.num_rows = md.num_rows
+            self.num_row_groups = md.num_row_groups
             self._md = md
             self._duck = None
         except OSError:
             self._md = None
-            self.num_rows, self._duck = _duck_footer(path)
+            self.num_rows, self.num_row_groups, self._duck = _duck_footer(path)
+
+    def nano_timestamp_cols(self) -> list[str]:
+        """Columns stored as parquet timestamp[ns], which Spark reads as
+        long nanos and ``session.read_table`` converts. The arrow schema
+        is built only here, so footer reads that never ask pay nothing.
+        [] on the DuckDB backend: a footer pyarrow cannot parse has no
+        arrow schema either."""
+        if self._md is None:
+            return []
+        import pyarrow as pa
+
+        try:
+            schema = self._md.schema.to_arrow_schema()
+        except pa.ArrowException:
+            return []
+        return [
+            f.name
+            for f in schema
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        ]
 
     def col_stats(self, name: str):
         """(min, max, null_count) raw-typed for one top-level column
@@ -141,7 +161,8 @@ def _duck_stat_value(physical_type: str, s: str):
 
 
 def _duck_footer(path: str):
-    """(num_rows, {column: (min, max, nulls) | None}) via DuckDB.
+    """(num_rows, num_row_groups, {column: (min, max, nulls) | None})
+    via DuckDB.
 
     Only TOP-LEVEL leaf columns get stats (a shredded variant's
     subcolumn paths contain ', ' and never match a column name — their
@@ -185,7 +206,7 @@ def _duck_footer(path: str):
             lo = mn if lo is None else min(lo, mn)
             hi = mx if hi is None else max(hi, mx)
         stats[name] = (lo, hi, nulls) if ok else None
-    return int(n_rows), stats
+    return int(n_rows), int(n_groups), stats
 
 
 def _footer_col_stats(md: "FooterInfo", name: str):
@@ -197,14 +218,6 @@ def _footer_col_stats(md: "FooterInfo", name: str):
     if jlo is None or jhi is None:
         return None
     return {"min": jlo, "max": jhi, "nulls": raw[2]}
-
-
-
-@dataclass
-class TableEntry:
-    name: str
-    type_strings: dict[str, str]  # column → engine type string
-    created_at: float = field(default_factory=time.time)
 
 
 class Catalog:

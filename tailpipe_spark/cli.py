@@ -141,19 +141,10 @@ def _jsonable(v):
 
 
 def _workspace_bytes(cat) -> int | None:
-    """Total data bytes across the workspace (plain size listing, no
-    footer parses) — the split-sizing hint for interactive sessions."""
-    import os as _os
+    """Data bytes across the workspace — the split-sizing hint."""
+    from tailpipe_spark.session import input_bytes
 
-    total = 0
-    try:
-        for root, _dirs, names in _os.walk(cat.data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    total += _os.path.getsize(_os.path.join(root, n))
-    except OSError:
-        return None
-    return total
+    return input_bytes(cat.data_dir)
 
 
 def cmd_query(args) -> int:

@@ -175,8 +175,10 @@ def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) 
     return header + "\n".join(stmts)
 
 
-def generate_pyspark_init(catalog, filters: list[str]) -> str:
-    """The PySpark bootstrap twin (for pyspark-shell consumers)."""
+def generate_pyspark_init(catalog, conds: list[str]) -> str:
+    """The PySpark bootstrap twin (for pyspark-shell consumers): the
+    same filter conjuncts, applied by ``Catalog.register_views`` before
+    it hides the layout columns."""
     return "\n".join(
         [
             "# generated by tailpipe-spark connect",
@@ -184,7 +186,7 @@ def generate_pyspark_init(catalog, filters: list[str]) -> str:
             "from tailpipe_spark.catalog import Catalog",
             "spark = SparkSession.builder.getOrCreate()",
             f"catalog = Catalog({catalog.workspace!r})",
-            f"catalog.register_views(spark, filters={filters!r})",
+            f"catalog.register_views(spark, filters={conds!r})",
             "",
         ]
     )
@@ -212,21 +214,17 @@ def write_init_script(
 
         extra_filter = validate_filter_expression(extra_filter, "connect --filter")
     os.makedirs(out_dir, exist_ok=True)
+    conds = view_conditions(
+        time_from, time_to, index_patterns, partition_patterns, extra_filter, now,
+    )
     if dialect in ("sql", "duckdb"):
-        conds = view_conditions(
-            time_from, time_to, index_patterns, partition_patterns,
-            extra_filter, now,
-        )
         tf = parse_time(time_from, now) if time_from else None
         tt = parse_time(time_to, now) if time_to else None
         pruned = _pruned_lists(catalog, tf, tt)
-        if dialect == "sql":
-            body, ext = generate_sql_init(catalog, conds, pruned), "sql"
-        else:
-            body, ext = generate_duckdb_init(catalog, conds, pruned), "sql"
+        gen = generate_sql_init if dialect == "sql" else generate_duckdb_init
+        body, ext = gen(catalog, conds, pruned), "sql"
     elif dialect == "pyspark":
-        filters = [f for f in [extra_filter] if f]
-        body, ext = generate_pyspark_init(catalog, filters), "py"
+        body, ext = generate_pyspark_init(catalog, conds), "py"
     else:
         raise ValueError(f"unknown connect dialect {dialect!r}")
 

@@ -65,9 +65,3 @@ def with_partition_columns(df: DataFrame) -> DataFrame:
     """
     ts = F.col("tp_timestamp")
     return df.withColumn("tp_year", F.year(ts)).withColumn("tp_month", F.month(ts))
-
-
-def drop_partition_columns(df: DataFrame) -> DataFrame:
-    """Hide the materialized layout columns from query results so
-    ``select *`` output matches the reference's schema."""
-    return df.drop("tp_year", "tp_month")

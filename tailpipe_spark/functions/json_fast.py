@@ -82,12 +82,11 @@ def json_get_int(col: Column | str, key: str) -> Column:
     # Catalyst expands the nested form to FOUR regexp_extract
     # evaluations per fast-path row (subexpression elimination does not
     # reach into conditional CASE branches), measured 3.37 -> 2.26 s at
-    # the 10x bench set and 0.41 -> 0.31 s at sf0.1
-    # (tools/ab_r14_json_kernel.py, value-identical; r14 optimization
-    # guide §7.2 "duplicated subtrees"). An Arrow-batch native kernel
-    # (mapInArrow + DuckDB yyjson) measured 2.32 s at sf10 — no better
-    # than this JVM form once the Python boundary transfer is paid, so
-    # the operator stays boundary-free.
+    # the 10x bench set and 0.41 -> 0.31 s at sf0.1 (value-identical;
+    # the optimization guide's "duplicated subtrees"). An Arrow-batch
+    # native kernel (mapInArrow + DuckDB yyjson) measured 2.32 s at
+    # sf10 — no better than this JVM form once the Python boundary
+    # transfer is paid, so the operator stays boundary-free.
     return F.when(
         flat & raw.rlike(r"^-?(?:0|[1-9]\d{0,8})$"), raw.cast("int")
     ).otherwise(slow)

@@ -806,11 +806,6 @@ def connected_components_star(
     ).select("node", F.coalesce("comp", F.col("node")).alias("comp"))
 
 
-def xxhash64_hash_fn(c, s: int):
-    """Engine-default MinHash hash: seeded xxhash64, JVM-native."""
-    return F.xxhash64(c, F.lit(s))
-
-
 def md5_hash_fn(c, s: int):
     """Portable MinHash hash: md5 over a seed-salted gram — any SQL
     engine can replay it, so the oracle harness uses this twin."""

@@ -414,12 +414,12 @@ def budget_select(
     candidate row before the prune): a violating row (value < bound, or
     NULL — which the generic path would count as 0) fails the job
     loudly instead of silently truncating the selection. Measured
-    (tools/ab_r14_budget_topk.py, values hash-identical): sf0.1
-    0.824 -> 0.229 s (the cumsum's sketch collect + offsets branches
-    are pure overhead at small scale), sf10 1.66 -> 1.49 s (the
-    featurize scan dominates there). When budget//bound exceeds
-    ``_BUDGET_PRUNE_MAX_ROWS`` the generic cumsum path is kept — the
-    operator picks the plan from the budget, not from the data.
+    with values hash-identical: sf0.1 0.824 -> 0.229 s (the cumsum's
+    sketch collect + offsets branches are pure overhead at small
+    scale), sf10 1.66 -> 1.49 s (the featurize scan dominates there).
+    When budget//bound exceeds ``_BUDGET_PRUNE_MAX_ROWS`` the generic
+    cumsum path is kept — the operator picks the plan from the budget,
+    not from the data.
 
     Without ``unit_lower_bound`` the generic path runs: built on
     :func:`distributed_cumsum` (two-phase range-partitioned prefix sum)

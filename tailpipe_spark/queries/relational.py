@@ -166,14 +166,14 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps one static plan that adapts with scale: orders side
     # broadcast into lineitem while it fits (zero fact-side shuffles),
     # sort-merge on a 5x-reduced side once it doesn't.
-    # A/B (tools/ab_q03_order.py, interleaved rebuild+noop-save reps):
+    # A/B (interleaved rebuild+noop-save reps):
     #   sf0.1  current 0.446  inner-reorder 0.668  semi 0.440
     #   sf1    current 0.831  inner-reorder 2.518  semi 0.685
     #   sf10   current 3.447  inner-reorder 2.998  semi 2.340
-    # r10 bucketed-layout A/B (tools/ab_bucketed_q05.py, sf10): with
-    # lineitem+orders bucketed by orderkey the big-scale SMJ branch
-    # goes zero-fact-exchange (3→1 Exchanges), 2.29 → 2.05 min-of-5
-    # (~10%; scan+agg dominate this query once the shuffle is gone).
+    # bucketed-layout A/B (sf10): with lineitem+orders bucketed by
+    # orderkey the big-scale SMJ branch goes zero-fact-exchange (3→1
+    # Exchanges), 2.29 → 2.05 min-of-5 (~10%; scan+agg dominate this
+    # query once the shuffle is gone).
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-03-15").cast("timestamp")
@@ -223,19 +223,17 @@ def q05_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a LEFT SEMI join on BOTH equi conditions (o_custkey = c_custkey
     # AND s_nationkey = c_nationkey); c_custkey is a PK so the inner
     # form had <=1 match per fact row and row multiplicity is
-    # unchanged — values hash-identical at sf0.1 and sf10
-    # (tools/ab_r14_q05_semi.py). Measured min-of-5 interleaved: sf10
-    # 8.49 -> 6.84 s on a noisy window (-19%; every semi rep under the
-    # inner plan's min), sf0.1 a wash (0.849 vs 0.843). The semi probe
-    # carries no customer payload through the join, and Catalyst's
-    # semi output-size estimate (bounded by the left side) preserves
-    # the scale-adaptive broadcast/SMJ switching the round-9 A/B table
-    # below established.
+    # unchanged — values hash-identical at sf0.1 and sf10. Measured
+    # min-of-5 interleaved: sf10 8.49 -> 6.84 s on a noisy window
+    # (-19%; every semi rep under the inner plan's min), sf0.1 a wash
+    # (0.849 vs 0.843). The semi probe carries no customer payload
+    # through the join, and Catalyst's semi output-size estimate
+    # (bounded by the left side) preserves the scale-adaptive
+    # broadcast/SMJ switching the round-9 A/B table below established.
     #
     # Historical shape notes (pre-r14, inner-join regime): three
-    # reduction shapes were A/B'd at
-    # three scales (tools/ab_q03_order.py, interleaved rebuild+noop-save
-    # reps) and ALL measured worse where it matters:
+    # reduction shapes were A/B'd at three scales (interleaved
+    # rebuild+noop-save reps) and ALL measured worse where it matters:
     #   dim-first inner reorder: sf0.1 0.66, sf1 3.66 (vs current 0.47 /
     #     0.68 — the reduced side is a join output whose row-product
     #     size estimate kills Catalyst's static broadcast of the orders
@@ -247,8 +245,8 @@ def q05_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     (3.34) but a join output that scales with SF — the hint OOMs
     #     at cluster scale and AQE rightly demotes the runtime
     #     conversion; hints stay on bounded dims only.
-    # r10 bucketed-layout A/B (tools/ab_bucketed_q05.py, sf10, 32
-    # buckets on orderkey, one sorted file per bucket, min-of-5):
+    # bucketed-layout A/B (sf10, 32 buckets on orderkey, one sorted
+    # file per bucket, min-of-5):
     #   default plan      parquet 5.09  bucketed 4.87  (wash — the
     #     static sf10 plan broadcasts filtered orders, no orderkey
     #     exchange exists to remove)
@@ -618,10 +616,9 @@ def q_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent; the per-group divide happens in the same
     custkey group either way) while the join and everything after it
     touch 15x fewer rows. Measured min-of-5 interleaved, values
-    hash-identical (tools/ab_r14_topk_preagg.py): sf10 3.53 -> 2.17 s
-    (-38%), sf0.1 0.476 -> 0.405 s. Scale-safe: when customer outgrows
-    the broadcast threshold the fallback SMJ sorts the 1M-row
-    aggregate, not the 15M-row fact."""
+    hash-identical: sf10 3.53 -> 2.17 s (-38%), sf0.1 0.476 -> 0.405 s.
+    Scale-safe: when customer outgrows the broadcast threshold the
+    fallback SMJ sorts the 1M-row aggregate, not the 15M-row fact."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     rev = (

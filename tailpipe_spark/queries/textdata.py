@@ -381,12 +381,11 @@ def data_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix at ``_TOKEN_BUDGET`` rows and replace the full-corpus
     two-phase cumsum with a distributed TakeOrdered + a window over
     that budget-constant prefix (see the operator docstring's
-    equivalence argument; values hash-identical at sf0.1/sf10,
-    tools/ab_r14_budget_topk.py). One featurize pass instead of
-    sketch+offsets+rows branches: sf0.1 0.824 -> 0.229 s, sf10
-    1.66 -> 1.49 s honest per-execution — and the persist_input cache
-    (plus its session-lifetime ownership burden, r13 ADVICE) is no
-    longer needed at all."""
+    equivalence argument; values hash-identical at sf0.1/sf10). One
+    featurize pass instead of sketch+offsets+rows branches: sf0.1
+    0.824 -> 0.229 s, sf10 1.66 -> 1.49 s honest per-execution — and
+    the persist_input cache (plus its session-lifetime ownership
+    burden, r13 ADVICE) is no longer needed at all."""
     from tailpipe_spark.operators import sampling as sp
 
     feats = tx.quality_features(_docs(spark, sf_dir, parallel=True)).select(

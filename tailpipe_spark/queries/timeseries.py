@@ -251,7 +251,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bloom prefilter (80% window-input reduction, values identical)
     measured 4.32 s vs this plan's 2.68 s at sf10 — the per-execution
     bloom build + second scan outweigh the smaller sort
-    (tools/ab_range_join_bloom.py; SCALE_PROOF §range-join-bloom).
+    (SCALE_PROOF §range-join-bloom).
     Every structural lever is now measured; the residual vs DuckDB is
     the JVM sort constant on a 10M-row window, amortized by fan-out."""
     from tailpipe_spark.operators.range_join import following_window_agg

@@ -7,9 +7,8 @@ internal/database/duck_db_error.go:25-80). Spark-side the equivalent is:
 - proactive: validate parquet footers driver-side (cheap metadata read)
   and move unreadable files to ``<name>.invalid`` before they poison a
   scan;
-- reactive: ``spark.sql.files.ignoreCorruptFiles`` so a scan that races
-  a corrupt file degrades instead of failing, while the next quarantine
-  pass cleans it up.
+- reactive: a query that trips on a corrupt file quarantines the
+  offending files and runs again (``run_with_quarantine_retry``).
 """
 
 from __future__ import annotations
@@ -70,10 +69,6 @@ def quarantine_invalid_files(catalog: Catalog, table: str) -> list[str]:
             "quarantine", {"table": table, "files": [os.path.basename(m) for m in moved]}
         )
     return moved
-
-
-def enable_corrupt_file_tolerance(spark) -> None:
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
 
 
 _OOM_MARKERS = (

@@ -135,27 +135,6 @@ def to_type_string(dt: T.DataType) -> str:
     raise ValueError(f"unsupported Spark type: {dt}")
 
 
-def infer_chunk_schema(spark, paths: list[str], fmt: str = "jsonl") -> T.StructType:
-    """Infer a schema from the first chunk's files (the A2 operator;
-    reference: internal/database/convertor_schema.go:100-133). NullType
-    columns (all-null in the sample) degrade to StringType, like the
-    reference's json_structure fallback."""
-    if fmt == "jsonl":
-        inferred = spark.read.json(paths).schema
-    else:
-        raise ValueError(f"inference unsupported for format {fmt!r}")
-    return T.StructType(
-        [
-            T.StructField(
-                f.name,
-                T.StringType() if isinstance(f.dataType, T.NullType) else f.dataType,
-                True,
-            )
-            for f in inferred.fields
-        ]
-    )
-
-
 def resolve_conversion_schema(
     table: TableConfig, inferred: T.StructType | None
 ) -> T.StructType:

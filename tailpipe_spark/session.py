@@ -10,9 +10,15 @@ partitions sized to cores, Arrow enabled for the few pandas-UDF paths.
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
+
+from tailpipe_spark.catalog import Catalog, FooterInfo
 
 #: tables the driver generates under /root/testdata/sf*/ (TESTDATA.md)
 TEST_TABLES = (
@@ -127,66 +133,61 @@ def configure_runtime(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=256)
-def _nano_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet timestamp[ns], from the file footer.
-
-    Cached per path: this is driver-side footer I/O on every read, and
-    the answer is stable — the driver's testdata is immutable and
-    engine-written tables are always micros (so the cached [] holds)."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    target = path
-    if _os.path.isdir(path):
-        files = _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if not files:
-            return []
-        target = sorted(files)[0]
-    try:
-        schema = pq.read_schema(target)
-    except Exception:  # noqa: BLE001 — non-parquet or unreadable: no conversion
-        return []
-    import pyarrow as pa
-
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-
-
-@functools.lru_cache(maxsize=256)
-def _split_profile(path: str) -> tuple[int, int]:
-    """(total row groups, total bytes) across a parquet file/dir.
-
-    Spark parallelizes a parquet scan by row group: a 20 MB table
-    written as ONE row group runs its whole scan+map pipeline in ONE
-    task no matter how many cores the session has. Driver-side footer
-    I/O, cached per immutable path."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
+def footers(path: str) -> tuple[FooterInfo, ...] | None:
+    """Footers of the parquet file ``path`` or of every parquet file
+    under the directory ``path``, in file-name order, read through
+    ``catalog.FooterInfo`` (the engine's one footer reader). The cache
+    is keyed on each file's (path, size, mtime), so a rewritten table
+    is re-read with no invalidation call. None when the path holds no
+    parquet file or any of them cannot be read: a partial footer set
+    would under-report rows and ranges."""
     files = (
-        _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if _os.path.isdir(path)
+        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+        if os.path.isdir(path)
         else [path]
     )
-    groups = size = 0
-    for f in files:
-        try:
-            groups += pq.ParquetFile(f).metadata.num_row_groups
-            size += _os.path.getsize(f)
-        except Exception:  # noqa: BLE001 — unreadable: claim no knowledge
-            return (1 << 30, 1 << 60)
-    return (groups, size)
+    try:
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:
+        return None
+    key = tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+    return _read_footers(key) if key else None
+
+
+@functools.lru_cache(maxsize=256)
+def _read_footers(files: tuple) -> tuple[FooterInfo, ...] | None:
+    try:
+        return tuple(FooterInfo(f) for f, _size, _mtime in files)
+    except Exception:  # noqa: BLE001 — unreadable/non-parquet: no knowledge
+        return None
+
+
+def _reraise(err: OSError) -> None:
+    raise err
+
+
+def input_bytes(path: str) -> int | None:
+    """Bytes of the parquet files at or under ``path``, from a size
+    listing. Follows symlinks: a provisioned layout dir links its tables
+    into a workspace, and sizing must see the bytes behind them. None
+    when the tree cannot be listed."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    total = 0
+    seen: set[str] = set()
+    try:
+        for root, dirs, names in os.walk(path, onerror=_reraise, followlinks=True):
+            real = os.path.realpath(root)
+            if real in seen:  # symlink cycle: do not descend again
+                dirs.clear()
+                continue
+            seen.add(real)
+            for n in names:
+                if n.endswith(".parquet"):
+                    total += os.path.getsize(os.path.join(root, n))
+    except OSError:
+        return None
+    return total
 
 
 #: only inputs this small ever get the map-parallelism repartition; a
@@ -194,87 +195,39 @@ def _split_profile(path: str) -> tuple[int, int]:
 _REPARTITION_MAX_BYTES = 512 * 1024 * 1024
 
 
-@functools.lru_cache(maxsize=256)
 def parquet_row_count(path: str) -> int | None:
     """Exact row count from parquet footer metadata — driver-side I/O
     only, no Spark job. Used as a ``corpus_size`` hint so operators
     whose plan depends on corpus scale (hot-gram cap guard, auto-LSH
     flip) don't pay a count job. None when the path isn't parquet."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        return None
-    try:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:  # noqa: BLE001 — unreadable/non-parquet: no hint
-        return None
+    fs = footers(path)
+    return sum(f.num_rows for f in fs) if fs else None
 
 
-@functools.lru_cache(maxsize=256)
 def parquet_column_range(path: str, col: str) -> tuple | None:
     """(min, max) of a column across a parquet file/dir from footer
     stats — driver-side I/O only, no Spark job. None when any row
     group lacks stats for the column (callers must then assume the
     full domain). Used to PROVE properties like 'all ids fit in 32
     bits' before enabling packed-key plan variants."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(_glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True))
-        if _os.path.isdir(path)
-        else [path]
-    )
-    if not files:
+    stats = [f.col_stats(col) for f in footers(path) or () if f.num_row_groups]
+    if not stats or None in stats:
         return None
-    lo = hi = None
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                group = md.row_group(rg)
-                st = next(
-                    (
-                        group.column(i).statistics
-                        for i in range(group.num_columns)
-                        if group.column(i).path_in_schema == col
-                    ),
-                    None,
-                )
-                if st is None or not st.has_min_max:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-    except Exception:  # noqa: BLE001 — unreadable/non-parquet: no proof
-        return None
-    return (lo, hi) if lo is not None else None
+    return min(st[0] for st in stats), max(st[1] for st in stats)
 
 
-@functools.lru_cache(maxsize=256)
 def _provisioned_bucketed_ws(path: str) -> tuple[str, str] | None:
     """(workspace, table) when ``path`` resolves — typically via a
     provisioned-layout symlink — into an engine workspace's
     ``data/<table>`` tree whose manifest records a bucketed layout.
 
-    This is how a provisioned physical layout TRAVELS WITH THE DATA
-    (r14 verdict ask #1): a bench/sf dir whose fact entries are links
-    into a ``compact --bucket-by``-rewritten workspace serves those
-    scans through the catalog's bucket-spec registration, so same-key
-    joins plan with the fact-side Exchanges deleted. A plain fixture
-    dir resolves to itself (parent is not ``data/``) and costs two
-    path checks, cached per path. Layout metadata is read through
-    Catalog, so a layout_rev bump invalidates via the registration
-    name, not this cache."""
+    This is how a provisioned physical layout TRAVELS WITH THE DATA: a
+    bench/sf dir whose fact entries are links into a ``compact
+    --bucket-by``-rewritten workspace serves those scans through the
+    catalog's bucket-spec registration, so same-key joins plan with the
+    fact-side Exchanges deleted. A plain fixture dir resolves to itself
+    (parent is not ``data/``) and costs one realpath; nothing is cached,
+    so relinking takes effect at once."""
     real = os.path.realpath(path)
     parent = os.path.dirname(real)
     if os.path.basename(parent) != "data":
@@ -285,12 +238,11 @@ def _provisioned_bucketed_ws(path: str) -> tuple[str, str] | None:
     return ws, os.path.basename(real)
 
 
-#: (applicationId, path) → DataFrame. The driver's testdata is
-#: immutable, so the logical plan (file listing + schema) is reusable;
-#: without this every query pays a driver-side directory listing,
-#: JVM schema inference, and the footer scan above. Engine-written
-#: (mutable) tables go through Catalog.read_table, never this cache.
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
+#: (applicationId, path, parallelize) → DataFrame. The driver's testdata
+#: is immutable, so the logical plan (file listing + schema) is reusable;
+#: without this every query pays a directory listing and JVM schema
+#: inference. Engine-written tables use Catalog.read_table, never this.
+_DF_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
 
 
 def tune_scan_splits(spark: SparkSession, total_bytes: int | None) -> None:
@@ -327,22 +279,14 @@ def read_table(
     pointing at a directory that may be rewritten must pass
     ``cache=False``, which also drops stale cached state for the path so
     later cached reads can't resurrect an old file listing."""
-    from pyspark.sql import functions as F
-
     app = spark.sparkContext.applicationId
     key = (app, path, parallelize)
     if not cache:
         # drop EVERY cached variant for the path, not just this call's
         # (a stale file listing under the other parallelize flag would
-        # otherwise survive), and clear the footer-derived caches —
-        # a stale parquet_row_count fed back as corpus_size is
-        # plan-changing (it can wrongly disable the hot-gram cap)
+        # otherwise survive)
         _DF_CACHE.pop((app, path, True), None)
         _DF_CACHE.pop((app, path, False), None)
-        _nano_timestamp_cols.cache_clear()
-        _split_profile.cache_clear()
-        parquet_row_count.cache_clear()
-        _provisioned_bucketed_ws.cache_clear()
     else:
         cached = _DF_CACHE.get(key)
         if cached is not None:
@@ -359,8 +303,6 @@ def read_table(
     # bucketed layout for the table; every other path reads plain.
     prov = _provisioned_bucketed_ws(path)
     if prov is not None:
-        from tailpipe_spark.catalog import Catalog
-
         ws, table = prov
         cat = Catalog(ws)
         if table in cat.list_tables() and cat.table_layout(table):
@@ -369,14 +311,13 @@ def read_table(
                 _DF_CACHE[key] = df
             return df
     df = spark.read.parquet(path)
-    for c in _nano_timestamp_cols(path):
+    fs = footers(path)
+    for c in fs[0].nano_timestamp_cols() if fs else ():
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"CAST(`{c}` DIV 1000 AS BIGINT)")))
     # Safety net for sessions whose first read predated configure_runtime
     # (the NTZ inference conf is read at plan time, but a cached plan or a
     # driver-created session can still surface TIMESTAMP_NTZ): cast to
     # TIMESTAMP. With session tz pinned to UTC this is value-identical.
-    from pyspark.sql.types import TimestampNTZType
-
     for f_ in df.schema.fields:
         if isinstance(f_.dataType, TimestampNTZType):
             df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
@@ -388,16 +329,15 @@ def read_table(
     # but for plain scan→agg plans the shuffle costs more than the
     # single-task scan, so callers choose. Large tables (many row
     # groups at any real scale) never take this path even when asked.
-    if parallelize:
-        groups, nbytes = _split_profile(path)
-        # full core count, NOT capped by shuffle.partitions: the
-        # consumers that opt in are CPU-heavy map pipelines (gram
-        # explode, signature folds) whose input bytes say nothing
-        # about their map cost — an input-sized shuffle setting would
-        # serialize them on a few cores (measured 7.4→4.8 s at 10×
-        # bench scale from this cap alone)
+    if parallelize and fs:
+        # full core count, NOT capped by shuffle.partitions: opt-in
+        # consumers are CPU-heavy map pipelines (gram explode, signature
+        # folds) whose input bytes say nothing about their map cost
+        # (measured 7.4→4.8 s at 10× bench scale from this cap alone)
         par = spark.sparkContext.defaultParallelism
-        if groups < par and nbytes <= _REPARTITION_MAX_BYTES:
+        nbytes = input_bytes(path)
+        groups = sum(f.num_row_groups for f in fs)
+        if groups < par and nbytes is not None and nbytes <= _REPARTITION_MAX_BYTES:
             df = df.repartition(par)
     if cache:
         _DF_CACHE[key] = df

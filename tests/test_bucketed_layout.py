@@ -282,7 +282,6 @@ def test_provisioned_symlink_dir_serves_bucketed_scan(spark, two_tables, tmp_pat
     workspace trees and plain fixture dirs keep the plain path."""
     import os
 
-    from tailpipe_spark.session import _provisioned_bucketed_ws
     from tailpipe_spark.session import read_table as rt
 
     ws = two_tables
@@ -290,7 +289,6 @@ def test_provisioned_symlink_dir_serves_bucketed_scan(spark, two_tables, tmp_pat
     d.mkdir()
     os.symlink(ws.table_dir("facts_a"), d / "facts_a.parquet")
     os.symlink(ws.table_dir("facts_b"), d / "facts_b.parquet")
-    _provisioned_bucketed_ws.cache_clear()
 
     # before any layout exists the symlinked read takes the plain path
     plain = rt(spark, str(d / "facts_a.parquet"), cache=False)
@@ -298,7 +296,6 @@ def test_provisioned_symlink_dir_serves_bucketed_scan(spark, two_tables, tmp_pat
 
     for t in ("facts_a", "facts_b"):
         bucket_rewrite(spark, ws, t, ["k"], 4)
-    _provisioned_bucketed_ws.cache_clear()
 
     a = rt(spark, str(d / "facts_a.parquet"), cache=False)
     b = rt(spark, str(d / "facts_b.parquet"), cache=False)

@@ -69,15 +69,22 @@ def test_cli_list_tables(populated_workspace, capsys):
     assert data[0]["rows"] == 4
 
 
-def test_cli_connect_emits_bootstrap(populated_workspace, capsys, tmp_path):
+def test_cli_connect_emits_bootstrap(populated_workspace, spark, capsys, tmp_path):
     rc = main([
         "--workspace", populated_workspace.workspace,
-        "connect", "--dialect", "pyspark", "--out-dir", str(tmp_path / "init"),
+        "connect", "--dialect", "pyspark", "--from", "2024-05-02T00:00:00",
+        "--out-dir", str(tmp_path / "init"),
     ])
     assert rc == 0
     path = capsys.readouterr().out.strip()
     src = open(path).read()
     assert "register_views" in src and populated_workspace.workspace in src
+    # the bootstrap runs in a live session and bakes in --from like the
+    # SQL dialects do: the 2024-05-01 row is gone, layout cols hidden
+    exec(compile(src, path, "exec"), {})
+    rows = spark.sql("select cpu from server_metrics order by cpu").collect()
+    assert [r["cpu"] for r in rows] == [1.0, 2.0, 3.0]
+    assert "tp_year" not in spark.table("server_metrics").columns
 
 
 def test_cli_connect_sql_script_runs_in_sql_session(

@@ -173,9 +173,10 @@ def test_legacy_string_json_table_keeps_string_storage(spark, workspace, tmp_pat
 
 def test_footer_backends_agree(spark, tmp_path):
     """FooterInfo's DuckDB fallback (used when pyarrow can't parse a
-    footer carrying VARIANT) must report the SAME num_rows and raw-typed
-    column stats as the pyarrow primary — compaction's datetime
-    arithmetic and the jsonable file index both consume them."""
+    footer carrying VARIANT) must report the SAME num_rows, row-group
+    count and raw-typed column stats as the pyarrow primary —
+    compaction's datetime arithmetic and the jsonable file index both
+    consume them."""
     from tailpipe_spark.catalog import FooterInfo, _duck_footer
 
     df = spark.createDataFrame(
@@ -190,8 +191,9 @@ def test_footer_backends_agree(spark, tmp_path):
     )
     fi = FooterInfo(pfile)
     assert fi._md is not None  # pyarrow path on a plain file
-    duck_rows, duck_stats = _duck_footer(pfile)
+    duck_rows, duck_groups, duck_stats = _duck_footer(pfile)
     assert duck_rows == fi.num_rows == 5
+    assert duck_groups == fi.num_row_groups >= 1
     for col in ("id", "tp_timestamp", "v"):
         pa = fi.col_stats(col)
         dk = duck_stats[col]

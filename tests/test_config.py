@@ -100,7 +100,7 @@ def test_bad_cpu_env_falls_back_to_core_count(spark, monkeypatch, value):
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     assert active_cpus() == (os.cpu_count() or 8)
-    assert bench._auto_max_partition_bytes(1 << 30) > 0
+    assert bench._auto_advisory_bytes(1 << 30) > 0
     # returns the running session; only the env parse is under test
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert build_session(shuffle_partitions=shuffle) is spark
