@@ -563,9 +563,6 @@ class Catalog:
             self._store(manifest)
         return len(index)
 
-    def has_file_index(self, table: str) -> bool:
-        return self.load_file_index(table) is not None
-
     def merge_file_index(self, table: str, added: list[str]) -> int:
         """Merge newly written files into the existing index, reading
         ONLY their footers — the append path knows exactly which files

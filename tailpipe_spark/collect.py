@@ -26,7 +26,7 @@ from tailpipe_spark.enrich import enrich_tp
 from tailpipe_spark.plans.pruning import apply_pruned_time_filter
 from tailpipe_spark.schema import columns_for_table, to_type_string
 from tailpipe_spark.validate import validate_required
-from tailpipe_spark import writer
+from tailpipe_spark import compact, writer
 
 
 @dataclass
@@ -255,13 +255,11 @@ def _collect_impl(
             )
 
     if overwrite and (time_from or time_to):
-        # --overwrite: delete range then re-collect (A19)
-        try:
-            writer.delete_range(
-                catalog, spark, table.name, partition.name, time_from, time_to
-            )
-        except KeyError:
-            pass  # table doesn't exist yet
+        # --overwrite: delete range then re-collect (A19); a table not
+        # collected yet has no keys, so nothing is deleted
+        compact.delete_range(
+            catalog, spark, table.name, partition.name, time_from, time_to
+        )
 
     df = (
         apply_table_mapping(

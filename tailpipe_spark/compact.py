@@ -21,6 +21,9 @@ Spark shape:
   ``repartitionByRange(tp_timestamp) + sortWithinPartitions``
 - every rewrite stages outside the table; key dirs are swapped in, and
   re-indexed, only once all rewrites have succeeded
+- a range delete (A18) is the same rewrite over the keys holding
+  doomed rows, with a row filter keeping the survivors: it batches,
+  windows, swaps and re-indexes exactly as compaction does
 """
 
 from __future__ import annotations
@@ -28,8 +31,9 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
+from urllib.parse import unquote
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -44,16 +48,6 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 MIN_BUCKET_CELL_BYTES = 8 * 1024 * 1024
 
 
-def _hive_dir_count(tdir: str) -> int:
-    """Distinct directories holding parquet files — the hive-partition
-    fan-out factor of the projected bucketed layout."""
-    dirs = set()
-    for root, _dirs, names in os.walk(tdir):
-        if any(n.endswith(".parquet") for n in names):
-            dirs.add(root)
-    return max(1, len(dirs))
-
-
 @dataclass
 class FileStat:
     path: str
@@ -65,17 +59,20 @@ class FileStat:
 
 @dataclass
 class PartitionKey:
+    """One leaf dir of the hive layout: the values Spark reads back
+    from its path, and the path itself. Hive dir names percent-escape
+    special characters (tp_index='a:b' is ``tp_index=a%3Ab``), so the
+    path is kept as found, never rebuilt from the values."""
+
     tp_partition: str
-    tp_index: str
+    tp_index: str | None
     tp_year: int
     tp_month: int
+    relpath: str
 
-    @property
-    def relpath(self) -> str:
-        return (
-            f"tp_partition={self.tp_partition}/tp_index={self.tp_index}/"
-            f"tp_year={self.tp_year}/tp_month={self.tp_month}"
-        )
+
+def _hive_value(v: str) -> str | None:
+    return None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
 
 
 def enumerate_partition_keys(catalog: Catalog, table: str) -> list[PartitionKey]:
@@ -91,10 +88,11 @@ def enumerate_partition_keys(catalog: Catalog, table: str) -> list[PartitionKey]
             try:
                 keys.append(
                     PartitionKey(
-                        parts["tp_partition"],
-                        parts["tp_index"],
+                        _hive_value(parts["tp_partition"]),
+                        _hive_value(parts["tp_index"]),
                         int(parts["tp_year"]),
                         int(parts["tp_month"]),
+                        rel,
                     )
                 )
             except ValueError:
@@ -256,7 +254,7 @@ def _bucket_rewrite_locked(
     if num_buckets is None:
         n = max(1, -(-bytes_ // TARGET_FILE_BYTES // 2))  # ceil(bytes/256MB)
         num_buckets = max(4, 1 << (n - 1).bit_length())
-    hive_dirs = _hive_dir_count(catalog.table_dir(table))
+    hive_dirs = max(1, len(enumerate_partition_keys(catalog, table)))
     cell = bytes_ / max(1, hive_dirs * int(num_buckets))
     if not force and cell < MIN_BUCKET_CELL_BYTES:
         import warnings
@@ -276,7 +274,10 @@ def _bucket_rewrite_locked(
             stacklevel=2,
         )
     sort_by = list(sort_by or bucket_by)
-    df = catalog.read_table(spark, table)
+    # read the files by path: a session-catalog registration of the
+    # current layout may still list the files a delete has replaced
+    tdir = catalog.table_dir(table)
+    df = spark.read.schema(_rewrite_schema(spark, tdir)).option("basePath", tdir).parquet(tdir)
     rows = catalog.row_count(table)
     staged = catalog.new_staging_dir(f"{table}.bucket")
     tmp_name = f"tp_bucket_stage_{table}_{os.path.basename(staged).replace('.', '_').replace('-', '_')}"
@@ -292,8 +293,7 @@ def _bucket_rewrite_locked(
         .saveAsTable(tmp_name)
     )
     spark.sql(f"DROP TABLE `{tmp_name}`")  # external: files stay
-    shutil.rmtree(catalog.table_dir(table))
-    os.replace(staged, catalog.table_dir(table))
+    _replace_dirs(catalog, table, [(tdir, staged)])
     rev = catalog.set_table_layout(table, bucket_by, num_buckets, sort_by)
     catalog.record_snapshot(
         "bucket",
@@ -368,7 +368,6 @@ def _compact_table_locked(
         )
 
     keys = enumerate_partition_keys(catalog, table)
-    merged_files, rows_total, chunk_jobs = 0, 0, 0
 
     if reindex_expr is not None:
         df = catalog.read_table(spark, table)
@@ -380,8 +379,7 @@ def _compact_table_locked(
         )
         staged = catalog.new_staging_dir(f"{table}.reindex")
         new.write.partitionBy(*PARTITION_COLS).mode("overwrite").parquet(staged)
-        shutil.rmtree(catalog.table_dir(table))
-        os.replace(staged, catalog.table_dir(table))
+        _replace_dirs(catalog, table, [(catalog.table_dir(table), staged)])
         catalog.record_snapshot("compact", {"table": table, "reindex": True})
         catalog.refresh_file_index(table)
         if lay:
@@ -392,48 +390,166 @@ def _compact_table_locked(
             )
         return {"keys_rewritten": len(keys), "files_merged": 0, "rows": rows_total}
 
-    base = catalog.table_dir(table)
-    schema = None
-    small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
-    staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
-    staging_roots: list[str] = []
-    try:
-        for key in keys:
-            stats = file_stats(catalog, table, key)
-            n_small = sum(s.bytes < small_file_bytes for s in stats)
-            if not find_overlaps(stats) and n_small <= 1:
-                continue
-            merged_files += len(stats)
-            rows = sum(s.rows for s in stats)
-            rows_total += rows
-            windows = chunk_windows(stats, max_chunk_rows)
-            total_bytes = sum(s.bytes for s in stats)
-            n_out = max(1, total_bytes // len(windows) // TARGET_FILE_BYTES)
-            if len(windows) == 1 and n_out == 1:
-                small.append((key, rows))
-                continue
-            root = catalog.new_staging_dir(f"{table}.compact")
-            staging_roots.append(root)
-            _rewrite_windowed(spark, base, key, windows, n_out, zorder_by, root)
-            staged[key.relpath] = root
-            chunk_jobs += len(windows)
-        for batch in _batches(small, max_chunk_rows):
-            if schema is None:
-                schema = _batch_schema(spark, base, batch[0][0])
-            root = catalog.new_staging_dir(f"{table}.compact")
-            staging_roots.append(root)
-            staged.update(_rewrite_batch(spark, base, batch, schema, zorder_by, root))
-            chunk_jobs += 1
-        _swap_and_reindex(catalog, table, staged, merged_files, zorder_by)
-    finally:
-        for root in staging_roots:
-            shutil.rmtree(root, ignore_errors=True)
+    todo: list[tuple[PartitionKey, list[FileStat], int]] = []
+    merged_files, rows_total = 0, 0
+    for key in keys:
+        stats = file_stats(catalog, table, key)
+        n_small = sum(s.bytes < small_file_bytes for s in stats)
+        if not find_overlaps(stats) and n_small <= 1:
+            continue
+        rows = sum(s.rows for s in stats)
+        merged_files += len(stats)
+        rows_total += rows
+        todo.append((key, stats, rows))
+    chunk_jobs = _rewrite_keys(
+        spark, catalog, table, todo, max_chunk_rows, zorder_by,
+        "compact", {"table": table, "keys": len(todo), "files": merged_files},
+    )
     return {
-        "keys_rewritten": len(staged),
+        "keys_rewritten": len(todo),
         "files_merged": merged_files,
         "rows": rows_total,
         "chunk_jobs": chunk_jobs,
     }
+
+
+def delete_range(
+    catalog: Catalog,
+    spark: SparkSession,
+    table: str,
+    partition: str,
+    time_from=None,
+    time_to=None,
+) -> int:
+    """Delete rows of one tp_partition within [time_from, time_to]
+    (reference: internal/database/cleanup.go:14-51). Returns rows
+    deleted.
+
+    A delete is a compaction of the keys that hold doomed rows, with a
+    row filter keeping the survivors. One aggregation job counts the
+    doomed rows per key of the partition; the keys with any go through
+    compaction's batched/windowed rewrite, swap and re-index, and come
+    out time-sorted. A table with a bucketed layout is then re-bucketed
+    on the manifest's spec, since the rewritten keys hold plain files.
+
+    Runs under the workspace writer lock (see compact_table).
+    """
+    with catalog.writer_lock(f"delete {table}"):
+        return _delete_range_locked(
+            catalog, spark, table, partition, time_from, time_to
+        )
+
+
+def _delete_range_locked(
+    catalog: Catalog,
+    spark: SparkSession,
+    table: str,
+    partition: str,
+    time_from,
+    time_to,
+) -> int:
+    keys = [
+        k for k in enumerate_partition_keys(catalog, table)
+        if k.tp_partition == partition
+    ]
+    if not keys:
+        return 0
+    cond = F.lit(True)
+    if time_from is not None:
+        cond = cond & (F.col("tp_timestamp") >= F.lit(time_from))
+    if time_to is not None:
+        cond = cond & (F.col("tp_timestamp") <= F.lit(time_to))
+    base = catalog.table_dir(table)
+    schema = _rewrite_schema(spark, os.path.join(base, keys[0].relpath))
+    counts = (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, k.relpath) for k in keys])
+        .filter(cond)
+        .groupBy(*PARTITION_COLS)
+        .count()
+        .collect()
+    )
+    # the string schema reads the values back as the keys carry them
+    doomed = {
+        (r["tp_partition"], r["tp_index"], int(r["tp_year"]), int(r["tp_month"])): r["count"]
+        for r in counts
+    }
+    n = sum(doomed.values())
+    if n == 0:
+        return 0
+    todo = []
+    for key in keys:
+        gone = doomed.get((key.tp_partition, key.tp_index, key.tp_year, key.tp_month))
+        if gone:
+            stats = file_stats(catalog, table, key)
+            todo.append((key, stats, sum(s.rows for s in stats) - gone))
+    _rewrite_keys(
+        spark, catalog, table, todo, MAX_CHUNK_ROWS, None,
+        "delete", {"table": table, "partition": partition, "rows": n},
+        keep=~cond, schema=schema,
+    )
+    lay = catalog.table_layout(table)
+    if lay:
+        bucket_rewrite(
+            spark, catalog, table, lay["bucket_by"], lay["num_buckets"], lay["sort_by"]
+        )
+    return n
+
+
+def _rewrite_keys(
+    spark: SparkSession,
+    catalog: Catalog,
+    table: str,
+    todo: list[tuple[PartitionKey, list[FileStat], int]],
+    max_chunk_rows: int,
+    zorder_by: list[str] | None,
+    op: str,
+    detail: dict,
+    keep: Column | None = None,
+    schema: StructType | None = None,
+) -> int:
+    """Rewrite each ``(key, file stats, rows it keeps)`` of ``todo`` into
+    staging, keeping the rows ``keep`` holds for (all when None), then
+    commit them together through :func:`_swap_and_reindex`, recording
+    snapshot ``op`` with ``detail``. Returns the number of write jobs.
+
+    A key that fits in one output file joins a batch of at most
+    ``max_chunk_rows`` rows (one read, one partitioned write); a bigger
+    key is rewritten alone, one job per time window. A key left with no
+    rows goes to a batch too, where the partitioned write leaves no dir
+    for it and the swap drops it (a windowed write would leave an empty
+    file)."""
+    base = catalog.table_dir(table)
+    small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
+    staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
+    staging_roots: list[str] = []
+    jobs = 0
+    try:
+        for key, stats, rows in todo:
+            windows = chunk_windows(stats, max_chunk_rows)
+            total_bytes = sum(s.bytes for s in stats)
+            n_out = max(1, total_bytes // len(windows) // TARGET_FILE_BYTES)
+            if rows == 0 or (len(windows) == 1 and n_out == 1):
+                small.append((key, rows))
+                continue
+            root = catalog.new_staging_dir(f"{table}.{op}")
+            staging_roots.append(root)
+            _rewrite_windowed(spark, base, key, windows, n_out, zorder_by, root, keep)
+            staged[key.relpath] = root
+            jobs += len(windows)
+        for batch in _batches(small, max_chunk_rows):
+            if schema is None:
+                schema = _rewrite_schema(spark, os.path.join(base, batch[0][0].relpath))
+            root = catalog.new_staging_dir(f"{table}.{op}")
+            staging_roots.append(root)
+            staged.update(_rewrite_batch(spark, base, batch, schema, zorder_by, root, keep))
+            jobs += 1
+        _swap_and_reindex(catalog, table, staged, op, detail, zorder_by)
+    finally:
+        for root in staging_roots:
+            shutil.rmtree(root, ignore_errors=True)
+    return jobs
 
 
 def _batches(small: list[tuple[PartitionKey, int]], max_rows: int):
@@ -451,12 +567,13 @@ def _batches(small: list[tuple[PartitionKey, int]], max_rows: int):
         yield batch
 
 
-def _batch_schema(spark: SparkSession, base: str, key: PartitionKey) -> StructType:
-    """Data columns from one key's files, plus the partition columns as
-    strings. A read with this schema takes partition values verbatim
-    from the paths whatever ``partitionColumnTypeInference`` says, so
-    ``tp_index=012345678901`` is written back under the same name."""
-    data = spark.read.parquet(os.path.join(base, key.relpath)).schema
+def _rewrite_schema(spark: SparkSession, path: str) -> StructType:
+    """Data columns from the files under ``path``, plus the partition
+    columns as strings. A read with this schema takes partition values
+    verbatim from the paths whatever ``partitionColumnTypeInference``
+    says, so ``tp_index=012345678901`` is written back under the same
+    name."""
+    data = spark.read.parquet(path).schema
     return StructType(
         [f for f in data.fields if f.name not in PARTITION_COLS]
         + [StructField(c, StringType()) for c in PARTITION_COLS]
@@ -470,17 +587,20 @@ def _rewrite_batch(
     schema: StructType,
     zorder_by: list[str] | None,
     root: str,
+    keep: Column | None,
 ) -> dict[str, str | None]:
     """Rewrite a batch of keys, each into one time-sorted (or z-ordered)
     file, with one read and one partitioned write into ``root``.
-    Returns each key's staged dir; None for a key whose files held no
-    rows, since no dir is written for it."""
+    Returns each key's staged dir; None for a key left with no rows,
+    since no dir is written for it."""
     df = (
         spark.read.schema(schema)
         .option("basePath", base)
         .parquet(*[os.path.join(base, k.relpath) for k, _ in batch])
-        .repartition(len(batch), *PARTITION_COLS)
     )
+    if keep is not None:
+        df = df.filter(keep)
+    df = df.repartition(len(batch), *PARTITION_COLS)
     if zorder_by:
         from tailpipe_spark.plans.zorder import with_zvalue
 
@@ -495,7 +615,7 @@ def _rewrite_batch(
         if not os.path.isdir(d):
             if rows:
                 raise RuntimeError(
-                    f"compaction wrote no {key.relpath} for its {rows} rows"
+                    f"rewrite wrote no {key.relpath} for its {rows} rows"
                 )
             d = None
         found[key.relpath] = d
@@ -510,10 +630,13 @@ def _rewrite_windowed(
     n_out: int,
     zorder_by: list[str] | None,
     root: str,
+    keep: Column | None,
 ) -> None:
     """Rewrite one key into ``root``, one job per time window, each
     window range-partitioned into ``n_out`` files."""
     df = spark.read.parquet(os.path.join(base, key.relpath))
+    if keep is not None:
+        df = df.filter(keep)
     for lo, hi in windows:
         chunk = df
         if lo is not None:
@@ -534,37 +657,47 @@ def _rewrite_windowed(
         out.write.mode("append").parquet(root)
 
 
+def _replace_dirs(
+    catalog: Catalog, table: str, moves: list[tuple[str, str | None]]
+) -> None:
+    """Replace each ``(dir, staged)`` of ``moves`` — a key dir or the
+    whole table dir — by its staged rewrite (None: drop it, and the
+    parents it leaves empty). Each old dir moves aside into staging
+    before the new one moves in, so a crash between the two renames
+    leaves the old files in staging rather than deleting them."""
+    base = catalog.table_dir(table)
+    old = catalog.new_staging_dir(f"{table}.replaced")
+    for i, (dst, new) in enumerate(moves):
+        os.replace(dst, os.path.join(old, str(i)))
+        if new is not None:
+            os.replace(new, dst)
+            continue
+        parent = os.path.dirname(dst)
+        while parent != base and not os.listdir(parent):
+            os.rmdir(parent)
+            parent = os.path.dirname(parent)
+    shutil.rmtree(old)
+
+
 def _swap_and_reindex(
     catalog: Catalog,
     table: str,
     staged: dict[str, str | None],
-    files_in: int,
+    op: str,
+    detail: dict,
     zorder_by: list[str] | None,
 ) -> None:
     """Replace each key dir by its staged rewrite (None: the key held no
-    rows and goes away), then re-index those keys and record the
-    snapshot. Runs only after every rewrite succeeded, so a failed
-    write leaves the table as it was."""
+    rows and goes away), record snapshot ``op`` with ``detail``, then
+    re-index those keys. Runs only after every rewrite succeeded, so a
+    failed write leaves the table as it was."""
     base = catalog.table_dir(table)
     if staged:
-        # move the old dir aside before moving the new one in, so a
-        # crash between the two renames leaves the old files in staging
-        # rather than deleting them
-        old = catalog.new_staging_dir(f"{table}.replaced")
-        for i, (rel, new) in enumerate(sorted(staged.items())):
-            key_dir = os.path.join(base, rel)
-            os.replace(key_dir, os.path.join(old, str(i)))
-            if new is not None:
-                os.replace(new, key_dir)
-                continue
-            parent = os.path.dirname(key_dir)  # drop the emptied parents
-            while parent != base and not os.listdir(parent):
-                os.rmdir(parent)
-                parent = os.path.dirname(parent)
-        shutil.rmtree(old)
-    catalog.record_snapshot(
-        "compact", {"table": table, "keys": len(staged), "files": files_in}
-    )
+        _replace_dirs(
+            catalog, table,
+            [(os.path.join(base, rel), new) for rel, new in sorted(staged.items())],
+        )
+    catalog.record_snapshot(op, detail)
     if staged:
         # a z-ordered layout makes its companion columns selective per
         # file — index them so pruned_files() can skip on them too.

@@ -34,7 +34,7 @@ INIT_FILE_MAX_AGE_S = 86400
 
 
 def _sql_ts(t: datetime) -> str:
-    return f"TIMESTAMP '{t.strftime('%Y-%m-%d %H:%M:%S')}'"
+    return f"TIMESTAMP '{t.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
 
 
 def _like_any(col: str, patterns: list[str]) -> str:

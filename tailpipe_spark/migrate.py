@@ -54,9 +54,14 @@ def migrate_legacy_table(
     from pyspark.sql import Observation
 
     obs = Observation()
-    writer.append(catalog, table, df.observe(obs, F.count(F.lit(1)).alias("n")))
+    new_files = writer.append(
+        catalog, table, df.observe(obs, F.count(F.lit(1)).alias("n"))
+    )
     migrated = obs.get["n"]
     catalog.record_snapshot(
         "migrate", {"table": table, "from": legacy_path, "rows": migrated}
     )
+    # keep the file index fresh the way collect does: a stale index
+    # makes every time-bounded query scan the whole table
+    catalog.merge_file_index(table, new_files)
     return migrated

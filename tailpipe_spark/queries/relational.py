@@ -259,7 +259,8 @@ def q05_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     exactly this SMJ shape), so bucketing the two fact tables by
     #     orderkey is the 100 TB answer to DuckDB's never-shuffles
     #     advantage. The query text stays layout-agnostic: bucketing
-    #     is a storage decision (bucketing.py), not a plan rewrite.
+    #     is a storage decision (compact.bucket_rewrite), not a plan
+    #     rewrite.
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation")
     cust = _t(spark, sf_dir, "customer")

@@ -1,51 +1,26 @@
-"""Partitioned Parquet writer + range delete.
+"""Partitioned Parquet writer.
 
 Physical layout = the reference's DuckLake partition key
 ``(tp_partition, tp_index, year(tp_timestamp), month(tp_timestamp))``
 (reference: internal/database/ducklake_table.go:38-41), materialized as
 hive columns tp_partition/tp_index/tp_year/tp_month.
 
-Scale notes:
-- appends go straight to partition dirs — no global shuffle; Spark
-  writes one file per task per partition, and the compactor merges
-  small files later (same split as the reference: fast ingest, async
-  compaction).
-- deletes are partition-scoped rewrites using dynamic partition
-  overwrite, so only affected partitions are touched (A18).
+Appends go straight to partition dirs — no global shuffle; Spark writes
+one file per task per partition, and the compactor merges small files
+later (same split as the reference: fast ingest, async compaction).
+Range deletes rewrite partition keys through the compactor
+(compact.delete_range).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import os
+import shutil
+
+from pyspark.sql import DataFrame
 
 from tailpipe_spark.catalog import PARTITION_COLS, Catalog
 from tailpipe_spark.enrich import with_partition_columns
-
-
-import os as _os
-import re as _re
-
-
-def _unescape_hive(s: str) -> str:
-    """Reverse Spark's hive-partition-dir escaping (%XX per char)."""
-    return _re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
-
-
-def _partition_leaf_dirs(base: str, prefix: str = ""):
-    """Yield (relpath, unescaped (p,i,y,mo) value tuple) for every leaf
-    partition dir under ``base``; ``prefix`` re-roots relpaths when
-    ``base`` is itself a partition-level subdir."""
-    for root, _dirs, names in _os.walk(base):
-        if not any(n.endswith(".parquet") for n in names):
-            continue
-        rel = _os.path.relpath(root, base)
-        if prefix:
-            rel = _os.path.join(prefix, rel)
-        parts = [seg.split("=", 1) for seg in rel.split(_os.sep) if "=" in seg]
-        vals = {k: _unescape_hive(v) for k, v in parts}
-        if set(vals) >= set(PARTITION_COLS):
-            yield rel, tuple(vals[c] for c in PARTITION_COLS)
 
 
 def append(catalog: Catalog, table: str, df: DataFrame) -> list[str]:
@@ -58,119 +33,19 @@ def append(catalog: Catalog, table: str, df: DataFrame) -> list[str]:
     transactional file metadata (internal/database/file_metadata.go:
     42-52). Spark part-file names embed a job UUID, so moves never
     collide with existing files."""
-    import shutil
-
     out = with_partition_columns(df)
     staged = catalog.new_staging_dir(f"{table}.append")
     out.write.partitionBy(*PARTITION_COLS).mode("overwrite").parquet(staged)
     base = catalog.table_dir(table)
     moved: list[str] = []
-    for root, _dirs, names in _os.walk(staged):
+    for root, _dirs, names in os.walk(staged):
         for n in names:
             if not n.endswith(".parquet"):
                 continue
-            rel = _os.path.relpath(_os.path.join(root, n), staged)
-            dst = _os.path.join(base, rel)
-            _os.makedirs(_os.path.dirname(dst), exist_ok=True)
-            _os.replace(_os.path.join(root, n), dst)
+            rel = os.path.relpath(os.path.join(root, n), staged)
+            dst = os.path.join(base, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(os.path.join(root, n), dst)
             moved.append(rel)
     shutil.rmtree(staged, ignore_errors=True)
     return moved
-
-
-def delete_range(
-    catalog: Catalog,
-    spark: SparkSession,
-    table: str,
-    partition: str,
-    time_from=None,
-    time_to=None,
-) -> int:
-    """Delete rows of one tp_partition within [time_from, time_to]
-    (reference: internal/database/cleanup.go:14-51). Returns rows
-    deleted. Only partitions containing the range are rewritten.
-
-    Survivors are written to a staging dir OUTSIDE the table tree, then
-    swapped in per partition key — the write job reads the old files
-    while they still exist, so no cache-based materialization is needed
-    and a crash never leaves tmp output where a reader would scan it."""
-    import os
-    import shutil
-
-    df = catalog.read_table(spark, table).filter(F.col("tp_partition") == partition)
-    cond = F.lit(True)
-    if time_from is not None:
-        cond = cond & (F.col("tp_timestamp") >= F.lit(time_from))
-    if time_to is not None:
-        cond = cond & (F.col("tp_timestamp") <= F.lit(time_to))
-
-    doomed = df.filter(cond)
-    # one job yields BOTH the deleted-row count and the affected key
-    # set (the driver needs the keys anyway for the directory swap)
-    key_cols = ["tp_partition", "tp_index", "tp_year", "tp_month"]
-    agg = doomed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n")).collect()
-    n = sum(r["__n"] for r in agg)
-    if n == 0:
-        return 0
-    survivors = df.filter(~cond)
-    # Rewrite only partition keys that held doomed rows. A delete can
-    # touch thousands of hive keys, so the selection is a broadcast
-    # null-safe semi-join against the key set — never a chained OR
-    # predicate tree — plus a coarse static (tp_year, tp_month) bound
-    # so Catalyst still prunes partition directories at planning time
-    # (the join alone would defer pruning to runtime).
-    affected = [tuple(r[c] for c in key_cols) for r in agg]
-    keys_df = spark.createDataFrame(
-        affected, "tp_partition string, tp_index string, tp_year int, tp_month int"
-    )
-    months = [y * 12 + mo for _, _, y, mo in affected if y is not None and mo is not None]
-    to_rewrite = survivors
-    if months and len(months) == len(affected):
-        lin = F.col("tp_year") * 12 + F.col("tp_month")
-        to_rewrite = to_rewrite.filter(lin.between(min(months), max(months)))
-    to_rewrite = to_rewrite.join(
-        F.broadcast(keys_df),
-        on=[to_rewrite[c].eqNullSafe(keys_df[c]) for c in key_cols],
-        how="left_semi",
-    )
-    staged = catalog.new_staging_dir(f"{table}.delete")
-    (
-        to_rewrite
-        .write.partitionBy(*PARTITION_COLS)
-        .mode("overwrite")
-        .parquet(staged)
-    )
-    # Swap by the dir names Spark actually wrote: hive layout
-    # percent-escapes special characters (tp_index='a:b' becomes
-    # tp_index=a%3Ab), so dir paths must never be rebuilt from raw
-    # values — match existing dirs by their UNESCAPED key tuple instead.
-    affected_vals = {tuple(str(v) for v in key) for key in affected}
-    touched_rels: set[str] = set()
-    base = catalog.table_dir(table)
-    # only the target tp_partition's subtree needs walking — a delete on
-    # one partition must not list every leaf dir of a huge table
-    sub_roots = [
-        os.path.join(base, name)
-        for name in os.listdir(base)
-        if name.startswith("tp_partition=")
-        and _unescape_hive(name.split("=", 1)[1]) == partition
-    ]
-    for sub in sub_roots:
-        for rel, key in _partition_leaf_dirs(sub, prefix=os.path.basename(sub)):
-            if key in affected_vals:
-                shutil.rmtree(os.path.join(base, rel))
-                touched_rels.add(rel)
-    for rel, _key in _partition_leaf_dirs(staged):
-        dst = os.path.join(base, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(os.path.join(staged, rel), dst)
-        touched_rels.add(rel)
-    shutil.rmtree(staged, ignore_errors=True)
-    # keep the skipping index live: re-footer-read only the rewritten
-    # partition keys (emptied keys just drop their index rows)
-    if catalog.has_file_index(table):
-        catalog.refresh_partition_index(table, sorted(touched_rels))
-    catalog.record_snapshot(
-        "delete", {"table": table, "partition": partition, "rows": n}
-    )
-    return n

@@ -22,7 +22,7 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _mk_table(spark, workspace, tmp_path, name, n_rows, val_col):
+def _mk_table(spark, workspace, tmp_path, name, n_rows, val_col, day=lambda i: 15):
     table = TableConfig(
         name=name,
         columns=[
@@ -33,7 +33,7 @@ def _mk_table(spark, workspace, tmp_path, name, n_rows, val_col):
         map_fields=[],
     )
     rows = [
-        {"k": i % 97, val_col: float(i), "time": f"2024-0{1 + (i % 2)}-15T10:00:00"}
+        {"k": i % 97, val_col: float(i), "time": f"2024-0{1 + (i % 2)}-{day(i):02d}T10:00:00"}
         for i in range(n_rows)
     ]
     p = tmp_path / f"{name}.jsonl"
@@ -93,6 +93,39 @@ def test_compaction_is_layout_sticky(spark, two_tables):
     assert out.get("bucket_by") == ["k"]
     assert ws.table_layout("facts_a")["layout_rev"] == rev1 + 1
     assert ws.read_table(spark, "facts_a").count() == 400
+
+
+def test_delete_range_keeps_bucketed_layout(spark, workspace, tmp_path):
+    """A range delete rewrites the keys it touches with plain files, so
+    on a bucketed table it re-buckets on the manifest's spec: scans in
+    the same session must not use the registration that listed the old
+    files, and a new registration must find only bucket files."""
+    from datetime import datetime
+
+    from tailpipe_spark.compact import delete_range
+
+    ws = workspace
+    _mk_table(spark, ws, tmp_path, "facts_d", 400, "vd", day=lambda i: 1 + i % 28)
+    bucket_rewrite(spark, ws, "facts_d", ["k"], 4, force=True)
+    rev = ws.table_layout("facts_d")["layout_rev"]
+    assert ws.read_table(spark, "facts_d").count() == 400  # registers rev
+
+    # part of January: the January key keeps some rows
+    n = delete_range(
+        ws, spark, "facts_d", "default", datetime(2024, 1, 1), datetime(2024, 1, 10)
+    )
+    assert 0 < n < 200
+
+    plain = spark.read.parquet(ws.table_dir("facts_d"))
+    df = ws.read_table(spark, "facts_d")
+    by_key = sorted(map(tuple, df.groupBy("k").count().collect()))
+    assert by_key == sorted(map(tuple, plain.groupBy("k").count().collect()))
+    assert sum(c for _k, c in by_key) == 400 - n
+    assert (
+        df.alias("l").join(df.alias("r"), "k").count()
+        == plain.alias("l").join(plain.alias("r"), "k").count()
+    )
+    assert ws.table_layout("facts_d")["layout_rev"] > rev
 
 
 def test_time_pruned_read_keeps_path_branch(spark, two_tables):

@@ -118,6 +118,55 @@ def test_cli_connect_sql_script_runs_in_sql_session(
     assert "tp_year * 12" in src
 
 
+def test_connect_sql_views_match_query_filters_at_subsecond_bounds(
+    spark, workspace, tmp_path
+):
+    """The spark-sql init script bakes the same time bounds as
+    ``tailpipe query --from/--to``, down to the microsecond."""
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.connect import write_init_script
+    from tailpipe_spark.query_cli import apply_query_filters
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    stamps = ["00.000", "00.250", "00.500", "00.750", "01.000"]
+    p = tmp_path / "ticks.jsonl"
+    p.write_text("\n".join(
+        json.dumps({"id": i, "time": f"2024-03-01T10:00:{s}"})
+        for i, s in enumerate(stamps)
+    ))
+    table = TableConfig(
+        name="ticks",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table, PartitionConfig("ticks", "default"),
+            source_df=read_jsonl(spark, [str(p)]))
+
+    tf, tt = "2024-03-01T10:00:00.250", "2024-03-01T10:00:00.750"
+    src = open(write_init_script(
+        workspace, str(tmp_path / "init"), dialect="sql", time_from=tf, time_to=tt,
+    )).read()
+    for chunk in src.split(";"):
+        stmt = "\n".join(
+            l for l in chunk.splitlines() if not l.strip().startswith("--")
+        ).strip()
+        if stmt:
+            spark.sql(stmt)
+    try:
+        via_view = sorted(r["id"] for r in spark.table("ticks").collect())
+    finally:
+        spark.catalog.dropTempView("ticks")
+    via_query = sorted(
+        r["id"]
+        for r in apply_query_filters(workspace.read_table(spark, "ticks"), tf, tt).collect()
+    )
+    assert via_view == via_query == [1, 2, 3]
+
+
 def test_cli_connect_json_envelope(populated_workspace, capsys, tmp_path):
     rc = main([
         "--workspace", populated_workspace.workspace,

@@ -8,9 +8,8 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from tailpipe_spark import writer
 from tailpipe_spark.collect import collect, load_state
-from tailpipe_spark.compact import compact_table, enumerate_partition_keys
+from tailpipe_spark.compact import compact_table, delete_range, enumerate_partition_keys
 from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
 from tailpipe_spark.schema import SchemaChangeError
 
@@ -319,7 +318,7 @@ def test_delete_range(spark, workspace, tmp_path):
     )
     part = PartitionConfig("t4", "default")
     collect(spark, workspace, table, part, source_df=read_jsonl(spark, [str(p)]))
-    n = writer.delete_range(
+    n = delete_range(
         workspace, spark, "t4", "default",
         datetime(2024, 2, 1), datetime(2024, 2, 28),
     )
@@ -561,7 +560,7 @@ def test_delete_range_with_escaped_partition_values(spark, workspace, tmp_path):
     collect(spark, workspace, table, part, source_df=read_jsonl(spark, [str(p)]))
     assert workspace.file_stats("t_esc")["rows"] == 3
 
-    n = writer.delete_range(
+    n = delete_range(
         workspace, spark, "t_esc", "default",
         datetime(2024, 2, 1), datetime(2024, 2, 28),
     )
@@ -828,3 +827,64 @@ def test_batched_zorder_matches_single_key_rewrite(spark, workspace, tmp_path):
     for key, paths in _key_files(workspace, "t_z").items():
         assert len(paths) == 1, key
         assert pq.read_table(paths[0], columns=["id"]).column(0).to_pylist() == expected[key]
+
+
+def test_delete_range_rewrites_keys_like_compaction(spark, workspace, tmp_path, monkeypatch):
+    """A delete sends the keys holding doomed rows through compaction's
+    rewrite: an oversized key keeps its time windows and comes out
+    time-sorted, an oversized key left empty is dropped with no empty
+    file behind, a null tp_index (hive's default-partition dir) is
+    matched, and an untouched key keeps its files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark import compact
+
+    def rows(idx, days_by_batch):
+        return [
+            [(100 * b + i, idx, f"2024-05-{d:02d}T{i:02d}:00:00")
+             for i, d in enumerate(days)]
+            for b, days in enumerate(days_by_batch)
+        ]
+
+    keys = {
+        "big": rows("big", [[7 * b + 1 + i % 7 for i in range(13)] for b in range(3)]),
+        "big_gone": rows("big_gone", [[6 + 3 * b + i % 3 for i in range(8)] for b in range(3)]),
+        None: rows(None, [[1, 2, 12, 13]]),
+        "keep": rows("keep", [[1, 2, 3]]),
+    }
+    batches = [sum((k[b] for k in keys.values() if b < len(k)), []) for b in range(3)]
+    _collect_rows(spark, workspace, tmp_path, "t_del", batches)
+    base = workspace.table_dir("t_del")
+    before = _key_files(workspace, "t_del")
+    kept_key = "tp_partition=default/tp_index=keep/tp_year=2024/tp_month=5"
+    kept_bytes = [open(p, "rb").read() for p in before[kept_key]]
+
+    doomed = lambda t: "2024-05-05" <= t[:10] <= "2024-05-17"  # noqa: E731
+    want = {}
+    for idx, bs in keys.items():
+        left = [r for b in bs for r in b if not doomed(r[2])]
+        if left:
+            want[idx] = len(left)
+    monkeypatch.setattr(compact, "MAX_CHUNK_ROWS", 20)
+    n = compact.delete_range(
+        workspace, spark, "t_del", "default",
+        datetime(2024, 5, 5), datetime(2024, 5, 17, 23, 59, 59),
+    )
+    assert n == sum(len(b) for bs in keys.values() for b in bs) - sum(want.values())
+
+    counts = workspace.read_table(spark, "t_del").groupBy("tp_index").count().collect()
+    assert {r["tp_index"]: r["count"] for r in counts} == want
+    assert not os.path.exists(os.path.join(base, "tp_partition=default/tp_index=big_gone"))
+    after = _key_files(workspace, "t_del")
+    assert after[kept_key] == before[kept_key]
+    assert [open(p, "rb").read() for p in after[kept_key]] == kept_bytes
+    big = "tp_partition=default/tp_index=big/tp_year=2024/tp_month=5"
+    assert len(after[big]) == 2  # one file per time window
+    for paths in after.values():
+        for p in paths:
+            ts = pq.read_table(p, columns=["tp_timestamp"]).column(0).to_pylist()
+            assert ts and ts == sorted(ts), p
+    _assert_index_fresh(workspace, "t_del")
+    assert not os.listdir(workspace.staging_dir)

@@ -1,3 +1,5 @@
+import json
+
 import pytest
 
 from tailpipe_spark.config import (
@@ -66,6 +68,49 @@ def test_migrate_legacy_table(spark, workspace, tmp_path):
 
     keys = enumerate_partition_keys(workspace, "migrated_logs")
     assert len({(k.tp_year, k.tp_month) for k in keys}) == 12
+
+
+def test_migrate_into_collected_table_keeps_index_fresh(spark, workspace, tmp_path):
+    """A migrate into a table that collect already indexed merges the
+    files it appended, so time-bounded reads keep pruning by the index."""
+    from datetime import datetime
+
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    p = tmp_path / "c.jsonl"
+    p.write_text("\n".join(
+        json.dumps({"id": i, "time": f"2024-0{m}-01T00:00:00"})
+        for i, m in enumerate([1, 2])
+    ))
+    table = TableConfig(
+        name="logs",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table, PartitionConfig("logs", "default"),
+            source_df=read_jsonl(spark, [str(p)]))
+    assert workspace.pruned_files("logs") is not None
+
+    legacy_dir = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(10, datetime(2024, 3, 1)), (11, datetime(2024, 4, 1))],
+        "id bigint, tp_timestamp timestamp",
+    ).write.parquet(legacy_dir)
+    assert migrate_legacy_table(spark, workspace, legacy_dir, "logs") == 2
+
+    def index():
+        return sorted(workspace.load_file_index("logs"), key=lambda e: e["path"])
+
+    assert workspace.pruned_files("logs") is not None
+    live = index()
+    assert len(live) == workspace.file_stats("logs")["files"]
+    workspace.refresh_file_index("logs")
+    assert live == index()
 
 
 def test_migrate_cli_verb(spark, workspace, tmp_path, capsys, monkeypatch):

@@ -1,36 +1,6 @@
-"""Bucketing + skew operators: correctness AND plan-shape guarantees."""
+"""Skew operators: correctness guarantees."""
 
-from pyspark.sql import functions as F
-
-from tailpipe_spark.bucketing import bucketed_join, write_bucketed
 from tailpipe_spark.operators.skew import salted_join, two_phase_agg
-
-
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        a = spark.range(10000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-        )
-        b = spark.range(5000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-        )
-        write_bucketed(a, "bk_a", ["k"], 8)
-        write_bucketed(b, "bk_b", ["k"], 8)
-        j = bucketed_join(spark, "bk_a", "bk_b", ["k"])
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan  # co-located: no shuffle
-        assert j.count() == 5000
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
 
 
 def test_salted_join_matches_plain_join(spark):

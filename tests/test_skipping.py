@@ -301,10 +301,10 @@ def test_compact_refreshes_only_rewritten_keys(
 def test_delete_keeps_index_fresh(monthly_workspace, spark):
     """delete_range maintains the index for the keys it rewrote; the
     index stays usable (not stale) and matches a full rebuild."""
-    from tailpipe_spark import writer
+    from tailpipe_spark.compact import delete_range
 
     cat = monthly_workspace
-    n = writer.delete_range(
+    n = delete_range(
         cat, spark, "metrics", "default",
         time_from=datetime.datetime(2024, 4, 1),
         time_to=datetime.datetime(2024, 4, 30),
