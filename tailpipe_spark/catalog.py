@@ -643,18 +643,14 @@ class Catalog:
         Conservative by construction: files without stats for a tested
         column and files containing null timestamps are always kept
         (the query layer's lower bound keeps NULL rows, query_cli.py)."""
-        from datetime import datetime, timezone
+        from datetime import datetime
 
-        def _naive_utc(t):
-            # Index timestamps are naive UTC; relative CLI bounds
-            # (``T-7d``) arrive tz-aware — normalize or the < compare
-            # raises TypeError (r6 ADVICE).
-            if t is not None and t.tzinfo is not None:
-                t = t.astimezone(timezone.utc).replace(tzinfo=None)
-            return t
+        from tailpipe_spark.query_cli import naive_utc
 
-        time_from = _naive_utc(time_from)
-        time_to = _naive_utc(time_to)
+        # Index timestamps are naive UTC; relative CLI bounds (``T-7d``)
+        # arrive tz-aware — normalize or the < compare raises TypeError.
+        time_from = naive_utc(time_from)
+        time_to = naive_utc(time_to)
         index = self.load_file_index(table)
         if index is None:
             return None
@@ -702,23 +698,24 @@ class Catalog:
         self,
         spark: SparkSession,
         filters: list[str] | None = None,
-        hide_layout_cols: bool = True,
+        time_from=None,
+        time_to=None,
     ) -> list[str]:
         """Register one temp view per table, with optional baked-in
-        filter predicates (reference: internal/database/views.go:14-34).
+        SQL filter conjuncts (reference: internal/database/views.go:14-34;
+        ``query_cli.filter_conditions`` builds the CLI's). ``time_from``
+        / ``time_to`` only narrow the files each scan lists (see
+        read_table); the filters decide which rows the view holds.
         Layout columns tp_year/tp_month are hidden so ``select *``
         matches the reference's schema."""
-        names = []
-        for t in self.list_tables():
-            df = self.read_table(spark, t)
-            for flt in filters or []:
-                from pyspark.sql import functions as F
+        from pyspark.sql import functions as F
 
+        names = self.list_tables()
+        for t in names:
+            df = self.read_table(spark, t, time_from=time_from, time_to=time_to)
+            for flt in filters or []:
                 df = df.filter(F.expr(flt))
-            if hide_layout_cols:
-                df = df.drop("tp_year", "tp_month")
-            df.createOrReplaceTempView(t)
-            names.append(t)
+            df.drop("tp_year", "tp_month").createOrReplaceTempView(t)
         return names
 
     def read_table(

@@ -160,7 +160,9 @@ def cmd_query(args) -> int:
 
         Shell(spark, cat).repl()
         return 0
-    from tailpipe_spark.query_cli import apply_query_filters
+    from datetime import datetime, timezone
+
+    from tailpipe_spark.query_cli import filter_conditions, parse_time
     from tailpipe_spark.repair import is_corrupt_parquet_error, quarantine_invalid_files
 
     # Invalid-parquet files are quarantined and the query retried, like
@@ -169,31 +171,18 @@ def cmd_query(args) -> int:
     # would still carry the pre-quarantine file listing — and a retry is
     # only attempted while nothing has been printed yet (a streamed
     # partial page must never be emitted twice).
+    # one `now` for both the file-index pruning bound and the row
+    # filter, so relative T-7d forms can't straddle
+    now = datetime.now(timezone.utc)
+    tf = parse_time(args.time_from, now) if args.time_from else None
+    tt = parse_time(args.time_to, now) if args.time_to else None
+    filters = filter_conditions(tf, tt, args.index, args.partition)
     attempts = 0
     while True:
         emitted = False
         try:
             # registration reads footers too — keep it inside the retry
-            from datetime import datetime, timezone
-
-            from tailpipe_spark.query_cli import parse_time
-
-            # one `now` for both the file-index pruning bound and the
-            # row filter, so relative T-7d forms can't straddle
-            now = datetime.now(timezone.utc)
-            tf = parse_time(args.time_from, now) if args.time_from else None
-            tt = parse_time(args.time_to, now) if args.time_to else None
-            for t in cat.list_tables():
-                df = cat.read_table(spark, t, time_from=tf, time_to=tt)
-                df = apply_query_filters(
-                    df,
-                    time_from=args.time_from,
-                    time_to=args.time_to,
-                    index_patterns=args.index,
-                    partition_patterns=args.partition,
-                    now=now,
-                )
-                df.drop("tp_year", "tp_month").createOrReplaceTempView(t)
+            cat.register_views(spark, filters, time_from=tf, time_to=tt)
             result = spark.sql(args.sql)
             if args.explain:
                 result.explain(mode="formatted")

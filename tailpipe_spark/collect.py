@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from tailpipe_spark.catalog import Catalog
 from tailpipe_spark.config import PartitionConfig, TableConfig
 from tailpipe_spark.enrich import enrich_tp
-from tailpipe_spark.plans.pruning import apply_pruned_time_filter
+from tailpipe_spark.query_cli import filter_conditions
 from tailpipe_spark.schema import columns_for_table, to_type_string
 from tailpipe_spark.validate import validate_required
 from tailpipe_spark import compact, writer
@@ -287,7 +287,8 @@ def _collect_impl(
         partition=partition.name,
         index_expr=partition.tp_index,
     )
-    df = apply_pruned_time_filter(df, time_from, time_to)  # A10
+    for cond in filter_conditions(time_from, time_to, layout=False):  # A10
+        df = df.filter(F.expr(cond))
 
     result = validate_required(df, list(required))  # A11/A12
 

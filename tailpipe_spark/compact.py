@@ -37,7 +37,8 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from tailpipe_spark.catalog import PARTITION_COLS, Catalog
+from tailpipe_spark.catalog import PARTITION_COLS, Catalog, FooterInfo
+from tailpipe_spark.query_cli import sql_ts
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -107,8 +108,6 @@ def file_stats(catalog: Catalog, table: str, key: PartitionKey) -> list[FileStat
     installed pyarrow cannot parse (VARIANT from json-typed columns)
     still compact; a file with any stat-less row group is treated as
     unranged rather than getting a partial (overlap-missing) range."""
-    from tailpipe_spark.catalog import FooterInfo
-
     d = os.path.join(catalog.table_dir(table), key.relpath)
     out = []
     for name in sorted(os.listdir(d)):
@@ -454,11 +453,12 @@ def _delete_range_locked(
     ]
     if not keys:
         return 0
-    cond = F.lit(True)
-    if time_from is not None:
-        cond = cond & (F.col("tp_timestamp") >= F.lit(time_from))
-    if time_to is not None:
-        cond = cond & (F.col("tp_timestamp") <= F.lit(time_to))
+    bounds = [
+        f"tp_timestamp {op} {sql_ts(t)}"
+        for op, t in ((">=", time_from), ("<=", time_to))
+        if t is not None
+    ]
+    cond = F.expr(" AND ".join(bounds)) if bounds else F.lit(True)
     base = catalog.table_dir(table)
     schema = _rewrite_schema(spark, os.path.join(base, keys[0].relpath))
     counts = (
@@ -518,8 +518,7 @@ def _rewrite_keys(
     ``max_chunk_rows`` rows (one read, one partitioned write); a bigger
     key is rewritten alone, one job per time window. A key left with no
     rows goes to a batch too, where the partitioned write leaves no dir
-    for it and the swap drops it (a windowed write would leave an empty
-    file)."""
+    for it and the swap drops it."""
     base = catalog.table_dir(table)
     small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
     staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
@@ -633,16 +632,19 @@ def _rewrite_windowed(
     keep: Column | None,
 ) -> None:
     """Rewrite one key into ``root``, one job per time window, each
-    window range-partitioned into ``n_out`` files."""
+    window range-partitioned into ``n_out`` files. A window with no
+    rows still writes one empty file — when the last cut lands on the
+    last file, or a delete empties a window — so zero-row files are
+    removed before the key is swapped in."""
     df = spark.read.parquet(os.path.join(base, key.relpath))
     if keep is not None:
         df = df.filter(keep)
     for lo, hi in windows:
         chunk = df
         if lo is not None:
-            chunk = chunk.filter(F.col("tp_timestamp") >= F.lit(lo))
+            chunk = chunk.filter(F.expr(f"tp_timestamp >= {sql_ts(lo)}"))
         if hi is not None:
-            cond = F.col("tp_timestamp") < F.lit(hi)
+            cond = F.expr(f"tp_timestamp < {sql_ts(hi)}")
             if lo is None:  # first window keeps stat-less rows
                 cond = cond | F.col("tp_timestamp").isNull()
             chunk = chunk.filter(cond)
@@ -655,6 +657,13 @@ def _rewrite_windowed(
                 int(n_out), F.col("tp_timestamp")
             ).sortWithinPartitions("tp_timestamp")
         out.write.mode("append").parquet(root)
+    for name in os.listdir(root):
+        p = os.path.join(root, name)
+        if name.endswith(".parquet") and FooterInfo(p).num_rows == 0:
+            os.remove(p)
+            crc = os.path.join(root, f".{name}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
 
 
 def _replace_dirs(

@@ -10,13 +10,14 @@ the workspace's hive-partitioned parquet, runnable verbatim by
 BI tools and plain SQL shells attach to a workspace without importing
 any Python.
 
-Filter semantics match the query CLI exactly: ``--from`` keeps
-NULL-timestamp rows (reference collector.go:228-239), wildcards in
+Filter semantics match the query CLI by construction: the views bake in
+the conjuncts of ``query_cli.filter_conditions``, the one definition of
+the filter, which the CLI also applies. ``--from`` keeps NULL-timestamp
+rows (reference collector.go:228-239), wildcards in
 ``--index``/``--partition`` become LIKE patterns, and the implied
 ``(tp_year*12+tp_month)`` bound is baked into each view so an external
 session still gets partition-directory pruning (the views are the only
-scan path an external client has — if the bound lived only in our
-Python helpers, external scans would read every partition).
+scan path an external client has).
 """
 
 from __future__ import annotations
@@ -26,55 +27,10 @@ import os
 import time
 from datetime import datetime
 
-from tailpipe_spark.plans.pruning import _ym
-from tailpipe_spark.query_cli import parse_time, wildcard_to_like
+from tailpipe_spark.query_cli import filter_conditions, parse_time
 
 #: init files older than this are swept on each connect (connect.go:175-229)
 INIT_FILE_MAX_AGE_S = 86400
-
-
-def _sql_ts(t: datetime) -> str:
-    return f"TIMESTAMP '{t.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-
-
-def _like_any(col: str, patterns: list[str]) -> str:
-    likes = [
-        f"CAST({col} AS STRING) LIKE '{wildcard_to_like(p)}'" for p in patterns
-    ]
-    return "(" + " OR ".join(likes) + ")"
-
-
-def view_conditions(
-    time_from: str | None = None,
-    time_to: str | None = None,
-    index_patterns: list[str] | None = None,
-    partition_patterns: list[str] | None = None,
-    extra: str | None = None,
-    now: datetime | None = None,
-) -> list[str]:
-    """WHERE conjuncts for one view, mirroring apply_query_filters."""
-    conds: list[str] = []
-    tf = parse_time(time_from, now) if time_from else None
-    tt = parse_time(time_to, now) if time_to else None
-    if tf is not None:
-        conds.append(f"(tp_timestamp IS NULL OR tp_timestamp >= {_sql_ts(tf)})")
-    if tt is not None:
-        conds.append(f"tp_timestamp <= {_sql_ts(tt)}")
-    if tf is not None or tt is not None:
-        lin = "(tp_year * 12 + (tp_month - 1))"
-        part = []
-        if tf is not None:
-            part.append(f"{lin} >= {_ym(tf)}")
-        if tt is not None:
-            part.append(f"{lin} <= {_ym(tt)}")
-        conds.append(f"(tp_year IS NULL OR ({' AND '.join(part)}))")
-    if index_patterns:
-        conds.append(_like_any("tp_index", index_patterns))
-    if partition_patterns:
-        conds.append(_like_any("tp_partition", partition_patterns))
-    if extra:
-        conds.append(f"({extra})")
-    return conds
 
 
 def _pruned_lists(catalog, tf, tt) -> dict:
@@ -214,12 +170,12 @@ def write_init_script(
 
         extra_filter = validate_filter_expression(extra_filter, "connect --filter")
     os.makedirs(out_dir, exist_ok=True)
-    conds = view_conditions(
-        time_from, time_to, index_patterns, partition_patterns, extra_filter, now,
-    )
+    tf = parse_time(time_from, now) if time_from else None
+    tt = parse_time(time_to, now) if time_to else None
+    conds = filter_conditions(tf, tt, index_patterns, partition_patterns)
+    if extra_filter:
+        conds.append(f"({extra_filter})")
     if dialect in ("sql", "duckdb"):
-        tf = parse_time(time_from, now) if time_from else None
-        tt = parse_time(time_to, now) if time_to else None
         pruned = _pruned_lists(catalog, tf, tt)
         gen = generate_sql_init if dialect == "sql" else generate_duckdb_init
         body, ext = gen(catalog, conds, pruned), "sql"

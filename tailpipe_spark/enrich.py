@@ -60,8 +60,8 @@ def with_partition_columns(df: DataFrame) -> DataFrame:
     The reference partitions by ``year(tp_timestamp), month(tp_timestamp)``
     as expressions (reference: internal/database/ducklake_table.go:38-41);
     Spark cannot partition a write by an expression, so these become real
-    (hidden) columns — the predicate-rewrite helper in plans.pruning maps
-    tp_timestamp ranges onto them so partition pruning still fires.
+    (hidden) columns — query_cli.filter_conditions maps tp_timestamp
+    ranges onto them so partition pruning still fires.
     """
     ts = F.col("tp_timestamp")
     return df.withColumn("tp_year", F.year(ts)).withColumn("tp_month", F.month(ts))

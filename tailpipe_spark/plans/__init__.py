@@ -1,3 +1,1 @@
-from tailpipe_spark.plans.pruning import time_range_to_partition_predicate
-
-__all__ = ["time_range_to_partition_predicate"]
+"""Plan-shaping helpers: z-order clustering (``plans.zorder``)."""

@@ -87,6 +87,17 @@ def test_cli_connect_emits_bootstrap(populated_workspace, spark, capsys, tmp_pat
     assert "tp_year" not in spark.table("server_metrics").columns
 
 
+def _run_sql_script(spark, src: str) -> None:
+    """Run an init script the way ``spark-sql -i`` does: statement by
+    statement, comment lines dropped."""
+    for chunk in src.split(";"):
+        stmt = "\n".join(
+            l for l in chunk.splitlines() if not l.strip().startswith("--")
+        ).strip()
+        if stmt:
+            spark.sql(stmt)
+
+
 def test_cli_connect_sql_script_runs_in_sql_session(
     populated_workspace, spark, capsys, tmp_path
 ):
@@ -102,12 +113,7 @@ def test_cli_connect_sql_script_runs_in_sql_session(
     path = capsys.readouterr().out.strip()
     assert path.endswith(".sql")
     src = open(path).read()
-    for chunk in src.split(";"):
-        stmt = "\n".join(
-            l for l in chunk.splitlines() if not l.strip().startswith("--")
-        ).strip()
-        if stmt:
-            spark.sql(stmt)
+    _run_sql_script(spark, src)
     rows = spark.sql(
         "select server_id, cpu from server_metrics order by cpu"
     ).collect()
@@ -150,12 +156,7 @@ def test_connect_sql_views_match_query_filters_at_subsecond_bounds(
     src = open(write_init_script(
         workspace, str(tmp_path / "init"), dialect="sql", time_from=tf, time_to=tt,
     )).read()
-    for chunk in src.split(";"):
-        stmt = "\n".join(
-            l for l in chunk.splitlines() if not l.strip().startswith("--")
-        ).strip()
-        if stmt:
-            spark.sql(stmt)
+    _run_sql_script(spark, src)
     try:
         via_view = sorted(r["id"] for r in spark.table("ticks").collect())
     finally:
@@ -165,6 +166,103 @@ def test_connect_sql_views_match_query_filters_at_subsecond_bounds(
         for r in apply_query_filters(workspace.read_table(spark, "ticks"), tf, tt).collect()
     )
     assert via_view == via_query == [1, 2, 3]
+
+
+def test_query_filters_match_across_cli_and_connect_dialects(
+    spark, workspace, tmp_path, capsys, monkeypatch
+):
+    """One filter, every path: ``tailpipe query``, apply_query_filters
+    and the spark-sql and pyspark init scripts keep the same rows under
+    a non-UTC process zone, for a literal ``_`` and a pattern holding
+    ``'`` and ``\\``. The DuckDB init script runs too (in UTC) and its
+    ``a_*`` LIKE matches."""
+    import time
+
+    import duckdb
+
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.connect import write_init_script
+    from tailpipe_spark.query_cli import apply_query_filters
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    rows = [
+        (1, "2024-03-01T12:00:00", "a_1"),
+        (2, "2024-03-01T12:30:00", "aX1"),  # `_` is literal: no match
+        (3, "2024-03-01T13:00:00", "o'b\\1"),
+        (4, "2024-03-01T10:00:00", "a_2"),  # before --from
+        (5, "2024-03-01T15:00:00", "o'b\\2"),  # after --to
+    ]
+    p = tmp_path / "idx.jsonl"
+    p.write_text("\n".join(
+        json.dumps({"id": i, "time": t, "idx": x}) for i, t, x in rows
+    ))
+    table = TableConfig(
+        name="idx_t",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="idx", type="varchar"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table,
+            PartitionConfig("idx_t", "default", tp_index="idx"),
+            source_df=read_jsonl(spark, [str(p)]))
+    tf, tt = "2024-03-01T11:00:00", "2024-03-01T14:00:00"
+    patterns = ["a_*", "o'b*"]
+    expected = [1, 3]
+
+    def script(dialect):
+        path = write_init_script(
+            workspace, str(tmp_path / "init"), dialect=dialect,
+            time_from=tf, time_to=tt, index_patterns=patterns,
+        )
+        return open(path).read()
+
+    def view_ids():
+        try:
+            return sorted(r["id"] for r in spark.table("idx_t").collect())
+        finally:
+            spark.catalog.dropTempView("idx_t")
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        capsys.readouterr()
+        argv = ["--workspace", workspace.workspace, "query",
+                "select id from idx_t order by id", "--from", tf, "--to", tt]
+        for pat in patterns:
+            argv += ["--index", pat]
+        assert main(argv) == 0
+        spark.catalog.dropTempView("idx_t")
+        via_cli = [int(x) for x in capsys.readouterr().out.split()[1:]]
+        via_apply = sorted(
+            r["id"] for r in apply_query_filters(
+                workspace.read_table(spark, "idx_t"), tf, tt, patterns
+            ).collect()
+        )
+        _run_sql_script(spark, script("sql"))
+        via_sql = view_ids()
+        exec(compile(script("pyspark"), "init.py", "exec"), {})
+        via_pyspark = view_ids()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert via_cli == via_apply == via_sql == via_pyspark == expected
+
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone = 'UTC'")
+        con.execute(script("duckdb"))
+        via_duckdb = [r[0] for r in con.execute(
+            'SELECT id FROM "idx_t" ORDER BY id'
+        ).fetchall()]
+    finally:
+        con.close()
+    # DuckDB 1.0 reads hive dir names undecoded (tp_index 'o%27b%5C1'),
+    # so only the a_* row can match there
+    assert via_duckdb == [1]
 
 
 def test_cli_connect_json_envelope(populated_workspace, capsys, tmp_path):

@@ -888,3 +888,63 @@ def test_delete_range_rewrites_keys_like_compaction(spark, workspace, tmp_path, 
             assert ts and ts == sorted(ts), p
     _assert_index_fresh(workspace, "t_del")
     assert not os.listdir(workspace.staging_dir)
+
+
+def test_delete_range_bounds_are_utc_under_local_zone(spark, workspace, tmp_path, monkeypatch):
+    """Delete bounds are naive UTC whatever the process's local zone:
+    under New York time a one-hour delete removes exactly that UTC
+    hour's rows."""
+    import time
+
+    stamps = [f"2024-03-01T{h:02d}:{m:02d}:00" for h in range(24) for m in (0, 30)]
+    _collect_rows(spark, workspace, tmp_path, "t_tz", [
+        [(i, "a", t) for i, t in enumerate(stamps)]
+    ])
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        n = delete_range(
+            workspace, spark, "t_tz", "default",
+            datetime(2024, 3, 1, 12), datetime(2024, 3, 1, 12, 59, 59),
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert n == 2
+    left = workspace.read_table(spark, "t_tz").select(
+        F.date_format("tp_timestamp", "yyyy-MM-dd'T'HH:mm:ss").alias("t")
+    ).collect()
+    assert sorted(r["t"] for r in left) == [t for t in stamps if not t.startswith("2024-03-01T12")]
+
+
+def test_windowed_compaction_writes_no_empty_files(spark, workspace, tmp_path):
+    """When the last window cut lands on the last file, the window after
+    it holds no rows; its empty file is dropped before the swap, and the
+    file index stays usable."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark.compact import chunk_windows, file_stats
+
+    _collect_rows(spark, workspace, tmp_path, "t_win", [
+        [(10 * h + i, "a", f"2024-05-01T{h:02d}:{5 * i:02d}:00") for i in range(10)]
+        for h in range(2)
+    ])
+    (key,) = enumerate_partition_keys(workspace, "t_win")
+    windows = chunk_windows(file_stats(workspace, "t_win", key), 10)
+    assert len(windows) == 3 and windows[-1][1] is None  # last window: no file
+    before = workspace.read_table(spark, "t_win").count()
+
+    compact_table(spark, workspace, "t_win", max_chunk_rows=10)
+    paths = [p for ps in _key_files(workspace, "t_win").values() for p in ps]
+    assert [pq.read_metadata(p).num_rows for p in paths] == [10, 10]
+    key_dir = os.path.dirname(paths[0])
+    assert sorted(n for n in os.listdir(key_dir) if n.endswith(".parquet.crc")) == sorted(
+        f".{os.path.basename(p)}.crc" for p in paths
+    )  # the dropped file's checksum went with it
+    assert workspace.read_table(spark, "t_win").count() == before == 20
+    assert workspace.pruned_files(
+        "t_win", datetime(2024, 5, 1), datetime(2024, 5, 2)
+    ) is not None
+    _assert_index_fresh(workspace, "t_win")

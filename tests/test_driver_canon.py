@@ -61,29 +61,38 @@ def test_q01_driver_surface_is_double(spark):
     assert len(dec_sums) == 4, "exactness twin lost its DECIMAL sums"
 
 
-def test_no_driver_facing_entry_surfaces_decimal(spark):
-    """Schema-only lint over every driver-facing entry: building the
-    lazy DataFrame is cheap (no execution); any DecimalType anywhere in
-    the output schema would repeat the r7 hash failure."""
+@pytest.fixture(scope="module")
+def entry_schemas(spark):
+    """Output schema of every driver-facing entry, built once for both
+    schema lints below. Building the lazy DataFrame is cheap (no
+    execution) but 163 builds are not; entries that fail to build are
+    left out — streaming/stateful entries may need live execution
+    context, and the lints only apply where the plan builds lazily."""
     import __spark_entry__ as entry_mod
 
-    from tools.check_correctness import _decimal_cols
-
-    offenders = {}
+    schemas = {}
     for name, fn in entry_mod.queries().items():
         try:
-            schema = fn(spark, SF).schema
+            schemas[name] = fn(spark, SF).schema
         except Exception:
-            # Streaming/stateful entries may need live execution context;
-            # schema lint only applies where the plan builds lazily.
             continue
-        cols = _decimal_cols(schema)
-        if cols:
-            offenders[name] = cols
+    return schemas
+
+
+def _offenders(schemas, cols_of):
+    return {name: cols for name, schema in schemas.items() if (cols := cols_of(schema))}
+
+
+def test_no_driver_facing_entry_surfaces_decimal(entry_schemas):
+    """Schema-only lint over every driver-facing entry: any DecimalType
+    anywhere in the output schema would repeat the r7 hash failure."""
+    from tools.check_correctness import _decimal_cols
+
+    offenders = _offenders(entry_schemas, _decimal_cols)
     assert offenders == {}, f"driver-unsafe DECIMAL surfaces: {offenders}"
 
 
-def test_no_driver_facing_entry_surfaces_complex_types(spark):
+def test_no_driver_facing_entry_surfaces_complex_types(entry_schemas):
     """r12 incident guard (the ArrayType twin of the r7 DECIMAL hole):
     the driver's pandas canonicalizer sorts rows over all output columns
     and crashes on list cells (`TypeError: unhashable type: 'list'` —
@@ -92,19 +101,9 @@ def test_no_driver_facing_entry_surfaces_complex_types(spark):
     cells are likewise unsortable/unhashable in pandas); serialize
     (CSV/JSON) or digest instead, and keep the raw surface in a
     local_only twin."""
-    import __spark_entry__ as entry_mod
-
     from tools.check_correctness import _complex_cols
 
-    offenders = {}
-    for name, fn in entry_mod.queries().items():
-        try:
-            schema = fn(spark, SF).schema
-        except Exception:
-            continue
-        cols = _complex_cols(schema)
-        if cols:
-            offenders[name] = cols
+    offenders = _offenders(entry_schemas, _complex_cols)
     assert offenders == {}, f"driver-unsafe complex surfaces: {offenders}"
 
 

@@ -214,7 +214,12 @@ def test_partition_predicate_month_boundary_and_null_keep(spark):
     partition) when the row filter keeps them."""
     from datetime import datetime
 
-    from tailpipe_spark.plans.pruning import apply_pruned_time_filter
+    from tailpipe_spark.query_cli import filter_conditions
+
+    def apply(df, time_from=None, time_to=None):
+        for cond in filter_conditions(time_from, time_to):
+            df = df.filter(F.expr(cond))
+        return df
 
     rows = [
         (1, datetime(2023, 12, 15), 2023, 12),
@@ -225,12 +230,12 @@ def test_partition_predicate_month_boundary_and_null_keep(spark):
     df = spark.createDataFrame(
         rows, "id int, tp_timestamp timestamp, tp_year int, tp_month int"
     )
-    out = apply_pruned_time_filter(
+    out = apply(
         df, time_from=datetime(2023, 12, 1), time_to=datetime(2024, 1, 31)
     )
     # null-keep is a LOWER-bound contract; an upper bound excludes nulls
     assert sorted(r["id"] for r in out.collect()) == [1, 2]
-    lower_only = apply_pruned_time_filter(df, time_from=datetime(2024, 1, 1))
+    lower_only = apply(df, time_from=datetime(2024, 1, 1))
     assert sorted(r["id"] for r in lower_only.collect()) == [2, 3, 4]
 
 

@@ -2,9 +2,9 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from tailpipe_spark.plans.pruning import time_range_to_partition_predicate
 from tailpipe_spark.query_cli import (
     apply_query_filters,
+    filter_conditions,
     parse_time,
     wildcard_to_like,
 )
@@ -18,7 +18,7 @@ def test_parse_time_absolute_and_relative():
 
 
 def test_wildcard_rewrite():
-    assert wildcard_to_like("aws_*") == "aws\\_%"  # literal _ escaped
+    assert wildcard_to_like("aws_*") == "aws!_%"  # literal _ escaped
     assert wildcard_to_like("*prod*") == "%prod%"
 
 
@@ -48,11 +48,12 @@ def test_partition_predicate_linearization(spark):
         [(2023, 12), (2024, 1), (2024, 5), (2025, 1)],
         ["tp_year", "tp_month"],
     )
-    pred = time_range_to_partition_predicate(
-        datetime(2024, 1, 15), datetime(2024, 6, 1)
-    )
+    (pred,) = [
+        c for c in filter_conditions(datetime(2024, 1, 15), datetime(2024, 6, 1))
+        if "tp_year" in c
+    ]
     got = sorted(
-        (r["tp_year"], r["tp_month"]) for r in df.filter(pred).collect()
+        (r["tp_year"], r["tp_month"]) for r in df.filter(F.expr(pred)).collect()
     )
     # Jan 2024 kept (contains the from-boundary), Dec 2023 and 2025 pruned
     assert got == [(2024, 1), (2024, 5)]
@@ -64,7 +65,6 @@ def test_pruning_reaches_scan(spark, workspace, tmp_path):
 
     from tailpipe_spark.collect import collect
     from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
-    from tailpipe_spark.plans.pruning import apply_pruned_time_filter
     from tailpipe_spark.sources.formats import read_jsonl
 
     rows = [{"id": m, "time": f"2024-{m:02d}-15T00:00:00"} for m in range(1, 7)]
@@ -82,9 +82,9 @@ def test_pruning_reaches_scan(spark, workspace, tmp_path):
             source_df=read_jsonl(spark, [str(p)]))
 
     df = workspace.read_table(spark, "pt")
-    out = apply_pruned_time_filter(
-        df, datetime(2024, 2, 1), datetime(2024, 3, 31)
-    )
+    out = df
+    for cond in filter_conditions(datetime(2024, 2, 1), datetime(2024, 3, 31)):
+        out = out.filter(F.expr(cond))
     assert sorted(r["id"] for r in out.collect()) == [2, 3]
     # the physical plan must show partition pruning on tp_year/tp_month
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -103,8 +103,9 @@ def test_parse_time_offset_converts_to_utc():
 def test_wildcard_to_like_escapes_literals():
     from tailpipe_spark.query_cli import wildcard_to_like
 
-    assert wildcard_to_like("a_b") == "a\\_b"
-    assert wildcard_to_like("50%*") == "50\\%%"
+    assert wildcard_to_like("a_b") == "a!_b"
+    assert wildcard_to_like("50%*") == "50!%%"
+    assert wildcard_to_like("a!b") == "a!!b"
     assert wildcard_to_like("x*y") == "x%y"
 
 
