@@ -11,6 +11,11 @@ same roles are played by:
 - ``metadata/manifest.json``: table schemas + snapshot log
 - parquet footers: per-file row counts / min-max stats (A30)
 
+The manifest is the schema: it holds each table's columns in write
+order with their frozen types, and ``spark_schema`` makes that the read
+schema of every scan and rewrite, as DuckLake plans from its
+``ducklake_column`` table. No read pays a schema-inference job.
+
 Single-writer discipline per workspace (the reference runs one DuckDB
 connection; we serialize manifest writes with an atomic rename).
 """
@@ -23,8 +28,22 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 PARTITION_COLS = ("tp_partition", "tp_index", "tp_year", "tp_month")
+#: the hive columns as the layout writes them (enrich.with_partition_columns)
+HIVE_FIELDS = [
+    StructField("tp_partition", StringType()),
+    StructField("tp_index", StringType()),
+    StructField("tp_year", IntegerType()),
+    StructField("tp_month", IntegerType()),
+]
+
+
+def _column_types(entry: dict) -> dict[str, str]:
+    """A manifest entry's column → type map, in write order."""
+    types = entry["type_strings"]
+    return {c: types[c] for c in entry.get("columns", types)}
 
 
 def _footer_jsonable(v):
@@ -56,14 +75,10 @@ class FooterInfo:
     datetime arithmetic and the file index see one representation
     regardless of backend.
 
-    String-stat caveat (r13 verdict): parquet writers may store
-    TRUNCATED min/max for long BYTE_ARRAY values (a prefix with the
-    last byte bumped for max). Both backends surface the same truncated
-    footer values so backend parity holds, but consumers must treat
-    string stats as RANGE bounds only — never exact-equality prune on
-    them. Today's consumers (compaction time arithmetic, tp_timestamp
-    file index) touch only numeric/temporal stats, which parquet never
-    truncates."""
+    Parquet writers may store TRUNCATED min/max for long strings, so
+    string stats are RANGE bounds only, never an exact-equality prune.
+    Today's consumers touch only numeric/temporal stats, which parquet
+    never truncates."""
 
     def __init__(self, path: str):
         try:
@@ -138,15 +153,10 @@ def _duck_stat_value(physical_type: str, s: str):
         try:
             return int(s)
         except ValueError:
-            # logical DATE renders as "YYYY-MM-DD" (pyarrow returns
-            # datetime.date there), logical TIMESTAMP as a full
-            # timestamp string (pyarrow returns datetime.datetime).
-            # HEURISTIC SCOPE (r13 verdict): the length-10 key is sound
-            # only because DATE and TIMESTAMP are the engine's ONLY
-            # logical types riding INT32/64 — a future logical TIME
-            # ("HH:MM:SS.ffffff" can be 10 chars) or decimal-on-int
-            # rendering would misparse here; extend the branch when
-            # adding such a type, don't rely on the fallthrough.
+            # logical DATE renders as "YYYY-MM-DD", TIMESTAMP as a full
+            # timestamp string. The length-10 key holds only while they
+            # are the engine's ONLY logical types on INT32/64: a logical
+            # TIME or decimal-on-int needs its own branch here.
             s = str(s)
             if len(s) == 10:
                 return _dt.date.fromisoformat(s)
@@ -315,12 +325,15 @@ class Catalog:
 
     def ensure_table(self, name: str, type_strings: dict[str, str]) -> None:
         """Create-table-if-not-exists (A15). Existing tables must match
-        (schema evolution is an error — SURVEY.md §1.4)."""
+        (schema evolution is an error — SURVEY.md §1.4). ``_store`` sorts
+        keys, so the write order of ``type_strings`` is kept as the
+        ``columns`` list, backfilled here for entries that predate it."""
         m = self._load()
         existing = m["tables"].get(name)
         if existing is None:
             m["tables"][name] = {
                 "type_strings": type_strings,
+                "columns": list(type_strings),
                 "created_at": time.time(),
             }
             self._store(m)
@@ -335,25 +348,60 @@ class Catalog:
                 if existing["type_strings"].get(c) != t
             }
             raise SchemaChangeError(changes)
+        if "columns" not in existing:
+            existing["columns"] = list(type_strings)
+            self._store(m)
 
     def list_tables(self) -> list[str]:
         """A28."""
         return sorted(self._load()["tables"])
 
-    def table_schema(self, name: str) -> dict[str, str]:
-        """A29: column → engine type string."""
+    def _entry(self, name: str) -> dict:
         t = self._load()["tables"].get(name)
         if t is None:
             raise KeyError(f"table {name!r} does not exist")
-        return dict(t["type_strings"])
+        return t
+
+    def table_schema(self, name: str) -> dict[str, str]:
+        """A29: column → engine type string, in write order."""
+        return _column_types(self._entry(name))
 
     def table_schemas(self) -> dict[str, dict[str, str]]:
         """Every table's column→type map in ONE manifest read (shell
         completion calls this per keystroke)."""
         return {
-            name: dict(t["type_strings"])
-            for name, t in self._load()["tables"].items()
+            name: _column_types(t) for name, t in self._load()["tables"].items()
         }
+
+    def spark_schema(self, table: str) -> StructType:
+        """The read schema of ``table`` from the manifest alone (A29): data
+        columns in write order, then the hive columns. A read given it
+        plans without an inference job and takes each hive value verbatim
+        from its path (``tp_index=0123`` stays a string) whatever partition
+        type inference says. Without a recorded order, a footer gives it."""
+        from tailpipe_spark.schema import parse_type
+
+        t = self._entry(table)
+        types = t["type_strings"]
+        order = t.get("columns") or self._file_columns(table) or types
+        fields = [
+            StructField(c, parse_type(types[c]))
+            for c in order
+            if c not in PARTITION_COLS
+        ]
+        return StructType(fields + HIVE_FIELDS)
+
+    def _file_columns(self, table: str) -> list[str] | None:
+        """Column order of one data file of ``table`` (None: no files),
+        through DuckDB, since pyarrow cannot open files holding VARIANT."""
+        import duckdb
+
+        for root, _dirs, names in os.walk(self.table_dir(table)):
+            for n in (n for n in names if n.endswith(".parquet")):
+                sql = "DESCRIBE SELECT * FROM read_parquet(?, hive_partitioning=false)"
+                with duckdb.connect() as con:
+                    return [r[0] for r in con.execute(sql, [os.path.join(root, n)]).fetchall()]
+        return None
 
     def record_snapshot(self, op: str, detail: dict | None = None) -> int:
         m = self._load()
@@ -400,8 +448,7 @@ class Catalog:
 
     def table_layout(self, name: str) -> dict | None:
         """The recorded bucketed layout, or None for plain layout."""
-        t = self._load()["tables"].get(name)
-        return None if t is None else t.get("layout")
+        return self._load()["tables"].get(name, {}).get("layout")
 
     def row_count(self, name: str) -> int:
         """Exact table row count WITHOUT a Spark job: sum of per-file
@@ -444,21 +491,14 @@ class Catalog:
 
     # --- manifest-based data skipping -------------------------------
     #
-    # At 100 TB a table is millions of files; letting every query open
-    # every footer just to discover "this file's time range is disjoint
-    # from the predicate" wastes the driver's scan-planning time. Like
-    # Iceberg/DuckLake manifests (reference: internal/database/
-    # duck_db.go:270-291 keeps per-file entries in its catalog), we
-    # record per-file tp_timestamp min/max + null_count at write time
-    # and intersect the predicate against the index instead.
-
-    # The index lives in a per-table JSONL sidecar
-    # (metadata/file_index/<table>.jsonl), NOT inside manifest.json: a
-    # manifest-embedded index would make every incremental append pay
-    # an O(index) JSON rewrite — at 1M files that is a ~100 MB driver
-    # serialization per collect. JSONL appends keep the merge path
-    # O(new entries); reads dedupe last-wins by path, and the full
-    # rewrites (refresh/compact) naturally compact the file.
+    # Like Iceberg/DuckLake manifests (reference: internal/database/
+    # duck_db.go:270-291), each file's tp_timestamp min/max + null_count
+    # is recorded at write time, so a bounded query intersects its
+    # predicate with the index instead of opening every footer. The
+    # index is a per-table JSONL sidecar (metadata/file_index/<table>.
+    # jsonl), not part of manifest.json: an append costs O(new entries),
+    # not an O(index) JSON rewrite (~100 MB at 1M files). Reads dedupe
+    # last-wins by path; full rewrites (refresh/compact) compact it.
 
     def _index_path(self, table: str) -> str:
         return os.path.join(self.metadata_dir, "file_index", f"{table}.jsonl")
@@ -493,8 +533,7 @@ class Catalog:
                     return None  # mid-file corruption: index unusable
                 if not isinstance(e, dict) or "path" not in e:
                     # valid JSON but not an index entry (e.g. a bare
-                    # number): same contract as mid-file corruption —
-                    # degrade to full scan, never raise (r8 ADVICE)
+                    # number): same contract as mid-file corruption
                     if i == len(lines) - 1:
                         break
                     return None
@@ -725,16 +764,13 @@ class Catalog:
         time_from=None,
         time_to=None,
     ) -> DataFrame:
-        """Table scan; with time bounds the manifest file index (when
-        fresh) restricts the scan to intersecting files — the predicate
-        itself is still applied by the query layer, skipping is a
-        conservative superset."""
-        if table not in self.list_tables():
-            raise KeyError(f"table {table!r} does not exist")
-        from pyspark.sql import functions as F
-
+        """Table scan with ``spark_schema``; with time bounds the manifest
+        file index (when fresh) restricts the scan to intersecting files
+        — the predicate itself is still applied by the query layer,
+        skipping is a conservative superset. No file left is an empty scan."""
         from tailpipe_spark.session import configure_runtime
 
+        schema = self.spark_schema(table)
         configure_runtime(spark)
         paths = None
         if time_from is not None or time_to is not None:
@@ -747,24 +783,9 @@ class Catalog:
             # carry a bucket spec, and pruning is about scan size, not
             # join co-location.
             return self._read_bucketed(spark, table)
-        reader = spark.read.option("basePath", self.table_dir(table))
-        if paths is None:
-            df = reader.parquet(self.table_dir(table))
-        elif paths:
-            df = reader.parquet(*paths)
-        else:
-            # every file pruned: plan over one file (schema + layout
-            # cols intact) with a false predicate — cheapest empty scan
-            any_file = os.path.join(
-                self.table_dir(table),
-                self.load_file_index(table)[0]["path"],
-            )
-            df = reader.parquet(any_file).filter(F.lit(False))
-        # partition type inference is off (tp_index stays varchar);
-        # restore int types for the numeric layout columns
-        return df.withColumn("tp_year", F.col("tp_year").cast("int")).withColumn(
-            "tp_month", F.col("tp_month").cast("int")
-        )
+        tdir = self.table_dir(table)
+        reader = spark.read.schema(schema).option("basePath", tdir)
+        return reader.parquet(tdir) if paths is None else reader.parquet(*paths)
 
     def _bucketed_reg_name(self, table: str, rev: int) -> str:
         import hashlib
@@ -779,8 +800,8 @@ class Catalog:
         catalog — ``spark.read.parquet(path)`` has nowhere to carry
         "these files are hash-clustered by key into N buckets", so the
         planner re-shuffles joins on the bucket key. We register an
-        external table (schema from the files, partition + bucket spec
-        from the manifest layout) once per layout revision and return
+        external table (columns from ``spark_schema``, partition + bucket
+        spec from the manifest layout) once per layout revision and return
         ``spark.table(...)``: a join of two same-bucketed tables then
         plans as a zero-Exchange SortMergeJoin — each task reads bucket
         i of both sides (pinned in tests/test_bucketed_layout.py). The
@@ -791,17 +812,8 @@ class Catalog:
         rev = int(lay["layout_rev"])
         reg = self._bucketed_reg_name(table, rev)
         if not spark.catalog.tableExists(reg):
-            # derive the data-column DDL from the files themselves
-            fields = spark.read.parquet(self.table_dir(table)).schema.fields
-            data_cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in fields
-                if f.name not in PARTITION_COLS
-            )
-            part_cols = (
-                "`tp_partition` STRING, `tp_index` STRING, "
-                "`tp_year` INT, `tp_month` INT"
-            )
+            from tailpipe_spark.schema import ddl
+
             bucket_cols = ", ".join(f"`{c}`" for c in lay["bucket_by"])
             sort_cols = ", ".join(f"`{c}`" for c in lay["sort_by"])
             # drop registrations of older layout revisions first
@@ -810,7 +822,7 @@ class Catalog:
                 if row.tableName != reg:
                     spark.sql(f"DROP TABLE IF EXISTS `{row.tableName}`")
             spark.sql(
-                f"CREATE TABLE `{reg}` ({data_cols}, {part_cols}) "
+                f"CREATE TABLE `{reg}` ({ddl(self.spark_schema(table))}) "
                 f"USING parquet "
                 f"PARTITIONED BY (tp_partition, tp_index, tp_year, tp_month) "
                 f"CLUSTERED BY ({bucket_cols}) SORTED BY ({sort_cols}) "
@@ -818,15 +830,11 @@ class Catalog:
                 f"LOCATION '{self.table_dir(table)}'"
             )
             spark.sql(f"MSCK REPAIR TABLE `{reg}`")
-        # DELIBERATELY no size stats on the registration (r15, measured
-        # both ways at sf10): a partitioned external table without
-        # stats reports defaultSizeInBytes (huge), so the planner can
-        # NEVER broadcast a provisioned fact table. With NOSCAN stats
-        # the compressed-bytes estimate slipped q12's UNFILTERED 15M-row
-        # orders under the 64m threshold — a 9.5 s broadcast build (3x
-        # worse than plain, OOM-fragile in long sessions) where the
-        # co-located SMJ runs the same join in ~2 s. Fact tables are
-        # bucketed precisely because they are too big to ship; the
-        # conservative estimate encodes that. Dimension tables are path
-        # reads and keep their normal file-size estimates/broadcasts.
+        # DELIBERATELY no size stats on the registration: without them
+        # the table reports defaultSizeInBytes, so the planner never
+        # broadcasts a bucketed fact table. Measured at sf10, NOSCAN
+        # stats put q12's unfiltered 15M-row orders under the broadcast
+        # threshold: a 9.5 s broadcast build where the co-located SMJ
+        # takes ~2 s. Fact tables are bucketed because they are too big
+        # to ship.
         return spark.table(reg)

@@ -19,6 +19,8 @@ Spark shape:
 - bigger keys keep the windowed rewrite: ``max_chunk_rows`` rows / >=1h
   time windows per job (the reference's 5M-row insert guardrail), each
   ``repartitionByRange(tp_timestamp) + sortWithinPartitions``
+- every rewrite reads with Catalog.spark_schema: no schema-inference
+  job, and each hive value comes back verbatim from its path
 - every rewrite stages outside the table; key dirs are swapped in, and
   re-indexed, only once all rewrites have succeeded
 - a range delete (A18) is the same rewrite over the keys holding
@@ -35,7 +37,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from tailpipe_spark.catalog import PARTITION_COLS, Catalog, FooterInfo
 from tailpipe_spark.query_cli import sql_ts
@@ -44,8 +46,7 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 # bucket_rewrite warns when the projected per-(hive dir x bucket) file
 # falls under this: sub-8MB shards pay more in per-file open/footer cost
-# than the deleted exchanges save single-node (r11 sf0.1 measurement:
-# 2,656 ~0.3 MB lineitem files -> q05 parity, q03 -47%)
+# than the deleted exchanges save single-node (measured at sf0.1)
 MIN_BUCKET_CELL_BYTES = 8 * 1024 * 1024
 
 
@@ -196,8 +197,8 @@ def bucket_rewrite(
     DuckDB never shuffles single-node, bucketing is Spark's translation
     of that co-location).
 
-    Whole-table staged rewrite through the A13/A23 path: write
-    ``bucketBy(N, keys).sortBy(...)`` into ``catalog.staging_dir``
+    Whole-table staged rewrite, read with ``Catalog.spark_schema``:
+    write ``bucketBy(N, keys).sortBy(...)`` into ``catalog.staging_dir``
     (via a throwaway external saveAsTable — Spark's bucketed writer is
     only reachable through the table API), swap by rename, record the
     layout + revision in the manifest (``set_table_layout``), refresh
@@ -215,20 +216,13 @@ def bucket_rewrite(
     to a power of two (floor 4) — pick the SAME count on both sides of
     an intended join (the CLI's ``--bucket-by key:N`` pins it).
 
-    Small-scale guard (r11 verdict "what's wrong" #3): bucketing
-    multiplies the file count by ``hive dirs × N``, and at workspace
-    scale that fragments the table into sub-MB shards whose per-file
-    open/footer cost erases the exchange savings (measured at sf0.1:
-    month-partitioning × 32 buckets → 2,656 ~0.3 MB lineitem files,
-    q05 parity instead of a win). When the PROJECTED per-cell file
-    size — table bytes / (hive partition dirs × N) — falls under
-    ``MIN_BUCKET_CELL_BYTES`` (8 MB), the rewrite WARNS with the
-    numbers and the remedies (fewer buckets via ``key:N``, a coarser
-    hive layout such as yearly partitioning); ``force=True``
-    acknowledges the trade and silences it. The rewrite still runs —
-    the layout is a deliberate cluster-scale flag and a small
-    workspace may be about to grow into it — but the user hears the
-    single-node cost before paying it.
+    Small-scale guard: bucketing multiplies the file count by ``hive
+    dirs × N``, and sub-MB shards cost more per-file open/footer time
+    than the exchanges save (at sf0.1, 2,656 ~0.3 MB lineitem files gave
+    q05 parity). When the projected per-cell file size falls under
+    ``MIN_BUCKET_CELL_BYTES`` the rewrite WARNS with the numbers and
+    the remedies; ``force=True`` silences it. The rewrite still runs: a
+    small workspace may be about to grow into the layout.
 
     Runs under the workspace writer lock (see compact_table);
     reentrant when reached through compact_table or collect.
@@ -276,7 +270,7 @@ def _bucket_rewrite_locked(
     # read the files by path: a session-catalog registration of the
     # current layout may still list the files a delete has replaced
     tdir = catalog.table_dir(table)
-    df = spark.read.schema(_rewrite_schema(spark, tdir)).option("basePath", tdir).parquet(tdir)
+    df = spark.read.schema(catalog.spark_schema(table)).option("basePath", tdir).parquet(tdir)
     rows = catalog.row_count(table)
     staged = catalog.new_staging_dir(f"{table}.bucket")
     tmp_name = f"tp_bucket_stage_{table}_{os.path.basename(staged).replace('.', '_').replace('-', '_')}"
@@ -460,9 +454,8 @@ def _delete_range_locked(
     ]
     cond = F.expr(" AND ".join(bounds)) if bounds else F.lit(True)
     base = catalog.table_dir(table)
-    schema = _rewrite_schema(spark, os.path.join(base, keys[0].relpath))
     counts = (
-        spark.read.schema(schema)
+        spark.read.schema(catalog.spark_schema(table))
         .option("basePath", base)
         .parquet(*[os.path.join(base, k.relpath) for k in keys])
         .filter(cond)
@@ -470,11 +463,8 @@ def _delete_range_locked(
         .count()
         .collect()
     )
-    # the string schema reads the values back as the keys carry them
-    doomed = {
-        (r["tp_partition"], r["tp_index"], int(r["tp_year"]), int(r["tp_month"])): r["count"]
-        for r in counts
-    }
+    # the manifest schema reads the values back as the keys carry them
+    doomed = {tuple(r[c] for c in PARTITION_COLS): r["count"] for r in counts}
     n = sum(doomed.values())
     if n == 0:
         return 0
@@ -487,7 +477,7 @@ def _delete_range_locked(
     _rewrite_keys(
         spark, catalog, table, todo, MAX_CHUNK_ROWS, None,
         "delete", {"table": table, "partition": partition, "rows": n},
-        keep=~cond, schema=schema,
+        keep=~cond,
     )
     lay = catalog.table_layout(table)
     if lay:
@@ -507,7 +497,6 @@ def _rewrite_keys(
     op: str,
     detail: dict,
     keep: Column | None = None,
-    schema: StructType | None = None,
 ) -> int:
     """Rewrite each ``(key, file stats, rows it keeps)`` of ``todo`` into
     staging, keeping the rows ``keep`` holds for (all when None), then
@@ -520,6 +509,7 @@ def _rewrite_keys(
     rows goes to a batch too, where the partitioned write leaves no dir
     for it and the swap drops it."""
     base = catalog.table_dir(table)
+    schema = catalog.spark_schema(table)
     small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
     staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
     staging_roots: list[str] = []
@@ -534,12 +524,12 @@ def _rewrite_keys(
                 continue
             root = catalog.new_staging_dir(f"{table}.{op}")
             staging_roots.append(root)
-            _rewrite_windowed(spark, base, key, windows, n_out, zorder_by, root, keep)
+            _rewrite_windowed(
+                spark, base, key, schema, windows, n_out, zorder_by, root, keep
+            )
             staged[key.relpath] = root
             jobs += len(windows)
         for batch in _batches(small, max_chunk_rows):
-            if schema is None:
-                schema = _rewrite_schema(spark, os.path.join(base, batch[0][0].relpath))
             root = catalog.new_staging_dir(f"{table}.{op}")
             staging_roots.append(root)
             staged.update(_rewrite_batch(spark, base, batch, schema, zorder_by, root, keep))
@@ -564,19 +554,6 @@ def _batches(small: list[tuple[PartitionKey, int]], max_rows: int):
         acc += rows
     if batch:
         yield batch
-
-
-def _rewrite_schema(spark: SparkSession, path: str) -> StructType:
-    """Data columns from the files under ``path``, plus the partition
-    columns as strings. A read with this schema takes partition values
-    verbatim from the paths whatever ``partitionColumnTypeInference``
-    says, so ``tp_index=012345678901`` is written back under the same
-    name."""
-    data = spark.read.parquet(path).schema
-    return StructType(
-        [f for f in data.fields if f.name not in PARTITION_COLS]
-        + [StructField(c, StringType()) for c in PARTITION_COLS]
-    )
 
 
 def _rewrite_batch(
@@ -625,6 +602,7 @@ def _rewrite_windowed(
     spark: SparkSession,
     base: str,
     key: PartitionKey,
+    schema: StructType,
     windows: list[tuple],
     n_out: int,
     zorder_by: list[str] | None,
@@ -635,8 +613,10 @@ def _rewrite_windowed(
     window range-partitioned into ``n_out`` files. A window with no
     rows still writes one empty file — when the last cut lands on the
     last file, or a delete empties a window — so zero-row files are
-    removed before the key is swapped in."""
-    df = spark.read.parquet(os.path.join(base, key.relpath))
+    removed before the key is swapped in. The key dir is read as a
+    table of its own, so only the data columns of ``schema`` are in it."""
+    data = StructType([f for f in schema if f.name not in PARTITION_COLS])
+    df = spark.read.schema(data).parquet(os.path.join(base, key.relpath))
     if keep is not None:
         df = df.filter(keep)
     for lo, hi in windows:

@@ -48,42 +48,48 @@ def _pruned_lists(catalog, tf, tt) -> dict:
     return out
 
 
-def generate_sql_init(catalog, conds: list[str], pruned: dict | None = None) -> str:
-    """One CREATE OR REPLACE TEMPORARY VIEW per workspace table.
-
-    ``SELECT * EXCEPT (tp_year, tp_month)`` hides the layout columns so
-    an external ``select *`` sees the reference's schema (views.go
-    does the same column elision on the DuckDB side).
-
-    Time-bounded views carry a ``-- pruned-files:`` hint comment (the
-    manifest file index's verdict) so external tools that can consume
-    explicit file lists skip the excluded files; Spark SQL itself has
-    no multi-file table syntax, and its own footer pushdown re-derives
-    the same skipping from the baked WHERE.
-    """
+def _views(catalog, conds: list[str], pruned: dict | None, view) -> str:
+    """One ``view(table, where)`` statement per table, each after a
+    comment naming it and, for a time-bounded connect, a ``--
+    pruned-files:`` hint: the manifest index's verdict, for external
+    tools that can take explicit file lists. The engines themselves
+    re-derive the skipping from the baked WHERE."""
+    where = f"\nWHERE {' AND '.join(conds)}" if conds else ""
     stmts = []
     for t in catalog.list_tables():
-        where = f"\nWHERE {' AND '.join(conds)}" if conds else ""
         files = (pruned or {}).get(t)
-        hint = (
-            "-- pruned-files: " + " ".join(sorted(files)) + "\n"
-            if files
-            else ""
-        )
-        stmts.append(
-            f"-- register workspace table {t}\n"
-            f"{hint}"
+        hint = "-- pruned-files: " + " ".join(sorted(files)) + "\n" if files else ""
+        stmts.append(f"-- register workspace table {t}\n{hint}{view(t, where)}")
+    return "\n".join(stmts)
+
+
+def generate_sql_init(catalog, conds: list[str], pruned: dict | None = None) -> str:
+    """Two temporary views per workspace table: ``tp_source_<t>`` reads
+    the parquet with ``Catalog.spark_schema``, so ``tp_index=0123`` stays
+    a string even where Spark's partition type inference is on (its
+    default), and the view ``<t>`` filters it. ``SELECT * EXCEPT
+    (tp_year, tp_month)`` hides the layout columns so an external
+    ``select *`` sees the reference's schema (views.go does the same
+    column elision on the DuckDB side)."""
+    from tailpipe_spark.schema import ddl
+
+    def view(t, where):
+        return (
+            f"CREATE OR REPLACE TEMPORARY VIEW `tp_source_{t}`\n"
+            f"({ddl(catalog.spark_schema(t))})\n"
+            f"USING parquet OPTIONS (path '{catalog.table_dir(t)}');\n"
             f"CREATE OR REPLACE TEMPORARY VIEW `{t}` AS\n"
             f"SELECT * EXCEPT (tp_year, tp_month)\n"
-            f"FROM parquet.`{catalog.table_dir(t)}`{where};\n"
+            f"FROM `tp_source_{t}`{where};\n"
         )
+
     header = (
         "-- generated by tailpipe-spark connect\n"
         f"-- workspace: {catalog.workspace}\n"
         "-- source with: spark-sql -i <this file>, or run each\n"
         "-- statement over Thrift/JDBC or spark.sql()\n\n"
     )
-    return header + "\n".join(stmts)
+    return header + _views(catalog, conds, pruned, view)
 
 
 def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) -> str:
@@ -91,44 +97,31 @@ def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) 
     verb emits exactly this kind of init file for ``duckdb --init``
     (cmd/connect.go:94-172): one view per table over read_parquet with
     hive partitioning, same filter conjuncts, layout columns hidden
-    via EXCLUDE. Lets a reference user keep their DuckDB workflow
-    pointed at a tailpipe-spark workspace unchanged.
+    via EXCLUDE.
 
-    The view source is always the glob, resolved at QUERY time — like
-    the reference's catalog views — so files collected after the init
-    script was generated stay visible to a long-lived session. Baking
-    the manifest-pruned file list into the view (tried round 7) froze
-    the file set at connect time and silently hid later appends; the
-    pruned list is now only a ``-- pruned-files:`` hint comment (same
-    contract as the spark-sql dialect), and DuckDB's own zonemap +
-    hive-partition pruning re-derives the skipping from the baked
-    WHERE."""
-    stmts = []
-    for t in catalog.list_tables():
-        where = f"\nWHERE {' AND '.join(conds)}" if conds else ""
-        files = (pruned or {}).get(t)
-        hint = (
-            "-- pruned-files: " + " ".join(sorted(files)) + "\n"
-            if files
-            else ""
-        )
-        src_expr = (
-            f"'{os.path.join(catalog.table_dir(t), '**', '*.parquet')}'"
-        )
-        stmts.append(
-            f"-- register workspace table {t}\n"
-            f"{hint}"
+    The view source is always the glob, resolved at QUERY time like the
+    reference's catalog views, so files collected after the script was
+    generated stay visible to a long-lived session (a baked file list
+    froze the file set at connect time). The script sets ``TimeZone``
+    to UTC: DuckDB reads the stored timestamps as ``TIMESTAMPTZ`` and
+    compares the baked ``TIMESTAMP`` bounds in its session zone."""
+
+    def view(t, where):
+        src = os.path.join(catalog.table_dir(t), "**", "*.parquet")
+        return (
             f'CREATE OR REPLACE VIEW "{t}" AS\n'
             f"SELECT * EXCLUDE (tp_year, tp_month)\n"
-            f"FROM read_parquet({src_expr}, hive_partitioning=true, "
+            f"FROM read_parquet('{src}', hive_partitioning=true, "
             f"union_by_name=true){where};\n"
         )
+
     header = (
         "-- generated by tailpipe-spark connect (duckdb dialect)\n"
         f"-- workspace: {catalog.workspace}\n"
         "-- source with: duckdb --init <this file>\n\n"
+        "SET TimeZone = 'UTC';\n\n"
     )
-    return header + "\n".join(stmts)
+    return header + _views(catalog, conds, pruned, view)
 
 
 def generate_pyspark_init(catalog, conds: list[str]) -> str:

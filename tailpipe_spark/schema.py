@@ -67,12 +67,13 @@ _STRUCT_RE = re.compile(r"^struct\s*\((.*)\)$", re.IGNORECASE | re.DOTALL)
 
 
 def parse_type(type_str: str) -> T.DataType:
-    """Parse an engine type string (lower-cased, DuckDB-flavored:
-    ``varchar``, ``struct(a integer, b varchar)[]``, ``integer[]``)
-    into a Spark DataType. Mirrors the reference's type-string parser
-    (reference: internal/database/tables.go:132-258) but targets Spark
-    types directly."""
-    s = type_str.strip().lower()
+    """Parse an engine type string (DuckDB-flavored: ``varchar``,
+    ``struct(a integer, b varchar)[]``, ``integer[]``) into a Spark
+    DataType. Mirrors the reference's type-string parser (reference:
+    internal/database/tables.go:132-258) but targets Spark types
+    directly. Type keywords match in any case; struct field names keep
+    theirs, so ``to_type_string`` of the result gives ``type_str`` back."""
+    s = type_str.strip()
     if s.endswith("[]"):
         return T.ArrayType(parse_type(s[:-2]))
     m = _STRUCT_RE.match(s)
@@ -81,6 +82,7 @@ def parse_type(type_str: str) -> T.DataType:
         for name, sub in _split_struct_fields(m.group(1)):
             fields.append(T.StructField(name, parse_type(sub), True))
         return T.StructType(fields)
+    s = s.lower()
     if s.startswith("decimal"):
         dm = re.match(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)", s)
         if dm:
@@ -133,6 +135,23 @@ def to_type_string(dt: T.DataType) -> str:
     if isinstance(dt, T.TimestampNTZType):
         return "timestamp"
     raise ValueError(f"unsupported Spark type: {dt}")
+
+
+def ddl(schema: T.StructType) -> str:
+    """Spark SQL column list for ``schema`` (``CREATE TABLE t (<ddl>)``),
+    with every field name quoted, nested ones too."""
+
+    def cols(st: T.StructType, sep: str) -> str:
+        return ", ".join("`" + f.name.replace("`", "``") + f"`{sep}{typ(f.dataType)}" for f in st)
+
+    def typ(dt: T.DataType) -> str:
+        if isinstance(dt, T.StructType):
+            return f"struct<{cols(dt, ':')}>"
+        if isinstance(dt, T.ArrayType):
+            return f"array<{typ(dt.elementType)}>"
+        return dt.simpleString()
+
+    return cols(schema, " ")
 
 
 def resolve_conversion_schema(

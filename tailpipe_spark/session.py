@@ -110,8 +110,8 @@ def configure_runtime(spark: SparkSession) -> None:
     # data has microsecond resolution).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # tp_index is VARCHAR by contract (SURVEY.md §1.2); don't let hive
-    # partition discovery re-type `tp_index=0` as int. tp_year/tp_month
-    # are cast back to int in Catalog.read_table.
+    # partition discovery re-type `tp_index=0` as int. Workspace scans
+    # carry their types in Catalog.spark_schema; this covers the rest.
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     # int64-micros timestamps carry footer min/max stats (INT96 doesn't);
     # compaction's overlap sweep and row-group time pruning depend on them

@@ -107,3 +107,18 @@ def test_noop_save_reps_never_reuse_shuffle_stages(spark):
     c1 = stage_run_profile(lambda: df2.collect())
     c2 = stage_run_profile(lambda: df2.collect())
     assert c2[0] < c1[0], f"expected stage reuse on repeated collect: {c1} -> {c2}"
+
+
+def test_failed_ingest_build_lands_in_setup_errors(monkeypatch):
+    """A workspace build that raises is recorded, not fatal: the bench
+    goes on to write its artifact."""
+    import bench
+    from tailpipe_spark.queries import timeseries
+
+    def boom(spark, sf_dir, names):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(timeseries, "ingest_build_walls", boom)
+    errors: dict[str, str] = {}
+    assert bench._ingest_walls(None, "/nowhere", ["q"], errors) == {}
+    assert errors == {"ingest_build": "OSError: disk full"}

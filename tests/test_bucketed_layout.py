@@ -160,7 +160,7 @@ def test_bucket_rewrite_auto_sizes_and_cli_e2e(spark, two_tables, capsys):
     assert lay["bucket_by"] == ["k"] and lay["num_buckets"] == 8
 
 
-def test_q05_smj_zero_fact_exchange_product_path(spark, workspace):
+def test_q05_smj_zero_fact_exchange_product_path(spark, workspace, assert_manifest_schema):
     """The r10 sf10 A/B's cluster-scale plan, now through the PRODUCT
     path: orders+lineitem ingested as catalog tables, bucketed by their
     orderkey via `compact --bucket-by`, q05's SMJ shape planned over
@@ -183,6 +183,7 @@ def test_q05_smj_zero_fact_exchange_product_path(spark, workspace):
         )
         writer.append(workspace, name, df)
         workspace.refresh_file_index(name)
+        assert_manifest_schema(workspace, name)
 
     def q05(orders, li):
         region = rt(spark, f"{sf}/region.parquet").filter(F.col("r_name") == "ASIA")

@@ -447,3 +447,76 @@ def test_connect_duckdb_dialect_executes(populated_workspace, tmp_path, capsys):
     assert [r[0] for r in rows] == ["srv-1", "srv-0", "srv-1"]
     cols = [d[0] for d in con.execute("SELECT * FROM server_metrics").description]
     assert "tp_year" not in cols and "tp_month" not in cols
+
+
+def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp_path):
+    """The spark-sql init script reads tp_index as a string even in a
+    session where partition type inference is on (Spark's default),
+    so a numeric-looking index still matches its --index pattern."""
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.connect import write_init_script
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    p = tmp_path / "n.jsonl"
+    p.write_text(json.dumps(
+        {"id": 1, "idx": "012345678901", "time": "2024-03-01T12:00:00"}
+    ))
+    table = TableConfig(
+        name="num_idx",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="idx", type="varchar"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table,
+            PartitionConfig("num_idx", "default", tp_index="idx"),
+            source_df=read_jsonl(spark, [str(p)]))
+    src = open(write_init_script(
+        workspace, str(tmp_path / "init"), dialect="sql", index_patterns=["0123*"],
+    )).read()
+    conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        _run_sql_script(spark, src)
+        view = spark.table("num_idx")
+        assert dict(view.dtypes)["tp_index"] == "string"
+        assert [(r["id"], r["tp_index"]) for r in view.collect()] == [
+            (1, "012345678901")
+        ]
+    finally:
+        spark.conf.set(conf, before)
+        spark.catalog.dropTempView("num_idx")
+
+
+def test_connect_duckdb_view_bounds_are_utc_under_session_zone(
+    populated_workspace, tmp_path, capsys
+):
+    """A DuckDB session in another TimeZone keeps the rows the CLI
+    keeps: the init script compares the time bounds in UTC."""
+    import duckdb
+
+    from tailpipe_spark.connect import write_init_script
+
+    tf, tt = "2024-05-01T21:00:00", "2024-05-02T01:00:00"
+    assert main([
+        "--workspace", populated_workspace.workspace,
+        "query", "select count(*) as n from server_metrics",
+        "--from", tf, "--to", tt,
+    ]) == 0
+    via_cli = int(capsys.readouterr().out.strip().splitlines()[-1])
+    path = write_init_script(
+        populated_workspace, str(tmp_path), dialect="duckdb",
+        time_from=tf, time_to=tt,
+    )
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone = 'America/New_York'")
+        con.execute(open(path).read())
+        via_duckdb = con.execute("SELECT count(*) FROM server_metrics").fetchone()[0]
+    finally:
+        con.close()
+    assert via_duckdb == via_cli == 1

@@ -948,3 +948,20 @@ def test_windowed_compaction_writes_no_empty_files(spark, workspace, tmp_path):
         "t_win", datetime(2024, 5, 1), datetime(2024, 5, 2)
     ) is not None
     _assert_index_fresh(workspace, "t_win")
+
+
+def test_table_emptied_by_delete_stays_queryable(spark, workspace, tmp_path):
+    """A delete of every row leaves an empty table dir and an empty
+    index. The table reads as an empty scan with its manifest schema,
+    bounded or not, and the workspace's other views still register."""
+    rows = [(i, "a", f"2024-0{m}-01T00:00:00") for i, m in enumerate([1, 2, 3])]
+    _collect_rows(spark, workspace, tmp_path, "gone", [rows])
+    _collect_rows(spark, workspace, tmp_path, "kept", [rows])
+    assert delete_range(workspace, spark, "gone", "default") == 3
+    assert workspace.load_file_index("gone") == []
+
+    for bounds in ({}, {"time_from": datetime(2024, 1, 1), "time_to": datetime(2024, 4, 1)}):
+        workspace.register_views(spark, **bounds)
+        assert spark.sql("select count(*) n from gone").collect()[0]["n"] == 0
+        assert spark.sql("select count(*) n from kept").collect()[0]["n"] == 3
+    assert spark.table("gone").columns == spark.table("kept").columns

@@ -34,7 +34,8 @@ def test_parse_nested():
 
 def test_type_string_roundtrip():
     for s in ["varchar", "bigint", "double", "timestamp", "integer[]",
-              "struct(a integer, b varchar)"]:
+              "struct(a integer, b varchar)",
+              "struct(accountId varchar, sessionContext struct(mfaAuthenticated varchar))"]:
         assert to_type_string(parse_type(s)) == s
 
 
