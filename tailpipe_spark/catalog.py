@@ -9,7 +9,9 @@ same roles are played by:
   tp_month=…/*.parquet`` (self-describing, Spark-native partition
   discovery and pruning)
 - ``metadata/manifest.json``: table schemas + snapshot log
-- parquet footers: per-file row counts / min-max stats (A30)
+- ``metadata/file_index/<table>.jsonl``: the table's file list, with
+  each file's rows, bytes and min-max stats read from its footer once,
+  at write time (A30); ``Catalog.files`` serves it
 
 The manifest is the schema: it holds each table's columns in write
 order with their frozen types, and ``spark_schema`` makes that the read
@@ -396,11 +398,11 @@ class Catalog:
         through DuckDB, since pyarrow cannot open files holding VARIANT."""
         import duckdb
 
-        for root, _dirs, names in os.walk(self.table_dir(table)):
-            for n in (n for n in names if n.endswith(".parquet")):
-                sql = "DESCRIBE SELECT * FROM read_parquet(?, hive_partitioning=false)"
-                with duckdb.connect() as con:
-                    return [r[0] for r in con.execute(sql, [os.path.join(root, n)]).fetchall()]
+        sql = "DESCRIBE SELECT * FROM read_parquet(?, hive_partitioning=false)"
+        for rel in self._listing(table):
+            with duckdb.connect() as con:
+                path = os.path.join(self.table_dir(table), rel)
+                return [r[0] for r in con.execute(sql, [path]).fetchall()]
         return None
 
     def record_snapshot(self, op: str, detail: dict | None = None) -> int:
@@ -451,20 +453,14 @@ class Catalog:
         return self._load()["tables"].get(name, {}).get("layout")
 
     def row_count(self, name: str) -> int:
-        """Exact table row count WITHOUT a Spark job: sum of per-file
-        parquet footer counts, served from the manifest file index when
-        fresh (zero reads) and from a driver-side footer walk otherwise
-        (O(files) metadata reads, no data). Operators that take a
+        """Exact table row count WITHOUT a Spark job: the sum of the
+        per-file footer counts in ``files``, so a fresh index answers it
+        with no footer read at all. Operators that take a
         ``corpus_size``-style hint (dedup.ngram_jaccard_pairs, bloom
         auto-sizing) should be fed from here when their input is a
         cataloged table — it replaces a full count() job over the
         table with a manifest lookup."""
-        idx = self.load_file_index(name)
-        # pruned_files() with no bounds doubles as the staleness check:
-        # non-None means the on-disk file set still matches the index.
-        if idx is not None and self.pruned_files(name) is not None:
-            return sum(int(e["rows"]) for e in idx)
-        return int(self.file_stats(name)["rows"])
+        return sum(int(e["rows"]) for e in self.files(name))
 
     def backup_metadata(self) -> str:
         """A27: timestamped manifest backup before collect/compact."""
@@ -477,28 +473,21 @@ class Catalog:
 
     # --- file/row stats (A30) ---
     def file_stats(self, table: str) -> dict:
-        tdir = self.table_dir(table)
-        files, bytes_, rows = 0, 0, 0
-        for root, _dirs, names in os.walk(tdir):
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, n)
-                files += 1
-                bytes_ += os.path.getsize(p)
-                rows += FooterInfo(p).num_rows
-        return {"table": table, "files": files, "bytes": bytes_, "rows": rows}
+        files = self.files(table)
+        return {"table": table, "files": len(files), "bytes": sum(e["bytes"] for e in files),
+                "rows": sum(e["rows"] for e in files)}
 
-    # --- manifest-based data skipping -------------------------------
+    # --- the file index: a table's file list ------------------------
     #
-    # Like Iceberg/DuckLake manifests (reference: internal/database/
-    # duck_db.go:270-291), each file's tp_timestamp min/max + null_count
-    # is recorded at write time, so a bounded query intersects its
-    # predicate with the index instead of opening every footer. The
-    # index is a per-table JSONL sidecar (metadata/file_index/<table>.
-    # jsonl), not part of manifest.json: an append costs O(new entries),
-    # not an O(index) JSON rewrite (~100 MB at 1M files). Reads dedupe
-    # last-wins by path; full rewrites (refresh/compact) compact it.
+    # Like DuckLake's ``ducklake_data_file`` table (reference: internal/
+    # database/duck_db.go:270-291), one entry per data file — path, rows,
+    # bytes, tp_timestamp min/max + null_count — recorded at write time.
+    # Compaction, delete, bucket_rewrite and the table stats read it
+    # through ``files``, bounded queries through ``pruned_files``; one
+    # listing (``_listing``) checks it, and a stale index is never
+    # trusted. It is a JSONL sidecar, not part of manifest.json, so an
+    # append costs O(new entries), not an O(index) JSON rewrite (~100 MB
+    # at 1M files). Reads dedupe last-wins by path.
 
     def _index_path(self, table: str) -> str:
         return os.path.join(self.metadata_dir, "file_index", f"{table}.jsonl")
@@ -510,12 +499,10 @@ class Catalog:
         next store migrates out.
 
         A torn FINAL line (crash mid-_append_index) is tolerated: the
-        parsed prefix is returned, so the index degrades to "missing
-        the interrupted append's entries" — pruning then admits those
-        files via the directory scan, same as any stale index. A torn
-        line anywhere BUT the end means real corruption; that returns
-        None so every consumer falls back to a full scan (the contract
-        elsewhere: stale/missing index -> degrade, never raise)."""
+        parsed prefix is returned, which the listing then finds stale
+        like any other. A torn line anywhere BUT the end means real
+        corruption; that returns None (stale/missing index -> degrade,
+        never raise)."""
         p = self._index_path(table)
         if os.path.exists(p):
             by_path = {}
@@ -576,6 +563,43 @@ class Catalog:
             entry["cols"] = {c: _footer_col_stats(md, c) for c in columns}
         return entry
 
+    def _listing(self, table: str, keys: list[str] | None = None) -> dict[str, int]:
+        """Path (relative to the table dir) → bytes of every parquet file
+        of ``table``, or only of those under the ``keys`` subdirectories,
+        in path order. The one directory walk behind the file index."""
+        tdir = self.table_dir(table)
+        tops = [tdir] if keys is None else [os.path.join(tdir, k) for k in keys]
+        out = {}
+        for top in tops:
+            for root, dirs, names in os.walk(top):
+                dirs.sort()
+                for n in sorted(names):
+                    if n.endswith(".parquet"):
+                        p = os.path.join(root, n)
+                        out[os.path.relpath(p, tdir)] = os.path.getsize(p)
+        return out
+
+    def _fresh_index(self, table: str) -> tuple[list | None, dict[str, int]]:
+        """(the file index, or None when it is missing or STALE — the
+        on-disk (path, bytes) set no longer matches it; the listing)."""
+        listed = self._listing(table)
+        index = self.load_file_index(table)
+        if index is None or {(e["path"], e["bytes"]) for e in index} != set(listed.items()):
+            return None, listed
+        return index, listed
+
+    def files(self, table: str) -> list[dict]:
+        """The table's data files as file-index entries (``path`` under
+        the table dir, ``rows``, ``bytes``, naive-UTC ISO ``min_ts``/
+        ``max_ts``, ``null_ts``, ``cols``): the index when fresh, else
+        the same entries read from the listed footers, not stored."""
+        index, listed = self._fresh_index(table)
+        if index is not None:
+            return index
+        columns = self._load()["tables"].get(table, {}).get("indexed_columns")
+        tdir = self.table_dir(table)
+        return [self._index_entry(tdir, rel, columns) for rel in listed]
+
     def refresh_file_index(self, table: str, columns: list[str] | None = None) -> int:
         """Record per-file footer stats in the manifest: always
         ``tp_timestamp``, plus any extra ``columns`` (the z-order
@@ -589,12 +613,7 @@ class Catalog:
         maintained at O(files touched); use this only for initial
         builds, whole-table rewrites, or repair."""
         tdir = self.table_dir(table)
-        index = []
-        for root, _dirs, names in os.walk(tdir):
-            for n in sorted(names):
-                if n.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, n), tdir)
-                    index.append(self._index_entry(tdir, rel, columns))
+        index = [self._index_entry(tdir, rel, columns) for rel in self._listing(table)]
         self._store_index(table, index)
         if columns:
             manifest = self._load()
@@ -656,16 +675,9 @@ class Catalog:
         tdir = self.table_dir(table)
         prefixes = tuple(k.rstrip(os.sep) + os.sep for k in key_relpaths)
         kept = [e for e in existing if not e["path"].startswith(prefixes)]
-        cols = cols_now
-        for key in key_relpaths:
-            kdir = os.path.join(tdir, key)
-            if not os.path.isdir(kdir):
-                continue  # partition fully deleted
-            for root, _dirs, names in os.walk(kdir):
-                for n in sorted(names):
-                    if n.endswith(".parquet"):
-                        rel = os.path.relpath(os.path.join(root, n), tdir)
-                        kept.append(self._index_entry(tdir, rel, cols))
+        # a key dir that is gone (partition fully deleted) lists nothing
+        for rel in self._listing(table, key_relpaths):
+            kept.append(self._index_entry(tdir, rel, cols_now))
         self._store_index(table, kept)
         return len(kept)
 
@@ -690,46 +702,26 @@ class Catalog:
         # arrive tz-aware — normalize or the < compare raises TypeError.
         time_from = naive_utc(time_from)
         time_to = naive_utc(time_to)
-        index = self.load_file_index(table)
+        index, _listed = self._fresh_index(table)
         if index is None:
             return None
         tdir = self.table_dir(table)
-        on_disk = set()
-        for root, _dirs, names in os.walk(tdir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    p = os.path.join(root, n)
-                    on_disk.add((os.path.relpath(p, tdir), os.path.getsize(p)))
-        if on_disk != {(e["path"], e["bytes"]) for e in index}:
-            return None  # stale — file set changed since refresh
         keep = []
         for e in index:
-            full = os.path.join(tdir, e["path"])
-            ts_ok = True
-            if e["min_ts"] is None or e["null_ts"] is None or e["null_ts"] > 0:
-                pass  # no usable ts stats / null rows → ts test keeps it
-            else:
-                lo = datetime.fromisoformat(e["min_ts"])
-                hi = datetime.fromisoformat(e["max_ts"])
-                if time_from is not None and hi < time_from:
-                    ts_ok = False
-                if time_to is not None and lo >= time_to:
-                    ts_ok = False
-            if not ts_ok:
+            # no usable ts stats, or null rows: the ts test keeps the file
+            if e["min_ts"] is not None and e["null_ts"] == 0:
+                if time_from is not None and datetime.fromisoformat(e["max_ts"]) < time_from:
+                    continue
+                if time_to is not None and datetime.fromisoformat(e["min_ts"]) >= time_to:
+                    continue
+            cols = e.get("cols") or {}
+            if any(
+                (plo is not None and st["max"] < plo) or (phi is not None and st["min"] > phi)
+                for c, (plo, phi) in (predicates or {}).items()
+                if (st := cols.get(c)) is not None  # no stats for c: keep
+            ):
                 continue
-            col_ok = True
-            for c, (plo, phi) in (predicates or {}).items():
-                st = (e.get("cols") or {}).get(c)
-                if st is None:
-                    continue  # no stats for this column → keep
-                if plo is not None and st["max"] < plo:
-                    col_ok = False
-                    break
-                if phi is not None and st["min"] > phi:
-                    col_ok = False
-                    break
-            if col_ok:
-                keep.append(full)
+            keep.append(os.path.join(tdir, e["path"]))
         return keep
 
     # --- spark registration (A16) ---
@@ -768,10 +760,7 @@ class Catalog:
         file index (when fresh) restricts the scan to intersecting files
         — the predicate itself is still applied by the query layer,
         skipping is a conservative superset. No file left is an empty scan."""
-        from tailpipe_spark.session import configure_runtime
-
         schema = self.spark_schema(table)
-        configure_runtime(spark)
         paths = None
         if time_from is not None or time_to is not None:
             paths = self.pruned_files(table, time_from, time_to)

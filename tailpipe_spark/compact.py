@@ -4,8 +4,9 @@ merge (+ optional reindex), mirroring the reference's compactor
 internal/database/partition_key.go:96-170).
 
 Spark shape:
-- file stats (rows, min/max tp_timestamp) come from parquet footers —
-  driver-side metadata, no data read (A20/A22)
+- the partition keys and their file stats (rows, bytes, min/max
+  tp_timestamp) come from the table's file list, ``Catalog.files``: a
+  fresh file index answers without a footer or data read (A20/A22)
 - the interval-overlap sweep is pure Python on those stats (A21)
 - a partition key is only rewritten when it has overlapping or
   too-many-small files, so compaction is idempotent; each rewritten
@@ -32,7 +33,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from datetime import datetime
 from urllib.parse import unquote
 
 from pyspark.sql import Column, SparkSession
@@ -71,6 +73,8 @@ class PartitionKey:
     tp_year: int
     tp_month: int
     relpath: str
+    #: the file-index entries of the files in this key dir
+    entries: list[dict] = field(default_factory=list, repr=False, compare=False)
 
 
 def _hive_value(v: str) -> str | None:
@@ -78,13 +82,13 @@ def _hive_value(v: str) -> str | None:
 
 
 def enumerate_partition_keys(catalog: Catalog, table: str) -> list[PartitionKey]:
-    """A20: walk the hive layout."""
+    """A20: the hive layout's partition keys, by relpath: each key dir in
+    the table's file list, with its values parsed from the path."""
+    by_dir: dict[str, list[dict]] = {}
+    for e in catalog.files(table):
+        by_dir.setdefault(os.path.dirname(e["path"]), []).append(e)
     keys = []
-    base = catalog.table_dir(table)
-    for root, dirs, files in os.walk(base):
-        if not any(f.endswith(".parquet") for f in files):
-            continue
-        rel = os.path.relpath(root, base)
+    for rel, files in sorted(by_dir.items()):
         parts = dict(p.split("=", 1) for p in rel.split(os.sep) if "=" in p)
         if set(parts) >= set(PARTITION_COLS):
             try:
@@ -95,30 +99,25 @@ def enumerate_partition_keys(catalog: Catalog, table: str) -> list[PartitionKey]
                         int(parts["tp_year"]),
                         int(parts["tp_month"]),
                         rel,
+                        sorted(files, key=lambda e: e["path"]),
                     )
                 )
             except ValueError:
                 continue  # foreign dir in the tree; not a partition key
-    return sorted(keys, key=lambda k: k.relpath)
+    return keys
 
 
 def file_stats(catalog: Catalog, table: str, key: PartitionKey) -> list[FileStat]:
-    """A22: per-file stats from parquet footers (no data read).
-
-    Footers go through catalog.FooterInfo so files carrying types the
-    installed pyarrow cannot parse (VARIANT from json-typed columns)
-    still compact; a file with any stat-less row group is treated as
-    unranged rather than getting a partial (overlap-missing) range."""
-    d = os.path.join(catalog.table_dir(table), key.relpath)
+    """A22: per-file stats of one key, from its file-index entries (no
+    footer or data read). A file with any stat-less row group has no
+    range in the index, so it is treated as unranged rather than given a
+    partial (overlap-missing) one."""
+    base = catalog.table_dir(table)
     out = []
-    for name in sorted(os.listdir(d)):
-        if not name.endswith(".parquet"):
-            continue
-        p = os.path.join(d, name)
-        md = FooterInfo(p)
-        ts = md.col_stats("tp_timestamp")
-        mn, mx = (ts[0], ts[1]) if ts else (None, None)
-        out.append(FileStat(p, md.num_rows, os.path.getsize(p), mn, mx))
+    for e in key.entries:
+        # the index keeps naive-UTC ISO strings, which sql_ts reads as UTC
+        lo, hi = (v and datetime.fromisoformat(v) for v in (e["min_ts"], e["max_ts"]))
+        out.append(FileStat(os.path.join(base, e["path"]), e["rows"], e["bytes"], lo, hi))
     return out
 
 
@@ -242,12 +241,13 @@ def _bucket_rewrite_locked(
     sort_by: list[str] | None,
     force: bool,
 ) -> dict:
-    stats = catalog.file_stats(table)
-    bytes_ = stats["bytes"]
+    files = catalog.files(table)
+    bytes_ = sum(e["bytes"] for e in files)
+    rows = sum(e["rows"] for e in files)
     if num_buckets is None:
         n = max(1, -(-bytes_ // TARGET_FILE_BYTES // 2))  # ceil(bytes/256MB)
         num_buckets = max(4, 1 << (n - 1).bit_length())
-    hive_dirs = max(1, len(enumerate_partition_keys(catalog, table)))
+    hive_dirs = max(1, len({os.path.dirname(e["path"]) for e in files}))
     cell = bytes_ / max(1, hive_dirs * int(num_buckets))
     if not force and cell < MIN_BUCKET_CELL_BYTES:
         import warnings
@@ -271,7 +271,6 @@ def _bucket_rewrite_locked(
     # current layout may still list the files a delete has replaced
     tdir = catalog.table_dir(table)
     df = spark.read.schema(catalog.spark_schema(table)).option("basePath", tdir).parquet(tdir)
-    rows = catalog.row_count(table)
     staged = catalog.new_staging_dir(f"{table}.bucket")
     tmp_name = f"tp_bucket_stage_{table}_{os.path.basename(staged).replace('.', '_').replace('-', '_')}"
     spark.sql(f"DROP TABLE IF EXISTS `{tmp_name}`")

@@ -104,7 +104,10 @@ def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) 
     generated stay visible to a long-lived session (a baked file list
     froze the file set at connect time). The script sets ``TimeZone``
     to UTC: DuckDB reads the stored timestamps as ``TIMESTAMPTZ`` and
-    compares the baked ``TIMESTAMP`` bounds in its session zone."""
+    compares the baked ``TIMESTAMP`` bounds in its session zone.
+    ``hive_types`` keeps ``tp_index=123456789012`` a string, not a BIGINT;
+    ``tp_year``/``tp_month`` stay autocast, since DuckDB 1.0 cannot cast
+    a ``__HIVE_DEFAULT_PARTITION__`` dir to a pinned INTEGER."""
 
     def view(t, where):
         src = os.path.join(catalog.table_dir(t), "**", "*.parquet")
@@ -112,6 +115,7 @@ def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) 
             f'CREATE OR REPLACE VIEW "{t}" AS\n'
             f"SELECT * EXCLUDE (tp_year, tp_month)\n"
             f"FROM read_parquet('{src}', hive_partitioning=true, "
+            "hive_types={'tp_partition': VARCHAR, 'tp_index': VARCHAR}, "
             f"union_by_name=true){where};\n"
         )
 

@@ -675,12 +675,13 @@ def connected_components_star(
     10⁵ shuffles. Star contraction roughly halves component height per
     large+small round-pair: convergence is O(log² n) rounds proven,
     ~log₂(diameter) round-pairs observed, independent of corpus size.
-    tools/cc_scale_proof.py carries the measured separation (a path
-    graph where propagation cannot finish inside its iteration budget
-    and the star plan converges in a few dozen rounds) AND the honest
-    flip side: on genuinely shallow dup graphs propagation's cheaper
-    rounds win, which is why it stays the default in the dedup
-    entries.
+    Measured on a 32-core box (the one-off script that took these
+    numbers, tools/cc_scale_proof.py, is kept in git history only): a
+    100k-node path exhausts propagation's 50-round budget (40.1 s,
+    99,950 wrong components) while star converges in 18 rounds / 22.0 s
+    to the one correct component; on a shallow star forest
+    propagation's cheaper rounds win (2.6 vs 3.1 s), which is why it
+    stays the default in the dedup entries.
 
     Phases, on an edge SET kept canonically oriented (u, v), u > v:
       large-star: for every node u, link every STRICTLY LARGER

@@ -72,10 +72,11 @@ def naive_utc(t: datetime | None) -> datetime | None:
 
 
 def sql_ts(t: datetime) -> str:
-    """``t`` (naive means UTC) as a UTC timestamp literal. Spark reads
-    it in the session timezone, UTC; ``F.lit`` of a naive datetime would
-    go through the Python process's local zone instead."""
-    return f"TIMESTAMP '{naive_utc(t).strftime('%Y-%m-%d %H:%M:%S.%f')}'"
+    """``t`` (naive means UTC) as a timestamp literal with an explicit
+    ``+00:00``, so Spark and DuckDB read the same instant whatever the
+    session timezone; ``F.lit`` of a naive datetime would go through the
+    Python process's local zone instead."""
+    return f"TIMESTAMP '{naive_utc(t).strftime('%Y-%m-%d %H:%M:%S.%f')}+00:00'"
 
 
 def _sql_str(s: str) -> str:

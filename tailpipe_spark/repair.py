@@ -43,10 +43,12 @@ def quarantine_invalid_files(catalog: Catalog, table: str) -> list[str]:
     """Move unreadable parquet files OUT of the data tree (Spark's file
     listing ignores extensions, so an in-place rename would still be
     scanned) into ``<workspace>/quarantine/<table>/…``; returns the
-    quarantined paths."""
+    quarantined paths. The keys that lost a file are re-indexed, so the
+    file index stays fresh and bounded queries keep pruning."""
     base = catalog.table_dir(table)
     qdir = os.path.join(catalog.workspace, "quarantine", table)
     moved = []
+    keys = set()
     for root, _dirs, names in os.walk(base):
         for n in names:
             if not n.endswith(".parquet"):
@@ -64,10 +66,12 @@ def quarantine_invalid_files(catalog: Catalog, table: str) -> list[str]:
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(p, dst)
                 moved.append(dst)
+                keys.add(os.path.dirname(rel))
     if moved:
         catalog.record_snapshot(
             "quarantine", {"table": table, "files": [os.path.basename(m) for m in moved]}
         )
+        catalog.refresh_partition_index(table, sorted(keys))
     return moved
 
 

@@ -74,14 +74,8 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # INT96 (Spark's legacy default) carries no parquet min/max
-        # statistics: footer-based compaction overlap sweeps and
-        # row-group time skipping silently stop working. Micros int64
-        # stats make time-range scans prune inside month partitions.
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # zstd: ~30% smaller files than snappy at similar decode speed —
         # at 100 TB the scan is IO-bound, so ratio wins
         .config("spark.sql.parquet.compression.codec", "zstd")
@@ -98,7 +92,9 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    configure_runtime(spark)
+    return spark
 
 
 def configure_runtime(spark: SparkSession) -> None:
@@ -114,7 +110,7 @@ def configure_runtime(spark: SparkSession) -> None:
     # carry their types in Catalog.spark_schema; this covers the rest.
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     # int64-micros timestamps carry footer min/max stats (INT96 doesn't);
-    # compaction's overlap sweep and row-group time pruning depend on them
+    # the file index and row-group time pruning depend on them
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     # The driver's testdata stores parquet timestamp[us] WITHOUT the
     # isAdjustedToUTC flag; Spark 4's default infers those as

@@ -449,18 +449,16 @@ def test_connect_duckdb_dialect_executes(populated_workspace, tmp_path, capsys):
     assert "tp_year" not in cols and "tp_month" not in cols
 
 
-def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp_path):
-    """The spark-sql init script reads tp_index as a string even in a
-    session where partition type inference is on (Spark's default),
-    so a numeric-looking index still matches its --index pattern."""
+def _numeric_index_table(spark, workspace, tmp_path, idx):
+    """Collect one row into table ``num_idx`` with the all-digit
+    tp_index ``idx``."""
     from tailpipe_spark.collect import collect
     from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
-    from tailpipe_spark.connect import write_init_script
     from tailpipe_spark.sources.formats import read_jsonl
 
     p = tmp_path / "n.jsonl"
     p.write_text(json.dumps(
-        {"id": 1, "idx": "012345678901", "time": "2024-03-01T12:00:00"}
+        {"id": 1, "idx": idx, "time": "2024-03-01T12:00:00"}
     ))
     table = TableConfig(
         name="num_idx",
@@ -474,6 +472,15 @@ def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp
     collect(spark, workspace, table,
             PartitionConfig("num_idx", "default", tp_index="idx"),
             source_df=read_jsonl(spark, [str(p)]))
+
+
+def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp_path):
+    """The spark-sql init script reads tp_index as a string even in a
+    session where partition type inference is on (Spark's default),
+    so a numeric-looking index still matches its --index pattern."""
+    from tailpipe_spark.connect import write_init_script
+
+    _numeric_index_table(spark, workspace, tmp_path, "012345678901")
     src = open(write_init_script(
         workspace, str(tmp_path / "init"), dialect="sql", index_patterns=["0123*"],
     )).read()
@@ -490,6 +497,61 @@ def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp
     finally:
         spark.conf.set(conf, before)
         spark.catalog.dropTempView("num_idx")
+
+
+def test_connect_duckdb_view_types_hive_columns(spark, workspace, tmp_path, capsys):
+    """The DuckDB init script reads an all-digit tp_index as VARCHAR, not
+    as the BIGINT DuckDB's hive autocast picks, so an --index pattern
+    binds and keeps the rows the CLI keeps."""
+    import duckdb
+
+    from tailpipe_spark.connect import write_init_script
+
+    _numeric_index_table(spark, workspace, tmp_path, "123456789012")
+    assert main([
+        "--workspace", workspace.workspace,
+        "query", "select count(*) as n from num_idx", "--index", "1234*",
+    ]) == 0
+    via_cli = int(capsys.readouterr().out.strip().splitlines()[-1])
+    path = write_init_script(
+        workspace, str(tmp_path / "init"), dialect="duckdb", index_patterns=["1234*"],
+    )
+    con = duckdb.connect()
+    try:
+        con.execute(open(path).read())
+        rows = con.execute(
+            "SELECT typeof(tp_index), tp_index, count(*) FROM num_idx GROUP BY ALL"
+        ).fetchall()
+    finally:
+        con.close()
+    assert rows == [("VARCHAR", "123456789012", via_cli)]
+    assert via_cli == 1
+
+
+def test_register_views_keeps_the_session_zone(spark, populated_workspace):
+    """Registering views (the pyspark connect bootstrap) leaves the
+    caller's session timezone alone, and its time bounds select the same
+    rows under New York time as under UTC."""
+    from datetime import datetime
+
+    from tailpipe_spark.query_cli import filter_conditions
+
+    tf, tt = datetime(2024, 5, 1, 21), datetime(2024, 5, 2, 1)
+    zone = "spark.sql.session.timeZone"
+    before = spark.conf.get(zone)
+    rows = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set(zone, tz)
+            populated_workspace.register_views(
+                spark, filter_conditions(tf, tt), time_from=tf, time_to=tt
+            )
+            assert spark.conf.get(zone) == tz
+            rows[tz] = [r["cpu"] for r in spark.table("server_metrics").collect()]
+    finally:
+        spark.conf.set(zone, before)
+        spark.catalog.dropTempView("server_metrics")
+    assert rows["America/New_York"] == rows["UTC"] == [1.0]
 
 
 def test_connect_duckdb_view_bounds_are_utc_under_session_zone(

@@ -965,3 +965,60 @@ def test_table_emptied_by_delete_stays_queryable(spark, workspace, tmp_path):
         assert spark.sql("select count(*) n from gone").collect()[0]["n"] == 0
         assert spark.sql("select count(*) n from kept").collect()[0]["n"] == 3
     assert spark.table("gone").columns == spark.table("kept").columns
+
+
+def test_compaction_reads_no_footer_of_indexed_files(spark, workspace, tmp_path, monkeypatch):
+    """With a fresh file index, compaction plans from the index alone: it
+    opens no footer of a file that was in the table before the call. The
+    re-index of the rewritten keys reads only the files it wrote."""
+    import os
+
+    from tailpipe_spark import catalog as catalog_mod
+
+    _collect_rows(spark, workspace, tmp_path, "t_idx", [
+        [(10 * b + i, idx, f"2024-0{m}-0{i + 1}T00:00:00")
+         for m in (1, 2) for idx in ("a", "b") for i in range(3)]
+        for b in range(2)
+    ])
+    old = {os.path.realpath(p) for ps in _key_files(workspace, "t_idx").values() for p in ps}
+    assert len(old) == 8 and workspace.pruned_files("t_idx") is not None
+    facts = _key_facts(spark, workspace, "t_idx")
+    opened = []
+    init = catalog_mod.FooterInfo.__init__
+
+    def counting(self, path):
+        opened.append(os.path.realpath(path))
+        init(self, path)
+
+    monkeypatch.setattr(catalog_mod.FooterInfo, "__init__", counting)
+    summary = compact_table(spark, workspace, "t_idx")
+    monkeypatch.undo()
+    assert summary["keys_rewritten"] == 4 and summary["files_merged"] == 8
+    assert len(opened) == 4  # the four rewritten files, read by the re-index
+    assert not set(opened) & old
+    assert _key_facts(spark, workspace, "t_idx") == facts
+    _assert_index_fresh(workspace, "t_idx")
+
+
+def test_compaction_merges_a_file_dropped_behind_the_index(spark, workspace, tmp_path):
+    """A parquet file copied into a key dir from outside the engine makes
+    the index stale. Compaction then takes the key's stats from the
+    footers, merges the file and keeps its rows, and the rewritten key is
+    indexed again."""
+    import os
+    import shutil
+
+    _collect_rows(spark, workspace, tmp_path, "t_drop", [
+        [(i, "a", f"2024-05-01T0{i}:00:00") for i in range(4)]
+    ])
+    ((key, paths),) = _key_files(workspace, "t_drop").items()
+    shutil.copy(paths[0], os.path.join(os.path.dirname(paths[0]), "dropped.parquet"))
+    assert workspace.pruned_files("t_drop") is None
+    assert workspace.row_count("t_drop") == 8
+
+    summary = compact_table(spark, workspace, "t_drop")
+    assert summary["keys_rewritten"] == 1 and summary["files_merged"] == 2
+    assert len(_key_files(workspace, "t_drop")[key]) == 1
+    assert workspace.read_table(spark, "t_drop").count() == 8
+    assert workspace.pruned_files("t_drop") is not None
+    _assert_index_fresh(workspace, "t_drop")

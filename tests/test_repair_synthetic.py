@@ -47,6 +47,41 @@ def test_quarantine_corrupt_parquet(spark, workspace, tmp_path):
     assert snaps[-1]["op"] == "quarantine"
 
 
+def test_quarantine_keeps_the_file_index_fresh(spark, workspace, tmp_path):
+    """Quarantining a corrupt file re-indexes its key: the index still
+    matches the tree, so bounded reads keep pruning, and it no longer
+    lists the file."""
+    import os
+
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    p = tmp_path / "c.jsonl"
+    p.write_text("\n".join(
+        json.dumps({"id": i, "time": f"2024-0{i}-01T00:00:00"}) for i in (4, 5)
+    ))
+    table = TableConfig(
+        name="qi",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table, PartitionConfig("qi", "default"),
+            source_df=read_jsonl(spark, [str(p)]))
+    victim = sorted(workspace.pruned_files("qi"))[0]
+    with open(victim, "wb") as f:
+        f.write(b"this is not parquet at all")
+
+    assert len(quarantine_invalid_files(workspace, "qi")) == 1
+    kept = workspace.pruned_files("qi")
+    assert kept is not None and victim not in kept and len(kept) == 1
+    assert workspace.row_count("qi") == 1
+    assert not os.path.exists(victim)
+
+
 def test_variant_table_survives_quarantine(spark, workspace, tmp_path):
     """A collected ``json``-typed (VARIANT parquet) table must NOT be
     quarantined: pyarrow <18 rejects VARIANT footers with OSError, and a
