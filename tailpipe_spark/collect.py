@@ -1,23 +1,29 @@
 """Collection pipeline: source files → format parse → column mapping →
-tp_* enrichment → validation → partitioned append + state update.
+tp_* enrichment → landing → state update.
 
 Spark shape of the reference's collect lifecycle (SURVEY.md §3.2):
 plugins/gRPC become format readers (sources/), the converter's generated
-SQL becomes a declarative DataFrame plan (so Catalyst fuses
-parse+map+validate+write into one pass over the input), and the
-persisted collection state JSON keeps the resume watermark
-(reference: internal/config/partition.go:105-108).
+SQL becomes a declarative DataFrame plan, and the persisted collection
+state JSON keeps the resume watermark (reference:
+internal/config/partition.go:105-108).
+
+``land`` is the only way rows enter a table: validation, the schema
+gate, the observed append, the snapshot and the file-index merge, with
+parse, map, validate and write fused into one Spark job. Batch collect,
+``streaming.stream_collect`` (per micro-batch) and
+``migrate.migrate_legacy_table`` all land through it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tailpipe_spark.catalog import Catalog
@@ -145,6 +151,56 @@ def save_state(catalog: Catalog, table: str, partition: str, state: dict) -> Non
     with open(tmp, "w") as f:
         json.dump(state, f)
     os.replace(tmp, p)
+
+
+@dataclass
+class Landed:
+    rows_written: int
+    rows_dropped: int
+    null_columns: list[str]
+    min_ts: datetime | None  # over the rows written
+    max_ts: datetime | None
+
+
+def land(
+    catalog: Catalog,
+    table: str,
+    df: DataFrame,
+    required: tuple[str, ...],
+    op: str,
+    detail: dict,
+) -> Landed:
+    """Append the enriched rows of ``df`` that have every ``required``
+    column, in one Spark job: the validation report, the row count and
+    the time bounds are observed on the unfiltered frame as the write
+    crosses it (no second scan). Then the ``op`` snapshot (``detail``
+    plus the rows written) and the file-index merge of exactly the new
+    files, O(new files) footer reads (the reference updates file
+    metadata per insert, internal/database/file_metadata.go:42-52)."""
+    check = validate_required(df, list(required))  # A11/A12
+    # freeze/verify table schema in the catalog (A15 + schema-change gate)
+    catalog.ensure_table(
+        table, {f.name: to_type_string(f.dataType) for f in df.schema.fields}
+    )
+    # a file-sink log left by an older streaming landing makes Spark read
+    # the dir through it, hiding every file landed here; only the log
+    # goes, the data files it logged stay and list like any other
+    shutil.rmtree(os.path.join(catalog.table_dir(table), "_spark_metadata"), ignore_errors=True)
+    obs = Observation()
+    rows = df.observe(obs, *check.observed)
+    new_files = writer.append(
+        catalog, table, rows if check.keep is None else rows.filter(check.keep)
+    )
+    metrics = obs.get
+    catalog.record_snapshot(op, {**detail, "rows": metrics["n"]})
+    catalog.merge_file_index(table, new_files)
+    return Landed(
+        rows_written=metrics["n"],
+        rows_dropped=check.dropped(metrics),
+        null_columns=check.null_columns(metrics),
+        min_ts=metrics["mn"],
+        max_ts=metrics["mx"],
+    )
 
 
 def collect_incremental(
@@ -290,55 +346,28 @@ def _collect_impl(
     for cond in filter_conditions(time_from, time_to, layout=False):  # A10
         df = df.filter(F.expr(cond))
 
-    result = validate_required(df, list(required))  # A11/A12
-
-    # freeze/verify table schema in the catalog (A15 + schema-change gate)
-    out_schema = {
-        f.name: to_type_string(f.dataType) for f in result.valid.schema.fields
-    }
-    catalog.ensure_table(table.name, out_schema)
-
-    # Row count and time bounds ride the write pass as observed metrics:
-    # no second scan, no O(table-files) footer walks per append.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = result.valid.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.max("tp_timestamp").alias("mx"),
-        F.min("tp_timestamp").alias("mn"),
+    landed = land(
+        catalog, table.name, df, required, "collect",
+        {"table": table.name, "partition": partition.name},
     )
-    new_files = writer.append(catalog, table.name, observed)
-    metrics = obs.get
-    written = metrics["n"]
-
     state = load_state(catalog, table.name, partition.name)
     state.update(
         {
             "last_collected_at": time.time(),
             # monotonic: a backfill of an older range must not move the
             # resume watermark backward (or a later resume re-ingests)
-            "watermark": _ts_bound(state.get("watermark"), metrics["mx"], max),
-            "earliest": _ts_bound(state.get("earliest"), metrics["mn"], min),
-            "rows_total": state.get("rows_total", 0) + written,
+            "watermark": _ts_bound(state.get("watermark"), landed.max_ts, max),
+            "earliest": _ts_bound(state.get("earliest"), landed.min_ts, min),
+            "rows_total": state.get("rows_total", 0) + landed.rows_written,
         }
     )
     save_state(catalog, table.name, partition.name, state)
-    catalog.record_snapshot(
-        "collect",
-        {"table": table.name, "partition": partition.name, "rows": written},
-    )
-    # manifest file index for query-time data skipping: merge only the
-    # files this append wrote — O(new files) footer reads, never a
-    # rescan of the whole table (catalog.merge_file_index)
-    catalog.merge_file_index(table.name, new_files)
     return CollectResult(
         table=table.name,
         partition=partition.name,
-        rows_written=written,
-        rows_dropped=result.invalid_count,
-        null_columns=result.null_columns,
+        rows_written=landed.rows_written,
+        rows_dropped=landed.rows_dropped,
+        null_columns=landed.null_columns,
         from_time=str(time_from) if time_from else None,
         to_time=str(time_to) if time_to else None,
     )

@@ -92,6 +92,20 @@ def generate_sql_init(catalog, conds: list[str], pruned: dict | None = None) -> 
     return header + _views(catalog, conds, pruned, view)
 
 
+#: code points Spark percent-escapes in hive dir names (control
+#: characters, ``"#'*/:=?[\]^{`` and DEL), ``%`` itself last so that a
+#: decoded ``%`` never starts another escape
+_HIVE_ESCAPED = [*range(1, 32), *map(ord, '"#\'*/:=?[\\]^{'), 127, ord("%")]
+
+
+def _hive_unescaped(col: str) -> str:
+    """DuckDB expression: the hive value ``col`` as Spark reads it."""
+    expr = f"NULLIF({col}, '__HIVE_DEFAULT_PARTITION__')"
+    for c in _HIVE_ESCAPED:
+        expr = f"replace({expr}, '%{c:02X}', chr({c}))"
+    return expr
+
+
 def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) -> str:
     """DuckDB twin — direct parity with the reference, whose connect
     verb emits exactly this kind of init file for ``duckdb --init``
@@ -105,18 +119,27 @@ def generate_duckdb_init(catalog, conds: list[str], pruned: dict | None = None) 
     froze the file set at connect time). The script sets ``TimeZone``
     to UTC: DuckDB reads the stored timestamps as ``TIMESTAMPTZ`` and
     compares the baked ``TIMESTAMP`` bounds in its session zone.
-    ``hive_types`` keeps ``tp_index=123456789012`` a string, not a BIGINT;
-    ``tp_year``/``tp_month`` stay autocast, since DuckDB 1.0 cannot cast
-    a ``__HIVE_DEFAULT_PARTITION__`` dir to a pinned INTEGER."""
+
+    DuckDB 1.0 reads hive dir names as written, so one projection over
+    ``read_parquet`` reads them as Spark does: ``hive_types`` keeps
+    ``tp_index=123456789012`` a string, not a BIGINT, the percent-escapes
+    in ``tp_partition``/``tp_index`` are decoded, and ``TRY_CAST`` reads a
+    ``__HIVE_DEFAULT_PARTITION__`` ``tp_year``/``tp_month`` (NULL-timestamp
+    rows) as NULL, where autocast would make the column VARCHAR and
+    pinning it INTEGER would fail the scan."""
 
     def view(t, where):
         src = os.path.join(catalog.table_dir(t), "**", "*.parquet")
         return (
             f'CREATE OR REPLACE VIEW "{t}" AS\n'
             f"SELECT * EXCLUDE (tp_year, tp_month)\n"
+            "FROM (SELECT * REPLACE (TRY_CAST(tp_year AS INTEGER) AS tp_year, "
+            "TRY_CAST(tp_month AS INTEGER) AS tp_month, "
+            f"{_hive_unescaped('tp_partition')} AS tp_partition, "
+            f"{_hive_unescaped('tp_index')} AS tp_index)\n"
             f"FROM read_parquet('{src}', hive_partitioning=true, "
             "hive_types={'tp_partition': VARCHAR, 'tp_index': VARCHAR}, "
-            f"union_by_name=true){where};\n"
+            f"union_by_name=true)){where};\n"
         )
 
     header = (

@@ -6,10 +6,11 @@ equivalent offers both:
 
 - ``collect(...)`` (batch, tailpipe_spark.collect) with watermark state
   — the drop-in semantics match
-- ``stream_collect`` here: ``readStream`` over a landing directory →
-  the same mapping/enrichment plan → partitioned parquet sink with a
-  checkpoint. Exactly-once per file, resumable from the checkpoint —
-  the collection-state JSON generalized to Spark's own offset log.
+- ``stream_collect`` here: ``readStream`` over a landing directory, with
+  Spark's offset log as the checkpoint, and each micro-batch handed to
+  ``collect`` through ``foreachBatch``. So a streamed row is mapped,
+  validated, written, snapshotted and indexed exactly as a batch row is,
+  under the same writer lock, and the table reads like a batch one.
 
 Windowed aggregations use event-time watermarks so late data is bounded
 and state is evicted — the 100 TB-stream answer to the reference's
@@ -22,9 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tailpipe_spark.catalog import PARTITION_COLS, Catalog
+from tailpipe_spark.catalog import Catalog
+from tailpipe_spark.collect import collect, load_state, save_state
 from tailpipe_spark.config import PartitionConfig, TableConfig
-from tailpipe_spark.enrich import enrich_tp, with_partition_columns
 
 
 def stream_collect(
@@ -45,53 +46,30 @@ def stream_collect(
     incremental-batch collection mode of the reference; without it the
     stream runs continuously, picking up new chunk files as plugins
     drop them.
-    """
-    from tailpipe_spark.collect import apply_table_mapping
 
+    Exactly-once per chunk file: the checkpoint skips files already
+    read, and a micro-batch Spark replays (its commit was lost after
+    the rows landed) is skipped by its id, recorded in the partition's
+    collection state after the landing — the order
+    ``collect_incremental`` keeps for ``ingested_files``.
+    """
     reader = spark.readStream.schema(source_schema)
     src = reader.json(source_dir) if fmt == "json" else reader.csv(source_dir)
-
-    df = (
-        apply_table_mapping(src, table)
-        if table.columns or table.map_fields != ["*"]
-        else src
-    )
-    if timestamp_source != "tp_timestamp":
-        df = df.withColumn("tp_timestamp", F.col(timestamp_source))
-    if partition.filter:
-        df = df.filter(F.expr(partition.filter))
-    df = enrich_tp(df, table=table.name, partition=partition.name,
-                   index_expr=partition.tp_index)
-    # streaming append drops rows with null required timestamp (cannot
-    # partition on null tp_year); the batch path reports+drops the same
-    df = df.filter(F.col("tp_timestamp").isNotNull())
-    df = with_partition_columns(df)
-
-    # register the table in the manifest BEFORE the stream starts so
-    # list_tables/register_views/schema checks see streaming tables too
-    # (they previously bypassed the catalog; the checkpoint remains the
-    # source of truth for stream progress)
-    from tailpipe_spark.schema import to_type_string
-
-    out_schema = {
-        f.name: to_type_string(f.dataType)
-        for f in df.schema.fields
-        # layout columns stay out of the manifest, matching the batch
-        # path (ensure_table sees the pre-partition-column schema there)
-        if f.name not in ("tp_year", "tp_month")
-    }
-    catalog.ensure_table(table.name, out_schema)
-    catalog.record_snapshot(
-        "stream_start", {"table": table.name, "partition": partition.name}
-    )
-
     checkpoint = f"{catalog.metadata_dir}/checkpoints/{table.name}.{partition.name}"
+
+    def land_batch(batch: DataFrame, batch_id: int) -> None:
+        done = load_state(catalog, table.name, partition.name).get("stream_batches", {})
+        if done.get(checkpoint, -1) >= batch_id:
+            return
+        collect(spark, catalog, table, partition, source_df=batch,
+                timestamp_source=timestamp_source)
+        state = load_state(catalog, table.name, partition.name)
+        state.setdefault("stream_batches", {})[checkpoint] = batch_id
+        save_state(catalog, table.name, partition.name, state)
+
     w = (
-        df.writeStream.format("parquet")
-        .option("path", catalog.table_dir(table.name))
+        src.writeStream.foreachBatch(land_batch)
         .option("checkpointLocation", checkpoint)
-        .partitionBy(*PARTITION_COLS)
-        .outputMode("append")
     )
     if trigger_available_now:
         w = w.trigger(availableNow=True)

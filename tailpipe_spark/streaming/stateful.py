@@ -1,92 +1,17 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-The reference's collector dedupes work at the file/chunk level; a
-streaming log pipeline needs the row-level twin: "have I seen this key
-recently?" across micro-batches. Spark's built-in ``dropDuplicates``
-keeps state forever (or per watermark column); this operator keeps an
-explicit last-seen timestamp per key with a TTL, which is the
-bounded-state shape that survives unbounded streams:
-
-- state per group key: last-seen event time
-- a row passes iff its key is unseen or last seen more than ``ttl``
-  ago; passing rows refresh the state
-- state for keys idle past the TTL is dropped via timeout, so state
-  size tracks the active-key working set, not stream history.
-
-Arrow-batched pandas state function — the only Python in the streaming
-hot path, as the brief's custom-stateful-operator escape hatch.
+Some alerts depend on a key's whole history, so no window or aggregate
+expresses them statelessly, yet the per-key state is one value. The
+operator here keeps that value in Spark's ``GroupState`` across
+micro-batches; its pandas state function is the only Python in the
+streaming hot path.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def dedup_stream_with_ttl(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str = "tp_timestamp",
-    ttl_seconds: int = 3600,
-) -> DataFrame:
-    """Keep the first row per ``key_col`` within any ``ttl_seconds``
-    window; suppress repeats until the key has been quiet for the TTL.
-
-    Returns a streaming DataFrame with the input columns. State is one
-    timestamp per active key, evicted on processing-time timeout."""
-    in_schema = events.schema
-    out_schema = in_schema
-    state_schema = T.StructType(
-        [T.StructField("last_seen_us", T.LongType())]
-    )
-    ttl_us = ttl_seconds * 1_000_000
-    names = [f.name for f in in_schema.fields]
-    if ts_col not in names:
-        raise ValueError(f"{ts_col!r} not in stream schema {names}")
-
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col, kind="stable").reset_index(drop=True)
-            # positional slice keeps dtypes intact — rebuilding rows from
-            # iterrows Series upcasts mixed numeric columns to float64
-            # and silently corrupts int64 ids beyond 2^53
-            ts_us_col = [
-                int(pd.Timestamp(v).value // 1000) for v in pdf[ts_col]
-            ]
-            keep_idx = []
-            for i, ts_us in enumerate(ts_us_col):
-                if last is None or ts_us - last > ttl_us:
-                    keep_idx.append(i)
-                    last = ts_us
-                elif ts_us > last:
-                    # seen within TTL: suppress but refresh recency so a
-                    # steady drizzle of dupes stays suppressed
-                    last = ts_us
-            if keep_idx:
-                out.append(pdf.iloc[keep_idx])
-        if last is not None:
-            state.update((last,))
-            state.setTimeoutDuration(ttl_seconds * 1000)
-        if out:
-            yield pd.concat(out)[names]
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 # --- budget-crossing alerts (arbitrary-state, history-dependent) ------

@@ -3,15 +3,17 @@ in required columns — reference semantics from
 internal/database/convertor_validate.go:11-110 (rows are *deleted* and
 counted, never silently kept).
 
-The report is a single aggregation pass (one map-side-combinable agg,
-no per-column scans); the drop is one filter. Both scale linearly.
+Validation launches no Spark job of its own. ``validate_required``
+builds the keep-filter and the aggregates to observe; the landing write
+observes them on the unfiltered frame (``df.observe(...).filter(keep)``),
+so the report comes out of the one pass that writes the rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -28,53 +30,43 @@ def null_count_report(df: DataFrame, required: list[str]) -> DataFrame:
     )
 
 
-def _any_null(cols: list[str]):
-    cond = None
-    for c in cols:
-        p = F.col(c).isNull()
-        cond = p if cond is None else (cond | p)
-    return cond
-
-
 @dataclass
-class ValidationResult:
-    valid: DataFrame
-    invalid_count: int
-    null_columns: list[str]
+class Validation:
+    """``keep`` filters out rows with a NULL required column (None when
+    nothing is required); ``observed`` are the aggregates to observe on
+    the unfiltered frame: per-column null counts, the row and kept-row
+    counts (``n``) and min/max ``tp_timestamp`` over kept rows (``mn``,
+    ``mx``)."""
+
+    required: list[str]
+    keep: Column | None
+    observed: list[Column]
+
+    def null_columns(self, metrics: dict) -> list[str]:
+        return sorted({c for i, c in enumerate(self.required) if metrics[f"null_{i}"]})
+
+    def dropped(self, metrics: dict) -> int:
+        return metrics["rows"] - metrics["n"]
 
 
-def validate_required(df: DataFrame, required: list[str]) -> ValidationResult:
-    """Split off rows with any NULL required column.
-
-    Returns the clean DataFrame plus the count of dropped rows and the
-    list of columns that had nulls (for the status report, mirroring the
-    reference's RowValidationError).
-    """
-    present = [c for c in required if c in df.columns]
+def validate_required(df: DataFrame, required: list[str]) -> Validation:
+    """The filter and observed report for ``required`` over ``df``,
+    mirroring the reference's RowValidationError (the dropped-row count
+    and the columns that had nulls)."""
     missing = [c for c in required if c not in df.columns]
     if missing:
         raise ValueError(f"required columns missing from schema: {missing}")
 
-    # one aggregation pass yields BOTH the per-column null counts and
-    # the any-null row count — a separate count() would re-scan the
-    # whole source on the ingest hot path
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).cast("long").alias(c)
-        for c in present
-    ]
-    invalid_agg = (
-        F.sum(F.when(_any_null(present), 1).otherwise(0)).cast("long")
-        if present
-        else F.lit(0).cast("long")
-    )
-    row = df.agg(*aggs, invalid_agg.alias("__invalid")).collect()[0] if present else None
-    report = {c: row[c] for c in present} if row is not None else {}
-    null_cols = sorted(c for c, n in report.items() if n and n > 0)
-    invalid = int(row["__invalid"] or 0) if row is not None else 0
-
-    cond = None
-    for c in present:
+    keep = None
+    for c in required:
         p = F.col(c).isNotNull()
-        cond = p if cond is None else (cond & p)
-    valid = df.filter(cond) if cond is not None else df
-    return ValidationResult(valid=valid, invalid_count=invalid, null_columns=null_cols)
+        keep = p if keep is None else (keep & p)
+    ts = F.col("tp_timestamp") if keep is None else F.when(keep, F.col("tp_timestamp"))
+    observed = [
+        *(F.count_if(F.col(c).isNull()).alias(f"null_{i}") for i, c in enumerate(required)),
+        F.count(F.lit(1)).alias("rows"),
+        (F.count(F.lit(1)) if keep is None else F.count_if(keep)).alias("n"),
+        F.min(ts).alias("mn"),
+        F.max(ts).alias("mx"),
+    ]
+    return Validation(list(required), keep, observed)

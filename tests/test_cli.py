@@ -1,4 +1,5 @@
 import json
+import os
 
 import pytest
 
@@ -260,9 +261,7 @@ def test_query_filters_match_across_cli_and_connect_dialects(
         ).fetchall()]
     finally:
         con.close()
-    # DuckDB 1.0 reads hive dir names undecoded (tp_index 'o%27b%5C1'),
-    # so only the a_* row can match there
-    assert via_duckdb == [1]
+    assert via_duckdb == expected
 
 
 def test_cli_connect_json_envelope(populated_workspace, capsys, tmp_path):
@@ -449,9 +448,8 @@ def test_connect_duckdb_dialect_executes(populated_workspace, tmp_path, capsys):
     assert "tp_year" not in cols and "tp_month" not in cols
 
 
-def _numeric_index_table(spark, workspace, tmp_path, idx):
-    """Collect one row into table ``num_idx`` with the all-digit
-    tp_index ``idx``."""
+def _indexed_table(spark, workspace, tmp_path, idx):
+    """Collect one row into table ``indexed`` with the tp_index ``idx``."""
     from tailpipe_spark.collect import collect
     from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
     from tailpipe_spark.sources.formats import read_jsonl
@@ -461,7 +459,7 @@ def _numeric_index_table(spark, workspace, tmp_path, idx):
         {"id": 1, "idx": idx, "time": "2024-03-01T12:00:00"}
     ))
     table = TableConfig(
-        name="num_idx",
+        name="indexed",
         columns=[
             ColumnConfig(name="id", type="bigint"),
             ColumnConfig(name="idx", type="varchar"),
@@ -470,7 +468,7 @@ def _numeric_index_table(spark, workspace, tmp_path, idx):
         map_fields=[],
     )
     collect(spark, workspace, table,
-            PartitionConfig("num_idx", "default", tp_index="idx"),
+            PartitionConfig("indexed", "default", tp_index="idx"),
             source_df=read_jsonl(spark, [str(p)]))
 
 
@@ -480,7 +478,7 @@ def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp
     so a numeric-looking index still matches its --index pattern."""
     from tailpipe_spark.connect import write_init_script
 
-    _numeric_index_table(spark, workspace, tmp_path, "012345678901")
+    _indexed_table(spark, workspace, tmp_path, "012345678901")
     src = open(write_init_script(
         workspace, str(tmp_path / "init"), dialect="sql", index_patterns=["0123*"],
     )).read()
@@ -489,14 +487,14 @@ def test_connect_sql_view_types_hive_columns_from_manifest(spark, workspace, tmp
     spark.conf.set(conf, "true")
     try:
         _run_sql_script(spark, src)
-        view = spark.table("num_idx")
+        view = spark.table("indexed")
         assert dict(view.dtypes)["tp_index"] == "string"
         assert [(r["id"], r["tp_index"]) for r in view.collect()] == [
             (1, "012345678901")
         ]
     finally:
         spark.conf.set(conf, before)
-        spark.catalog.dropTempView("num_idx")
+        spark.catalog.dropTempView("indexed")
 
 
 def test_connect_duckdb_view_types_hive_columns(spark, workspace, tmp_path, capsys):
@@ -507,10 +505,10 @@ def test_connect_duckdb_view_types_hive_columns(spark, workspace, tmp_path, caps
 
     from tailpipe_spark.connect import write_init_script
 
-    _numeric_index_table(spark, workspace, tmp_path, "123456789012")
+    _indexed_table(spark, workspace, tmp_path, "123456789012")
     assert main([
         "--workspace", workspace.workspace,
-        "query", "select count(*) as n from num_idx", "--index", "1234*",
+        "query", "select count(*) as n from indexed", "--index", "1234*",
     ]) == 0
     via_cli = int(capsys.readouterr().out.strip().splitlines()[-1])
     path = write_init_script(
@@ -520,11 +518,82 @@ def test_connect_duckdb_view_types_hive_columns(spark, workspace, tmp_path, caps
     try:
         con.execute(open(path).read())
         rows = con.execute(
-            "SELECT typeof(tp_index), tp_index, count(*) FROM num_idx GROUP BY ALL"
+            "SELECT typeof(tp_index), tp_index, count(*) FROM indexed GROUP BY ALL"
         ).fetchall()
     finally:
         con.close()
     assert rows == [("VARCHAR", "123456789012", via_cli)]
+    assert via_cli == 1
+
+
+def _duckdb_count(workspace, tmp_path, sql, **filters):
+    """``sql``'s single value over the DuckDB connect views."""
+    import duckdb
+
+    from tailpipe_spark.connect import write_init_script
+
+    path = write_init_script(workspace, str(tmp_path / "init"), dialect="duckdb", **filters)
+    con = duckdb.connect()
+    try:
+        con.execute(open(path).read())
+        return con.execute(sql).fetchone()[0]
+    finally:
+        con.close()
+
+
+def _cli_count(workspace, capsys, table, *flags):
+    assert main([
+        "--workspace", workspace.workspace,
+        "query", f"select count(*) as n from {table}", *flags,
+    ]) == 0
+    return int(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_connect_duckdb_view_reads_default_partition_dirs(spark, workspace, tmp_path, capsys):
+    """A NULL-timestamp row lands in a ``__HIVE_DEFAULT_PARTITION__``
+    tp_year/tp_month dir; the time-bounded DuckDB views still bind and
+    count the rows the CLI counts."""
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    p = tmp_path / "c.jsonl"
+    p.write_text("\n".join(json.dumps({"id": i, "time": t}) for i, t in enumerate(
+        ["2024-05-01T00:00:00", "2024-05-02T00:00:00", None]
+    )))
+    table = TableConfig(
+        name="gappy",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, workspace, table, PartitionConfig("gappy", "default"),
+            source_df=read_jsonl(spark, [str(p)]), required=())
+    # --from keeps the NULL-timestamp row, --to drops it
+    for to, want in ((None, 3), ("2024-06-01", 2)):
+        flags = ["--from", "2024-04-01"] + (["--to", to] if to else [])
+        via_cli = _cli_count(workspace, capsys, "gappy", *flags)
+        via_duckdb = _duckdb_count(
+            workspace, tmp_path, "SELECT count(*) FROM gappy",
+            time_from="2024-04-01", time_to=to,
+        )
+        assert via_duckdb == via_cli == want
+
+
+def test_connect_duckdb_view_decodes_escaped_hive_values(spark, workspace, tmp_path, capsys):
+    """Spark percent-escapes ``'`` and ``\\`` in the tp_index dir name
+    (``o%27b%5C1``); the DuckDB views read the value back decoded, so an
+    --index pattern keeps the rows the CLI keeps."""
+    _indexed_table(spark, workspace, tmp_path, "o'b\\1")
+    tdir = workspace.table_dir("indexed")
+    assert os.listdir(os.path.join(tdir, "tp_partition=default")) == ["tp_index=o%27b%5C1"]
+    via_cli = _cli_count(workspace, capsys, "indexed", "--index", "o'b*")
+    got = _duckdb_count(
+        workspace, tmp_path, "SELECT list(tp_index) FROM indexed", index_patterns=["o'b*"]
+    )
+    assert got == ["o'b\\1"]
     assert via_cli == 1
 
 

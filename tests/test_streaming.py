@@ -32,11 +32,7 @@ def test_stream_collect_available_now(spark, workspace, tmp_path):
         str(land), schema,
     )
     q.awaitTermination(120)
-    # catalog needs a manifest entry for read_table; streaming writes
-    # files directly — register from the dir
-    df = spark.read.option("basePath", workspace.table_dir("st")).parquet(
-        workspace.table_dir("st")
-    )
+    df = workspace.read_table(spark, "st")
     assert df.count() == 4
     assert "tp_date" in df.columns
 
@@ -47,10 +43,8 @@ def test_stream_collect_available_now(spark, workspace, tmp_path):
         str(land), schema,
     )
     q2.awaitTermination(120)
-    df = spark.read.option("basePath", workspace.table_dir("st")).parquet(
-        workspace.table_dir("st")
-    )
-    assert df.count() == 5  # exactly-once: no re-ingest of chunks 0/1
+    # exactly-once: no re-ingest of chunks 0/1
+    assert workspace.read_table(spark, "st").count() == 5
 
 
 def test_windowed_counts_batch(spark):
@@ -100,52 +94,139 @@ def test_stream_collect_registers_in_manifest(spark, workspace, tmp_path):
     # streaming tables appear in the catalog like batch ones
     assert "stream_t" in workspace.list_tables()
     assert "tp_timestamp" in workspace.table_schema("stream_t")
+    assert workspace.read_table(spark, "stream_t").count() == 4
     # and register_views serves them to SQL
     workspace.register_views(spark)
     assert spark.sql("select count(*) n from stream_t").collect()[0]["n"] == 4
 
 
-def test_dedup_stream_with_ttl(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): first event
-    per key passes, repeats within the TTL are suppressed, a key quiet
-    past the TTL passes again."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from tailpipe_spark.streaming.stateful import dedup_stream_with_ttl
-
-    land = tmp_path / "land"
-    land.mkdir()
-    rows = [
-        {"k": "a", "tp_timestamp": "2024-05-01T00:00:00"},
-        {"k": "a", "tp_timestamp": "2024-05-01T00:10:00"},  # dup within 1h
-        {"k": "b", "tp_timestamp": "2024-05-01T00:05:00"},
-        {"k": "a", "tp_timestamp": "2024-05-01T02:00:00"},  # quiet >1h: passes
-    ]
-    (land / "c0.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()),
-         T.StructField("tp_timestamp", T.TimestampType())]
+def _stream_table():
+    return TableConfig(
+        name="events",
+        columns=[
+            ColumnConfig(name="id", type="bigint"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
     )
-    src = spark.readStream.schema(schema).json(str(land))
-    out = dedup_stream_with_ttl(src, "k", ttl_seconds=3600)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_ttl_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+_EVENTS_SCHEMA = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("time", T.StringType())]
+)
+
+
+def _land_stream(spark, workspace, land):
+    q = stream_collect(
+        spark, workspace, _stream_table(), PartitionConfig("events", "default"),
+        str(land), _EVENTS_SCHEMA,
     )
     q.awaitTermination(120)
-    got = sorted(
-        (r["k"], str(r["tp_timestamp"])) for r in spark.table("dedup_ttl_out").collect()
+    assert q.exception() is None
+
+
+def _counts(spark, workspace):
+    """(unbounded, time-bounded) row counts through Catalog.read_table."""
+    bounded = workspace.read_table(
+        spark, "events", time_from=datetime(2024, 1, 1), time_to=datetime(2025, 1, 1)
     )
-    assert got == [
-        ("a", "2024-05-01 00:00:00"),
-        ("a", "2024-05-01 02:00:00"),
-        ("b", "2024-05-01 00:05:00"),
-    ]
+    return workspace.read_table(spark, "events").count(), bounded.count()
+
+
+def test_streamed_and_batch_landings_share_one_table(spark, workspace, tmp_path):
+    """A stream landing followed by a batch collect into the same table:
+    every read sees all rows, before and after compaction, the stream
+    landing leaves a fresh file index, and no file-sink log is left to
+    hide the batch files from a directory read."""
+    import os
+
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.compact import compact_table
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    (land / "c0.jsonl").write_text("\n".join(
+        json.dumps({"id": i, "time": f"2024-05-0{i + 1}T00:00:00"}) for i in range(3)
+    ))
+    _land_stream(spark, workspace, land)
+    assert workspace.pruned_files("events") is not None
+
+    batch = tmp_path / "batch.jsonl"
+    batch.write_text("\n".join(
+        json.dumps({"id": 10 + i, "time": f"2024-05-1{i}T00:00:00"}) for i in range(2)
+    ))
+    res = collect(spark, workspace, _stream_table(), PartitionConfig("events", "default"),
+                  source_df=read_jsonl(spark, [str(batch)]))
+    assert res.rows_written == 2
+    assert _counts(spark, workspace) == (5, 5)
+
+    assert compact_table(spark, workspace, "events")["keys_rewritten"] >= 1
+    assert _counts(spark, workspace) == (5, 5)
+    assert workspace.pruned_files("events") is not None
+    tdir = workspace.table_dir("events")
+    assert not [d for _root, dirs, _names in os.walk(tdir) for d in dirs
+                if d == "_spark_metadata"]
+
+
+def test_stream_replayed_batch_lands_once(spark, workspace, tmp_path):
+    """A micro-batch Spark replays because its commit was lost (the
+    rows had landed) is skipped by its recorded batch id."""
+    import os
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    (land / "c0.jsonl").write_text("\n".join(
+        json.dumps({"id": i, "time": "2024-05-01T00:00:00"}) for i in range(3)
+    ))
+    _land_stream(spark, workspace, land)
+    assert _counts(spark, workspace) == (3, 3)
+
+    commits = os.path.join(workspace.metadata_dir, "checkpoints", "events.default", "commits")
+    os.remove(os.path.join(commits, "0"))
+    if os.path.exists(os.path.join(commits, ".0.crc")):
+        os.remove(os.path.join(commits, ".0.crc"))
+    _land_stream(spark, workspace, land)
+    assert _counts(spark, workspace) == (3, 3)
+
+
+def test_landing_clears_a_file_sink_log(spark, workspace, tmp_path):
+    """A table dir that an older streaming file sink wrote holds its
+    ``_spark_metadata`` log, through which Spark reads the dir. The next
+    landing deletes the log, so its own files are read too, and the
+    sink's files stay."""
+    import os
+
+    from tailpipe_spark.catalog import PARTITION_COLS
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    def rows(path, ids):
+        path.write_text("\n".join(
+            json.dumps({"id": i, "time": "2024-05-01T00:00:00"}) for i in ids
+        ))
+        return read_jsonl(spark, [str(path)])
+
+    part = PartitionConfig("events", "default")
+    # the old sink's files: landed once, then streamed back into the
+    # table dir through a parquet file sink
+    collect(spark, workspace, _stream_table(), part, source_df=rows(tmp_path / "a.jsonl", [1, 2]))
+    tdir = workspace.table_dir("events")
+    old = str(tmp_path / "old")
+    os.rename(tdir, old)
+    schema = workspace.spark_schema("events")
+    q = (
+        spark.readStream.schema(schema).parquet(old)
+        .writeStream.format("parquet").option("path", tdir)
+        .option("checkpointLocation", str(tmp_path / "sink_ckpt"))
+        .partitionBy(*PARTITION_COLS).trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    assert os.path.isdir(os.path.join(tdir, "_spark_metadata"))
+
+    collect(spark, workspace, _stream_table(), part, source_df=rows(tmp_path / "b.jsonl", [3]))
+    assert not os.path.exists(os.path.join(tdir, "_spark_metadata"))
+    assert _counts(spark, workspace) == (3, 3)
 
 
 def test_rollup_maintenance_and_continuous_read(spark, tmp_path):
