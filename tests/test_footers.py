@@ -54,6 +54,18 @@ def test_row_count_follows_replaced_files(spark, tmp_path):
     assert parquet_column_range(d, "id") == (0, 24)
 
 
+def test_cached_read_follows_a_table_rewritten_in_place(spark, tmp_path):
+    """The DataFrame cache is keyed on the table's files, so a directory
+    overwritten with new files is read again rather than served the old
+    file list (which would fail on the deleted files)."""
+    d = str(tmp_path / "t")
+    spark.range(5).write.parquet(d)
+    assert read_table(spark, d).count() == 5
+    spark.range(7).write.mode("overwrite").parquet(d)
+    assert read_table(spark, d).count() == 7
+    assert read_table(spark, d) is read_table(spark, d)
+
+
 def test_unreadable_paths_give_no_footers(tmp_path):
     assert footers(str(tmp_path / "missing")) is None
     assert parquet_row_count(str(tmp_path)) is None  # no parquet files

@@ -271,3 +271,66 @@ def test_grok_syslog_base(spark):
     assert got["program"] == "sshd"
     assert got["pid"] == "4123"
     assert got["message"] == "Failed password for root"
+
+
+def test_grok_one_pass_matches_per_field_extract(spark, tmp_path):
+    """The one-regex-pass extraction gives, line for line, what one
+    regexp_extract per field gives, on lines that stress it: the
+    rawrequest branch with bytes '-', junk around a match, NUL inside a
+    field, no match, U+2028 and U+0085, an IPv6 client and an empty
+    line."""
+    import pyspark.sql.functions as F
+
+    from tailpipe_spark.sources.grok import GROK_TYPE_CASTS
+
+    ok = (
+        '203.0.113.9 - frank [10/Oct/2024:13:55:36 -0700] '
+        '"GET /a.gif HTTP/1.0" 200 2326 "http://example.com/" "Mozilla/5.0"'
+    )
+    lines = [
+        ok,
+        '198.51.100.7 - - [10/Oct/2024:13:55:36 +0000] "\\x16\\x03" 400 - "-" "-"',
+        "junk\u2028>> " + ok + " << trailing junk",
+        ok.replace("/a.gif", "/a\x00b.gif"),
+        "not an access log line",
+        ok.replace("Mozilla/5.0", "Mozilla /5.0\u0085"),
+        " " + ok,
+        ok.replace("203.0.113.9", "2001:db8::1"),
+        "",
+    ]
+    p = tmp_path / "access.log"
+    p.write_bytes("\n".join(lines).encode("utf-8"))
+    fmt = FormatConfig(name="a", type="grok", pattern="%{COMBINEDAPACHELOG}")
+    g = compile_grok(fmt.pattern)
+
+    text = spark.read.text(str(p))
+    matched = F.col("value").rlike(g.regex)
+    want_cols = []
+    for name, (gi, typ) in g.fields.items():
+        c = F.when(matched, F.regexp_extract(F.col("value"), g.regex, gi))
+        want_cols.append((c.cast(GROK_TYPE_CASTS[typ]) if typ in GROK_TYPE_CASTS else c).alias(name))
+    want = text.select(*want_cols, matched.alias("_parsed"))
+
+    for keep in (False, True):
+        got = read_grok(spark, [str(p)], fmt, keep_unparsed=keep)
+        expected = want if keep else want.filter("_parsed").drop("_parsed")
+        assert got.columns == expected.columns
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, expected.collect()), key=repr
+        )
+    got = read_grok(spark, [str(p)], fmt).collect()
+    assert len(got) == 7
+    assert {r["clientip"] for r in got} >= {"2001:db8::1", "198.51.100.7"}
+    assert any(r["rawrequest"] == "\\x16\\x03" and r["bytes"] == "" for r in got)
+    assert any("\x00" in r["request"] for r in got)
+
+
+def test_regex_with_trailing_comment_flag_comment(spark, tmp_path):
+    """A COMMENTS-mode pattern whose comment runs to the end still reads
+    every named group: the one-pass rewrite cannot wrap it and the
+    reader falls back to one regexp_extract per field."""
+    p = tmp_path / "words.log"
+    p.write_text("hello world\nfoo bar\n-\n")
+    fmt = FormatConfig(name="w", type="regex", pattern=r"(?x) (?<a>\w+) \s (?<b>\w+) # two words")
+    rows = read_regex(spark, [str(p)], fmt).collect()
+    assert sorted((r["a"], r["b"]) for r in rows) == [("foo", "bar"), ("hello", "world")]
