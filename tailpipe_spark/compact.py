@@ -12,18 +12,18 @@ Spark shape:
   too-many-small files, so compaction is idempotent; each rewritten
   key ends time-sorted (or z-ordered), so Parquet min/max row-group
   skipping prunes time ranges inside a month partition (A23/A24)
-- keys that fit in one output file are rewritten together, in one job
-  with no exchange: each batch of keys (at most ``max_chunk_rows`` rows,
-  and bytes sized like Spark's scan splits) is one scan coalesced to
-  one task, so a key's rows meet without a shuffle; the batches are
-  unioned, sorted by key and time within each task, and written by one
-  partitioned write (the reference merges small files as a file
-  operation, compact.go:80-88). Spark's fixed cost per job and per
-  stage dominates a small key's rewrite, so the whole set costs about
-  what one key used to.
-- bigger keys keep the windowed rewrite: ``max_chunk_rows`` rows / >=1h
-  time windows per job (the reference's 5M-row insert guardrail), each
-  ``repartitionByRange(tp_timestamp) + sortWithinPartitions``
+- every rewritten key is written by one job with no exchange. Keys
+  that fit in one output file go in batches (at most ``max_chunk_rows``
+  rows, and bytes sized like Spark's scan splits); a bigger key is cut
+  into time windows of at most ``max_chunk_rows`` rows and
+  ``TARGET_FILE_BYTES`` bytes, >=1h long (the reference's 5M-row insert
+  guardrail). Each batch and each window is one scan coalesced to one
+  task, so a key's rows meet without a shuffle; the scans are unioned,
+  sorted by key and time within each task, and written by one
+  partitioned write, one file per key per batch or window (the
+  reference merges small files as a file operation, compact.go:80-88).
+  Spark's fixed cost per job and per stage dominates a small key's
+  rewrite, so the whole set costs about what one key used to.
 - every rewrite reads with Catalog.spark_schema: no schema-inference
   job, and each hive value comes back verbatim from its path
 - every rewrite stages outside the table; key dirs are swapped in, and
@@ -47,7 +47,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from tailpipe_spark.catalog import PARTITION_COLS, Catalog, FooterInfo
+from tailpipe_spark.catalog import PARTITION_COLS, Catalog
 from tailpipe_spark.query_cli import sql_ts
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -150,7 +150,6 @@ def find_overlaps(stats: list[FileStat]) -> list[list[FileStat]]:
 
 
 MAX_CHUNK_ROWS = 5_000_000  # reference: internal/database/compact.go:16-19
-MIN_CHUNK_WINDOW_HOURS = 1
 
 
 def _ceil_hour(ts):
@@ -160,29 +159,37 @@ def _ceil_hour(ts):
     return floored + timedelta(hours=1) if ts != floored else ts
 
 
-def chunk_windows(stats: list[FileStat], max_rows: int) -> list[tuple]:
-    """Split a partition's rewrite into bounded time windows so a hot
-    partition never demands one giant job (reference chunks inserts at
-    5M rows / >=1h windows — internal/database/compact.go:416-435).
-    Returns [(lo, hi)] half-open windows; None = unbounded end."""
+def chunk_windows(
+    stats: list[FileStat], max_rows: int, max_bytes: int = TARGET_FILE_BYTES
+) -> list[tuple]:
+    """Split a partition's rewrite into bounded time windows, each one
+    output file, so a hot partition never becomes one giant file or task
+    (reference chunks inserts at 5M rows / >=1h windows —
+    internal/database/compact.go:416-435). A window closes once its
+    files, in time order, reach ``max_rows`` rows or ``max_bytes``
+    bytes, at the next whole hour; windows are cut from file stats, so
+    files that all span one time range stay one window. Returns
+    [(lo, hi)] half-open windows; None = unbounded end."""
     total = sum(s.rows for s in stats)
+    total_bytes = sum(s.bytes for s in stats)
     ranged = sorted(
         (s for s in stats if s.min_ts is not None and s.max_ts is not None),
         key=lambda s: (s.min_ts, s.max_ts),
     )
-    if total <= max_rows or not ranged:
+    if (total <= max_rows and total_bytes <= max_bytes) or not ranged:
         return [(None, None)]
     windows: list[tuple] = []
-    lo, acc, bound = None, 0, None
+    lo, acc, acc_bytes, bound = None, 0, 0, None
     for s in ranged:
         acc += s.rows
+        acc_bytes += s.bytes
         bound = s.max_ts if bound is None else max(bound, s.max_ts)
-        if acc >= max_rows:
+        if acc >= max_rows or acc_bytes >= max_bytes:
             hi = _ceil_hour(bound)
             if lo is not None and hi <= lo:
                 continue  # keep windows >= 1h: fold into the next chunk
             windows.append((lo, hi))
-            lo, acc, bound = hi, 0, None
+            lo, acc, acc_bytes, bound = hi, 0, 0, None
     windows.append((lo, None))
     return windows
 
@@ -326,13 +333,14 @@ def compact_table(
     stats prune on every listed column (plans/zorder.py).
 
     Rewrites stage into ``catalog.staging_dir`` (never inside the table
-    tree — a crash must not leave tmp dirs a reader would scan). Keys
-    that fit in one output file are rewritten together by one Spark
-    write, one task per batch of at most ``max_chunk_rows`` rows; a bigger
-    key is rewritten alone in ``max_chunk_rows`` rows / >=1h time
-    windows, one job per window. The staged keys replace the old ones
-    after the last write, so staging holds a copy of every rewritten
-    key at that point.
+    tree — a crash must not leave tmp dirs a reader would scan). Every
+    key is rewritten by one Spark write: keys that fit in one output file
+    go one task per batch of at most ``max_chunk_rows`` rows, and a
+    bigger key one task per time window of at most ``max_chunk_rows``
+    rows and ``TARGET_FILE_BYTES`` bytes, >=1h long. ``chunk_jobs`` in
+    the summary is the number of write jobs: 1, or 0 when no key needed
+    compaction. The staged keys replace the old ones after the write,
+    so staging holds a copy of every rewritten key at that point.
 
     A table with a recorded bucketed layout is STICKY: its compaction
     routes through :func:`bucket_rewrite` with the manifest's spec (a
@@ -369,7 +377,7 @@ def _compact_table_locked(
 
     if reindex_expr is not None:
         df = catalog.read_table(spark, table)
-        rows_total = df.count()
+        rows_total = catalog.row_count(table)
         new = (
             df.withColumn("tp_index", F.expr(reindex_expr).cast("string"))
             .repartitionByRange("tp_partition", "tp_index", "tp_year", "tp_month", "tp_timestamp")
@@ -426,8 +434,8 @@ def delete_range(
     A delete is a compaction of the keys that hold doomed rows, with a
     row filter keeping the survivors. One aggregation job counts the
     doomed rows per key of the partition; the keys with any go through
-    compaction's batched/windowed rewrite, swap and re-index, and come
-    out time-sorted. A table with a bucketed layout is then re-bucketed
+    compaction's one-write rewrite, swap and re-index, and come out
+    time-sorted. A table with a bucketed layout is then re-bucketed
     on the manifest's spec, since the rewritten keys hold plain files.
 
     Runs under the workspace writer lock (see compact_table).
@@ -506,122 +514,138 @@ def _rewrite_keys(
     """Rewrite each ``(key, file stats, rows it keeps)`` of ``todo`` into
     staging, keeping the rows ``keep`` holds for (all when None), then
     commit them together through :func:`_swap_and_reindex`, recording
-    snapshot ``op`` with ``detail``. Returns the number of write jobs.
+    snapshot ``op`` with ``detail``. Returns the number of write jobs:
+    1, or 0 when ``todo`` is empty.
 
-    Every key that fits in one output file is rewritten by one write job
-    (:func:`_rewrite_batches`); a bigger key is rewritten alone, one job
-    per time window. A key left with no rows goes to a batch too, where
-    the partitioned write leaves no dir for it and the swap drops it."""
-    base = catalog.table_dir(table)
-    schema = catalog.spark_schema(table)
+    Every key is rewritten by one write job (:func:`_rewrite_units`).
+    Keys that fit in one output file go in batches (:func:`_batches`);
+    a bigger key is cut into its :func:`chunk_windows`, each a unit of
+    its own. A key left with no rows goes to a batch, where the
+    partitioned write leaves no dir for it and the swap drops it."""
+    if not todo:
+        _swap_and_reindex(catalog, table, {}, op, detail, zorder_by)
+        return 0
     small: list[tuple[PartitionKey, int, int]] = []  # (key, rows, bytes)
-    staged: dict[str, str | None] = {}  # key relpath -> its rewritten dir
-    staging_roots: list[str] = []
-    jobs = 0
+    units: list[tuple[list[PartitionKey], tuple]] = []  # (keys, window)
+    for key, stats, rows in todo:
+        windows = chunk_windows(stats, max_chunk_rows, TARGET_FILE_BYTES)
+        if rows == 0 or len(windows) == 1:
+            small.append((key, rows, sum(s.bytes for s in stats)))
+        else:
+            units += [([key], w) for w in windows]
+    if small:
+        batches = _batches(small, max_chunk_rows, _batch_bytes(spark, small))
+        units += [([k for k, _, _ in b], (None, None)) for b in batches]
+    root = catalog.new_staging_dir(f"{table}.{op}")
     try:
-        for key, stats, rows in todo:
-            windows = chunk_windows(stats, max_chunk_rows)
-            total_bytes = sum(s.bytes for s in stats)
-            n_out = max(1, total_bytes // len(windows) // TARGET_FILE_BYTES)
-            if rows == 0 or (len(windows) == 1 and n_out == 1):
-                small.append((key, rows, total_bytes))
-                continue
-            root = catalog.new_staging_dir(f"{table}.{op}")
-            staging_roots.append(root)
-            _rewrite_windowed(
-                spark, base, key, schema, windows, n_out, zorder_by, root, keep
-            )
-            staged[key.relpath] = root
-            jobs += len(windows)
-        if small:
-            root = catalog.new_staging_dir(f"{table}.{op}")
-            staging_roots.append(root)
-            batches = list(_batches(small, max_chunk_rows, _batch_bytes(spark, small)))
-            staged.update(_rewrite_batches(spark, base, batches, schema, zorder_by, root, keep))
-            jobs += 1
+        _rewrite_units(
+            spark, catalog.table_dir(table), units,
+            catalog.spark_schema(table), zorder_by, root, keep,
+        )
+        staged: dict[str, str | None] = {}
+        for key, _, rows in todo:
+            d = os.path.join(root, key.relpath)
+            if not os.path.isdir(d):
+                if rows:
+                    raise RuntimeError(f"rewrite wrote no {key.relpath} for its {rows} rows")
+                d = None
+            staged[key.relpath] = d
         _swap_and_reindex(catalog, table, staged, op, detail, zorder_by)
     finally:
-        for root in staging_roots:
-            shutil.rmtree(root, ignore_errors=True)
-    return jobs
+        shutil.rmtree(root, ignore_errors=True)
+    return 1
 
 
 def _batch_bytes(spark: SparkSession, small: list[tuple[PartitionKey, int, int]]) -> int:
     """The byte cap of one batch, sized the way Spark sizes scan splits
     (``FilePartition.maxSplitBytes``): the keys' bytes spread over the
     cores, but never under one file-open cost, so a tiny table is one
-    scan and one task, and never over one output file's worth."""
+    scan and one task, and never over one output file's worth. The
+    spread rounds up, so it never asks for one batch more than cores."""
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-    spread = sum(b for _, _, b in small) // spark.sparkContext.defaultParallelism
+    spread = -(-sum(b for _, _, b in small) // spark.sparkContext.defaultParallelism)
     return min(TARGET_FILE_BYTES, max(open_cost, spread))
 
 
 def _batches(small: list[tuple[PartitionKey, int, int]], max_rows: int, max_bytes: int):
     """Group single-file ``(key, rows, bytes)`` entries, in order, into
-    batches of at most ``max_rows`` rows and ``max_bytes`` bytes (a key
-    over either cap gets a batch of its own)."""
+    batches. The count is fixed first: ceil(bytes / ``max_bytes``), or
+    more when ``max_rows`` needs more. The keys are then cut at even
+    byte boundaries, each key going to the slice that holds its middle,
+    so near-equal keys spread evenly instead of leaving a straggler; a
+    batch also closes before it would pass ``max_rows`` rows."""
+    total_bytes = sum(b for _, _, b in small)
+    n = max(
+        1,
+        -(-total_bytes // max_bytes),
+        -(-sum(r for _, r, _ in small) // max_rows),
+    )
     batch: list[tuple[PartitionKey, int, int]] = []
-    rows_acc = bytes_acc = 0
+    rows_acc = done = last = 0
     for key, rows, nbytes in small:
-        if batch and (rows_acc + rows > max_rows or bytes_acc + nbytes > max_bytes):
+        cut = (done + nbytes // 2) * n // max(1, total_bytes)
+        if batch and (cut != last or rows_acc + rows > max_rows):
             yield batch
-            batch, rows_acc, bytes_acc = [], 0, 0
+            batch, rows_acc = [], 0
         batch.append((key, rows, nbytes))
         rows_acc += rows
-        bytes_acc += nbytes
+        done += nbytes
+        last = cut
     if batch:
         yield batch
 
 
-def _rewrite_batches(
+def _rewrite_units(
     spark: SparkSession,
     base: str,
-    batches: list[list[tuple[PartitionKey, int, int]]],
+    units: list[tuple[list[PartitionKey], tuple]],
     schema: StructType,
     zorder_by: list[str] | None,
     root: str,
     keep: Column | None,
-) -> dict[str, str | None]:
-    """Rewrite every key of ``batches``, each into one time-sorted (or
-    z-ordered) file, with one partitioned write into ``root``.
+) -> None:
+    """Rewrite every ``(keys, (lo, hi))`` unit of ``units`` with one
+    partitioned write into ``root``: each unit's key dirs, cut to the
+    half-open time window ``[lo, hi)`` (None: unbounded; the first
+    window also keeps NULL ``tp_timestamp`` rows), land as one
+    time-sorted (or z-ordered) file per key.
 
-    A batch is one scan over its key dirs coalesced to one task, so all
-    of a key's rows meet in one task without a shuffle; the batches are
-    unioned, so the write is one job of one task per batch. (A z-order's
-    per-key window brings its own exchange on the partition columns.)
-    Returns each key's staged dir; None for a key left with no rows,
-    since no dir is written for it."""
+    A unit is one scan coalesced to one task, so all of a key's rows in
+    the window meet in one task without a shuffle; the units are
+    unioned, so the write is one job of one stage with one task per
+    unit. A z-order takes its scaling bounds per key within each unit,
+    so per key and window; the unit is one partition already, so the
+    window aggregate needs no exchange. A task with no rows writes no
+    file."""
+    if zorder_by:
+        from tailpipe_spark.plans.zorder import with_zvalue
     scans = []
-    for batch in batches:
+    for keys, (lo, hi) in units:
         df = (
             spark.read.schema(schema)
             .option("basePath", base)
-            .parquet(*[os.path.join(base, k.relpath) for k, _, _ in batch])
+            .parquet(*[os.path.join(base, k.relpath) for k in keys])
         )
         if keep is not None:
             df = df.filter(keep)
-        scans.append(df.coalesce(1))
+        if lo is not None:
+            df = df.filter(F.expr(f"tp_timestamp >= {sql_ts(lo)}"))
+        if hi is not None:
+            cond = F.expr(f"tp_timestamp < {sql_ts(hi)}")
+            if lo is None:
+                cond = cond | F.col("tp_timestamp").isNull()
+            df = df.filter(cond)
+        df = df.coalesce(1)
+        if zorder_by:
+            df = with_zvalue(df, zorder_by, over=list(PARTITION_COLS))
+        scans.append(df)
     df = functools.reduce(lambda a, b: a.union(b), scans)
     if zorder_by:
-        from tailpipe_spark.plans.zorder import with_zvalue
-
-        df = with_zvalue(df, zorder_by, over=list(PARTITION_COLS))
         out = df.sortWithinPartitions(*PARTITION_COLS, "__z").drop("__z")
     else:
         out = df.sortWithinPartitions(*PARTITION_COLS, "tp_timestamp")
     with _union_keeps_partitions(spark):
         out.write.partitionBy(*PARTITION_COLS).mode("append").parquet(root)
-    found = {}
-    for key, rows, _ in (entry for batch in batches for entry in batch):
-        d = os.path.join(root, key.relpath)
-        if not os.path.isdir(d):
-            if rows:
-                raise RuntimeError(
-                    f"rewrite wrote no {key.relpath} for its {rows} rows"
-                )
-            d = None
-        found[key.relpath] = d
-    return found
 
 
 @contextlib.contextmanager
@@ -629,7 +653,7 @@ def _union_keeps_partitions(spark: SparkSession):
     """Plan a union of coalesced scans as one partition per scan. Spark
     otherwise gives a union of children with the same partitioning that
     partitioning, and every ``coalesce(1)`` is the single partition, so
-    all batches would be zipped into one task."""
+    all units would be zipped into one task."""
     conf = "spark.sql.unionOutputPartitioning"
     before = spark.conf.get(conf, None)
     spark.conf.set(conf, "false")
@@ -640,54 +664,6 @@ def _union_keeps_partitions(spark: SparkSession):
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, before)
-
-
-def _rewrite_windowed(
-    spark: SparkSession,
-    base: str,
-    key: PartitionKey,
-    schema: StructType,
-    windows: list[tuple],
-    n_out: int,
-    zorder_by: list[str] | None,
-    root: str,
-    keep: Column | None,
-) -> None:
-    """Rewrite one key into ``root``, one job per time window, each
-    window range-partitioned into ``n_out`` files. A window with no
-    rows still writes one empty file — when the last cut lands on the
-    last file, or a delete empties a window — so zero-row files are
-    removed before the key is swapped in. The key dir is read as a
-    table of its own, so only the data columns of ``schema`` are in it."""
-    data = StructType([f for f in schema if f.name not in PARTITION_COLS])
-    df = spark.read.schema(data).parquet(os.path.join(base, key.relpath))
-    if keep is not None:
-        df = df.filter(keep)
-    for lo, hi in windows:
-        chunk = df
-        if lo is not None:
-            chunk = chunk.filter(F.expr(f"tp_timestamp >= {sql_ts(lo)}"))
-        if hi is not None:
-            cond = F.expr(f"tp_timestamp < {sql_ts(hi)}")
-            if lo is None:  # first window keeps stat-less rows
-                cond = cond | F.col("tp_timestamp").isNull()
-            chunk = chunk.filter(cond)
-        if zorder_by:
-            from tailpipe_spark.plans.zorder import zorder_rewrite
-
-            out = zorder_rewrite(chunk, zorder_by, int(n_out))
-        else:
-            out = chunk.repartitionByRange(
-                int(n_out), F.col("tp_timestamp")
-            ).sortWithinPartitions("tp_timestamp")
-        out.write.mode("append").parquet(root)
-    for name in os.listdir(root):
-        p = os.path.join(root, name)
-        if name.endswith(".parquet") and FooterInfo(p).num_rows == 0:
-            os.remove(p)
-            crc = os.path.join(root, f".{name}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
 
 
 def _replace_dirs(

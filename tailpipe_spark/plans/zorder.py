@@ -12,9 +12,10 @@ z-value column + ``repartitionByRange`` + ``sortWithinPartitions``.
 
 Scale notes: the z-value is a row-local projection (no shuffle of its
 own); min/max scaling bounds ride along as a broadcast 1-row aggregate
-(no driver collect, one lazy plan); the rewrite itself is the same
-range-partition + sort shape the compactor already uses, so cost is
-identical to the time-only rewrite.
+(no driver collect, one lazy plan). The compactor uses ``with_zvalue``
+alone, bounds per key and time window, and sorts each output file's
+task by the z-value instead of by time, so its cost matches the
+time-only rewrite.
 """
 
 from __future__ import annotations

@@ -71,13 +71,19 @@ _NUL = "\u0000"
 
 
 def _extract_groups(
-    lines: DataFrame, regex: str, groups: dict[str, tuple[int, str | None]]
+    lines: DataFrame,
+    regex: str,
+    groups: dict[str, tuple[int, str | None]],
+    keep_unparsed: bool,
 ) -> DataFrame:
     """One column per ``groups`` entry (name → capture group index and
     the type to cast to, or None) of each text line of ``lines``:
     ``regexp_extract`` of that group on a line that ``regex`` matches,
     NULL on one it does not. Then the line itself as ``_raw`` and the
-    match flag as ``_parsed``.
+    match flag as ``_parsed``. Without ``keep_unparsed`` the lines that
+    ``regex`` does not match are dropped first, and the match flag is
+    known true: a filter on the projected flag would be pushed below
+    the projection and run the match twice per line.
 
     The regex runs once per line for all fields, not once per field: one
     anchored ``regexp_replace`` rewrites a parsed line into its groups
@@ -93,6 +99,8 @@ def _extract_groups(
     every regex literal of the plan at each DataFrame step."""
     value = F.col("value")
     matched = value.rlike(regex)
+    if not keep_unparsed:
+        lines, matched = lines.filter(matched), F.lit(True)
     anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
     joined = _NUL.join(f"${gi}" for gi, _ in groups.values())
     try:
@@ -127,11 +135,12 @@ def read_regex(
     if not names:
         raise ValueError("regex format requires named capture groups")
     df = _extract_groups(
-        spark.read.text(paths), regex, {n: (gi, None) for n, gi in names.items()}
+        spark.read.text(paths), regex, {n: (gi, None) for n, gi in names.items()},
+        keep_unparsed,
     )
     if keep_unparsed:
         return df.drop("_parsed")
-    return df.filter(F.col("_parsed")).drop("_raw", "_parsed")
+    return df.drop("_raw", "_parsed")
 
 
 def read_grok(
@@ -147,10 +156,11 @@ def read_grok(
         spark.read.text(paths),
         compiled.regex,
         {n: (gi, GROK_TYPE_CASTS.get(typ)) for n, (gi, typ) in compiled.fields.items()},
+        keep_unparsed,
     )
     if keep_unparsed:
         return df.drop("_raw")
-    return df.filter(F.col("_parsed")).drop("_raw", "_parsed")
+    return df.drop("_raw", "_parsed")
 
 
 def read_with_format(

@@ -385,7 +385,8 @@ def test_compaction_reindex(spark, workspace, tmp_path):
     df = workspace.read_table(spark, "t6")
     assert set(r["tp_index"] for r in df.select("tp_index").distinct().collect()) == {"default"}
 
-    compact_table(spark, workspace, "t6", reindex_expr="id")
+    summary = compact_table(spark, workspace, "t6", reindex_expr="id")
+    assert summary["rows"] == 4
     df = workspace.read_table(spark, "t6")
     assert set(r["tp_index"] for r in df.select("tp_index").distinct().collect()) == {"0", "1", "2", "3"}
 
@@ -484,8 +485,9 @@ def test_collect_does_not_walk_table_footers(spark, workspace, metrics_chunks):
 
 
 def test_compaction_chunks_large_partitions(spark, workspace, tmp_path):
-    """A hot partition rewrites as multiple bounded jobs, not one giant
-    one (reference chunks at 5M rows / >=1h windows)."""
+    """A hot partition rewrites as bounded time windows, one file each,
+    not one giant file (reference chunks at 5M rows / >=1h windows)."""
+    from tailpipe_spark.compact import chunk_windows, file_stats
     from tailpipe_spark.sources.formats import read_jsonl
 
     table = TableConfig(
@@ -508,9 +510,12 @@ def test_compaction_chunks_large_partitions(spark, workspace, tmp_path):
         collect(spark, workspace, table, part, source_df=read_jsonl(spark, [str(p)]))
 
     before = workspace.file_stats("t7")["rows"]
+    (key,) = enumerate_partition_keys(workspace, "t7")
+    windows = chunk_windows(file_stats(workspace, "t7", key), 50)
+    assert len(windows) >= 2
     summary = compact_table(spark, workspace, "t7", max_chunk_rows=50)
     assert summary["keys_rewritten"] == 1
-    assert summary["chunk_jobs"] >= 2  # bounded jobs, not one rewrite
+    assert len(_key_files(workspace, "t7")[key.relpath]) == len(windows)
     assert workspace.file_stats("t7")["rows"] == before == 120
     # no tmp droppings inside the table tree, staging swept
     import os
@@ -789,6 +794,24 @@ def test_compaction_spreads_batches_over_cores(spark, workspace, tmp_path):
     _assert_index_fresh(workspace, "t_spread")
 
 
+def test_batches_spread_near_equal_keys_over_cores():
+    """Sixteen keys of 5.8-6.2 MB under a cap of a quarter of their bytes
+    make four batches of four keys, not a fifth batch of a straggler; a
+    row cap that needs more batches raises the count, and no batch
+    passes it."""
+    from tailpipe_spark.compact import _batches
+
+    sizes = [int((5.8 + 0.4 * (7 * i % 16) / 15) * 1e6) for i in range(16)]
+    cap = -(-sum(sizes) // 4)
+    small = [(f"k{i}", 1000, b) for i, b in enumerate(sizes)]
+    got = list(_batches(small, 10**9, cap))
+    assert [len(b) for b in got] == [4, 4, 4, 4]
+    assert [e for b in got for e in b] == small
+    capped = list(_batches(small, 3000, cap))
+    assert len(capped) == 6
+    assert all(sum(r for _, r, _ in b) <= 3000 for b in capped)
+
+
 def test_delete_range_rewrites_small_keys_in_one_write(spark, workspace, tmp_path):
     """A delete over small keys goes through the batched rewrite: the
     survivors of each key land in one time-sorted file, and a key left
@@ -821,9 +844,9 @@ def test_delete_range_rewrites_small_keys_in_one_write(spark, workspace, tmp_pat
 
 
 def test_compaction_mixes_windowed_and_batched_keys(spark, workspace, tmp_path):
-    """Under a small max_chunk_rows the oversized key takes the windowed
-    rewrite while the rest still batch; a key whose files hold no rows
-    is dropped without error."""
+    """Under a small max_chunk_rows the oversized key is cut into time
+    windows while the rest batch, and one Spark job writes them all; a
+    key whose files hold no rows is dropped without error."""
     import os
 
     import pyarrow.parquet as pq
@@ -853,9 +876,13 @@ def test_compaction_mixes_windowed_and_batched_keys(spark, workspace, tmp_path):
     assert n_windows >= 2
     facts = _key_facts(spark, workspace, "t_mix")
 
-    summary = compact_table(spark, workspace, "t_mix", max_chunk_rows=50)
+    summary, jobs, _ = _jobs_and_stages(
+        spark, "compact-mix",
+        lambda: compact_table(spark, workspace, "t_mix", max_chunk_rows=50),
+    )
     assert summary["keys_rewritten"] == 4
-    assert summary["chunk_jobs"] == n_windows + 1
+    assert summary["chunk_jobs"] == 1
+    assert len(jobs) == 1
     after = _key_files(workspace, "t_mix")
     assert empty not in after
     assert not os.path.exists(os.path.join(base, "tp_partition=default/tp_index=empty"))
@@ -923,6 +950,88 @@ def test_batched_zorder_matches_single_key_rewrite(spark, workspace, tmp_path):
     for key, paths in _key_files(workspace, "t_z").items():
         assert len(paths) == 1, key
         assert pq.read_table(paths[0], columns=["id"]).column(0).to_pylist() == expected[key]
+
+
+def test_windowed_zorder_matches_per_window_rewrite(spark, workspace, tmp_path):
+    """A windowed key under zorder_by comes out one file per window, each
+    in the row order zorder_rewrite gives that window's rows alone
+    (per-window scaling bounds), written by one job of one stage."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark.compact import chunk_windows, file_stats
+    from tailpipe_spark.plans.zorder import zorder_rewrite
+    from tailpipe_spark.query_cli import sql_ts
+
+    cols = ["tp_timestamp", "id"]
+    _collect_rows(spark, workspace, tmp_path, "t_zw", [
+        # ids run against time; the last file's far-off ids would flatten
+        # the first window's to one z-level under key-wide bounds
+        [(100 - 3 * i + (10**9 if b == 2 else 0), "w",
+          f"2024-05-01T{2 * b + i % 2:02d}:{i:02d}:00") for i in range(40)]
+        for b in range(3)
+    ])
+    (key,) = enumerate_partition_keys(workspace, "t_zw")
+    windows = chunk_windows(file_stats(workspace, "t_zw", key), 50)
+    assert len(windows) == 2
+    key_df = spark.read.parquet(os.path.join(workspace.table_dir("t_zw"), key.relpath))
+    expected = []
+    for lo, hi in windows:
+        w = key_df
+        if lo is not None:
+            w = w.filter(F.expr(f"tp_timestamp >= {sql_ts(lo)}"))
+        if hi is not None:
+            w = w.filter(F.expr(f"tp_timestamp < {sql_ts(hi)}"))
+        expected.append([r.id for r in zorder_rewrite(w, cols, 1).collect()])
+    facts = _key_facts(spark, workspace, "t_zw")
+
+    summary, jobs, stages = _jobs_and_stages(
+        spark, "compact-zorder-windows",
+        lambda: compact_table(spark, workspace, "t_zw", max_chunk_rows=50, zorder_by=cols),
+    )
+    assert summary["chunk_jobs"] == 1
+    assert len(jobs) == 1 and len(stages) == 1
+    files = sorted(
+        (pq.read_table(p) for p in _key_files(workspace, "t_zw")[key.relpath]),
+        key=lambda t: min(t.column("tp_timestamp").to_pylist()),
+    )
+    assert [t.column("id").to_pylist() for t in files] == expected
+    assert _key_facts(spark, workspace, "t_zw") == facts
+
+
+def test_compaction_cuts_windows_at_target_file_bytes(spark, workspace, tmp_path, monkeypatch):
+    """A key over the output file size, though under the row cap, comes
+    out as one time-sorted file per window, written by one job."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tailpipe_spark import compact
+
+    _collect_rows(spark, workspace, tmp_path, "t_bytes", [
+        [(10 * b + i, "b", f"2024-05-01T{b:02d}:{5 * i:02d}:00") for i in range(10)]
+        for b in range(5)
+    ])
+    (key,) = enumerate_partition_keys(workspace, "t_bytes")
+    stats = compact.file_stats(workspace, "t_bytes", key)
+    # two files reach the cap, one does not: windows of 2, 2 and 1 files
+    cap = max(s.bytes for s in stats) + 1
+    windows = compact.chunk_windows(stats, compact.MAX_CHUNK_ROWS, cap)
+    assert len(windows) == 3
+    facts = _key_facts(spark, workspace, "t_bytes")
+
+    monkeypatch.setattr(compact, "TARGET_FILE_BYTES", cap)
+    summary = compact.compact_table(spark, workspace, "t_bytes")
+    assert summary["keys_rewritten"] == 1 and summary["chunk_jobs"] == 1
+    paths = _key_files(workspace, "t_bytes")[key.relpath]
+    assert sorted(pq.read_metadata(p).num_rows for p in paths) == [10, 20, 20]
+    for p in paths:
+        ts = pq.read_table(p, columns=["tp_timestamp"]).column(0).to_pylist()
+        assert ts == sorted(ts), p
+    assert _key_facts(spark, workspace, "t_bytes") == facts
+    _assert_index_fresh(workspace, "t_bytes")
+    assert not os.listdir(workspace.staging_dir)
 
 
 def test_delete_range_rewrites_keys_like_compaction(spark, workspace, tmp_path, monkeypatch):
@@ -1015,8 +1124,8 @@ def test_delete_range_bounds_are_utc_under_local_zone(spark, workspace, tmp_path
 
 def test_windowed_compaction_writes_no_empty_files(spark, workspace, tmp_path):
     """When the last window cut lands on the last file, the window after
-    it holds no rows; its empty file is dropped before the swap, and the
-    file index stays usable."""
+    it holds no rows and its task writes no file, so no checksum is left
+    over and the file index stays usable."""
     import os
 
     import pyarrow.parquet as pq
@@ -1038,7 +1147,7 @@ def test_windowed_compaction_writes_no_empty_files(spark, workspace, tmp_path):
     key_dir = os.path.dirname(paths[0])
     assert sorted(n for n in os.listdir(key_dir) if n.endswith(".parquet.crc")) == sorted(
         f".{os.path.basename(p)}.crc" for p in paths
-    )  # the dropped file's checksum went with it
+    )  # no checksum of an unwritten file
     assert workspace.read_table(spark, "t_win").count() == before == 20
     assert workspace.pruned_files(
         "t_win", datetime(2024, 5, 1), datetime(2024, 5, 2)

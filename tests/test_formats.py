@@ -325,6 +325,28 @@ def test_grok_one_pass_matches_per_field_extract(spark, tmp_path):
     assert any("\x00" in r["request"] for r in got)
 
 
+def test_readers_match_each_line_once(spark, tmp_path):
+    """When unparsed lines are dropped, the grok and regex readers filter
+    on the match before extracting: the executed plan evaluates RLIKE in
+    a Filter and in no Project."""
+    p = tmp_path / "access.log"
+    p.write_text(
+        '203.0.113.9 - frank [10/Oct/2024:13:55:36 -0700] '
+        '"GET /a.gif HTTP/1.0" 200 2326 "http://example.com/" "Mozilla/5.0"\n'
+        "not an access log line\n"
+    )
+    readers = [
+        read_grok(spark, [str(p)], FormatConfig(name="a", type="grok", pattern="%{COMBINEDAPACHELOG}")),
+        read_regex(spark, [str(p)], FormatConfig(name="w", type="regex", pattern=r"(?<ip>\S+) - (?<user>\S+)")),
+    ]
+    for df in readers:
+        assert df.count() == 1
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = [line.lstrip(" :+-*()0123456789") for line in plan.splitlines()]
+        matching = [n.split(" ")[0] for n in nodes if "RLIKE" in n]
+        assert "Filter" in matching and "Project" not in matching, plan
+
+
 def test_regex_with_trailing_comment_flag_comment(spark, tmp_path):
     """A COMMENTS-mode pattern whose comment runs to the end still reads
     every named group: the one-pass rewrite cannot wrap it and the
