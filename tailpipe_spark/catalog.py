@@ -481,22 +481,29 @@ class Catalog:
     #
     # Like DuckLake's ``ducklake_data_file`` table (reference: internal/
     # database/duck_db.go:270-291), one entry per data file — path, rows,
-    # bytes, tp_timestamp min/max + null_count — recorded at write time.
-    # Compaction, delete, bucket_rewrite and the table stats read it
-    # through ``files``, bounded queries through ``pruned_files``; one
-    # listing (``_listing``) checks it, and a stale index is never
-    # trusted. It is a JSONL sidecar, not part of manifest.json, so an
-    # append costs O(new entries), not an O(index) JSON rewrite (~100 MB
-    # at 1M files). Reads dedupe last-wins by path.
+    # bytes, tp_timestamp min/max + null_count, and the companion
+    # ``cols`` stats of the manifest's ``indexed_columns`` — recorded at
+    # write time. Compaction, delete, bucket_rewrite and the table stats
+    # read it through ``files``, bounded queries through ``pruned_files``;
+    # one listing (``_listing``) checks it, and a stale index is never
+    # trusted. Two routines write it: ``merge_file_index`` appends what
+    # a landing wrote, and ``refresh_partition_index`` re-indexes what a
+    # rewrite replaced (some key dirs, or the whole table). It is a JSONL
+    # sidecar, not part of manifest.json, so an append costs O(new
+    # entries), not an O(index) JSON rewrite (~100 MB at 1M files). Reads
+    # dedupe last-wins by path.
 
     def _index_path(self, table: str) -> str:
         return os.path.join(self.metadata_dir, "file_index", f"{table}.jsonl")
 
+    def _indexed_columns(self, table: str) -> list[str] | None:
+        """The companion columns every index entry carries ``cols`` stats
+        for (a z-ordered compaction sets them), or None."""
+        return self._load()["tables"].get(table, {}).get("indexed_columns")
+
     def load_file_index(self, table: str) -> list | None:
-        """Current file index, or None when never built. Reads the
-        JSONL sidecar (last-wins per path); falls back to a legacy
-        manifest-embedded index (pre-sidecar workspaces) which the
-        next store migrates out.
+        """Current file index from the JSONL sidecar (last-wins per
+        path), or None when never built.
 
         A torn FINAL line (crash mid-_append_index) is tolerated: the
         parsed prefix is returned, which the listing then finds stale
@@ -526,21 +533,16 @@ class Catalog:
                     return None
                 by_path[e["path"]] = e
             return list(by_path.values())
-        return self._load()["tables"].get(table, {}).get("file_index")
+        return None
 
     def _store_index(self, table: str, entries: list) -> None:
-        """Atomic full rewrite of the sidecar; drops any legacy
-        manifest-embedded copy so there is one source of truth."""
+        """Atomic full rewrite of the sidecar."""
         p = self._index_path(table)
         os.makedirs(os.path.dirname(p), exist_ok=True)
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
             f.writelines(json.dumps(e) + "\n" for e in entries)
         os.replace(tmp, p)
-        manifest = self._load()
-        if "file_index" in manifest["tables"].get(table, {}):
-            del manifest["tables"][table]["file_index"]
-            self._store(manifest)
 
     def _append_index(self, table: str, entries: list) -> None:
         with open(self._index_path(table), "a") as f:
@@ -596,30 +598,9 @@ class Catalog:
         index, listed = self._fresh_index(table)
         if index is not None:
             return index
-        columns = self._load()["tables"].get(table, {}).get("indexed_columns")
+        columns = self._indexed_columns(table)
         tdir = self.table_dir(table)
         return [self._index_entry(tdir, rel, columns) for rel in listed]
-
-    def refresh_file_index(self, table: str, columns: list[str] | None = None) -> int:
-        """Record per-file footer stats in the manifest: always
-        ``tp_timestamp``, plus any extra ``columns`` (the z-order
-        companion: a layout clustered on (tp_timestamp, user_id) makes a
-        user_id index selective, so `compact --zorder` passes its
-        columns here). Returns the number of files indexed.
-
-        This is the FULL rebuild — O(all files) footer reads. The
-        incremental paths (collect append -> ``merge_file_index``;
-        compact/delete -> ``refresh_partition_index``) keep the index
-        maintained at O(files touched); use this only for initial
-        builds, whole-table rewrites, or repair."""
-        tdir = self.table_dir(table)
-        index = [self._index_entry(tdir, rel, columns) for rel in self._listing(table)]
-        self._store_index(table, index)
-        if columns:
-            manifest = self._load()
-            manifest["tables"][table]["indexed_columns"] = list(columns)
-            self._store(manifest)
-        return len(index)
 
     def merge_file_index(self, table: str, added: list[str]) -> int:
         """Merge newly written files into the existing index, reading
@@ -630,19 +611,14 @@ class Catalog:
         internal/database/file_metadata.go:42-52).
 
         ``added``: file paths absolute or relative to the table dir.
-        Falls back to a full rebuild when no index exists yet
-        (returning the full count); otherwise returns the number of
-        entries appended. New entries carry the same companion-column
-        stats as the existing index (``indexed_columns``) so pruning
-        stays uniform."""
+        Returns the number of entries appended, or with no index yet
+        the count of a whole-table ``refresh_partition_index``. New
+        entries carry the ``indexed_columns`` stats, so pruning stays
+        uniform."""
         if not os.path.exists(self._index_path(table)):
-            legacy = self.load_file_index(table)
-            if legacy is None:
-                return self.refresh_file_index(table)
-            # one-time migration of a legacy manifest-embedded index
-            self._store_index(table, legacy)
+            return self.refresh_partition_index(table)
         tdir = self.table_dir(table)
-        columns = self._load()["tables"].get(table, {}).get("indexed_columns")
+        columns = self._indexed_columns(table)
         rels = [
             os.path.relpath(p, tdir) if os.path.isabs(p) else p for p in added
         ]
@@ -656,29 +632,38 @@ class Catalog:
     def refresh_partition_index(
         self,
         table: str,
-        key_relpaths: list[str],
+        key_relpaths: list[str] | None = None,
         columns: list[str] | None = None,
     ) -> int:
-        """Re-index only the given partition subdirectories (relative
-        to the table dir): drop their old index rows, footer-read just
-        the files now under them. Compact and delete rewrite whole
-        partition keys, so their index maintenance is O(files in the
-        rewritten keys), not O(table).
+        """The one re-index: drop the index rows under the given
+        partition subdirectories (relative to the table dir) and
+        footer-read just the files now under them, so a key-dir rewrite
+        costs O(files in the rewritten keys), not O(table). No keys, a
+        key naming the table dir itself, or no index yet: the whole
+        table. Returns the number of entries in the index.
 
-        ``columns`` switches the companion-column set (z-order compact
-        passes its cluster columns); when that changes the WHOLE index
-        is rebuilt so stats stay uniform across files."""
-        existing = self.load_file_index(table)
-        cols_now = self._load()["tables"].get(table, {}).get("indexed_columns")
-        if existing is None or (columns and list(columns) != cols_now):
-            return self.refresh_file_index(table, columns)
+        Entries carry ``cols`` stats for ``columns`` (z-order compact
+        passes its cluster columns), by default the manifest's
+        ``indexed_columns``; a new set is recorded there and re-indexes
+        the whole table, so stats stay uniform across files."""
+        cols_now = self._indexed_columns(table)
+        columns = list(columns or cols_now or []) or None
+        whole = key_relpaths is None or "." in map(os.path.normpath, key_relpaths)
+        existing = None if whole or columns != cols_now else self.load_file_index(table)
+        if existing is None:
+            kept, key_relpaths = [], None
+        else:
+            prefixes = tuple(k.rstrip(os.sep) + os.sep for k in key_relpaths)
+            kept = [e for e in existing if not e["path"].startswith(prefixes)]
         tdir = self.table_dir(table)
-        prefixes = tuple(k.rstrip(os.sep) + os.sep for k in key_relpaths)
-        kept = [e for e in existing if not e["path"].startswith(prefixes)]
         # a key dir that is gone (partition fully deleted) lists nothing
         for rel in self._listing(table, key_relpaths):
-            kept.append(self._index_entry(tdir, rel, cols_now))
+            kept.append(self._index_entry(tdir, rel, columns))
         self._store_index(table, kept)
+        if columns != cols_now:
+            manifest = self._load()
+            manifest["tables"][table]["indexed_columns"] = columns
+            self._store(manifest)
         return len(kept)
 
     def pruned_files(self, table, time_from=None, time_to=None, predicates=None):
@@ -688,7 +673,7 @@ class Catalog:
         back to a full scan, never trust a stale index).
 
         ``predicates``: optional ``{column: (lo, hi)}`` inclusive
-        ranges over extra indexed columns (see refresh_file_index's
+        ranges over extra indexed columns (see refresh_partition_index's
         ``columns``); either bound may be None.
 
         Conservative by construction: files without stats for a tested

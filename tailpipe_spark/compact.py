@@ -26,8 +26,9 @@ Spark shape:
   rewrite, so the whole set costs about what one key used to.
 - every rewrite reads with Catalog.spark_schema: no schema-inference
   job, and each hive value comes back verbatim from its path
-- every rewrite stages outside the table; key dirs are swapped in, and
-  re-indexed, only once all rewrites have succeeded
+- every rewrite stages outside the table, and once it has succeeded
+  commits through ``_swap_and_reindex``: swap in the key dirs (or the
+  whole table dir), record the snapshot, re-index what was swapped
 - a range delete (A18) is the same rewrite over the keys holding
   doomed rows, with a row filter keeping the survivors: it batches,
   windows, swaps and re-indexes exactly as compaction does
@@ -37,6 +38,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import itertools
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -212,9 +214,10 @@ def bucket_rewrite(
     Whole-table staged rewrite, read with ``Catalog.spark_schema``:
     write ``bucketBy(N, keys).sortBy(...)`` into ``catalog.staging_dir``
     (via a throwaway external saveAsTable — Spark's bucketed writer is
-    only reachable through the table API), swap by rename, record the
-    layout + revision in the manifest (``set_table_layout``), refresh
-    the file index. ``read_table`` then serves the scan through a
+    only reachable through the table API), commit it through
+    ``_swap_and_reindex``, and only then record the layout + revision
+    (``set_table_layout``): a crash never leaves a layout over plain
+    files. ``read_table`` then serves the scan through a
     session-catalog registration carrying the bucket spec, so a join
     of two same-bucketed tables plans with ZERO Exchange on the fact
     sides (pinned in tests/test_bucketed_layout.py).
@@ -298,13 +301,11 @@ def _bucket_rewrite_locked(
         .saveAsTable(tmp_name)
     )
     spark.sql(f"DROP TABLE `{tmp_name}`")  # external: files stay
-    _replace_dirs(catalog, table, [(tdir, staged)])
-    rev = catalog.set_table_layout(table, bucket_by, num_buckets, sort_by)
-    catalog.record_snapshot(
-        "bucket",
+    _swap_and_reindex(
+        catalog, table, {"": staged}, "bucket",
         {"table": table, "bucket_by": list(bucket_by), "num_buckets": int(num_buckets)},
     )
-    catalog.refresh_file_index(table)
+    rev = catalog.set_table_layout(table, bucket_by, num_buckets, sort_by)
     return {
         "table": table,
         "bucket_by": list(bucket_by),
@@ -339,7 +340,8 @@ def compact_table(
     bigger key one task per time window of at most ``max_chunk_rows``
     rows and ``TARGET_FILE_BYTES`` bytes, >=1h long. ``chunk_jobs`` in
     the summary is the number of write jobs: 1, or 0 when no key needed
-    compaction. The staged keys replace the old ones after the write,
+    compaction. A reindex stages the whole table. The staged dirs
+    replace the old ones through ``_swap_and_reindex`` after the write,
     so staging holds a copy of every rewritten key at that point.
 
     A table with a recorded bucketed layout is STICKY: its compaction
@@ -385,14 +387,12 @@ def _compact_table_locked(
         )
         staged = catalog.new_staging_dir(f"{table}.reindex")
         new.write.partitionBy(*PARTITION_COLS).mode("overwrite").parquet(staged)
-        _replace_dirs(catalog, table, [(catalog.table_dir(table), staged)])
-        catalog.record_snapshot("compact", {"table": table, "reindex": True})
-        catalog.refresh_file_index(table)
-        if lay:
-            # the reindex wrote plain files; restore the promised layout
+        _swap_and_reindex(
+            catalog, table, {"": staged}, "compact", {"table": table, "reindex": True}
+        )
+        if lay:  # the reindex wrote plain files; restore the promised layout
             bucket_rewrite(
-                spark, catalog, table,
-                lay["bucket_by"], lay["num_buckets"], lay["sort_by"],
+                spark, catalog, table, lay["bucket_by"], lay["num_buckets"], lay["sort_by"]
             )
         return {"keys_rewritten": len(keys), "files_merged": 0, "rows": rows_total}
 
@@ -569,30 +569,45 @@ def _batch_bytes(spark: SparkSession, small: list[tuple[PartitionKey, int, int]]
 
 def _batches(small: list[tuple[PartitionKey, int, int]], max_rows: int, max_bytes: int):
     """Group single-file ``(key, rows, bytes)`` entries, in order, into
-    batches. The count is fixed first: ceil(bytes / ``max_bytes``), or
-    more when ``max_rows`` needs more. The keys are then cut at even
-    byte boundaries, each key going to the slice that holds its middle,
-    so near-equal keys spread evenly instead of leaving a straggler; a
-    batch also closes before it would pass ``max_rows`` rows."""
-    total_bytes = sum(b for _, _, b in small)
-    n = max(
-        1,
-        -(-total_bytes // max_bytes),
-        -(-sum(r for _, r, _ in small) // max_rows),
-    )
-    batch: list[tuple[PartitionKey, int, int]] = []
-    rows_acc = done = last = 0
-    for key, rows, nbytes in small:
-        cut = (done + nbytes // 2) * n // max(1, total_bytes)
-        if batch and (cut != last or rows_acc + rows > max_rows):
-            yield batch
-            batch, rows_acc = [], 0
-        batch.append((key, rows, nbytes))
-        rows_acc += rows
-        done += nbytes
-        last = cut
-    if batch:
-        yield batch
+    batches: ceil(bytes / ``max_bytes``) slices of even bytes. When a
+    slice of more than one key would pass ``max_rows`` rows, the rows
+    bind instead: the count becomes the fewest batches under
+    ``max_rows`` (or the byte slices, if more), cut at even row
+    boundaries, or filled in order when that even cut passes the cap."""
+
+    def fits(batches):
+        return all(len(b) == 1 or sum(r for _, r, _ in b) <= max_rows for b in batches)
+
+    batches = _cut(small, max(1, -(-sum(b for _, _, b in small) // max_bytes)), 2)
+    if fits(batches):
+        return batches
+    fewest = _fill(small, max_rows)
+    by_rows = _cut(small, max(len(fewest), len(batches)), 1)
+    return by_rows if fits(by_rows) else fewest
+
+
+def _cut(small: list[tuple[PartitionKey, int, int]], n: int, w: int):
+    """Cut ``small`` in order into at most ``n`` slices of even total
+    ``entry[w]``, each entry going to the slice that holds its middle,
+    so near-equal entries spread evenly instead of leaving a straggler."""
+    total = max(1, sum(e[w] for e in small))
+    starts = itertools.accumulate((e[w] for e in small), initial=0)
+    cuts = [min(n - 1, (done + e[w] // 2) * n // total) for done, e in zip(starts, small)]
+    groups = itertools.groupby(zip(cuts, small), lambda c: c[0])
+    return [[e for _, e in g] for _, g in groups]
+
+
+def _fill(small: list[tuple[PartitionKey, int, int]], max_rows: int):
+    """Cut ``small`` in order, closing each batch before it would pass
+    ``max_rows`` rows: the fewest batches under that cap."""
+    batches, rows = [], 0
+    for entry in small:
+        if not batches or rows + entry[1] > max_rows:
+            batches.append([])
+            rows = 0
+        batches[-1].append(entry)
+        rows += entry[1]
+    return batches
 
 
 def _rewrite_units(
@@ -694,26 +709,25 @@ def _swap_and_reindex(
     staged: dict[str, str | None],
     op: str,
     detail: dict,
-    zorder_by: list[str] | None,
+    zorder_by: list[str] | None = None,
 ) -> None:
-    """Replace each key dir by its staged rewrite (None: the key held no
-    rows and goes away), record snapshot ``op`` with ``detail``, then
-    re-index those keys. Runs only after every rewrite succeeded, so a
+    """The one commit of every rewrite: replace each dir of ``staged``
+    (a key relpath, or ``""`` for the whole table dir) by its staged
+    rewrite (None: the key held no rows and goes away), record snapshot
+    ``op`` with ``detail``, then re-index exactly what was swapped,
+    keeping the table's companion-column stats. A z-ordered layout
+    makes its ``zorder_by`` columns selective per file, so they become
+    the companions. Runs only after every rewrite succeeded, so a
     failed write leaves the table as it was."""
     base = catalog.table_dir(table)
     if staged:
         _replace_dirs(
             catalog, table,
-            [(os.path.join(base, rel), new) for rel, new in sorted(staged.items())],
+            [(os.path.join(base, rel) if rel else base, new)
+             for rel, new in sorted(staged.items())],
         )
     catalog.record_snapshot(op, detail)
     if staged:
-        # a z-ordered layout makes its companion columns selective per
-        # file — index them so pruned_files() can skip on them too.
-        # Only the rewritten partition keys are re-footer-read; the
-        # rest of the index is untouched (O(files touched), not
-        # O(table)). A changed companion-column set triggers the full
-        # rebuild inside refresh_partition_index.
         catalog.refresh_partition_index(
             table,
             list(staged),

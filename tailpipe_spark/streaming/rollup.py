@@ -389,9 +389,9 @@ def maintain_rollup(
             os.path.isdir(rollup_path)
             and any(n.startswith("bucket_date=") for n in os.listdir(rollup_path))
         ):
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             (
                 rows.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket_date")
                 .parquet(rollup_path)
             )

@@ -182,7 +182,7 @@ def test_q05_smj_zero_fact_exchange_product_path(spark, workspace, assert_manife
             name, {f.name: f.dataType.simpleString() for f in df.schema.fields}
         )
         writer.append(workspace, name, df)
-        workspace.refresh_file_index(name)
+        workspace.refresh_partition_index(name)
         assert_manifest_schema(workspace, name)
 
     def q05(orders, li):

@@ -684,9 +684,11 @@ def _key_facts(spark, workspace, table):
 
 
 def _assert_index_fresh(workspace, table):
+    """The maintained index equals a full rebuild, companion ``cols``
+    stats included."""
     by_path = lambda idx: sorted(idx, key=lambda e: e["path"])  # noqa: E731
     maintained = by_path(workspace.load_file_index(table))
-    workspace.refresh_file_index(table)
+    workspace.refresh_partition_index(table)
     assert maintained == by_path(workspace.load_file_index(table))
 
 
@@ -812,6 +814,23 @@ def test_batches_spread_near_equal_keys_over_cores():
     assert all(sum(r for _, r, _ in b) <= 3000 for b in capped)
 
 
+def test_batches_take_the_fewest_batches_when_rows_bind():
+    """When the row cap binds, the keys go in the fewest batches that keep
+    under it: 16 keys of 1,000 rows under 2,500 rows make 8 batches of 2,
+    whatever the byte cap asks for."""
+    from tailpipe_spark.compact import _batches
+
+    small = [(f"k{i}", 1000, 6_000_000) for i in range(16)]
+    for cap in (10**12, -(-sum(b for _, _, b in small) // 4)):
+        got = list(_batches(small, 2500, cap))
+        assert [len(b) for b in got] == [2] * 8
+        assert [e for b in got for e in b] == small
+    # a key left with no rows still rides in a batch, not one of its own
+    tail = small[:3] + [("gone", 0, 6_000_000)]
+    got = list(_batches(tail, 2500, 10**12))
+    assert len(got) == 2 and len(got[-1]) > 1
+
+
 def test_delete_range_rewrites_small_keys_in_one_write(spark, workspace, tmp_path):
     """A delete over small keys goes through the batched rewrite: the
     survivors of each key land in one time-sorted file, and a key left
@@ -868,7 +887,7 @@ def test_compaction_mixes_windowed_and_batched_keys(spark, workspace, tmp_path):
     os.makedirs(os.path.join(base, empty))
     for n in ("part-0.parquet", "part-1.parquet"):
         pq.write_table(pq.read_table(src).slice(0, 0), os.path.join(base, empty, n))
-    workspace.refresh_file_index("t_mix")
+    workspace.refresh_partition_index("t_mix")
     big_key = next(
         k for k in enumerate_partition_keys(workspace, "t_mix") if k.relpath == big
     )
@@ -1227,3 +1246,90 @@ def test_compaction_merges_a_file_dropped_behind_the_index(spark, workspace, tmp
     assert workspace.read_table(spark, "t_drop").count() == 8
     assert workspace.pruned_files("t_drop") is not None
     _assert_index_fresh(workspace, "t_drop")
+
+
+def _low_id_dirs(workspace, table):
+    """The key dirs of the files ``pruned_files`` keeps for ids 0-999,
+    and whether those files are a strict subset of the table's."""
+    import os
+
+    kept = workspace.pruned_files(table, predicates={"id": (0, 999)})
+    return {os.path.dirname(p) for p in kept}, len(kept) < len(workspace.files(table))
+
+
+@pytest.mark.parametrize("rewrite", ["bucket_rewrite", "reindex"])
+def test_whole_table_rewrite_keeps_zorder_stats(spark, workspace, tmp_path, rewrite):
+    """A whole-table rewrite after a z-ordered compaction keeps the
+    z-order companion stats on every index entry, so pruning on that
+    column still skips every key dir but the one holding the ids."""
+    from tailpipe_spark.compact import bucket_rewrite
+
+    _collect_rows(spark, workspace, tmp_path, "t_zs", [
+        [(1000 * k + 10 * b + i, f"k{k}", f"2024-05-0{i + 1}T0{b}:00:00")
+         for k in range(4) for i in range(5)]
+        for b in range(2)
+    ])
+    compact_table(spark, workspace, "t_zs", zorder_by=["tp_timestamp", "id"])
+    _assert_index_fresh(workspace, "t_zs")
+    before = _low_id_dirs(workspace, "t_zs")
+    assert len(before[0]) == 1 and before[1]
+    rows = workspace.row_count("t_zs")
+
+    if rewrite == "bucket_rewrite":
+        bucket_rewrite(spark, workspace, "t_zs", ["id"], 2, force=True)
+    else:
+        compact_table(spark, workspace, "t_zs", reindex_expr="idx")
+    assert all((e.get("cols") or {}).get("id") for e in workspace.load_file_index("t_zs"))
+    assert _low_id_dirs(workspace, "t_zs") == before
+    assert workspace.row_count("t_zs") == rows
+    _assert_index_fresh(workspace, "t_zs")
+
+
+def test_whole_table_rewrites_keep_index_fresh(spark, workspace, tmp_path):
+    """A reindex compaction and a bucket_rewrite each commit a whole-table
+    swap whose index equals a full rebuild, and record one snapshot."""
+    import os
+
+    from tailpipe_spark.compact import bucket_rewrite
+
+    _collect_rows(spark, workspace, tmp_path, "t_whole", [
+        [(10 * b + i, idx, f"2024-0{m}-0{i + 1}T00:00:00")
+         for m in (1, 2) for idx in ("a", "b") for i in range(3)]
+        for b in range(2)
+    ])
+    facts = _key_facts(spark, workspace, "t_whole")
+    snaps = len(workspace._load()["snapshots"])
+    compact_table(spark, workspace, "t_whole", reindex_expr="idx")
+    _assert_index_fresh(workspace, "t_whole")
+    bucket_rewrite(spark, workspace, "t_whole", ["id"], 2, force=True)
+    _assert_index_fresh(workspace, "t_whole")
+    assert workspace.table_layout("t_whole")["num_buckets"] == 2
+    ops = [s["op"] for s in workspace._load()["snapshots"][snaps:]]
+    assert ops == ["compact", "bucket"]
+    assert _key_facts(spark, workspace, "t_whole") == facts
+    assert not os.listdir(workspace.staging_dir)
+
+
+def test_quarantine_keeps_index_equal_to_a_rebuild(spark, workspace, tmp_path):
+    """Quarantining corrupt files re-indexes the dirs that lost one, a
+    file at the table dir's top included: the index equals a full
+    rebuild, companion stats and all."""
+    import os
+
+    from tailpipe_spark.repair import quarantine_invalid_files
+
+    _collect_rows(spark, workspace, tmp_path, "t_q", [
+        [(10 * b + i, idx, f"2024-05-0{i + 1}T00:00:00") for idx in ("a", "b") for i in range(3)]
+        for b in range(2)
+    ])
+    compact_table(spark, workspace, "t_q", zorder_by=["tp_timestamp", "id"])
+    victim = sorted(workspace.pruned_files("t_q"))[0]
+    with open(victim, "wb") as f:
+        f.write(b"this is not parquet at all")
+    with open(os.path.join(workspace.table_dir("t_q"), "top.parquet"), "wb") as f:
+        f.write(b"nor is this")
+
+    assert len(quarantine_invalid_files(workspace, "t_q")) == 2
+    assert workspace.pruned_files("t_q") is not None
+    assert all((e.get("cols") or {}).get("id") for e in workspace.load_file_index("t_q"))
+    _assert_index_fresh(workspace, "t_q")

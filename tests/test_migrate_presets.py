@@ -109,7 +109,7 @@ def test_migrate_into_collected_table_keeps_index_fresh(spark, workspace, tmp_pa
     assert workspace.pruned_files("logs") is not None
     live = index()
     assert len(live) == workspace.file_stats("logs")["files"]
-    workspace.refresh_file_index("logs")
+    workspace.refresh_partition_index("logs")
     assert live == index()
 
 

@@ -167,7 +167,7 @@ def test_multi_column_index_prunes_on_companion_column(spark, tmp_path, workspac
     tdir = workspace.table_dir("zt")
     workspace.ensure_table("zt", {"k": "bigint", "cpu": "bigint"})
     zorder_rewrite(df, ["k", "cpu"], 16).write.mode("overwrite").parquet(tdir)
-    n = workspace.refresh_file_index("zt", columns=["cpu"])
+    n = workspace.refresh_partition_index("zt", columns=["cpu"])
     assert n >= 16
     all_files = workspace.pruned_files("zt")
     narrow = workspace.pruned_files("zt", predicates={"cpu": (0, 2000)})
@@ -247,7 +247,7 @@ def test_incremental_append_reads_only_new_footers(
     assert len(footer_reads) <= n_new  # never rescans existing files
 
     # merged index == full rebuild
-    cat.refresh_file_index("metrics")
+    cat.refresh_partition_index("metrics")
     rebuilt = _index_by_path(cat)
     assert merged == rebuilt
 
@@ -293,7 +293,7 @@ def test_compact_refreshes_only_rewritten_keys(
     assert res["keys_rewritten"] >= 1
     after = _index_by_path(cat)
     # index matches a from-scratch rebuild
-    cat.refresh_file_index("metrics")
+    cat.refresh_partition_index("metrics")
     assert after == _index_by_path(cat)
     assert set(after) != set(before)  # files actually changed
 
@@ -312,7 +312,7 @@ def test_delete_keeps_index_fresh(monthly_workspace, spark):
     assert n > 0
     assert cat.pruned_files("metrics") is not None  # index not stale
     live = _index_by_path(cat)
-    cat.refresh_file_index("metrics")
+    cat.refresh_partition_index("metrics")
     assert live == _index_by_path(cat)
 
 
@@ -455,24 +455,3 @@ def test_merge_appends_constant_lines_not_index_rewrite(monthly_workspace, tmp_p
     new_files = len(cat.load_file_index("metrics")) - before_lines
     assert new_files >= 1
     assert after_lines == before_lines + new_files  # append, not rewrite
-
-
-def test_legacy_manifest_index_migrates_to_sidecar(monthly_workspace):
-    """Pre-sidecar workspaces (index embedded in manifest.json) keep
-    working: reads fall back, and the first merge migrates."""
-    cat = monthly_workspace
-    idx = cat.load_file_index("metrics")
-    # simulate a legacy workspace: index in manifest, no sidecar
-    m = cat._load()
-    m["tables"]["metrics"]["file_index"] = idx
-    cat._store(m)
-    os.unlink(cat._index_path("metrics"))
-    assert cat.load_file_index("metrics") == idx  # legacy fallback read
-    assert cat.pruned_files("metrics") is not None
-    n = cat.merge_file_index("metrics", [])  # no new files; migrates
-    assert n == 0  # nothing appended; migration is a side effect
-    assert os.path.exists(cat._index_path("metrics"))
-    assert "file_index" not in cat._load()["tables"]["metrics"]
-    assert {e["path"] for e in cat.load_file_index("metrics")} == {
-        e["path"] for e in idx
-    }

@@ -288,6 +288,36 @@ def test_rollup_maintenance_and_continuous_read(spark, tmp_path):
     assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
 
 
+def test_swap_rollup_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """The swap layout's first batch overwrites its date partitions
+    dynamically through a writer option: partitionOverwriteMode reads the
+    same before and after the run, both in the caller's session and in
+    the clone of it that Structured Streaming runs each batch in."""
+    from tailpipe_spark.streaming.rollup import maintain_rollup
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, f"2024-01-0{1 + i % 2}T0{i}:15:00", "a") for i in range(4)],
+        "event_id long, ts_s string, event_type string",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s").write.parquet(src)
+    rollup_path = str(tmp_path / "rollup")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(conf, "static")
+    try:
+        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        q = maintain_rollup(
+            stream, rollup_path, "ts", "1 hour", ["event_type"],
+            [F.count(F.lit(1)).alias("n_events")], checkpoint=str(tmp_path / "ck"),
+        )
+        q.awaitTermination()
+        assert spark.conf.get(conf) == "static"
+        batch_session = q._jsq.streamingQuery().sparkSessionForStream()
+        assert batch_session.conf().get(conf) == "static"
+    finally:
+        spark.conf.unset(conf)
+    assert spark.read.parquet(rollup_path).agg(F.sum("n_events")).collect()[0][0] == 4
+
+
 def test_rollup_rejects_unaligned_boundary(spark):
     import pytest as _pytest
 
