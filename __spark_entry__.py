@@ -32,8 +32,8 @@ _VERIFY_FIRST = [
     "emb_norm_stats",
     # Rows-only entries are excluded from the window by _rotated(), so
     # every name here carries oracle SQL.
-    # plans restructured, values proven hash-identical before adoption
-    # (OPTIMIZATION_r14.md):
+    # plans restructured, values proven hash-identical to the old plans
+    # before adoption, so each stays in the checked window:
     # q_json_extract (fast-path regexp_extract deduplicated 4x -> 2x),
     # q_topk_window (aggregate-before-join), q05 (customer join as
     # LEFT SEMI pure filter), data_token_budget (bounded-prefix

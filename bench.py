@@ -502,9 +502,8 @@ def main() -> int:
     # unparseable), so the on-disk file is the complete record and the
     # stdout line below is a compact subset guaranteed to fit the capture.
     # Default path is gitignored scratch (.bench/), so a run never
-    # overwrites the curated committed BENCH_LOCAL.json or dirties the
-    # tree; the committed record only changes via an explicit
-    # SPARK_GRAFT_BENCH_OUT.
+    # dirties the tree; a record meant to be kept is written only via an
+    # explicit SPARK_GRAFT_BENCH_OUT.
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(
@@ -525,7 +524,7 @@ def main() -> int:
     except OSError:
         pass  # read-only checkout must not kill the bench
     # Compact stdout payload: drop the per-rep arrays and per-query
-    # baseline map (both live in BENCH_LOCAL.json) so the LAST stdout
+    # baseline map (both stay in the on-disk record above) so the LAST stdout
     # line stays well under the driver's 2000-char tail window and
     # json.loads(last_line) always succeeds.
     stdout_payload = {

@@ -406,7 +406,13 @@ class Catalog:
         return None
 
     def record_snapshot(self, op: str, detail: dict | None = None) -> int:
+        """Append a snapshot to the manifest. Every writer records one
+        under the writer lock, so this write also drops the manifest-
+        embedded ``file_index`` a pre-sidecar workspace still carries:
+        nothing reads it, yet every ``_load``/``_store`` parsed it."""
         m = self._load()
+        for t in m["tables"].values():
+            t.pop("file_index", None)
         snap_id = len(m["snapshots"]) + 1
         m["snapshots"].append(
             {"id": snap_id, "op": op, "ts": time.time(), **(detail or {})}

@@ -57,10 +57,12 @@ def render_stream(
     For ``table`` output, column widths come from the first page only
     (a full-result width pass would defeat streaming).
     """
+    import itertools
+
     cols = df.columns
     rows = df.toLocalIterator()
 
-    def pages():
+    def fetch():
         page = []
         for r in rows:
             page.append(r)
@@ -70,10 +72,16 @@ def render_stream(
         if page:
             yield page
 
+    # the first page is fetched before anything is yielded: a query that
+    # fails within it (a corrupt file) has then printed nothing, so
+    # cmd_query can still quarantine and retry it
+    fetched = fetch()
+    pages = itertools.chain(list(itertools.islice(fetched, 1)), fetched)
+
     if output == "json":
         yield "["
         first = True
-        for page in pages():
+        for page in pages:
             body = ",\n".join(
                 json.dumps({c: _jsonable(r[c]) for c in cols}, default=str)
                 for r in page
@@ -86,7 +94,7 @@ def render_stream(
     if output == "csv":
         if header:
             yield separator.join(cols)
-        for page in pages():
+        for page in pages:
             yield "\n".join(
                 separator.join("" if r[c] is None else str(r[c]) for c in cols)
                 for r in page
@@ -98,7 +106,7 @@ def render_stream(
         # blank line (the reference's fourth format: .output line)
         first = True
         w = max((len(c) for c in cols), default=0)
-        for page in pages():
+        for page in pages:
             for r in page:
                 if not first:
                     yield ""
@@ -109,7 +117,7 @@ def render_stream(
 
     # table: widths fixed after the first page
     widths = None
-    for page in pages():
+    for page in pages:
         if widths is None:
             widths = [
                 max(len(c), *(len(str(r[c])) for r in page)) for c in cols

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TP_COLUMNS = ("tp_timestamp", "tp_date", "tp_index", "tp_partition", "tp_table")
 DEFAULT_INDEX = "default"
 
 

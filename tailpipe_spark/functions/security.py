@@ -1,7 +1,7 @@
-"""Threat-detection functions (the north-star extension layer:
-BASELINE.json 'Spark SQL over Parquet with custom threat-detection
-UDFs'). All pure Column expressions — JVM-side, codegen-friendly — not
-Python UDFs, so they run at scan speed over 100 TB of logs.
+"""Threat-detection functions: the engine's extension layer beyond the
+reference, Spark SQL over Parquet with custom threat-detection
+functions. All pure Column expressions — JVM-side, codegen-friendly —
+not Python UDFs, so they run at scan speed over 100 TB of logs.
 """
 
 from __future__ import annotations
@@ -50,20 +50,6 @@ def is_private_ip(ip: Column) -> Column:
         | ip_in_cidr(ip, "127.0.0.0/8")
         | ip_in_cidr(ip, "169.254.0.0/16")
     )
-
-
-def extract_domain(url: Column) -> Column:
-    """Registrable-ish domain from a URL or hostname (no PSL — last two
-    labels), for fast log triage. Case-folded first: schemes and hosts
-    are case-insensitive, and 'HTTP://x' must not yield 'HTTP'."""
-    url = F.lower(url)
-    host = F.regexp_extract(url, r"^(?:[a-z][a-z0-9+.-]*://)?(?:[^/@]*@)?([^/:?#]+)", 1)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    return F.when(
-        n >= 2,
-        F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1)),
-    ).otherwise(host)
 
 
 def shannon_entropy(s: Column) -> Column:

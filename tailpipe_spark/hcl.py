@@ -128,14 +128,6 @@ class _Parser:
         self.i += 1
         return tok
 
-    def expect(self, kind: str, value: str | None = None):
-        tok = self.next()
-        if tok[0] != kind or (value is not None and tok[1] != value):
-            raise HclParseError(
-                f"expected {value or kind}, got {tok[1]!r}", tok[2]
-            )
-        return tok
-
     # --- grammar ---
     def parse_body(self, root: HclBlock, closing: str | None):
         while True:

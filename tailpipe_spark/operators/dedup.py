@@ -42,13 +42,6 @@ def exact_dedup_stats(docs: DataFrame, text_col: str = "text", id_col: str = "do
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id document per exact-normalized-text group."""
-    h = docs.withColumn("__h", F.md5(normalize_text(F.col(text_col))))
-    keep = h.groupBy("__h").agg(F.min(id_col).alias(id_col))
-    return h.join(keep, [id_col, "__h"], "inner").drop("__h")
-
-
 def _tokens(docs: DataFrame, text_col: str, n: int, id_col: str) -> DataFrame:
     """(id, token-array) rows for docs long enough to yield a gram.
 
@@ -60,27 +53,6 @@ def _tokens(docs: DataFrame, text_col: str, n: int, id_col: str) -> DataFrame:
     return docs.select(
         F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__t")
     ).where(F.size("__t") >= n)
-
-
-def _gram_array_col(n: int):
-    """Distinct n-gram array from a materialized ``__t`` token column.
-    Row-local set semantics via array_distinct — no DISTINCT shuffle."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size("__t") - n),
-            lambda i: F.array_join(F.slice("__t", i + 1, n), " "),
-        )
-    )
-
-
-def token_ngrams(docs: DataFrame, text_col: str, n: int, id_col: str = "doc_id") -> DataFrame:
-    """(id, gram) pairs — distinct word n-grams per document.
-
-    Docs shorter than n tokens yield no grams; the sequence bound makes
-    every emitted slice exactly n tokens, so no post-filter re-split."""
-    return _tokens(docs, text_col, n, id_col).select(
-        id_col, F.explode(_gram_array_col(n)).alias("gram")
-    )
 
 
 def token_ngram_hashes(
@@ -97,8 +69,8 @@ def token_ngram_hashes(
     applied to the hash array — identical set sizes to string-distinct
     modulo 64-bit collisions (~|grams_doc|²/2⁶⁴, the same accepted odds
     as hashing the strings). Use wherever grams are only compared for
-    EQUALITY; portable md5 chains (minhash/simhash twins) must keep
-    :func:`token_ngrams`' string grams for cross-engine replay."""
+    EQUALITY; portable md5 chains (minhash/simhash twins) hash gram
+    strings instead, for cross-engine replay."""
     args = ", ".join(f"element_at(__t, i + {j + 1})" for j in range(n))
     gram_hashes = F.expr(
         f"array_distinct(transform(sequence(0, size(__t) - {n}), "

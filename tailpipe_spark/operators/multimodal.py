@@ -2,8 +2,8 @@
 metadata, with Arrow-batched processing plumbing.
 
 Kernel status:
-- image decode: REAL (Pillow when installed, stdlib PNG otherwise)
-- audio decode + resample: REAL for PCM WAV (stdlib ``wave`` + numpy);
+- image: a deterministic feature stub (``extract_features``)
+- audio decode: REAL for PCM WAV (stdlib ``wave`` + numpy);
   compressed codecs (mp3/ogg) land in the error column
 - video frame decode: REAL for GIF (stdlib LZW encoder+decoder pair,
   variable-width codes, 12-bit dictionary reset); ffmpeg-class
@@ -65,8 +65,6 @@ def _decode_stub(payload: bytes, modality: str) -> list[float]:
     — not available in this container. The stub derives an 8-dim
     feature from payload bytes so the pipeline is end-to-end testable
     and reproducible; swap this body for the real kernel in production.
-    A REAL image kernel exists alongside (``decode_images``): Pillow
-    when installed, stdlib PNG decode otherwise.
     """
     if payload is None:
         raise NotImplementedError("real decode needs codec libraries")
@@ -74,186 +72,6 @@ def _decode_stub(payload: bytes, modality: str) -> list[float]:
     for i, b in enumerate(payload):
         acc[i % 8] = (acc[i % 8] + b) % 997
     return [float(x) / 997.0 for x in acc]
-
-
-# --- real image decode kernel ---------------------------------------
-#
-# Pillow-first: any format PIL can open. When Pillow is absent (this
-# container), a pure-stdlib PNG path (zlib inflate + per-scanline
-# unfiltering, PNG spec §9 filters 0-4) decodes 8-bit non-interlaced
-# gray / gray+alpha / RGB / RGBA — so the kernel is REAL and testable
-# here, not a stub, and production just gets more formats for free.
-
-try:  # optional dependency — decode_images degrades to the PNG path
-    from PIL import Image as _PILImage  # type: ignore
-
-    _HAS_PIL = True
-except ImportError:  # pragma: no cover - exercised where Pillow exists
-    _PILImage = None
-    _HAS_PIL = False
-
-#: PNG color type → (mode name, channel count) for 8-bit depth
-_PNG_MODES = {0: ("L", 1), 2: ("RGB", 3), 4: ("LA", 2), 6: ("RGBA", 4)}
-
-
-def _png_decode(payload: bytes) -> tuple[int, int, str, list[float]]:
-    """Decode an 8-bit non-interlaced PNG with the stdlib only.
-
-    Returns (width, height, mode, per-channel mean in 0-255). Raises
-    ValueError on anything outside the supported subset.
-    """
-    import struct
-    import zlib
-
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG signature")
-    pos, idat, meta = 8, b"", None
-    while pos + 8 <= len(payload):
-        (length,), ctype = struct.unpack(">I", payload[pos : pos + 4]), payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            w, h, depth, color, _comp, _filt, interlace = struct.unpack(">IIBBBBB", data)
-            if depth != 8 or interlace != 0 or color not in _PNG_MODES:
-                raise ValueError(
-                    f"unsupported PNG (depth={depth} color={color} interlace={interlace})"
-                )
-            meta = (w, h, color)
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if meta is None or not idat:
-        raise ValueError("missing IHDR or IDAT")
-    w, h, color = meta
-    mode, nch = _PNG_MODES[color]
-    raw = zlib.decompress(idat)
-    stride = w * nch
-    if len(raw) < h * (stride + 1):
-        raise ValueError("truncated pixel data")
-    sums = [0] * nch
-    prev = bytearray(stride)
-    for row in range(h):
-        off = row * (stride + 1)
-        filt = raw[off]
-        line = bytearray(raw[off + 1 : off + 1 + stride])
-        if filt == 1:  # Sub
-            for i in range(nch, stride):
-                line[i] = (line[i] + line[i - nch]) & 0xFF
-        elif filt == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif filt == 3:  # Average
-            for i in range(stride):
-                left = line[i - nch] if i >= nch else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif filt == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - nch] if i >= nch else 0
-                b = prev[i]
-                c = prev[i - nch] if i >= nch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif filt != 0:
-            raise ValueError(f"unknown PNG filter {filt}")
-        for i in range(stride):
-            sums[i % nch] += line[i]
-        prev = line
-    n_px = w * h
-    return w, h, mode, [s / n_px for s in sums]
-
-
-def decode_image(payload: bytes) -> dict:
-    """Decode one image payload → dims, mode, per-channel mean.
-
-    Pillow handles any format when installed; otherwise the stdlib PNG
-    decoder runs. Returns a dict matching IMAGE_DECODE_SCHEMA fields
-    (error populated, the rest None, on undecodable input).
-    """
-    if _HAS_PIL:
-        import io
-
-        try:
-            with _PILImage.open(io.BytesIO(payload)) as im:
-                im.load()
-                nch = len(im.getbands())
-                # per-channel mean over all pixels, 0-255 scale
-                hist_means = []
-                px = list(im.getdata())
-                if nch == 1:
-                    hist_means = [sum(px) / len(px)]
-                else:
-                    for c in range(nch):
-                        hist_means.append(sum(p[c] for p in px) / len(px))
-                return {
-                    "width": im.width,
-                    "height": im.height,
-                    "mode": im.mode,
-                    "avg_channel": [float(x) for x in hist_means],
-                    "backend": "pillow",
-                    "error": None,
-                }
-        except Exception as e:  # noqa: BLE001 — corrupt inputs are data, not bugs
-            return {
-                "width": None, "height": None, "mode": None,
-                "avg_channel": None, "backend": "pillow", "error": str(e)[:200],
-            }
-    try:
-        w, h, mode, means = _png_decode(payload)
-        return {
-            "width": w, "height": h, "mode": mode,
-            "avg_channel": [float(m) for m in means],
-            "backend": "stdlib-png", "error": None,
-        }
-    except Exception as e:  # noqa: BLE001
-        return {
-            "width": None, "height": None, "mode": None,
-            "avg_channel": None, "backend": "stdlib-png", "error": str(e)[:200],
-        }
-
-
-IMAGE_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mode", T.StringType(), True),
-        T.StructField("avg_channel", T.ArrayType(T.FloatType()), True),
-        T.StructField("backend", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def decode_images(assets: DataFrame) -> DataFrame:
-    """Image payloads → (dims, mode, per-channel mean) via Arrow-batched
-    mapInPandas. Corrupt payloads land in the ``error`` column instead
-    of failing the job — at 100 TB some inputs WILL be malformed, and a
-    task retry loop on bad data is a cluster-killer."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        {"asset_id": aid, "width": None, "height": None,
-                         "mode": None, "avg_channel": None, "backend": None,
-                         "error": "null payload"}
-                    )
-                else:
-                    d = decode_image(bytes(payload))
-                    d["asset_id"] = aid
-                    rows.append(d)
-            yield pd.DataFrame(rows)
-
-    return (
-        assets.filter(F.col("modality") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(run, schema=IMAGE_DECODE_SCHEMA)
-    )
 
 
 def extract_features(assets: DataFrame, batch_hint: int = 1024) -> DataFrame:
@@ -290,37 +108,12 @@ def extract_features(assets: DataFrame, batch_hint: int = 1024) -> DataFrame:
     return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing: filters to images, updates metadata, and
-    passes payloads through the (stubbed) kernel batch-wise."""
-
-    out_schema = T.StructType(
-        list(ASSET_SCHEMA.fields)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # REAL kernel would decode+resize; stub keeps payload, fixes meta
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {"width": width, "height": height, "duration_ms": None, "sample_rate": None}
-                for _ in range(len(pdf))
-            ]
-            yield pdf
-
-    return (
-        assets.filter(F.col("modality") == "image")
-        .mapInPandas(run, schema=out_schema)
-    )
-
-
 # --- real audio (WAV/PCM) kernels ------------------------------------
 #
 # The stdlib ``wave`` module parses RIFF/WAVE PCM containers and numpy
-# does the sample math, so — like the image path — the audio kernel is
-# REAL here, not a stub: decode (dims/duration/per-channel RMS+peak)
-# and linear-interpolation resampling both work on any 8/16/32-bit PCM
-# WAV. Compressed formats (mp3/ogg/flac) need codec libs and land in
+# does the sample math, so the audio kernel is REAL here, not a stub:
+# decode (dims/duration/per-channel RMS+peak) works on any 8/16/32-bit
+# PCM WAV. Compressed formats (mp3/ogg/flac) need codec libs and land in
 # the ``error`` column; production swaps :func:`decode_wav` for a
 # torchaudio/ffmpeg call with the same contract.
 
@@ -411,7 +204,7 @@ _AUDIO_NULL = {
 def decode_audio(assets: DataFrame) -> DataFrame:
     """Audio payloads → (params, per-channel RMS/peak) via Arrow-batched
     mapInPandas; undecodable payloads land in ``error`` (same corrupt-
-    input containment as :func:`decode_images`)."""
+    input containment as :func:`decode_video`)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -435,81 +228,6 @@ def decode_audio(assets: DataFrame) -> DataFrame:
         assets.filter(F.col("modality") == "audio")
         .select("asset_id", "payload")
         .mapInPandas(run, schema=AUDIO_DECODE_SCHEMA)
-    )
-
-
-#: ASSET_SCHEMA + an error column (corrupt-input containment)
-RESAMPLE_SCHEMA = T.StructType(
-    list(ASSET_SCHEMA.fields) + [T.StructField("error", T.StringType(), True)]
-)
-
-
-def resample_audio(assets: DataFrame, sample_rate: int) -> DataFrame:
-    """REAL audio resampling for PCM WAV: decode with the stdlib wave
-    reader, linear-interpolate each channel onto the new sample grid
-    (numpy, vectorized per Arrow batch), re-encode as 16-bit PCM.
-    Non-PCM payloads pass through unchanged with ``error`` set and their
-    original meta intact — a task retry loop on undecodable data is a
-    cluster-killer at 100 TB."""
-
-    def _resample_one(payload: bytes) -> tuple[bytes, int, int]:
-        import io
-        import wave
-
-        import numpy as np
-
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            nch, width, rate = w.getnchannels(), w.getsampwidth(), w.getframerate()
-            n_frames = w.getnframes()
-            frames = w.readframes(n_frames)
-        if width not in _WAV_DTYPES:
-            raise ValueError(f"unsupported sample width {width}")
-        x = np.frombuffer(frames, dtype=_WAV_DTYPES[width]).astype(np.float64)
-        if width == 1:
-            x = (x - 128.0) * 256.0  # widen 8-bit to 16-bit range
-        elif width == 4:
-            x = x / 65536.0  # narrow 32-bit to 16-bit range
-        x = x.reshape(-1, nch)
-        n_out = max(1, round(n_frames * sample_rate / rate))
-        t_in = np.arange(n_frames, dtype=np.float64) / rate
-        t_out = np.arange(n_out, dtype=np.float64) / sample_rate
-        y = np.column_stack(
-            [np.interp(t_out, t_in, x[:, c]) for c in range(nch)]
-        )
-        return encode_wav_pcm16(y, sample_rate), n_out, nch
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas, errors = [], [], []
-            for payload, meta in zip(pdf["payload"], pdf["meta"]):
-                meta = dict(meta) if meta is not None else {}
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    out, n_out, _nch = _resample_one(bytes(payload))
-                    payloads.append(out)
-                    metas.append(
-                        {
-                            "width": None,
-                            "height": None,
-                            "duration_ms": n_out * 1000 // sample_rate,
-                            "sample_rate": sample_rate,
-                        }
-                    )
-                    errors.append(None)
-                except Exception as e:  # noqa: BLE001
-                    payloads.append(payload)  # passthrough, meta unchanged
-                    metas.append(meta or None)
-                    errors.append(str(e)[:200])
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            pdf["meta"] = metas
-            pdf["error"] = errors
-            yield pdf
-
-    return (
-        assets.filter(F.col("modality") == "audio")
-        .mapInPandas(run, schema=RESAMPLE_SCHEMA)
     )
 
 
@@ -1031,19 +749,3 @@ def decode_video(assets: DataFrame) -> DataFrame:
     return assets.filter(F.col("modality") == "video").mapInPandas(
         run, schema=VIDEO_FRAME_SCHEMA
     )
-
-
-def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video → frame rows (one row per sampled frame). The explode is
-    computed from metadata JVM-side; per-frame decode is
-    :func:`decode_video`'s job (real for GIF/Y4M/raw AVI)."""
-    videos = assets.filter(F.col("modality") == "video")
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / F.lit(every_ms)).cast("int"), F.lit(1)
-    )
-    frames = videos.select(
-        "asset_id",
-        "payload",
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_no"),
-    )
-    return frames.withColumn("frame_ts_ms", F.col("frame_no") * F.lit(every_ms))

@@ -1,74 +1,40 @@
-"""Skew-tolerant joins via key salting.
+"""Skew-tolerant aggregation via key salting.
 
-AQE's skew-join splitting (enabled in build_session) handles most skew
-at runtime; salting is the explicit fallback for pathological keys
-(e.g. the one tenant producing 40% of log rows) and for aggregations:
-
-- ``salted_join``: replicate the small side ``salt`` ways; shard the
-  big side's hot keys across salt buckets. The shuffle then spreads a
-  hot key over ``salt`` reducers instead of one straggler.
-- ``two_phase_agg``: count/sum by (key, salt) first (parallel), then
-  re-aggregate by key — the classic skewed-groupBy rewrite. (Partial
-  map-side aggregation already does this for algebraic aggs; the
-  explicit form matters for count-distinct-style state.)
+AQE's skew-join splitting (enabled in build_session) handles skewed
+joins at runtime; salting is the explicit fallback for aggregations
+over pathological keys (e.g. the one tenant producing 40% of log rows):
+``two_phase_agg`` counts/sums by (key, salt) first (parallel), then
+re-aggregates by key — the classic skewed-groupBy rewrite. (Partial
+map-side aggregation already does this for algebraic aggs; the
+explicit form matters for count-distinct-style state.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _salt_col(salt: int):
-    """Uniform [0, salt) bucket per row — shared by both skew rewrites.
+    """Uniform [0, salt) bucket per row.
 
     AQE-safety (the distributed_cumsum class of bug — two consumers of
     one nondeterministic exchange disagreeing after an AQE re-plan):
     this column IS nondeterministic (monotonically_increasing_id is
     partition-placement-dependent, so a re-executed stage can assign a
-    row a DIFFERENT salt), but both rewrites are salt-assignment-
-    INVARIANT, so no plan change can surface it. ``two_phase_agg`` is a
-    linear chain with a single consumer: whatever salt each row gets,
-    it lands in exactly one (key, salt) cell and phase 2 merges ALL
-    cells — count/sum/min/max are partition-of-the-multiset invariant
-    (for ``sum`` over doubles that holds up to FP reorder, the generic
+    row a DIFFERENT salt), but ``two_phase_agg`` is salt-assignment-
+    INVARIANT, so no plan change can surface it. It is a linear chain
+    with a single consumer: whatever salt each row gets, it lands in
+    exactly one (key, salt) cell and phase 2 merges ALL cells —
+    count/sum/min/max are partition-of-the-multiset invariant (for
+    ``sum`` over doubles that holds up to FP reorder, the generic
     double-sum caveat; the registry entry routes doubles through a
-    decimal cast so even the reorder is exact). ``salted_join``
-    replicates the small side over ALL salt values, so any salt the
-    big row draws matches exactly one replica — the join result is the
-    plain equi-join verbatim under every assignment. Neither rewrite
-    ever JOINS two frames that both derive from the same salt column,
-    which is the shape that actually broke distributed_cumsum. Pinned
-    by tests/test_aqe_multiconsumer.py (AQE forced on, results
-    compared to AQE off)."""
+    decimal cast so even the reorder is exact). It never JOINS two
+    frames that both derive from the same salt column, which is the
+    shape that actually broke distributed_cumsum. Pinned by
+    tests/test_aqe_multiconsumer.py (AQE forced on, results compared
+    to AQE off)."""
     return F.abs(F.xxhash64(F.monotonically_increasing_id()) % salt).cast("int")
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``big``'s key distribution is skewed and
-    ``small`` is too large to broadcast. Output columns = big's + small's
-    (minus the duplicate key).
-
-    Only ``inner`` and ``left`` (big-side-preserving) joins are valid:
-    the small side is replicated ``salt`` ways, so a right/full outer
-    would emit each unmatched small-side row once per replica."""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left' only (got {how!r}); "
-            "the replicated small side breaks right/full outer semantics"
-        )
-    big_s = big.withColumn("__salt", _salt_col(salt))
-    small_s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    out = big_s.join(small_s, [on, "__salt"], how)
-    return out.drop("__salt")
 
 
 def two_phase_agg(

@@ -2,7 +2,7 @@
 a named (Spark DataFrame plan, DuckDB oracle SQL) pair.
 
 The driver runs each Spark plan and its oracle side-by-side at sf0.01
-and hash-compares results (CORRECTNESS_r{N}.json). Entries with
+and hash-compares results. Entries with
 ``oracle=None`` are non-SQL-expressible (or engine-specific hashing)
 and get a rows-only check.
 """

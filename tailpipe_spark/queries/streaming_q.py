@@ -356,15 +356,14 @@ ORDER BY bucket_start, event_type
 
 def q_rollup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Object-store-safe rollup maintenance driven end-to-end
-    (streaming/rollup.py ``layout="manifest"``): an availableNow
-    maintenance stream materializes daily buckets into generation
-    dirs committed by an atomic pointer-file replace (single PUT on an
-    object store — where the default layout's directory renames are
-    copy+delete), then ``read_manifest_rollup`` loads ONLY the pointed
-    partitions. The write→commit→read round trip must equal
-    aggregating the raw table directly, which is what the oracle does.
-    Fixed-point value sum (functions/exact.py discipline) keeps the
-    compare exact."""
+    (streaming/rollup.py): an availableNow maintenance stream
+    materializes daily buckets into generation dirs committed by an
+    atomic pointer-file replace (single PUT on an object store, where a
+    directory rename is copy+delete), then ``read_manifest_rollup``
+    loads ONLY the pointed partitions. The write→commit→read round trip
+    must equal aggregating the raw table directly, which is what the
+    oracle does. Fixed-point value sum (functions/exact.py discipline)
+    keeps the compare exact."""
     import atexit
     import shutil
     import tempfile
@@ -384,7 +383,7 @@ def q_rollup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     q = maintain_rollup(
         src, f"{root}/rollup", "ts", "1 day", ["event_type"], aggs,
-        checkpoint=f"{root}/ck", watermark="3650 days", layout="manifest",
+        checkpoint=f"{root}/ck", watermark="3650 days",
     )
     q.awaitTermination()
     out = read_manifest_rollup(spark, f"{root}/rollup")

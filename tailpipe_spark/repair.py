@@ -8,13 +8,14 @@ internal/database/duck_db_error.go:25-80). Spark-side the equivalent is:
   and move unreadable files to ``<name>.invalid`` before they poison a
   scan;
 - reactive: a query that trips on a corrupt file quarantines the
-  offending files and runs again (``run_with_quarantine_retry``).
+  offending files and runs again (``cli.cmd_query``'s retry loop).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import time
 
 from tailpipe_spark.catalog import Catalog, FooterInfo
 
@@ -44,34 +45,32 @@ def quarantine_invalid_files(catalog: Catalog, table: str) -> list[str]:
     listing ignores extensions, so an in-place rename would still be
     scanned) into ``<workspace>/quarantine/<table>/…``; returns the
     quarantined paths. The keys that lost a file are re-indexed, so the
-    file index stays fresh and bounded queries keep pruning."""
+    file index stays fresh and bounded queries keep pruning.
+
+    The sweep runs under the workspace writer lock: it records a
+    snapshot and rewrites the index sidecar, and a concurrent writer's
+    snapshot or index append must not be lost to it (the query process
+    that calls it is otherwise a reader)."""
     base = catalog.table_dir(table)
     qdir = os.path.join(catalog.workspace, "quarantine", table)
     moved = []
     keys = set()
-    for root, _dirs, names in os.walk(base):
-        for n in names:
-            if not n.endswith(".parquet"):
+    with catalog.writer_lock(f"quarantine {table}"):
+        for rel in catalog._listing(table):
+            if _footer_readable(os.path.join(base, rel)):
                 continue
-            p = os.path.join(root, n)
-            if not _footer_readable(p):
-                import time as _time
-
-                rel = os.path.relpath(p, base)
-                # unique suffix: a later corrupt file with the same name
-                # must not overwrite previously quarantined evidence
-                dst = os.path.join(
-                    qdir, f"{rel}.{int(_time.time() * 1000)}{INVALID_SUFFIX}"
-                )
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(p, dst)
-                moved.append(dst)
-                keys.add(os.path.dirname(rel))
-    if moved:
-        catalog.record_snapshot(
-            "quarantine", {"table": table, "files": [os.path.basename(m) for m in moved]}
-        )
-        catalog.refresh_partition_index(table, sorted(keys))
+            # unique suffix: a later corrupt file with the same name
+            # must not overwrite previously quarantined evidence
+            dst = os.path.join(qdir, f"{rel}.{int(time.time() * 1000)}{INVALID_SUFFIX}")
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(os.path.join(base, rel), dst)
+            moved.append(dst)
+            keys.add(os.path.dirname(rel))
+        if moved:
+            catalog.record_snapshot(
+                "quarantine", {"table": table, "files": [os.path.basename(m) for m in moved]}
+            )
+            catalog.refresh_partition_index(table, sorted(keys))
     return moved
 
 
@@ -158,29 +157,3 @@ _CORRUPT_MARKERS = (
 def is_corrupt_parquet_error(err: BaseException) -> bool:
     msg = str(err)
     return any(m in msg for m in _CORRUPT_MARKERS)
-
-
-def run_with_quarantine_retry(
-    catalog: Catalog,
-    tables: list[str],
-    action,
-    max_retries: int = 3,
-):
-    """Run ``action()``; on an invalid-parquet failure, quarantine the
-    offending files and retry — the reference's error-retry loop
-    (internal/database/duck_db_error.go:25-80 retries after renaming the
-    invalid file). ``tables`` bounds the quarantine sweep. The retry cap
-    is small because each attempt removes the files it tripped on."""
-    attempt = 0
-    while True:
-        try:
-            return action()
-        except Exception as e:  # noqa: BLE001 — inspect then re-raise
-            if attempt >= max_retries or not is_corrupt_parquet_error(e):
-                raise
-            moved = [
-                p for t in tables for p in quarantine_invalid_files(catalog, t)
-            ]
-            if not moved:
-                raise  # nothing to remove: the retry cannot make progress
-            attempt += 1

@@ -5,11 +5,12 @@ Reference semantics (SURVEY.md §1.3-1.4):
   (reference: internal/database/convertor.go:85-86)
 - three modes per partition: complete (declared), partial (declared +
   inferred from first chunk), inferred
-  (reference: internal/database/convertor_schema.go:14-34)
-- later chunks whose inferred types differ from the frozen conversion
-  schema raise SchemaChangeError listing the changed columns
-  (reference: internal/database/convertor_convert.go:249-266,
-  convertor_schema.go:135-170)
+  (reference: internal/database/convertor_schema.go:14-34); the
+  projection is ``collect.apply_table_mapping``
+- a later chunk whose types differ from the table's frozen schema
+  raises SchemaChangeError listing the changed columns
+  (``Catalog.ensure_table``; reference: internal/database/
+  convertor_convert.go:249-266, convertor_schema.go:135-170)
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import re
 
 from pyspark.sql import types as T
 
-from tailpipe_spark.config import ColumnConfig, TableConfig
+from tailpipe_spark.config import ColumnConfig
 
 
 class SchemaChangeError(Exception):
@@ -152,78 +153,6 @@ def ddl(schema: T.StructType) -> str:
         return dt.simpleString()
 
     return cols(schema, " ")
-
-
-def resolve_conversion_schema(
-    table: TableConfig, inferred: T.StructType | None
-) -> T.StructType:
-    """Combine declared columns with (optionally) inferred ones —
-    the complete/partial/inferred resolution of
-    reference: internal/database/convertor_schema.go:14-34.
-
-    Declared columns keep declaration order and win over inference;
-    auto-mapped fields follow when ``map_fields`` allows them.
-    """
-    import fnmatch
-
-    declared = table.declared
-    fields: list[T.StructField] = []
-    for col in table.columns:
-        if col.type is not None:
-            fields.append(T.StructField(col.name, parse_type(col.type), True))
-        elif inferred is not None:
-            src = col.source or col.name
-            match = next((f for f in inferred.fields if f.name == src), None)
-            if match is None:
-                raise ValueError(
-                    f"column {col.name}: no declared type and source field "
-                    f"{src!r} not present in first chunk"
-                )
-            fields.append(T.StructField(col.name, match.dataType, True))
-        else:
-            raise ValueError(
-                f"column {col.name}: no type declared and no chunk to infer from"
-            )
-    if inferred is not None:
-        consumed = {c.source for c in table.columns if c.source}
-        for f in inferred.fields:
-            if f.name in declared or f.name in consumed:
-                continue
-            if any(fnmatch.fnmatch(f.name, pat) for pat in table.map_fields):
-                fields.append(T.StructField(f.name, f.dataType, True))
-    return T.StructType(fields)
-
-
-def check_schema_change(
-    frozen: T.StructType,
-    chunk: T.StructType,
-    typed_config_columns: set[str] = frozenset(),
-) -> None:
-    """Raise SchemaChangeError when a later chunk's inferred types differ
-    from the frozen conversion schema (ignoring columns whose type is
-    pinned by config — reference: convertor_schema.go:135-170)."""
-    frozen_by_name = {f.name: f.dataType for f in frozen.fields}
-    changes: dict[str, tuple[str, str]] = {}
-    for f in chunk.fields:
-        if f.name in typed_config_columns:
-            continue
-        old = frozen_by_name.get(f.name)
-        if old is not None and old != f.dataType and not _compatible(old, f.dataType):
-            changes[f.name] = (old.simpleString(), f.dataType.simpleString())
-    if changes:
-        raise SchemaChangeError(changes)
-
-
-def _compatible(old: T.DataType, new: T.DataType) -> bool:
-    """Widening within the integer/float families isn't a schema change."""
-    numeric = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    if isinstance(old, numeric) and isinstance(new, numeric):
-        return True
-    if isinstance(old, (T.FloatType, T.DoubleType)) and isinstance(
-        new, (*numeric, T.FloatType, T.DoubleType)
-    ):
-        return True
-    return False
 
 
 def columns_for_table(schema: T.StructType) -> list[ColumnConfig]:

@@ -34,9 +34,6 @@ TEST_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def active_cpus() -> int:
     """Cores this process may use: ``$SPARK_GRAFT_CPUS`` when it is a
     positive integer, else the box's count. A malformed value falls

@@ -48,11 +48,6 @@ class FileSource:
             compile_grok(config.file_layout) if config.file_layout else None
         )
 
-    def needs_spark(self) -> bool:
-        """True when any path is a URI (remote listing goes through the
-        session's Hadoop FileSystem)."""
-        return any(_URI_RE.match(p) for p in self.config.paths)
-
     # --- listing ---
     def _candidate_paths(self, spark: SparkSession | None) -> list[tuple[str, float]]:
         out: list[tuple[str, float]] = []

@@ -25,8 +25,6 @@ from pyspark.sql import types as T
 from tailpipe_spark.config import FormatConfig
 from tailpipe_spark.sources.grok import GROK_TYPE_CASTS, compile_grok
 
-_NAMED_GROUP = re.compile(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>")
-
 
 def read_jsonl(
     spark: SparkSession, paths: list[str], schema: T.StructType | None = None

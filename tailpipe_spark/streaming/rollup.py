@@ -6,10 +6,11 @@ history, maintained incrementally by a streaming job; queries read
 same aggregation computed on the raw tail at query time. This is the
 timescale/druid "continuous aggregate" pattern re-expressed Spark-first:
 
-- maintenance is Structured Streaming ``foreachBatch`` writing bucket
-  partitions with dynamic partition overwrite (idempotent per bucket —
-  a replayed micro-batch overwrites, never double-counts);
-- the read path is one lazy plan: partition-pruned scan of the rollup
+- maintenance is Structured Streaming ``foreachBatch`` writing the
+  merged buckets of each touched date to a fresh generation dir and
+  then atomically replacing a ``_MANIFEST.json`` pointer (idempotent
+  per bucket — a replayed micro-batch re-points, never double-counts);
+- the read path is one lazy plan: a manifest-pruned scan of the rollup
   (only buckets < boundary) unioned with a windowed agg over the raw
   tail (only files >= boundary survive pushdown/data skipping), so
   query cost is bounded by bucket count + tail size, not history size.
@@ -24,22 +25,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tailpipe_spark.locking import acquire_writer_lock, release_writer_lock
+
 #: canonical rollup schema columns produced by bucketize()
 BUCKET_COL = "bucket_start"
 
-#: pointer file committed atomically in the ``manifest`` layout
+#: pointer file naming each bucket date's live partition dir
 MANIFEST_NAME = "_MANIFEST.json"
 
-
-# The pidfile+flock writer-lock protocol moved to tailpipe_spark.locking
-# in r14 so the batch collect/compact paths share the SAME discipline
-# (r13 verdict ask #4). The underscore aliases keep this module's
-# public surface (and its tests) stable.
-from tailpipe_spark.locking import (  # noqa: E402
-    _pid_alive,  # noqa: F401 — re-exported for tests
-    acquire_writer_lock as _acquire_writer_lock,
-    release_writer_lock as _release_writer_lock,
-)
+#: live generation count past which a batch folds the rollup into one
+#: generation, so a read stays a bounded number of ``spark.read`` calls
+MAX_GENERATIONS = 32
 
 
 def _load_manifest(rollup_path: str) -> dict | None:
@@ -57,7 +53,7 @@ def _commit_manifest(rollup_path: str, manifest: dict) -> None:
     """Single-file atomic replace: ``os.replace`` on POSIX; on an
     object store this maps to one PUT of the manifest object, which is
     atomic per-object (readers see the old or the new manifest, never
-    a torn one). That atomicity is the whole point of the layout."""
+    a torn one). That atomicity is the rollup's commit point."""
     import json
     import os
 
@@ -74,11 +70,11 @@ def read_manifest_rollup(
     min_bucket_date: str | None = None,
     max_bucket_date: str | None = None,
 ) -> DataFrame:
-    """Read a ``layout="manifest"`` rollup: load ONLY the partition
-    directories the manifest points at — no directory listing of the
-    data root at all, which on an object store replaces O(files) LIST
-    calls with one GET of the pointer file (the same trick Iceberg's
-    and Delta's metadata layers play).
+    """Read a rollup: load ONLY the partition directories the manifest
+    points at — no directory listing of the data root at all, which on
+    an object store replaces O(files) LIST calls with one GET of the
+    pointer file (the same trick Iceberg's and Delta's metadata layers
+    play).
 
     ``min/max_bucket_date`` prune at the MANIFEST level (ISO date
     strings compare lexicographically), so a bounded read plans scans
@@ -128,7 +124,7 @@ def vacuum_manifest_rollup(rollup_path: str) -> list[str]:
     import shutil
 
     lock_path = f"{rollup_path.rstrip('/')}.__writer.lock"
-    _acquire_writer_lock(lock_path, "vacuum")
+    acquire_writer_lock(lock_path, "vacuum")
     try:
         manifest = _load_manifest(rollup_path) or {}
         referenced = set(manifest.get("partitions", {}).values())
@@ -151,7 +147,7 @@ def vacuum_manifest_rollup(rollup_path: str) -> list[str]:
                 shutil.rmtree(gen_abs)
         return removed
     finally:
-        _release_writer_lock(lock_path)
+        release_writer_lock(lock_path)
 
 
 def _compact_manifest_locked(spark: SparkSession, rollup_path: str) -> str | None:
@@ -162,7 +158,7 @@ def _compact_manifest_locked(spark: SparkSession, rollup_path: str) -> str | Non
     generation, so a long-maintained rollup accumulates one
     ``spark.read`` per live generation on the read path (and
     ``unionByName`` across generations is exposed to schema drift
-    between them) — r9 ADVICE. Compaction restores the single-read
+    between them). Compaction restores the single-read
     steady state; superseded generations stay readable until
     :func:`vacuum_manifest_rollup` reclaims them."""
     import os
@@ -190,20 +186,6 @@ def _compact_manifest_locked(spark: SparkSession, rollup_path: str) -> str | Non
     manifest["version"] += 1
     _commit_manifest(rollup_path, manifest)
     return gen_rel
-
-
-def compact_manifest_rollup(spark: SparkSession, rollup_path: str) -> str | None:
-    """Take the writer lock and consolidate a ``layout="manifest"``
-    rollup into a single generation (see :func:`_compact_manifest_locked`).
-    Returns the new generation's relative path, or None if the rollup
-    was already single-generation/empty. Follow with
-    :func:`vacuum_manifest_rollup` to reclaim superseded generations."""
-    lock_path = f"{rollup_path.rstrip('/')}.__writer.lock"
-    _acquire_writer_lock(lock_path, "compact")
-    try:
-        return _compact_manifest_locked(spark, rollup_path)
-    finally:
-        _release_writer_lock(lock_path)
 
 
 def _check_aligned(boundary, window: str) -> None:
@@ -249,70 +231,52 @@ def maintain_rollup(
     aggs: list[Column],
     checkpoint: str,
     watermark: str = "1 hour",
-    layout: str = "swap",
-    max_generations: int = 32,
 ):
     """Streaming maintenance: each micro-batch emits only the buckets
     it UPDATED (``update`` output mode, so watermark eviction bounds
-    the agg state — r6 ADVICE: ``complete`` mode never evicts and
-    re-emits all history every batch), merges them against the
-    already-materialized rows of the touched bucket dates, and
-    overwrites exactly those date partitions (dynamic partition
-    overwrite → idempotent under replay).
+    the agg state — ``complete`` mode never evicts and re-emits all
+    history every batch), merges them against the already-materialized
+    rows of the touched bucket dates, and re-points exactly those dates.
 
     State is O(open buckets within the watermark); each batch's sink
-    work is O(touched bucket dates), not O(history).
+    work is O(touched bucket dates), not O(history): the merge reads
+    only the touched partitions the manifest names.
 
-    **Storage contract.** Two layouts:
+    **Storage contract.** Each batch writes its merged partitions to a
+    fresh generation dir under ``<rollup_path>/data/`` and then
+    atomically replaces the ``_MANIFEST.json`` pointer file (a
+    single-object PUT — atomic on object stores too, where a directory
+    "rename" is copy+delete). Readers use :func:`read_manifest_rollup`;
+    superseded generations are garbage but never visible, reclaimed by
+    :func:`vacuum_manifest_rollup`. Past ``MAX_GENERATIONS`` live
+    generations a batch folds them into one.
 
-    - ``layout="swap"`` (default): touched date partitions are
-      rewritten to a staging dir and swapped in with directory
-      renames. Relies on directory ``rename`` being atomic and cheap —
-      true on POSIX filesystems and HDFS, NOT on object stores (S3
-      "rename" is copy+delete, during which readers see a missing
-      partition). Readers use plain ``spark.read.parquet(rollup_path)``.
-    - ``layout="manifest"``: each batch writes its merged partitions to
-      a fresh generation dir under ``<rollup_path>/data/`` and then
-      atomically replaces the ``_MANIFEST.json`` pointer file (a
-      single-object PUT — atomic on object stores too). Readers use
-      :func:`read_manifest_rollup`; superseded generations are garbage
-      but never visible, reclaimed by :func:`vacuum_manifest_rollup`.
-      This is the object-store-safe path, and its merge reads ONLY the
-      touched partitions (manifest-pruned) where the swap path scans
-      the whole rollup to find them.
-
-    Either layout assumes a SINGLE maintaining
-    stream per ``rollup_path`` at a time: two simultaneous writers
-    would race each other's renames. That discipline is enforced by a
-    per-batch ``<rollup_path>.__writer.lock`` pidfile, held only while
-    a batch's merge+swap runs: a second stream that tries to upsert
-    while a writer is alive fails fast instead of corrupting the
-    rollup; a lock left by a CRASHED writer (dead pid) is stolen; a
-    SEQUENTIAL replay under a fresh checkpoint — the documented
-    disaster-recovery path — is untouched (r8 judge). The lock is
-    advisory (O_EXCL creation is atomic, pid liveness is same-host):
-    it catches the realistic misconfiguration, two pipelines on one
-    host pointed at one rollup; cross-host mutual exclusion needs the
-    storage layer. foreachBatch runs on the driver, so the lock
-    scheme involves no executor coordination.
+    The rollup assumes a SINGLE maintaining stream per ``rollup_path``
+    at a time: two simultaneous writers would race each other's
+    manifest commits. That discipline is enforced by a per-batch
+    ``<rollup_path>.__writer.lock`` pidfile, held only while a batch's
+    merge+commit runs: a second stream that tries to upsert while a
+    writer is alive fails fast instead of corrupting the rollup; a lock
+    left by a CRASHED writer (dead pid) is stolen; a SEQUENTIAL replay
+    under a fresh checkpoint — the documented disaster-recovery path —
+    is untouched. The lock is advisory (O_EXCL creation is atomic, pid
+    liveness is same-host): it catches the realistic misconfiguration,
+    two pipelines on one host pointed at one rollup; cross-host mutual
+    exclusion needs the storage layer. foreachBatch runs on the driver,
+    so the lock scheme involves no executor coordination.
     """
 
-    if layout not in ("swap", "manifest"):
-        raise ValueError(f"unknown rollup layout {layout!r}")
     lock_path = f"{rollup_path.rstrip('/')}.__writer.lock"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.withColumn("bucket_date", F.to_date(F.col(BUCKET_COL)))
         if not rows.take(1):
             return
-        _acquire_writer_lock(lock_path, f"checkpoint {checkpoint!r}")
+        acquire_writer_lock(lock_path, f"checkpoint {checkpoint!r}")
         try:
-            if layout == "manifest":
-                _upsert_manifest_locked(rows, batch_id)
-            else:
-                _upsert_locked(rows, batch_id)
+            _upsert_manifest_locked(rows, batch_id)
         finally:
-            _release_writer_lock(lock_path)
+            release_writer_lock(lock_path)
 
     def _upsert_manifest_locked(rows: DataFrame, batch_id: int) -> None:
         import hashlib
@@ -348,8 +312,8 @@ def maintain_rollup(
             }
             if current:
                 # read ONLY the touched partitions (manifest-pruned —
-                # O(touched), where the swap layout scans the rollup),
-                # drop the keys this batch replaces, keep the siblings
+                # O(touched), not O(history)), drop the keys this batch
+                # replaces, keep the siblings
                 existing = read_manifest_rollup(
                     spark, rollup_path, min(current), max(current)
                 ).filter(F.col("bucket_date").cast("string").isin(list(current)))
@@ -371,86 +335,13 @@ def maintain_rollup(
         _commit_manifest(rollup_path, manifest)
         # self-compaction: bound the live generation count so the read
         # path stays O(1) spark.reads instead of O(batches-that-touched-
-        # existing-dates) — r9 ADVICE. Already holding the writer lock.
+        # existing-dates). Already holding the writer lock.
         live_gens = {
             rel.rsplit("/bucket_date=", 1)[0]
             for rel in manifest["partitions"].values()
         }
-        if max_generations and len(live_gens) > max_generations:
+        if len(live_gens) > MAX_GENERATIONS:
             _compact_manifest_locked(spark, rollup_path)
-
-    def _upsert_locked(rows: DataFrame, batch_id: int) -> None:
-        import hashlib
-        import os
-        import shutil
-
-        spark = rows.sparkSession
-        if not (
-            os.path.isdir(rollup_path)
-            and any(n.startswith("bucket_date=") for n in os.listdir(rollup_path))
-        ):
-            (
-                rows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket_date")
-                .parquet(rollup_path)
-            )
-            return
-        # Merge path: update mode emits only changed buckets; the
-        # rewritten date partitions must keep their untouched sibling
-        # buckets. The merged output goes to a STAGING directory and the
-        # touched partitions are then swapped in with directory renames
-        # — the sink is never a source and a sink of the same job, so a
-        # task retry or executor loss during the write recomputes from a
-        # still-intact rollup (r7 ADVICE: the previous
-        # read-localCheckpoint-overwrite relied on executor-held blocks;
-        # losing one mid-overwrite re-read a half-rewritten sink).
-        # Replays stay idempotent: re-merging the same micro-batch swaps
-        # in identical partitions.
-        # Crash recovery from an interrupted previous swap: a lone
-        # ``*.__old`` whose live partition is missing is restored (the
-        # crash fell between the two renames); one whose live partition
-        # exists is debris from after the second rename — dropped.
-        for name in os.listdir(rollup_path):
-            if not name.endswith(".__old"):
-                continue
-            live = os.path.join(rollup_path, name[: -len(".__old")])
-            if os.path.isdir(live):
-                shutil.rmtree(os.path.join(rollup_path, name), ignore_errors=True)
-            else:
-                os.rename(os.path.join(rollup_path, name), live)
-        touched = rows.select("bucket_date").distinct()
-        keys = [BUCKET_COL] + list(group_cols)
-        existing = (
-            spark.read.parquet(rollup_path)
-            .join(F.broadcast(touched), "bucket_date", "semi")
-            .join(rows.select(*keys).distinct(), keys, "left_anti")
-        )
-        # staging keyed by (checkpoint, batch_id), not batch_id alone:
-        # two streams both at batch 0 must never share a staging dir
-        # even before the writer marker catches them (r8 judge)
-        tag = hashlib.md5(checkpoint.encode()).hexdigest()[:8]
-        staging = f"{rollup_path.rstrip('/')}.__staging-{tag}-{batch_id}"
-        shutil.rmtree(staging, ignore_errors=True)  # stale retry leftovers
-        (
-            existing.unionByName(rows)
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(staging)
-        )
-        try:
-            for name in os.listdir(staging):
-                if not name.startswith("bucket_date="):
-                    continue
-                target = os.path.join(rollup_path, name)
-                retired = target + ".__old"
-                shutil.rmtree(retired, ignore_errors=True)
-                if os.path.isdir(target):
-                    os.rename(target, retired)
-                os.rename(os.path.join(staging, name), target)
-                shutil.rmtree(retired, ignore_errors=True)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
 
     agg = bucketize(
         stream.withWatermark(ts_col, watermark), ts_col, window, group_cols, aggs

@@ -206,7 +206,6 @@ def test_uri_source_lists_via_hadoop_fs(spark, tmp_path):
             format=FormatConfig(type="jsonl"),
         )
     )
-    assert src.needs_spark()
     files = src.list_files(spark)
     assert [f.layout_fields["month"] for f in files] == ["05", "06"]
     assert all(f.mtime > 0 for f in files)
@@ -244,9 +243,6 @@ partition "aws_logs" "prod" {
     src = cfg["partitions"][0].source
     assert src.paths == ["s3a://my-bucket/cloudtrail/*.jsonl"]
     assert src.options["fs.s3a.endpoint"] == "s3.eu-central-1.amazonaws.com"
-    from tailpipe_spark.sources.file_source import FileSource
-
-    assert FileSource(src).needs_spark()
 
 
 def test_duplicate_partition_and_bad_names_rejected(tmp_path):

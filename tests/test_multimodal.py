@@ -1,96 +1,4 @@
-import struct
-import zlib
-
-from tailpipe_spark.operators.multimodal import (
-    ASSET_SCHEMA,
-    decode_image,
-    decode_images,
-    extract_features,
-    resize_images,
-    sample_frames,
-)
-
-
-def _png_bytes(width, height, pixels, color_type, filter_type=0):
-    """Minimal pure-stdlib PNG encoder for test fixtures.
-
-    ``pixels``: list of rows, each row a list of per-channel byte tuples.
-    Every scanline is written with the given filter type (0=None, 2=Up)
-    so the decoder's unfiltering paths can be exercised.
-    """
-    nch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    raw = bytearray()
-    prev = [0] * (width * nch)
-    for row in pixels:
-        flat = [c for px in row for c in (px if isinstance(px, tuple) else (px,))]
-        assert len(flat) == width * nch
-        raw.append(filter_type)
-        if filter_type == 0:
-            raw.extend(flat)
-        elif filter_type == 2:  # Up
-            raw.extend((v - p) & 0xFF for v, p in zip(flat, prev))
-        else:
-            raise ValueError(filter_type)
-        prev = flat
-    idat = zlib.compress(bytes(raw))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_image_rgb_known_means():
-    # 2x2 RGB: channel means are exact
-    px = [[(255, 0, 0), (0, 255, 0)], [(0, 0, 255), (255, 255, 255)]]
-    out = decode_image(_png_bytes(2, 2, px, color_type=2))
-    assert out["error"] is None
-    assert (out["width"], out["height"]) == (2, 2)
-    assert out["mode"] in ("RGB",)
-    assert [round(m, 2) for m in out["avg_channel"]] == [127.5, 127.5, 127.5]
-
-
-def test_decode_image_gray_and_rgba_up_filter():
-    gray = decode_image(_png_bytes(3, 2, [[10, 20, 30], [40, 50, 60]], color_type=0,
-                                   filter_type=2))
-    assert gray["error"] is None
-    assert gray["mode"] in ("L",)
-    assert round(gray["avg_channel"][0], 2) == 35.0
-    rgba = decode_image(
-        _png_bytes(1, 2, [[(1, 2, 3, 4)], [(5, 6, 7, 8)]], color_type=6, filter_type=2)
-    )
-    assert rgba["error"] is None
-    assert [round(m, 1) for m in rgba["avg_channel"]] == [3.0, 4.0, 5.0, 6.0]
-
-
-def test_decode_image_corrupt_is_error_not_raise():
-    out = decode_image(b"\x89PNG\r\n\x1a\nnot really a png")
-    assert out["error"] is not None
-    assert out["width"] is None
-
-
-def test_decode_images_dataframe(spark):
-    png = _png_bytes(2, 1, [[(0, 128, 255), (255, 128, 0)]], color_type=2)
-    rows = [
-        (1, "image", "image/png", bytes(png), None),
-        (2, "image", "image/png", b"corrupt", None),
-        (3, "audio", "audio/wav", b"RIFF", None),  # filtered out
-    ]
-    out = decode_images(spark.createDataFrame(rows, ASSET_SCHEMA)).collect()
-    by_id = {r["asset_id"]: r for r in out}
-    assert set(by_id) == {1, 2}
-    assert (by_id[1]["width"], by_id[1]["height"]) == (2, 1)
-    assert [round(m, 1) for m in by_id[1]["avg_channel"]] == [127.5, 128.0, 127.5]
-    assert by_id[2]["error"] is not None
+from tailpipe_spark.operators.multimodal import ASSET_SCHEMA, extract_features
 
 
 def _assets(spark):
@@ -112,32 +20,6 @@ def test_extract_features_arrow_batched(spark):
     again = {r["asset_id"]: r for r in extract_features(_assets(spark)).collect()}
     assert again[2]["checksum"] == by_id[2]["checksum"]
     assert again[2]["feature"] == by_id[2]["feature"]
-
-
-def test_resize_images_only_images(spark):
-    out = resize_images(_assets(spark), 32, 32).collect()
-    assert len(out) == 1
-    assert out[0]["asset_id"] == 1
-    assert out[0]["meta"]["width"] == 32
-
-
-def test_sample_frames(spark):
-    out = sample_frames(_assets(spark), every_ms=1000).collect()
-    # 3500ms video at 1000ms cadence → 3 frames (0,1000,2000)
-    assert [r["frame_ts_ms"] for r in sorted(out, key=lambda r: r["frame_no"])] == [0, 1000, 2000]
-
-
-def test_resample_audio_corrupt_passthrough(spark):
-    """Non-WAV audio payloads pass through unchanged with error set and
-    original meta intact (no false resampled-rate claim)."""
-    from tailpipe_spark.operators.multimodal import resample_audio
-
-    out = resample_audio(_assets(spark), 8000).collect()
-    assert len(out) == 1
-    assert out[0]["asset_id"] == 2
-    assert out[0]["error"] is not None
-    assert out[0]["meta"]["sample_rate"] == 16000  # untouched
-    assert bytes(out[0]["payload"]) == b"RIFF fake wav"
 
 
 def _wav_assets(spark):
@@ -172,26 +54,6 @@ def test_decode_audio_real_wav(spark):
     bad = out[8]
     assert bad["error"] is not None
     assert bad["rms"] is None
-
-
-def test_resample_audio_real_roundtrip(spark):
-    from tailpipe_spark.operators.multimodal import decode_audio, resample_audio
-
-    down = resample_audio(_wav_assets(spark), 8000)
-    redecoded = {
-        r["asset_id"]: r
-        for r in decode_audio(
-            down.select("asset_id", "modality", "payload")
-        ).collect()
-    }
-    good = redecoded[7]
-    assert good["error"] is None
-    assert good["sample_rate"] == 8000
-    assert good["n_frames"] == 800  # half the frames at half the rate
-    assert good["duration_ms"] == 100  # duration preserved
-    # linear interp at even offsets of an alternating square lands on
-    # the +A samples exactly → peak preserved
-    assert good["peak"] == [2000.0, 700.0]
 
 
 def test_decode_wav_8bit_centered():

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from tailpipe_spark.operators.asof import asof_join
 from tailpipe_spark.operators.dedup import (
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_candidates,
@@ -189,15 +188,6 @@ def test_sessionize_session_count(spark):
         .collect()
     )
     assert {r["user"]: r["n"] for r in per_user} == {1: 2, 2: 1}
-
-
-def test_exact_dedup_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [(1, "hello  world"), (2, "Hello world"), (3, "different")],
-        ["doc_id", "text"],
-    )
-    kept = sorted(r["doc_id"] for r in exact_dedup(df).collect())
-    assert kept == [1, 3]  # normalization folds case+whitespace
 
 
 def test_ngram_jaccard_identical_docs(spark):

@@ -1,5 +1,7 @@
 import json
 
+import pytest
+
 from tailpipe_spark.repair import quarantine_invalid_files
 from tailpipe_spark.synthetic import (
     parse_synthetic_spec,
@@ -166,15 +168,14 @@ def test_run_synthetic_collect_pipeline(spark, workspace, tmp_path):
     assert df.count() == 500
 
 
-def test_query_retries_after_quarantine(spark, workspace, tmp_path):
-    """The reference retries an operation after renaming the invalid
-    file (duck_db_error.go:25-80); our loop quarantines then re-runs."""
+def _corrupt_workspace(spark, workspace, tmp_path):
+    """A one-row table ``qr`` with a corrupt part file planted next to
+    its good file."""
     import glob
     import os
 
     from tailpipe_spark.collect import collect
     from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
-    from tailpipe_spark.repair import run_with_quarantine_retry
     from tailpipe_spark.sources.formats import read_jsonl
 
     p = tmp_path / "c.jsonl"
@@ -195,29 +196,37 @@ def test_query_retries_after_quarantine(spark, workspace, tmp_path):
     with open(os.path.join(part_dir, "part-corrupt.parquet"), "wb") as f:
         f.write(b"not a parquet file at all")
 
-    def read_all():
-        return workspace.read_table(spark, "qr").select("id").collect()
 
-    # direct read fails on the planted file; the retry loop heals it
-    out = run_with_quarantine_retry(workspace, ["qr"], read_all)
-    assert [r["id"] for r in out] == [7]
-    # the corrupt file went to quarantine, data intact
-    assert glob.glob(workspace.workspace + "/quarantine/qr/**/*.invalid", recursive=True)
+def _quarantined(workspace):
+    import glob
+
+    return glob.glob(workspace.workspace + "/quarantine/**/*.invalid", recursive=True)
 
 
-def test_retry_gives_up_when_nothing_to_quarantine(workspace):
-    import pytest
+def test_query_retries_after_quarantine(spark, workspace, tmp_path, capsys):
+    """The reference retries an operation after renaming the invalid
+    file (duck_db_error.go:25-80): ``query`` quarantines the planted
+    file, runs again, and prints the good rows once."""
+    from tailpipe_spark.cli import main
 
-    from tailpipe_spark.repair import run_with_quarantine_retry
+    _corrupt_workspace(spark, workspace, tmp_path)
+    rc = main(["--workspace", workspace.workspace, "query", "select id from qr"])
+    assert rc == 0
+    assert capsys.readouterr().out.strip().splitlines() == ["id", "7"]
+    assert len(_quarantined(workspace)) == 1
 
-    class Boom(Exception):
-        pass
 
-    def action():
-        raise Boom("unrelated failure")
+def test_retry_gives_up_when_nothing_to_quarantine(spark, workspace, tmp_path):
+    """An error that is not an invalid-parquet one ends the loop at
+    once: it is raised as is, and nothing is quarantined, not even the
+    corrupt file that is there."""
+    from tailpipe_spark.cli import main
 
-    with pytest.raises(Boom):
-        run_with_quarantine_retry(workspace, [], action)
+    _corrupt_workspace(spark, workspace, tmp_path)
+    with pytest.raises(Exception, match="unrelated failure"):
+        main(["--workspace", workspace.workspace, "query",
+              "select raise_error('unrelated failure')"])
+    assert _quarantined(workspace) == []
 
 
 def test_classify_engine_error():

@@ -1,14 +1,6 @@
-import pytest
 from pyspark.sql import types as T
 
-from tailpipe_spark.config import ColumnConfig, TableConfig
-from tailpipe_spark.schema import (
-    SchemaChangeError,
-    check_schema_change,
-    parse_type,
-    resolve_conversion_schema,
-    to_type_string,
-)
+from tailpipe_spark.schema import parse_type, to_type_string
 
 
 def test_parse_scalars():
@@ -39,7 +31,14 @@ def test_type_string_roundtrip():
         assert to_type_string(parse_type(s)) == s
 
 
-def test_resolve_partial_schema():
+def test_resolve_partial_schema(spark):
+    """Partial schema resolution on the collect path: declared columns
+    come first in declaration order and keep their declared type, a
+    typeless declared column takes its source field's inferred type, and
+    auto-mapped fields follow."""
+    from tailpipe_spark.collect import apply_table_mapping
+    from tailpipe_spark.config import ColumnConfig, TableConfig
+
     table = TableConfig(
         name="t",
         columns=[
@@ -47,27 +46,27 @@ def test_resolve_partial_schema():
             ColumnConfig(name="msg", source="message"),  # type from inference
         ],
     )
-    inferred = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("message", T.StringType()),
-            T.StructField("extra", T.DoubleType()),
-        ]
+    chunk = spark.createDataFrame(
+        [("1", "hello", 2.5)], "id string, message string, extra double"
     )
-    schema = resolve_conversion_schema(table, inferred)
-    names = [f.name for f in schema.fields]
-    assert names == ["id", "msg", "extra"]  # declared first, then auto-mapped
+    schema = apply_table_mapping(chunk, table).schema
+    assert [f.name for f in schema.fields] == ["id", "msg", "extra"]
     assert schema["id"].dataType == T.LongType()  # declared type wins
     assert schema["msg"].dataType == T.StringType()
+    assert schema["extra"].dataType == T.DoubleType()
 
 
-def test_schema_change_detection():
-    frozen = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.StringType())])
-    ok = T.StructType([T.StructField("a", T.IntegerType())])  # widening: fine
-    check_schema_change(frozen, ok)
-    bad = T.StructType([T.StructField("b", T.DoubleType())])
+def test_schema_change_detection(workspace):
+    """The product gate is Catalog.ensure_table: a chunk whose types
+    differ from the table's frozen schema raises SchemaChangeError
+    naming each changed column with its old and new type."""
+    import pytest
+
+    from tailpipe_spark.schema import SchemaChangeError
+
+    workspace.ensure_table("t", {"a": "bigint", "b": "varchar"})
+    workspace.ensure_table("t", {"a": "bigint", "b": "varchar"})  # same: fine
     with pytest.raises(SchemaChangeError) as e:
-        check_schema_change(frozen, bad)
-    assert "b" in e.value.changes
-    # pinned config columns are exempt
-    check_schema_change(frozen, bad, typed_config_columns={"b"})
+        workspace.ensure_table("t", {"a": "bigint", "b": "double"})
+    assert e.value.changes == {"b": ("varchar", "double")}
+    assert workspace.table_schema("t") == {"a": "bigint", "b": "varchar"}

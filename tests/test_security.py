@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from tailpipe_spark.functions.security import (
     burst_count,
-    extract_domain,
     ip_in_cidr,
     ipv4_to_long,
     is_private_ip,
@@ -45,16 +44,6 @@ def test_cidr_and_private(spark):
     assert out["192.168.9.9"][0] is True
     assert out["8.8.8.8"] == (False, False)
     assert out["127.0.0.1"][0] is True
-
-
-def test_extract_domain(spark):
-    df = spark.createDataFrame(
-        [("https://evil.badcorp.example.com/path?q=1",),
-         ("user@www.site.org",), ("bare-host",), ("http://a.io:8080/x",)],
-        ["url"],
-    )
-    out = [r["d"] for r in df.select(extract_domain(F.col("url")).alias("d")).collect()]
-    assert out == ["example.com", "site.org", "bare-host", "a.io"]
 
 
 def test_shannon_entropy_values(spark):

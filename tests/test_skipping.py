@@ -455,3 +455,40 @@ def test_merge_appends_constant_lines_not_index_rewrite(monthly_workspace, tmp_p
     new_files = len(cat.load_file_index("metrics")) - before_lines
     assert new_files >= 1
     assert after_lines == before_lines + new_files  # append, not rewrite
+
+
+def test_collect_drops_a_dead_manifest_embedded_index(monthly_workspace, tmp_path, spark):
+    """A pre-sidecar workspace carries its file list inside
+    manifest.json, which nothing reads any more; the next collect's
+    snapshot write drops it, and the sidecar index still equals a full
+    rebuild."""
+    from tailpipe_spark.collect import collect
+    from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
+    from tailpipe_spark.sources.formats import read_jsonl
+
+    cat = monthly_workspace
+    manifest = cat._load()
+    manifest["tables"]["metrics"]["file_index"] = [
+        {"path": f"gone/part-{i}.parquet", "bytes": 1, "rows": 1} for i in range(1000)
+    ]
+    cat._store(manifest)
+
+    src = tmp_path / "one.jsonl"
+    src.write_text(json.dumps({"server_id": "srv-7", "cpu": 3.0, "time": "2024-07-01T12:00:00"}))
+    table = TableConfig(
+        name="metrics",
+        columns=[
+            ColumnConfig(name="server_id", type="varchar"),
+            ColumnConfig(name="cpu", type="double"),
+            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
+        ],
+        map_fields=[],
+    )
+    collect(spark, cat, table, PartitionConfig("metrics", "default"),
+            source_df=read_jsonl(spark, [str(src)]))
+
+    assert "file_index" not in cat._load()["tables"]["metrics"]
+    maintained = sorted(cat.load_file_index("metrics"), key=lambda e: e["path"])
+    cat.refresh_partition_index("metrics")
+    assert maintained == sorted(cat.load_file_index("metrics"), key=lambda e: e["path"])
+    assert len(maintained) == 4

@@ -238,6 +238,7 @@ def test_rollup_maintenance_and_continuous_read(spark, tmp_path):
         BUCKET_COL,
         continuous_read,
         maintain_rollup,
+        read_manifest_rollup,
     )
 
     src_dir = tmp_path / "src"
@@ -269,11 +270,11 @@ def test_rollup_maintenance_and_continuous_read(spark, tmp_path):
 
     run_maintenance("ck1")
     once = sorted(
-        map(str, spark.read.parquet(rollup_path).drop("bucket_date").collect())
+        map(str, read_manifest_rollup(spark, rollup_path).drop("bucket_date").collect())
     )
     # replay with a FRESH checkpoint (worst case: everything reprocessed)
     run_maintenance("ck2")
-    twice = spark.read.parquet(rollup_path).drop("bucket_date")
+    twice = read_manifest_rollup(spark, rollup_path).drop("bucket_date")
     assert once == sorted(map(str, twice.collect()))
 
     raw = spark.read.parquet(str(src_dir / "batch1"))
@@ -288,12 +289,11 @@ def test_rollup_maintenance_and_continuous_read(spark, tmp_path):
     assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
 
 
-def test_swap_rollup_leaves_session_overwrite_mode_alone(spark, tmp_path):
-    """The swap layout's first batch overwrites its date partitions
-    dynamically through a writer option: partitionOverwriteMode reads the
+def test_rollup_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """Maintenance sets no session conf: partitionOverwriteMode reads the
     same before and after the run, both in the caller's session and in
     the clone of it that Structured Streaming runs each batch in."""
-    from tailpipe_spark.streaming.rollup import maintain_rollup
+    from tailpipe_spark.streaming.rollup import maintain_rollup, read_manifest_rollup
 
     src = str(tmp_path / "src")
     spark.createDataFrame(
@@ -315,7 +315,8 @@ def test_swap_rollup_leaves_session_overwrite_mode_alone(spark, tmp_path):
         assert batch_session.conf().get(conf) == "static"
     finally:
         spark.conf.unset(conf)
-    assert spark.read.parquet(rollup_path).agg(F.sum("n_events")).collect()[0][0] == 4
+    total = read_manifest_rollup(spark, rollup_path).agg(F.sum("n_events"))
+    assert total.collect()[0][0] == 4
 
 
 def test_rollup_rejects_unaligned_boundary(spark):
@@ -334,7 +335,11 @@ def test_rollup_update_mode_preserves_untouched_buckets(spark, tmp_path):
     mode re-emitted all history and never evicted state)."""
     import pyspark.sql.functions as F
 
-    from tailpipe_spark.streaming.rollup import BUCKET_COL, maintain_rollup
+    from tailpipe_spark.streaming.rollup import (
+        BUCKET_COL,
+        maintain_rollup,
+        read_manifest_rollup,
+    )
 
     src_dir = tmp_path / "src"
     src_dir.mkdir()
@@ -376,7 +381,7 @@ def test_rollup_update_mode_preserves_untouched_buckets(spark, tmp_path):
     run()
     got = sorted(
         (str(r[BUCKET_COL]), r["event_type"], r["n_events"], r["value_milli"])
-        for r in spark.read.parquet(rollup_path).collect()
+        for r in read_manifest_rollup(spark, rollup_path).collect()
     )
     assert got == [
         ("2024-01-01 03:00:00", "a", 2, 3000),   # untouched date survives
@@ -385,77 +390,9 @@ def test_rollup_update_mode_preserves_untouched_buckets(spark, tmp_path):
     ]
 
 
-def test_rollup_merge_uses_staging_and_repairs_interrupted_swap(spark, tmp_path):
-    """The merge path must never read and overwrite the rollup in one
-    job (r7 ADVICE: the localCheckpoint variant re-read a half-rewritten
-    sink after executor loss). Pinned behaviors: (a) a crash artifact —
-    a partition renamed to ``*.__old`` with the live dir missing — is
-    restored by the next batch; (b) ``*.__old`` debris with a live
-    partition present is dropped; (c) no staging dirs survive a batch."""
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from tailpipe_spark.streaming.rollup import BUCKET_COL, maintain_rollup
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    schema = "event_id long, ts timestamp, event_type string, value double"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(
-            rows, "event_id long, ts_s string, event_type string, value double"
-        ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s").select(
-            "event_id", "ts", "event_type", "value"
-        ).write.parquet(str(src_dir / name))
-
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    rollup_path = str(tmp_path / "rollup")
-    ck = str(tmp_path / "ck")
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src_dir / "*"))
-        q = maintain_rollup(
-            stream, rollup_path, "ts", "1 hour", ["event_type"], aggs,
-            checkpoint=ck,
-        )
-        q.awaitTermination()
-
-    write_batch("b1", [
-        (1, "2024-01-01T03:15:00", "a", 1.0),
-        (2, "2024-01-02T05:15:00", "b", 2.0),
-    ])
-    run()
-
-    # simulate a crash BETWEEN the two swap renames: live partition
-    # gone, only its .__old remains — plus debris next to a live one
-    jan1 = os.path.join(rollup_path, "bucket_date=2024-01-01")
-    jan2 = os.path.join(rollup_path, "bucket_date=2024-01-02")
-    os.rename(jan1, jan1 + ".__old")           # interrupted swap
-    shutil.copytree(jan2, jan2 + ".__old")     # post-swap debris
-
-    write_batch("b2", [(3, "2024-01-02T05:45:00", "b", 3.0)])
-    run()
-
-    names = sorted(os.listdir(rollup_path))
-    assert not any(n.endswith(".__old") for n in names), names
-    assert not any("__staging" in n for n in os.listdir(str(tmp_path))), (
-        "staging dir leaked"
-    )
-    got = sorted(
-        (str(r[BUCKET_COL]), r["event_type"], r["n_events"])
-        for r in spark.read.parquet(rollup_path).collect()
-    )
-    assert got == [
-        ("2024-01-01 03:00:00", "a", 1),  # restored from .__old
-        ("2024-01-02 05:00:00", "b", 2),  # merged, debris not double-counted
-    ]
-
-
 def test_rollup_single_writer_guard(spark, tmp_path):
     """Two streams maintaining the same rollup_path SIMULTANEOUSLY
-    would race each other's partition swaps. The per-batch pidfile lock
+    would race each other's manifest commits. The per-batch pidfile lock
     refuses an upsert while another writer is alive, steals a stale
     lock left by a crashed writer, and never blocks the documented
     sequential fresh-checkpoint replay (that path is pinned by
@@ -464,7 +401,7 @@ def test_rollup_single_writer_guard(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from tailpipe_spark.streaming.rollup import maintain_rollup
+    from tailpipe_spark.streaming.rollup import maintain_rollup, read_manifest_rollup
 
     src_dir = tmp_path / "src"
     src_dir.mkdir()
@@ -494,7 +431,7 @@ def test_rollup_single_writer_guard(spark, tmp_path):
     assert not os.path.exists(lock_path), "lock must be released after a batch"
 
     # a LIVE concurrent writer (lock held by a running pid — ours): the
-    # merge batch must refuse rather than race the swap
+    # merge batch must refuse rather than race the commit
     write_batch("b2", [(2, "2024-01-01T03:45:00", "a", 2.0)])
     with open(lock_path, "w") as f:
         f.write(f"{os.getpid()}\nsomeone-elses-checkpoint\n")
@@ -504,7 +441,7 @@ def test_rollup_single_writer_guard(spark, tmp_path):
         run(str(tmp_path / "ck_intruder"))
     got = sorted(
         (r["event_type"], r["n_events"])
-        for r in spark.read.parquet(rollup_path).collect()
+        for r in read_manifest_rollup(spark, rollup_path).collect()
     )
     assert got == [("a", 1)], "refused batch must not touch the rollup"
 
@@ -515,7 +452,7 @@ def test_rollup_single_writer_guard(spark, tmp_path):
     assert not os.path.exists(lock_path)
     got = sorted(
         (r["event_type"], r["n_events"])
-        for r in spark.read.parquet(rollup_path).collect()
+        for r in read_manifest_rollup(spark, rollup_path).collect()
     )
     assert got == [("a", 2)]
 
@@ -527,7 +464,7 @@ def test_writer_lock_eperm_means_alive(tmp_path, monkeypatch):
     fix: acquisition must REFUSE, and the lock file must survive."""
     import os
 
-    from tailpipe_spark.streaming.rollup import _acquire_writer_lock
+    from tailpipe_spark.locking import acquire_writer_lock
 
     lock_path = str(tmp_path / "r.__writer.lock")
     with open(lock_path, "w") as f:
@@ -542,7 +479,7 @@ def test_writer_lock_eperm_means_alive(tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "kill", fake_kill)
     with pytest.raises(RuntimeError, match="live writer"):
-        _acquire_writer_lock(lock_path, "intruder")
+        acquire_writer_lock(lock_path, "intruder")
     with open(lock_path) as f:
         assert f.readline().strip() == "12345", "live lock must not be stolen"
 
@@ -556,25 +493,22 @@ def test_writer_lock_steal_serialized_under_guard(tmp_path, monkeypatch):
     re-entering acquisition from inside the first steal's window."""
     import os
 
-    from tailpipe_spark.streaming.rollup import (
-        _acquire_writer_lock,
-        _release_writer_lock,
-    )
+    from tailpipe_spark.locking import acquire_writer_lock, release_writer_lock
 
     lock_path = str(tmp_path / "r.__writer.lock")
     with open(lock_path, "w") as f:
         f.write("999999999\ncrashed-writer\n")
 
     # contender 1 steals the stale lock and now holds a live one
-    _acquire_writer_lock(lock_path, "contender-1")
+    acquire_writer_lock(lock_path, "contender-1")
     with open(lock_path) as f:
         assert int(f.readline()) == os.getpid()
     # contender 2 (same host, this pid is alive) must refuse, not steal
     with pytest.raises(RuntimeError, match="live writer"):
-        _acquire_writer_lock(lock_path, "contender-2")
+        acquire_writer_lock(lock_path, "contender-2")
     with open(lock_path) as f:
         assert int(f.readline()) == os.getpid(), "fresh lock must survive"
-    _release_writer_lock(lock_path)
+    release_writer_lock(lock_path)
     assert not os.path.exists(lock_path)
     assert os.path.exists(lock_path + ".guard"), (
         "guard sidecar is persistent by design (flock on an unlinked/"
@@ -583,9 +517,9 @@ def test_writer_lock_steal_serialized_under_guard(tmp_path, monkeypatch):
 
 
 def test_rollup_manifest_layout_end_to_end(spark, tmp_path):
-    """layout="manifest": generation dirs + an atomically-replaced
-    pointer file instead of directory renames — the object-store-safe
-    path (single-object PUT is atomic where S3 rename is copy+delete).
+    """Generation dirs + an atomically-replaced pointer file instead of
+    directory renames — the object-store-safe commit (a single-object
+    PUT is atomic where S3 rename is copy+delete).
     Pins: read equals the full batch aggregation, fresh-checkpoint
     replay is idempotent, a second batch only repoints the touched
     date (untouched pointers keep their old generation), manifest-level
@@ -627,7 +561,7 @@ def test_rollup_manifest_layout_end_to_end(spark, tmp_path):
         stream = spark.readStream.schema(schema).parquet(str(src_dir / "*"))
         q = maintain_rollup(
             stream, rollup_path, "ts", "1 hour", ["event_type"], aggs,
-            checkpoint=str(tmp_path / ck), layout="manifest",
+            checkpoint=str(tmp_path / ck),
         )
         q.awaitTermination()
 
@@ -700,20 +634,20 @@ def test_rollup_manifest_layout_end_to_end(spark, tmp_path):
     )
 
 
-def test_rollup_manifest_compaction(spark, tmp_path):
+def test_rollup_manifest_compaction(spark, tmp_path, monkeypatch):
     """Every batch that touches an existing date adds a generation, so
-    the read path accumulates one spark.read per live generation (r9
-    ADVICE). compact_manifest_rollup folds all live partitions into ONE
-    generation with identical data; maintain_rollup(max_generations=N)
-    self-compacts past the threshold."""
+    the read path accumulates one spark.read per live generation. Past
+    MAX_GENERATIONS live generations a batch folds them into ONE, with
+    data equal to the full aggregation; vacuum then reclaims the
+    superseded generations without changing what a read returns."""
     import os
 
     import pyspark.sql.functions as F
 
+    from tailpipe_spark.streaming import rollup
     from tailpipe_spark.streaming.rollup import (
         BUCKET_COL,
         _load_manifest,
-        compact_manifest_rollup,
         maintain_rollup,
         read_manifest_rollup,
         vacuum_manifest_rollup,
@@ -734,12 +668,11 @@ def test_rollup_manifest_compaction(spark, tmp_path):
     rollup_path = str(tmp_path / "rollup")
     os.makedirs(rollup_path)
 
-    def run(ck, max_generations=32):
+    def run():
         stream = spark.readStream.schema(schema).parquet(str(src_dir / "*"))
         q = maintain_rollup(
             stream, rollup_path, "ts", "1 hour", ["event_type"], aggs,
-            checkpoint=str(tmp_path / ck), layout="manifest",
-            max_generations=max_generations,
+            checkpoint=str(tmp_path / "ck"),
         )
         q.awaitTermination()
 
@@ -748,39 +681,36 @@ def test_rollup_manifest_compaction(spark, tmp_path):
         return {rel.rsplit("/bucket_date=", 1)[0] for rel in parts.values()}
 
     def snap():
-        return sorted(map(str, read_manifest_rollup(spark, rollup_path).collect()))
+        return sorted(
+            map(str, read_manifest_rollup(spark, rollup_path).drop("bucket_date").collect())
+        )
+
+    def want():
+        raw = spark.read.parquet(str(src_dir / "*"))
+        return sorted(map(str, raw.groupBy(
+            F.window("ts", "1 hour").start.alias(BUCKET_COL), "event_type"
+        ).agg(*aggs).collect()))
 
     # batch 1 covers three dates; batch 2 touches only one → 2 live gens
     write_batch("b1", [
         (i, f"2024-01-0{1 + i % 3}T03:15:00", "a", 1.0) for i in range(6)
     ])
-    run("ck1")
+    run()
     write_batch("b2", [(100, "2024-01-01T05:45:00", "b", 2.0)])
-    run("ck1")
+    run()
     assert len(live_gens()) == 2
-    want = snap()
+    assert snap() == want()
 
-    assert compact_manifest_rollup(spark, rollup_path) is not None
+    # self-compaction: threshold 1 folds the manifest back to one
+    # generation on a batch that touches an existing date
+    monkeypatch.setattr(rollup, "MAX_GENERATIONS", 1)
+    write_batch("b3", [(200, "2024-01-02T07:45:00", "b", 3.0)])
+    run()
     assert len(live_gens()) == 1
-    assert snap() == want, "compaction must not change the data"
-    # idempotent no-op when already single-generation
-    assert compact_manifest_rollup(spark, rollup_path) is None
+    assert snap() == want(), "compaction must not change the data"
     removed = vacuum_manifest_rollup(rollup_path)
     assert removed, "superseded generations reclaimed after compaction"
-    assert snap() == want
-
-    # self-compaction: threshold 1 keeps the manifest single-generation
-    # through a batch that touches an existing date
-    write_batch("b3", [(200, "2024-01-02T07:45:00", "b", 3.0)])
-    run("ck1", max_generations=1)
-    assert len(live_gens()) == 1
-    raw = spark.read.parquet(str(src_dir / "*"))
-    want_now = raw.groupBy(
-        F.window("ts", "1 hour").start.alias(BUCKET_COL), "event_type"
-    ).agg(*aggs)
-    assert sorted(
-        map(str, read_manifest_rollup(spark, rollup_path).drop("bucket_date").collect())
-    ) == sorted(map(str, want_now.collect()))
+    assert snap() == want()
 
 
 def test_rollup_manifest_orphan_generation_invisible(spark, tmp_path):
@@ -813,7 +743,7 @@ def test_rollup_manifest_orphan_generation_invisible(spark, tmp_path):
     q = maintain_rollup(
         stream, rollup_path, "ts", "1 hour", ["event_type"],
         [F.count(F.lit(1)).alias("n_events")],
-        checkpoint=str(tmp_path / "ck"), layout="manifest",
+        checkpoint=str(tmp_path / "ck"),
     )
     q.awaitTermination()
     baseline = sorted(map(str, read_manifest_rollup(spark, rollup_path).collect()))
@@ -888,7 +818,7 @@ def test_rollup_manifest_replay_never_deletes_committed_generation(spark, tmp_pa
     q = maintain_rollup(
         stream, rollup_path, "ts", "1 hour", ["event_type"],
         [F.count(F.lit(1)).alias("n_events")],
-        checkpoint=ck, layout="manifest",
+        checkpoint=ck,
     )
     q.awaitTermination()
 

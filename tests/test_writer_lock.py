@@ -116,3 +116,28 @@ def test_no_manifest_update_lost_across_writers(spark, workspace, tmp_path, monk
     collect(spark, workspace, _table("wlB"), PartitionConfig("wlB", "default"),
             source_df=_chunk(spark, tmp_path, "f", [2]))
     assert set(workspace.list_tables()) >= {"wlA", "wlB"}
+
+
+def test_quarantine_refuses_live_concurrent_writer(spark, workspace, tmp_path):
+    """The quarantine sweep records a snapshot and rewrites the index
+    sidecar, so it takes the writer lock: with the lock held by a live
+    process it raises and moves nothing."""
+    from tailpipe_spark.repair import quarantine_invalid_files
+
+    collect(spark, workspace, _table("wq"), PartitionConfig("wq", "default"),
+            source_df=_chunk(spark, tmp_path, "a", [1, 2]))
+    files = sorted(workspace._listing("wq"))
+    victim = os.path.join(workspace.table_dir("wq"), files[0])
+    with open(victim, "wb") as f:
+        f.write(b"not a parquet file at all")
+    snapshots = len(workspace._load()["snapshots"])
+    with open(_lock_path(workspace), "w") as f:
+        f.write(f"{os.getpid()}\nconcurrent-collect\n")
+    try:
+        with pytest.raises(RuntimeError, match="live writer"):
+            quarantine_invalid_files(workspace, "wq")
+    finally:
+        os.unlink(_lock_path(workspace))
+    assert sorted(workspace._listing("wq")) == files
+    assert not os.path.exists(os.path.join(workspace.workspace, "quarantine"))
+    assert len(workspace._load()["snapshots"]) == snapshots
