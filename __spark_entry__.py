@@ -51,7 +51,7 @@ _VERIFY_FIRST = [
     # raw array<int> column crashes the harness's pandas canonicalizer
     # (the raw surface lives in the local_only _arr twin)
     "emb_quantize_int8",
-    # shares distributed_cumsum (persist_input) with data_token_budget
+    # shares distributed_cumsum with data_token_budget
     "data_pps_sample",
     "text_lm_score",
     "sim_int8_topk",

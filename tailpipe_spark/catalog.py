@@ -282,11 +282,10 @@ class Catalog:
     #: not sweep the staging of a concurrent `compact`)
     STAGING_TTL_SECONDS = 24 * 3600
 
-    def cleanup_staging(self, ttl_seconds: int | None = None) -> None:
-        ttl = self.STAGING_TTL_SECONDS if ttl_seconds is None else ttl_seconds
+    def cleanup_staging(self) -> None:
         if not os.path.isdir(self.staging_dir):
             return
-        cutoff = time.time() - ttl
+        cutoff = time.time() - self.STAGING_TTL_SECONDS
         for name in os.listdir(self.staging_dir):
             p = os.path.join(self.staging_dir, name)
             try:
@@ -487,10 +486,9 @@ class Catalog:
     #
     # Like DuckLake's ``ducklake_data_file`` table (reference: internal/
     # database/duck_db.go:270-291), one entry per data file — path, rows,
-    # bytes, tp_timestamp min/max + null_count, and the companion
-    # ``cols`` stats of the manifest's ``indexed_columns`` — recorded at
-    # write time. Compaction, delete, bucket_rewrite and the table stats
-    # read it through ``files``, bounded queries through ``pruned_files``;
+    # bytes, tp_timestamp min/max + null_count — recorded at write time.
+    # Compaction, delete, bucket_rewrite and the table stats read it
+    # through ``files``, bounded queries through ``pruned_files``;
     # one listing (``_listing``) checks it, and a stale index is never
     # trusted. Two routines write it: ``merge_file_index`` appends what
     # a landing wrote, and ``refresh_partition_index`` re-indexes what a
@@ -501,11 +499,6 @@ class Catalog:
 
     def _index_path(self, table: str) -> str:
         return os.path.join(self.metadata_dir, "file_index", f"{table}.jsonl")
-
-    def _indexed_columns(self, table: str) -> list[str] | None:
-        """The companion columns every index entry carries ``cols`` stats
-        for (a z-ordered compaction sets them), or None."""
-        return self._load()["tables"].get(table, {}).get("indexed_columns")
 
     def load_file_index(self, table: str) -> list | None:
         """Current file index from the JSONL sidecar (last-wins per
@@ -554,12 +547,12 @@ class Catalog:
         with open(self._index_path(table), "a") as f:
             f.writelines(json.dumps(e) + "\n" for e in entries)
 
-    def _index_entry(self, tdir: str, relpath: str, columns) -> dict:
+    def _index_entry(self, tdir: str, relpath: str) -> dict:
         """One file-index entry from a single footer read."""
         p = os.path.join(tdir, relpath)
         md = FooterInfo(p)
         ts = _footer_col_stats(md, "tp_timestamp")
-        entry = {
+        return {
             "path": relpath,
             "bytes": os.path.getsize(p),
             "rows": md.num_rows,
@@ -567,9 +560,6 @@ class Catalog:
             "max_ts": ts["max"] if ts else None,
             "null_ts": ts["nulls"] if ts else None,
         }
-        if columns:
-            entry["cols"] = {c: _footer_col_stats(md, c) for c in columns}
-        return entry
 
     def _listing(self, table: str, keys: list[str] | None = None) -> dict[str, int]:
         """Path (relative to the table dir) → bytes of every parquet file
@@ -599,14 +589,13 @@ class Catalog:
     def files(self, table: str) -> list[dict]:
         """The table's data files as file-index entries (``path`` under
         the table dir, ``rows``, ``bytes``, naive-UTC ISO ``min_ts``/
-        ``max_ts``, ``null_ts``, ``cols``): the index when fresh, else
-        the same entries read from the listed footers, not stored."""
+        ``max_ts``, ``null_ts``): the index when fresh, else the same
+        entries read from the listed footers, not stored."""
         index, listed = self._fresh_index(table)
         if index is not None:
             return index
-        columns = self._indexed_columns(table)
         tdir = self.table_dir(table)
-        return [self._index_entry(tdir, rel, columns) for rel in listed]
+        return [self._index_entry(tdir, rel) for rel in listed]
 
     def merge_file_index(self, table: str, added: list[str]) -> int:
         """Merge newly written files into the existing index, reading
@@ -618,44 +607,29 @@ class Catalog:
 
         ``added``: file paths absolute or relative to the table dir.
         Returns the number of entries appended, or with no index yet
-        the count of a whole-table ``refresh_partition_index``. New
-        entries carry the ``indexed_columns`` stats, so pruning stays
-        uniform."""
+        the count of a whole-table ``refresh_partition_index``."""
         if not os.path.exists(self._index_path(table)):
             return self.refresh_partition_index(table)
         tdir = self.table_dir(table)
-        columns = self._indexed_columns(table)
         rels = [
             os.path.relpath(p, tdir) if os.path.isabs(p) else p for p in added
         ]
-        fresh = [self._index_entry(tdir, rel, columns) for rel in sorted(rels)]
+        fresh = [self._index_entry(tdir, rel) for rel in sorted(rels)]
         # O(new entries) appended lines; reads dedupe last-wins by
         # path. The existing index is deliberately NOT loaded here —
         # that read alone is O(table) and was measurable at 4k files.
         self._append_index(table, fresh)
         return len(fresh)
 
-    def refresh_partition_index(
-        self,
-        table: str,
-        key_relpaths: list[str] | None = None,
-        columns: list[str] | None = None,
-    ) -> int:
+    def refresh_partition_index(self, table: str, key_relpaths: list[str] | None = None) -> int:
         """The one re-index: drop the index rows under the given
         partition subdirectories (relative to the table dir) and
         footer-read just the files now under them, so a key-dir rewrite
         costs O(files in the rewritten keys), not O(table). No keys, a
         key naming the table dir itself, or no index yet: the whole
-        table. Returns the number of entries in the index.
-
-        Entries carry ``cols`` stats for ``columns`` (z-order compact
-        passes its cluster columns), by default the manifest's
-        ``indexed_columns``; a new set is recorded there and re-indexes
-        the whole table, so stats stay uniform across files."""
-        cols_now = self._indexed_columns(table)
-        columns = list(columns or cols_now or []) or None
+        table. Returns the number of entries in the index."""
         whole = key_relpaths is None or "." in map(os.path.normpath, key_relpaths)
-        existing = None if whole or columns != cols_now else self.load_file_index(table)
+        existing = None if whole else self.load_file_index(table)
         if existing is None:
             kept, key_relpaths = [], None
         else:
@@ -664,26 +638,18 @@ class Catalog:
         tdir = self.table_dir(table)
         # a key dir that is gone (partition fully deleted) lists nothing
         for rel in self._listing(table, key_relpaths):
-            kept.append(self._index_entry(tdir, rel, columns))
+            kept.append(self._index_entry(tdir, rel))
         self._store_index(table, kept)
-        if columns != cols_now:
-            manifest = self._load()
-            manifest["tables"][table]["indexed_columns"] = columns
-            self._store(manifest)
         return len(kept)
 
-    def pruned_files(self, table, time_from=None, time_to=None, predicates=None):
+    def pruned_files(self, table, time_from=None, time_to=None):
         """File subset that can satisfy the given bounds per the
         manifest index, or ``None`` when the index is missing or STALE
         (the on-disk file set no longer matches — callers must fall
         back to a full scan, never trust a stale index).
 
-        ``predicates``: optional ``{column: (lo, hi)}`` inclusive
-        ranges over extra indexed columns (see refresh_partition_index's
-        ``columns``); either bound may be None.
-
-        Conservative by construction: files without stats for a tested
-        column and files containing null timestamps are always kept
+        Conservative by construction: files without timestamp stats and
+        files containing null timestamps are always kept
         (the query layer's lower bound keeps NULL rows, query_cli.py)."""
         from datetime import datetime
 
@@ -705,13 +671,6 @@ class Catalog:
                     continue
                 if time_to is not None and datetime.fromisoformat(e["min_ts"]) >= time_to:
                     continue
-            cols = e.get("cols") or {}
-            if any(
-                (plo is not None and st["max"] < plo) or (phi is not None and st["min"] > phi)
-                for c, (plo, phi) in (predicates or {}).items()
-                if (st := cols.get(c)) is not None  # no stats for c: keep
-            ):
-                continue
             keep.append(os.path.join(tdir, e["path"]))
         return keep
 

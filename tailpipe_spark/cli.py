@@ -40,16 +40,14 @@ def _catalog(args):
     return Catalog(args.workspace)
 
 
-def render_stream(
-    df: DataFrame,
-    output: str,
-    header: bool = True,
-    separator: str = ",",
-    page_size: int = 1000,
-):
+#: rows per chunk that ``render_stream`` emits
+PAGE_SIZE = 1000
+
+
+def render_stream(df: DataFrame, output: str, header: bool = True, separator: str = ","):
     """Stream result rendering (csv/json/table): rows arrive through
     ``toLocalIterator`` one partition at a time and are emitted in
-    ``page_size`` chunks, so a select-* over a huge table never
+    ``PAGE_SIZE`` chunks, so a select-* over a huge table never
     materializes on the driver — the reference streams results row by
     row the same way (reference: internal/query/execute.go:154-202 =
     A32, cmd/query.go:57-58 for the formats).
@@ -66,7 +64,7 @@ def render_stream(
         page = []
         for r in rows:
             page.append(r)
-            if len(page) >= page_size:
+            if len(page) >= PAGE_SIZE:
                 yield page
                 page = []
         if page:

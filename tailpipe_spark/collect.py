@@ -9,9 +9,8 @@ internal/config/partition.go:105-108).
 
 ``land`` is the only way rows enter a table: validation, the schema
 gate, the observed append, the snapshot and the file-index merge, with
-parse, map, validate and write fused into one Spark job. Batch collect,
-``streaming.stream_collect`` (per micro-batch) and
-``migrate.migrate_legacy_table`` all land through it.
+parse, map, validate and write fused into one Spark job. Batch collect
+and ``migrate.migrate_legacy_table`` both land through it.
 """
 
 from __future__ import annotations

@@ -330,8 +330,9 @@ def compact_table(
     file under ``small_file_bytes``. With ``reindex_expr`` every key is
     rewritten and rows move to their newly-computed tp_index (A25).
     With ``zorder_by`` (2-4 columns) rewritten chunks are clustered on
-    the interleaved z-value instead of tp_timestamp alone, so footer
-    stats prune on every listed column (plans/zorder.py).
+    the interleaved z-value instead of tp_timestamp alone, so Spark's
+    row-group stats prune on every listed column (plans/zorder.py); the
+    file index keeps only tp_timestamp stats.
 
     Rewrites stage into ``catalog.staging_dir`` (never inside the table
     tree — a crash must not leave tmp dirs a reader would scan). Every
@@ -523,7 +524,7 @@ def _rewrite_keys(
     its own. A key left with no rows goes to a batch, where the
     partitioned write leaves no dir for it and the swap drops it."""
     if not todo:
-        _swap_and_reindex(catalog, table, {}, op, detail, zorder_by)
+        _swap_and_reindex(catalog, table, {}, op, detail)
         return 0
     small: list[tuple[PartitionKey, int, int]] = []  # (key, rows, bytes)
     units: list[tuple[list[PartitionKey], tuple]] = []  # (keys, window)
@@ -550,7 +551,7 @@ def _rewrite_keys(
                     raise RuntimeError(f"rewrite wrote no {key.relpath} for its {rows} rows")
                 d = None
             staged[key.relpath] = d
-        _swap_and_reindex(catalog, table, staged, op, detail, zorder_by)
+        _swap_and_reindex(catalog, table, staged, op, detail)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return 1
@@ -709,16 +710,13 @@ def _swap_and_reindex(
     staged: dict[str, str | None],
     op: str,
     detail: dict,
-    zorder_by: list[str] | None = None,
 ) -> None:
     """The one commit of every rewrite: replace each dir of ``staged``
     (a key relpath, or ``""`` for the whole table dir) by its staged
     rewrite (None: the key held no rows and goes away), record snapshot
-    ``op`` with ``detail``, then re-index exactly what was swapped,
-    keeping the table's companion-column stats. A z-ordered layout
-    makes its ``zorder_by`` columns selective per file, so they become
-    the companions. Runs only after every rewrite succeeded, so a
-    failed write leaves the table as it was."""
+    ``op`` with ``detail``, then re-index exactly what was swapped. Runs
+    only after every rewrite succeeded, so a failed write leaves the
+    table as it was."""
     base = catalog.table_dir(table)
     if staged:
         _replace_dirs(
@@ -728,8 +726,4 @@ def _swap_and_reindex(
         )
     catalog.record_snapshot(op, detail)
     if staged:
-        catalog.refresh_partition_index(
-            table,
-            list(staged),
-            columns=[c for c in (zorder_by or []) if c != "tp_timestamp"] or None,
-        )
+        catalog.refresh_partition_index(table, list(staged))

@@ -189,14 +189,6 @@ class TableConfig:
     bucket_by: list[str] | None = None
     num_buckets: int | None = None  # None = auto-size from table bytes
 
-    def __post_init__(self):
-        # optional (non-required) declared columns must carry a type when
-        # the schema is partial (reference: internal/config/table.go:92-116)
-        for c in self.columns:
-            if c.transform is None and c.source is None and c.type is None and not c.required:
-                # pure auto-mapped column mention — allowed only with map_fields
-                pass
-
     @property
     def declared(self) -> dict[str, ColumnConfig]:
         return {c.name: c for c in self.columns}

@@ -83,11 +83,7 @@ def _table_from_block(b: HclBlock) -> tuple[TableConfig, FormatConfig | None]:
         kwargs["num_buckets"] = int(b.attrs["num_buckets"])
     if "map_fields" in b.attrs:
         kwargs["map_fields"] = list(b.attrs["map_fields"])
-    elif cols:
-        # a table with declared columns maps nothing implicitly — the
-        # reference's table block is a full schema declaration
-        kwargs["map_fields"] = []
-    return TableConfig(name=b.labels[0], columns=cols, **kwargs), fmt
+    return _table(b.labels[0], cols, kwargs), fmt
 
 
 def _source_from_block(b: HclBlock, default_format: FormatConfig | None) -> SourceConfig:
@@ -119,12 +115,47 @@ _FORMAT_ATTRS = {"delimiter", "header", "pattern"}
 
 
 def _check_name(kind: str, name: str) -> str:
-    """Block labels must be bare identifiers (reference rejects e.g.
-    'verify partition with invalid table name format' —
-    partition_tests.bats)."""
-    if not _NAME_RE.match(name):
+    """Table and partition names must be bare identifiers (reference
+    rejects e.g. 'verify partition with invalid table name format' —
+    partition_tests.bats): they become paths under the workspace."""
+    if not isinstance(name, str) or not _NAME_RE.match(name):
         raise ConfigValidationError(f"invalid {kind} name {name!r}")
     return name
+
+
+def _table(name: str, columns: list[ColumnConfig], attrs: dict) -> TableConfig:
+    """The table of either config format. A table that declares columns
+    maps no source field implicitly unless it says ``map_fields`` — the
+    reference's table block is a full schema declaration."""
+    if columns and "map_fields" not in attrs:
+        attrs = {**attrs, "map_fields": []}
+    return TableConfig(name=_check_name("table", name), columns=columns, **attrs)
+
+
+def _partition(table: str, name: str, **attrs) -> PartitionConfig:
+    """The partition of either config format."""
+    return PartitionConfig(
+        table=_check_name("table", table), name=_check_name("partition", name), **attrs
+    )
+
+
+def _merge(into: dict, part: dict) -> None:
+    """Add one config file's tables, partitions and formats to ``into``;
+    a table or partition defined in two files is refused."""
+    dup_t = set(part["tables"]) & set(into["tables"])
+    if dup_t:
+        raise ConfigValidationError(
+            f"duplicate table(s) across config files: {sorted(dup_t)}"
+        )
+    have = {p.qualified_name for p in into["partitions"]}
+    dup_p = have & {p.qualified_name for p in part["partitions"]}
+    if dup_p:
+        raise ConfigValidationError(
+            f"duplicate partition(s) across config files: {sorted(dup_p)}"
+        )
+    into["tables"].update(part["tables"])
+    into["partitions"].extend(part["partitions"])
+    into["formats"].update(part["formats"])
 
 
 def _build_from_roots(roots: list[HclBlock]) -> dict:
@@ -149,7 +180,6 @@ def _build_from_roots(roots: list[HclBlock]) -> dict:
     for root in roots:
         for tb in root.find("table"):
             tcfg, tfmt = _table_from_block(tb)
-            _check_name("table", tcfg.name)
             if tcfg.name in tables:
                 raise ConfigValidationError(f"duplicate table {tcfg.name!r}")
             tables[tcfg.name] = tcfg
@@ -164,8 +194,6 @@ def _build_from_roots(roots: list[HclBlock]) -> dict:
                     "partition block needs table and name labels"
                 )
             table, name = pb.labels
-            _check_name("table", table)
-            _check_name("partition", name)
             if f"{table}.{name}" in seen_parts:
                 raise ConfigValidationError(f"duplicate partition {table}.{name}")
             seen_parts.add(f"{table}.{name}")
@@ -176,9 +204,9 @@ def _build_from_roots(roots: list[HclBlock]) -> dict:
                 else None
             )
             partitions.append(
-                PartitionConfig(
-                    table=table,
-                    name=name,
+                _partition(
+                    table,
+                    name,
                     source=src,
                     filter=pb.attrs.get("filter"),
                     tp_index=pb.attrs.get("tp_index"),
@@ -197,7 +225,10 @@ def load_json_text(text: str) -> dict:
     tables = {}
     for t in raw.get("tables", []):
         cols = [ColumnConfig(**c) for c in t.pop("columns", [])]
-        tables[t["name"]] = TableConfig(columns=cols, **t)
+        table = _table(t.pop("name"), cols, t)
+        if table.name in tables:
+            raise ConfigValidationError(f"duplicate table {table.name!r}")
+        tables[table.name] = table
     partitions = []
     for p in raw.get("partitions", []):
         src = p.pop("source", None)
@@ -208,7 +239,10 @@ def load_json_text(text: str) -> dict:
             elif isinstance(fmt, str):  # "type.preset" ref, incl. plugin presets
                 fmt = resolve_format(fmt)
             src = SourceConfig(format=fmt, **src)
-        partitions.append(PartitionConfig(source=src, **p))
+        part = _partition(p.pop("table"), p.pop("name"), source=src, **p)
+        if part.qualified_name in {q.qualified_name for q in partitions}:
+            raise ConfigValidationError(f"duplicate partition {part.qualified_name}")
+        partitions.append(part)
     return {"tables": tables, "partitions": partitions, "formats": {}}
 
 
@@ -222,38 +256,11 @@ def load_config(path: str) -> dict:
         for name in sorted(os.listdir(path)):
             full = os.path.join(path, name)
             if name.endswith(".json"):
-                part = load_config(full)
-                dup_t = set(part["tables"]) & set(merged["tables"])
-                if dup_t:
-                    raise ConfigValidationError(
-                        f"duplicate table(s) across config files: {sorted(dup_t)}"
-                    )
-                seen_p = {p.qualified_name for p in merged["partitions"]}
-                dup_p = seen_p & {p.qualified_name for p in part["partitions"]}
-                if dup_p:
-                    raise ConfigValidationError(
-                        f"duplicate partition(s) across config files: {sorted(dup_p)}"
-                    )
-                merged["tables"].update(part["tables"])
-                merged["partitions"].extend(part["partitions"])
+                _merge(merged, load_config(full))
             elif name.endswith((".tpc", ".hcl")):
                 with open(full) as f:
                     roots.append(parse_hcl(f.read()))
-        built = _build_from_roots(roots)
-        dup_t = set(built["tables"]) & set(merged["tables"])
-        if dup_t:
-            raise ConfigValidationError(
-                f"duplicate table(s) across config files: {sorted(dup_t)}"
-            )
-        have = {p.qualified_name for p in merged["partitions"]}
-        dup_p = have & {p.qualified_name for p in built["partitions"]}
-        if dup_p:
-            raise ConfigValidationError(
-                f"duplicate partition(s) across config files: {sorted(dup_p)}"
-            )
-        merged["tables"].update(built["tables"])
-        merged["partitions"].extend(built["partitions"])
-        merged["formats"].update(built["formats"])
+        _merge(merged, _build_from_roots(roots))
         return merged
     with open(path) as f:
         text = f.read()

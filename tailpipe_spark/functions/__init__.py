@@ -1,4 +1,3 @@
 from tailpipe_spark.functions.exact import dsum, davg, dwindow_sum
-from tailpipe_spark.functions.vectors import cosine_similarity, dot, l2_norm
 
-__all__ = ["dsum", "davg", "dwindow_sum", "cosine_similarity", "dot", "l2_norm"]
+__all__ = ["dsum", "davg", "dwindow_sum"]

@@ -96,14 +96,9 @@ def _tokenize(text: str) -> list[tuple[str, str, int]]:
             raise HclParseError(f"unexpected character {text[pos]!r}", line)
         kind = m.lastgroup
         val = m.group()
-        if kind == "newline":
-            toks.append(("newline", val, line))
-            line += 1
-        elif kind in ("ws",):
-            pass
-        elif kind == "comment":
+        if kind in ("newline", "comment"):
             line += val.count("\n")
-        else:
+        elif kind != "ws":
             toks.append((kind, val, line))
         pos = m.end()
     toks.append(("eof", "", line))
@@ -115,15 +110,10 @@ class _Parser:
         self.toks = _tokenize(text)
         self.i = 0
 
-    def peek(self, skip_newlines: bool = True):
-        j = self.i
-        while skip_newlines and self.toks[j][0] == "newline":
-            j += 1
-        return self.toks[j]
+    def peek(self):
+        return self.toks[self.i]
 
-    def next(self, skip_newlines: bool = True):
-        while skip_newlines and self.toks[self.i][0] == "newline":
-            self.i += 1
+    def next(self):
         tok = self.toks[self.i]
         self.i += 1
         return tok

@@ -1,5 +1,4 @@
 from tailpipe_spark.operators.asof import asof_join
-from tailpipe_spark.operators.range_join import range_join_time
 from tailpipe_spark.operators.sessionize import sessionize
 
-__all__ = ["asof_join", "range_join_time", "sessionize"]
+__all__ = ["asof_join", "sessionize"]

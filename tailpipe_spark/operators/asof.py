@@ -30,17 +30,13 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: list[str] | None = None,
-    direction: str = "backward",
-    allow_exact_matches: bool = True,
 ) -> DataFrame:
     """For each left row, attach the latest right row with
-    ``right_time <= left_time`` (direction='backward'; 'forward' flips).
+    ``right_time <= left_time``.
 
     Returns the left columns plus ``<value_col>`` columns from the
     matched right row (renamed ``asof_<right_time>`` for the time).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
     value_cols = value_cols or [c for c in right.columns if c not in (on, right_time)]
     # SQL join semantics: NULL keys never match. Without this filter the
     # window partition groups all NULL keys together and they match each
@@ -67,38 +63,18 @@ def asof_join(
     )
     both = lhs.unionByName(rhs)
 
-    # Order: time asc; at equal times a right row must land on the side
-    # of the left row that the frame covers for an exact match to be
-    # visible — BEFORE it for backward (preceding frame), AFTER it for
-    # forward (following frame). Flip the tiebreak to exclude exacts.
-    if direction == "backward":
-        exact_rank = (
-            F.col("__is_left") if allow_exact_matches else (1 - F.col("__is_left"))
-        )
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__t").asc(), exact_rank.asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        exact_rank = (
-            (1 - F.col("__is_left")) if allow_exact_matches else F.col("__is_left")
-        )
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__t").asc(), exact_rank.asc())
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-
-    pick = F.last if direction == "backward" else F.first
+    # Order: time asc; at equal times a right row sorts BEFORE the left
+    # row, inside its preceding frame, so an exact match is visible.
+    w = (
+        Window.partitionBy("__k")
+        .orderBy(F.col("__t").asc(), F.col("__is_left").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     matched = both.select(
         "__is_left",
         "__lrow",
-        pick(F.col("__rt"), ignorenulls=True).over(w).alias(f"asof_{right_time}"),
-        *[
-            pick(F.col(f"__rv_{c}"), ignorenulls=True).over(w).alias(c)
-            for c in value_cols
-        ],
+        F.last(F.col("__rt"), ignorenulls=True).over(w).alias(f"asof_{right_time}"),
+        *[F.last(F.col(f"__rv_{c}"), ignorenulls=True).over(w).alias(c) for c in value_cols],
     )
     out = matched.filter(F.col("__is_left") == 1)
     return out.select(

@@ -141,7 +141,6 @@ def auto_filter_join(
     small: DataFrame,
     key: str,
     how: str = "semi",
-    build_rows: int | None = None,
     broadcast_max_rows: int = 1_000_000,
     num_hashes: int = DEFAULT_NUM_HASHES,
     seed: int = 0,
@@ -152,30 +151,24 @@ def auto_filter_join(
     pruning (DuckDB applies it without being asked; callers here should
     not need to know bloom_prune_* exists either).
 
-    Decision, in build-size order:
-    - ``build_rows <= broadcast_max_rows``: broadcast the distinct build
+    The build side's row count (one O(small) count job) decides:
+    - at most ``broadcast_max_rows``: broadcast the distinct build
       keys and let Catalyst plan a Broadcast{HashJoin} — no fact-side
       shuffle at all, the cheapest possible shape when the build side
       fits (the 1M default is ~8 MB of bigint keys; size the threshold
       to executor memory at cluster scale).
     - otherwise: Bloom-pruned join (:func:`bloom_prune_semi_join` /
-      :func:`bloom_prune_anti_join`) with the bitmap auto-sized from
-      ``build_rows`` — the fixed-size broadcastable filter drops (semi)
-      or proves-clean (anti) the bulk of the fact side before the exact
-      shuffle that guarantees the result.
-
-    ``build_rows`` should come from catalog metadata when the build
-    side is a cataloged table — ``Catalog.row_count`` serves it from
-    parquet footers with NO Spark job. When None, one O(small) count
-    job runs (same cost the bloom auto-sizing would pay).
+      :func:`bloom_prune_anti_join`) with the bitmap sized from that
+      count by ``_auto_num_bits`` — the fixed-size broadcastable filter
+      drops (semi) or proves-clean (anti) the bulk of the fact side
+      before the exact shuffle that guarantees the result.
 
     Both branches return the EXACT join result (plan shape is
     semantically invisible — pinned by the q_auto_filter_join oracle
     entry and tests/test_bloom_countmin_spans.py plan pins)."""
     if how not in ("semi", "anti"):
         raise ValueError(f"how must be 'semi' or 'anti', got {how!r}")
-    if build_rows is None:
-        build_rows = small.select(key).count()
+    build_rows = small.select(key).count()
     if build_rows <= broadcast_max_rows:
         keys = F.broadcast(small.select(key).distinct())
         return big.join(keys, key, f"left_{how}")
@@ -188,7 +181,7 @@ def bloom_prune_semi_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    num_bits: int | None = None,
+    num_bits: int,
     num_hashes: int = DEFAULT_NUM_HASHES,
     seed: int = 0,
 ) -> DataFrame:
@@ -199,22 +192,18 @@ def bloom_prune_semi_join(
        row, never a scaling side — and keep rows passing the probe;
     3. exact LEFT SEMI join removes the false positives.
 
-    ``num_bits=None`` (default) auto-sizes the bitmap from the build
-    side's row count: m = 16·n rounded up to a power of two (FPR ≈
-    1.4 % at k=2), floored at 64 Kib and capped at 2^27 bits (16 MiB
-    broadcast). The sizing count is one O(small) job — cheap relative
-    to the fact-side shuffle it saves, and the failure mode it
-    prevents is silent: a saturated fixed-size bitmap (e.g. 60 k keys
-    in 64 Kib → FPR ≈ 70 %) still returns EXACT results but prunes
-    almost nothing, which is exactly how an un-sized bloom would
-    misbehave at 100 TB.
+    ``num_bits`` must grow with the build side (``auto_filter_join``
+    sizes it with ``_auto_num_bits``): a saturated fixed-size bitmap
+    (e.g. 60 k keys in 64 Kib → FPR ≈ 70 %) still returns EXACT results
+    but prunes almost nothing, which is exactly how an un-sized bloom
+    would misbehave at 100 TB.
 
     At cluster scale only the bloom-surviving fraction of ``big`` is
     shuffled by step 3; with a selective ``small`` that is the
     difference between shuffling 100 TB and shuffling a few hundred GB.
     The plan stays correct at ANY false-positive rate, so sizing m is
-    purely a performance knob (the auto-sized bitmap is 16·n bits,
-    8 KiB floor / 16 MiB cap — always broadcast-cheap).
+    purely a performance knob (the sized bitmap is 16·n bits, 8 KiB
+    floor / 16 MiB cap — always broadcast-cheap).
 
     The always-true ``monotonically_increasing_id() >= 0`` guard
     between the probe and the exact join is a deliberate optimizer
@@ -228,8 +217,6 @@ def bloom_prune_semi_join(
     range-folds rand comparisons to true and the fence vanishes.) The
     ordering is pinned in tests/test_bloom_countmin_spans.py.
     """
-    if num_bits is None:
-        num_bits = _auto_num_bits(small.select(key).count())
     bf = bloom_build(small.select(key), key, num_bits, num_hashes, seed)
     pruned = (
         big.crossJoin(F.broadcast(bf))
@@ -244,10 +231,9 @@ def bloom_prune_anti_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    num_bits: int | None = None,
+    num_bits: int,
     num_hashes: int = DEFAULT_NUM_HASHES,
     seed: int = 0,
-    persist: bool = False,
 ) -> DataFrame:
     """EXACT ``big ANTI JOIN small ON key`` with Bloom pre-partition —
     the decontamination-at-scale pattern (drop every corpus row whose
@@ -278,11 +264,7 @@ def bloom_prune_anti_join(
     That trade is right at cluster scale: a parquet scan is
     column-pruned, pushdown-filtered, and embarrassingly parallel,
     while the anti-join shuffle is the network-bound term the probe
-    exists to shrink. ``persist=True`` caches the probe-annotated
-    ``big`` (MEMORY_AND_DISK) so the second branch reads the cache
-    instead of rescanning — the right call when ``big`` is a derived
-    (non-scan) plan; leave it False for plain parquet scans, where the
-    rescan is cheaper than materializing the table.
+    exists to shrink.
 
     AQE-safety (the distributed_cumsum class — two consumers of one
     exchange disagreeing after an AQE re-plan): this IS a genuine
@@ -298,19 +280,14 @@ def bloom_prune_anti_join(
     re-execute deterministically. A nondeterministic upstream (a
     ``rand()`` sample, a mono-id-derived column) could route a row
     differently in the two re-executions — dropped from both branches
-    or emitted twice. For such inputs ``persist=True`` is the
-    CORRECTNESS switch, not a perf knob: both branches then read one
-    materialization. Same argument covers :func:`bloom_prune_semi_join`
+    or emitted twice, so persist such an input before the join. Same
+    argument covers :func:`bloom_prune_semi_join`
     (single consumer of the probe, build side consumed twice — both
     deterministic) and the sketch rollups (linear chains, integer-exact
     binning). Pinned by tests/test_aqe_multiconsumer.py."""
-    if num_bits is None:
-        num_bits = _auto_num_bits(small.select(key).count())
     bf = bloom_build(small.select(key), key, num_bits, num_hashes, seed)
     probe = bloom_might_contain(F.col("bf"), F.col(key), num_bits, num_hashes, seed)
     with_bf = big.crossJoin(F.broadcast(bf))
-    if persist:
-        with_bf = with_bf.persist()
     clean = with_bf.where(~probe).drop("bf")
     suspect = (
         with_bf.where(F.coalesce(probe, F.lit(True)))

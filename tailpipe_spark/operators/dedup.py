@@ -24,7 +24,7 @@ xxhash64 token bits; near-dup candidates = equal 16-bit chunks (LSH on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def normalize_text(col):
@@ -631,7 +631,6 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 40,
-    _stats: dict | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii —
@@ -670,10 +669,8 @@ def connected_components_star(
     the new set absent from the old). Both sets are distinct, so
     equal-count + empty-anti ⟺ set equality — no hash shortcut that
     could terminate early on a collision. Per round the edge set is
-    localCheckpointed to keep the loop's lineage flat.
-
-    ``_stats``: optional dict that receives {"rounds": R,
-    "converged": bool} for the scale-proof harness.
+    localCheckpointed to keep the loop's lineage flat. A budget
+    exhausted before convergence is reported with a UserWarning.
     """
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # node universe BEFORE dropping self-loops: a self-loop-only node
@@ -691,7 +688,6 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     prev_cnt = e.count()
-    rounds = 0
     converged = prev_cnt == 0
     # The loop multiplies every per-stage scheduling floor by the round
     # count, so each round's exchanges are pinned to ~1 partition per
@@ -709,7 +705,6 @@ def connected_components_star(
     for _ in range(max_iterations):
         if converged:
             break
-        rounds += 1
         np_ = max(1, min(spark_parts, prev_cnt // 25_000 + 1))
         # --- large-star: m = min over the SYMMETRIC neighborhood ---
         sym = e.union(
@@ -748,16 +743,12 @@ def connected_components_star(
                 converged = True
         e = small
         prev_cnt = cnt
-    if _stats is not None:
-        _stats["rounds"] = rounds
-        _stats["converged"] = converged
     if not converged:
         # not silent (r11 ADVICE): an exhausted budget means the edge
         # set is still mid-contraction — the min-agg below then labels
         # nodes with sub-star parent pointers, not component minima,
         # and a caller reading only the DataFrame would ship wrong
-        # component ids with no signal. The optional _stats dict is
-        # for harnesses; the warning is for everyone else.
+        # component ids with no signal.
         import warnings
 
         warnings.warn(
@@ -934,6 +925,11 @@ def incremental_dedup(
     )
 
 
+#: band memberships of a (band, sig) bucket past this many are
+#: dropped by ``minhash_lsh_pairs``
+MAX_BUCKET_DF = 1_000_000
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -942,7 +938,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn=None,
-    max_bucket_df: int | None = 1_000_000,
     corpus_size: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
@@ -950,7 +945,7 @@ def minhash_lsh_pairs(
     Two docs collide if any band (num_hashes/bands consecutive
     min-hashes) is identical. Returns distinct (id_a, id_b), id_a<id_b.
 
-    ``max_bucket_df`` guards the bucket aggregation against degenerate
+    ``MAX_BUCKET_DF`` guards the bucket aggregation against degenerate
     corpora (10⁸ verbatim copies of one document funnel into ONE
     (band, sig) bucket): band memberships past the cap are dropped
     before the collect (count per key → broadcast anti-join), trading
@@ -959,17 +954,14 @@ def minhash_lsh_pairs(
     bounded aggregation buffer. ``corpus_size`` (catalog/footer hint)
     skips the one count job the cap guard otherwise needs; on a corpus
     provably at-or-under the cap the guard is dropped from the plan and
-    results are bit-identical to the uncapped form. None disables.
+    results are bit-identical to the uncapped form.
     """
     memberships = band_memberships(
         docs, n, num_hashes, bands, text_col, id_col, hash_fn
     )
-    if max_bucket_df is not None:
-        size = corpus_size if corpus_size is not None else docs.count()
-        if size <= max_bucket_df:  # bucket size is bounded by corpus size
-            max_bucket_df = None
-    if max_bucket_df is not None:
-        memberships = _drop_hot_keys(memberships, ["band", "sig"], max_bucket_df)
+    size = corpus_size if corpus_size is not None else docs.count()
+    if size > MAX_BUCKET_DF:  # bucket size is bounded by corpus size
+        memberships = _drop_hot_keys(memberships, ["band", "sig"], MAX_BUCKET_DF)
     # One shuffle builds the collision buckets; bucket_pairs expands
     # small buckets row-locally and spreads oversized ones through the
     # join path.
@@ -1028,12 +1020,16 @@ def simhash(
     return votes.select(id_col, fp.alias("simhash"))
 
 
+#: memberships of a simhash chunk value past this many are dropped by
+#: ``simhash_candidates``
+MAX_CHUNK_DF = 1_000_000
+
+
 def simhash_candidates(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     chunks: int = 4,
-    max_chunk_df: int | None = 1_000_000,
     corpus_size: int | None = None,
     portable: bool = False,
 ) -> DataFrame:
@@ -1044,7 +1040,7 @@ def simhash_candidates(
     Chunk values live in a 2^(64/chunks) space, so bucket sizes grow
     linearly with the corpus — chunk-LSH is a small-to-mid-corpus tool
     (beyond ~10⁷ docs, widen chunks or pre-partition by a coarser key).
-    ``max_chunk_df``/``corpus_size`` apply the same degenerate-hot-key
+    ``MAX_CHUNK_DF``/``corpus_size`` apply the same degenerate-hot-key
     guard as minhash_lsh_pairs: memberships of a chunk value shared by
     more than the cap are dropped before the collect so one boilerplate
     corpus can't funnel into a single aggregation buffer."""
@@ -1061,12 +1057,9 @@ def simhash_candidates(
     memberships = fp.select(id_col, F.explode(F.array(*chunk_cols)).alias("c")).select(
         id_col, "c.ci", "c.cv"
     )
-    if max_chunk_df is not None:
-        size = corpus_size if corpus_size is not None else docs.count()
-        if size <= max_chunk_df:  # chunk df is bounded by corpus size
-            max_chunk_df = None
-    if max_chunk_df is not None:
-        memberships = _drop_hot_keys(memberships, ["ci", "cv"], max_chunk_df)
+    size = corpus_size if corpus_size is not None else docs.count()
+    if size > MAX_CHUNK_DF:  # chunk df is bounded by corpus size
+        memberships = _drop_hot_keys(memberships, ["ci", "cv"], MAX_CHUNK_DF)
     parts = memberships.groupBy("ci", "cv").agg(F.collect_list(id_col).alias("ids"))
     return bucket_pairs(parts, ["ci", "cv"]).distinct()
 
@@ -1141,11 +1134,7 @@ def resolve_by_quality(
 
 
 def remove_duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    portable: bool = True,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 8
 ) -> DataFrame:
     """Excise cross-document verbatim spans, keeping one owner copy —
     the text-REWRITING half of exact substring dedup (Lee et al.,
@@ -1177,9 +1166,9 @@ def remove_duplicated_spans(
     exchange): ``wins`` feeds BOTH the duplicated-window aggregate and
     the span join, and ``base`` is read again for the final excision —
     so AQE may re-execute either subtree per consumer without exchange
-    reuse. Every column is a pure function of the input rows (md5 /
-    seeded xxhash64 over normalized tokens, posexplode positions — no
-    RNG, no partition-id, no mono-id), so re-executions are
+    reuse. Every column is a pure function of the input rows (md5 over
+    normalized tokens, posexplode positions — no RNG, no partition-id,
+    no mono-id), so re-executions are
     bit-identical and the consumers cannot disagree under any re-plan.
     Pinned by tests/test_aqe_multiconsumer.py."""
     from pyspark.sql import Window
@@ -1188,18 +1177,8 @@ def remove_duplicated_spans(
         F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__t")
     )
     long_enough = base.where(F.size("__t") >= k)
-    if portable:
-        wins_arr = F.transform(
-            F.sequence(F.lit(0), F.size("__t") - k),
-            lambda i: F.md5(F.array_join(F.slice("__t", i + 1, k), " ")),
-        )
-    else:
-        args = ", ".join(f"element_at(__t, i + {j + 1})" for j in range(k))
-        wins_arr = F.expr(
-            f"transform(sequence(0, size(__t) - {k}), i -> xxhash64({args}))"
-        )
     wins = long_enough.select(
-        F.col(id_col), F.posexplode(wins_arr).alias("pos", "wh")
+        F.col(id_col), F.posexplode(_window_hashes(k)).alias("pos", "wh")
     )
     dup = (
         wins.groupBy("wh")
@@ -1344,12 +1323,17 @@ def prefix_jaccard_pairs(
     ).where(F.col("jaccard") >= F.lit(threshold))
 
 
+def _window_hashes(k: int) -> Column:
+    """md5 of each k-token window of the ``__t`` token array, in
+    position order: the gram string any SQL engine can replay."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size("__t") - k),
+        lambda i: F.md5(F.array_join(F.slice("__t", i + 1, k), " ")),
+    )
+
+
 def duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    portable: bool = True,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 8
 ) -> DataFrame:
     """(id, pos, n_tokens) rows for every position whose k-token window
     also appears verbatim in at least one OTHER document.
@@ -1361,23 +1345,12 @@ def duplicated_spans(
     left-semi join keeps the duplicated positions. No pair
     materialization anywhere — cost is linear in corpus token count
     plus the window-hash shuffle, the same scaling class as the gram
-    join. ``portable`` picks md5-of-gram-string (any-engine replay) vs
-    xxhash64 over the k token values (engine-fast, no string alloc)."""
+    join. Window hashes are md5 of the gram string (any-engine replay)."""
     t = _tokens(docs, text_col, k, id_col)
-    if portable:
-        wins_arr = F.transform(
-            F.sequence(F.lit(0), F.size("__t") - k),
-            lambda i: F.md5(F.array_join(F.slice("__t", i + 1, k), " ")),
-        )
-    else:
-        args = ", ".join(f"element_at(__t, i + {j + 1})" for j in range(k))
-        wins_arr = F.expr(
-            f"transform(sequence(0, size(__t) - {k}), i -> xxhash64({args}))"
-        )
     wins = t.select(
         F.col(id_col),
         F.size("__t").alias("n_tokens"),
-        F.posexplode(wins_arr).alias("pos", "wh"),
+        F.posexplode(_window_hashes(k)).alias("pos", "wh"),
     )
     dup_hashes = (
         wins.groupBy("wh")
@@ -1389,11 +1362,7 @@ def duplicated_spans(
 
 
 def duplicated_span_coverage(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    portable: bool = True,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 8
 ) -> DataFrame:
     """Per-document coverage of cross-document duplicated k-token spans:
     ``(id, n_tokens, dup_windows, covered_tokens, dup_fraction)``, one
@@ -1407,7 +1376,7 @@ def duplicated_span_coverage(
     integers — bit-identical on any IEEE-754 engine."""
     from pyspark.sql import Window
 
-    spans = duplicated_spans(docs, text_col, id_col, k, portable)
+    spans = duplicated_spans(docs, text_col, id_col, k)
     w = Window.partitionBy(id_col).orderBy("pos")
     prev_end = F.max(F.col("pos") + k).over(
         w.rowsBetween(Window.unboundedPreceding, -1)

@@ -164,78 +164,25 @@ def mixture_rates(
     )
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def persisted_input(df: DataFrame, storage_level=None):
-    """Scoped persist for an operator input (r14 verdict ask #8: the
-    formal lifecycle API that ``persist_input=True`` + the
-    ``_persisted_input`` attribute only approximated).
-
-    Spark's CacheManager holds catalog cache entries for the SESSION
-    lifetime (ContextCleaner reclaims unreachable RDD/broadcast/shuffle
-    state, not cache entries), and a cached plan can serve STALE rows
-    if the underlying table is re-collected after first
-    materialization. Scoping the persist makes the ownership explicit::
-
-        with persisted_input(feats) as cached:
-            out = budget_select(cached, ...)
-            out.write.parquet(...)        # actions inside the scope
-        # unpersisted here, always
-
-    The yielded DataFrame is the SAME object persisted; pass it to the
-    operator and run every action on the result inside the ``with``
-    block — after exit the cache entry is gone and later actions
-    recompute from source (correct, just unaccelerated)."""
-    from pyspark import StorageLevel
-
-    handle = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield handle
-    finally:
-        handle.unpersist()
-
-
 def distributed_cumsum(
     df: DataFrame,
     order_col: str | list[str],
     value_col: str,
     out_col: str = "cum_before",
     partitions: int | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """EXCLUSIVE running sum of ``value_col`` in global ``order_col``
     order, without the single-partition global window.
 
-    ``persist_input=True`` caches ``df`` (MEMORY_AND_DISK) before the
-    three consumers touch it — the boundary sketch, the per-bucket
-    totals branch (materialized for the offsets broadcast), and the
-    bucketed row branch each re-evaluate df's ENTIRE upstream plan
-    otherwise. Turn it on when that upstream is expensive (token-budget
-    curation featurizes every document's text: measured sf10, the same
-    plan drops 4.29 -> 2.70 s min-of-5 because featurization runs once
-    instead of three times; SCALE_PROOF §token-budget-jobs). Leave it
-    off when df is a cheap scan. Scale bound: what's cached is the
-    caller's PRUNED projection (order keys + value, tens of bytes per
-    row — orders of magnitude under corpus bytes) and it spills to
-    disk. LIFECYCLE — the caller owns cleanup: Spark's CacheManager
-    holds a strong reference to the persisted plan for the SESSION
-    lifetime (ContextCleaner reclaims RDD/broadcast/shuffle state of
-    unreachable objects, NOT catalog cache entries), so in a long-lived
-    session the entry accumulates storage until unpersisted, and — the
-    sharper edge — it can serve STALE rows if the upstream table is
-    re-collected or compacted after first materialization (the cache
-    key is the analyzed plan, not the files). The persisted handle is
-    exposed as ``result._persisted_input``; call
-    ``result._persisted_input.unpersist()`` after the result is
-    materialized, or ``spark.catalog.clearCache()`` between pipeline
-    stages (r13 ADVICE). A shared-exchange rewrite
-    (repartition on the bucket id as both branches' common child) was
-    tried first and does NOT work: column pruning rewrites each
-    branch's copy of the exchange child differently, so the subtrees
-    never match for ReusedExchange and the repartition only adds
-    shuffle (measured 5.0 -> 5.9 s; the recorded negative).
+    Three consumers read ``df`` — the boundary sketch, the per-bucket
+    totals branch (materialized for the offsets broadcast) and the
+    bucketed row branch — and each re-evaluates its upstream plan;
+    persist an expensive input before the call. A shared-exchange
+    rewrite (repartition on the bucket id as both branches' common
+    child) does NOT avoid that: column pruning rewrites each branch's
+    copy of the exchange child differently, so the subtrees never match
+    for ReusedExchange and the repartition only adds shuffle (measured
+    5.0 -> 5.9 s; the recorded negative).
 
     The naive ``Window.orderBy(order_col)`` funnels the whole table
     through ONE task — the classic 100 TB cumsum killer. This is the
@@ -281,12 +228,6 @@ def distributed_cumsum(
     <= 32·n small tuples (the boundary sketch), not data.
     """
     spark = df.sparkSession
-    if persist_input:
-        from pyspark import StorageLevel
-
-        # persist BEFORE the sketch so its collect populates the cache
-        # and the two plan branches below read it back
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     key_cols = [F.col(c) for c in order_cols]
@@ -358,10 +299,6 @@ def distributed_cumsum(
         )
         .drop("__bkt", "__off")
     )
-    if persist_input:
-        # expose the handle so callers can unpersist once materialized
-        # (CacheManager keeps it for the session otherwise — docstring)
-        out._persisted_input = df
     return out
 
 
@@ -385,7 +322,6 @@ def budget_select(
     value_col: str,
     budget: int,
     out_col: str = "cum_total",
-    persist_input: bool = False,
     unit_lower_bound: int | None = None,
 ) -> DataFrame:
     """Greedy prefix selection under a resource budget: rank rows by
@@ -429,32 +365,13 @@ def budget_select(
     60k docs and 100 TB.
 
     Returns the selected rows with ``out_col`` = inclusive running
-    total (the audit column: max(out_col) is the spend). With
-    ``persist_input=True`` (generic path only; the pruned path reads
-    the input exactly once and ignores it) the caller owns the cache
-    entry's lifetime (see :func:`distributed_cumsum`); the handle is
-    re-exposed as ``result._persisted_input``.
+    total (the audit column: max(out_col) is the spend).
     """
     if unit_lower_bound is not None:
         if unit_lower_bound < 1:
             raise ValueError("unit_lower_bound must be >= 1")
         k = budget // unit_lower_bound
         if k <= _BUDGET_PRUNE_MAX_ROWS:
-            if persist_input:
-                import warnings
-
-                # r14 ADVICE: the pruned path reads the input exactly
-                # once, so there is nothing to persist — say so instead
-                # of silently ignoring the flag, and leave an explicit
-                # None so `result._persisted_input` can never raise
-                # AttributeError at access time.
-                warnings.warn(
-                    "budget_select: persist_input=True has no effect on "
-                    "the unit_lower_bound pruned path (single input "
-                    "pass); prefer the persisted_input() context "
-                    "manager when you need an input cache.",
-                    stacklevel=2,
-                )
             # guard rides the first sort key so TakeOrdered evaluates it
             # for EVERY candidate row (a plain projected guard column
             # would be pruned below the limit and only run post-prune)
@@ -472,24 +389,15 @@ def budget_select(
             w = Window.orderBy(*order_cols).rowsBetween(
                 Window.unboundedPreceding, Window.currentRow
             )
-            out = top.withColumn(out_col, F.sum(value_col).over(w)).where(
+            return top.withColumn(out_col, F.sum(value_col).over(w)).where(
                 F.col(out_col) <= budget
             )
-            if persist_input:
-                out._persisted_input = None  # nothing persisted (warned above)
-            return out
-    with_cum = distributed_cumsum(
-        df, order_cols, value_col, out_col="__cum_before",
-        persist_input=persist_input,
-    )
-    out = (
+    with_cum = distributed_cumsum(df, order_cols, value_col, out_col="__cum_before")
+    return (
         with_cum.withColumn(out_col, F.col("__cum_before") + F.col(value_col))
         .where(F.col(out_col) <= budget)
         .drop("__cum_before")
     )
-    if persist_input:
-        out._persisted_input = with_cum._persisted_input
-    return out
 
 
 def pps_systematic(

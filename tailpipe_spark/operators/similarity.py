@@ -68,14 +68,14 @@ def quantize12(col):
     return quantize(col, 12)
 
 
-def exact_cosine(a, b, round_digits: int | None = 12):
+def exact_cosine(a, b):
     """Deterministic cosine similarity between two array columns,
-    quantized to the 10^-round_digits grid for cross-engine
-    comparability (the fixed-point folds are bit-identical everywhere;
-    sqrt/division are IEEE-identical; quantization keeps the final
-    value engine-portable). None skips quantization."""
+    quantized to the 10^-12 grid for cross-engine comparability (the
+    fixed-point folds are bit-identical everywhere; sqrt/division are
+    IEEE-identical; quantization keeps the final value
+    engine-portable)."""
     c = _exact_dot(a, b) / (F.sqrt(_exact_sq_norm(a)) * F.sqrt(_exact_sq_norm(b)))
-    return quantize(c, round_digits) if round_digits is not None else c
+    return quantize12(c)
 
 
 def brute_force_topk(
@@ -129,7 +129,6 @@ def cosine_pairs_threshold(
     use_lsh: bool | None = None,
     num_planes: int = 16,
     bands: int = 4,
-    corpus_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) with
     id_a < id_b and cosine >= threshold.
@@ -140,13 +139,10 @@ def cosine_pairs_threshold(
     bounded by the band layout, re-ranking is exact either way).
     The default (None) counts the corpus and picks: exact below
     ``AUTO_LSH_THRESHOLD`` vectors, LSH above — an all-pairs default
-    must not silently go quadratic on a large corpus. ``corpus_size``
-    is an optional vector-count hint that skips that count job (which
-    on a derived input re-executes the upstream plan).
+    must not silently go quadratic on a large corpus.
     """
     if use_lsh is None:
-        size = corpus_size if corpus_size is not None else vectors.count()
-        use_lsh = size > AUTO_LSH_THRESHOLD
+        use_lsh = vectors.count() > AUTO_LSH_THRESHOLD
     # Per-vector norms computed ONCE (tiny per-row fold); pairwise dot
     # products are per-pair fixed-point folds — no explode, no shuffle:
     # the pair row count is the only cost driver.
@@ -471,7 +467,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "probe_id",
-    multiprobe: int = 0,
     portable_dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates share >=1 LSH band with the probe,
@@ -484,35 +479,26 @@ def lsh_topk(
     SQL engine; the default xxhash64 signature stays the fast path.
 
     Recall is set by the (num_planes, bands) layout — p_catch =
-    1-(1-p^W)^bands with W = num_planes/bands — and by ``multiprobe``:
-    with multiprobe=1 each PROBE band also searches every bucket one bit
-    flip away (W extra buckets per band), multiplying candidate recall
-    while corpus-side cost is unchanged; only the tiny probe side fans
-    out. At 16 planes / 4 bands, recall at cosine 0.4 is ~0.5
-    single-probe and rises steeply with multiprobe."""
+    1-(1-p^W)^bands with W = num_planes/bands. At 16 planes / 4 bands,
+    recall at cosine 0.4 is ~0.5."""
     assert num_planes % bands == 0
     width = num_planes // bands
     mask = (1 << width) - 1
 
-    def banded(df, idc, expand: bool = False):
+    def banded(df, idc):
         sig_col = (
             hyperplane_signature_portable(F.col(vec_col), num_planes, portable_dim)
             if portable_dim is not None
             else hyperplane_signature(F.col(vec_col), num_planes)
         )
         s = df.withColumn("__sig", sig_col)
-        chunk_cols = []
-        for i in range(bands):
-            bv = (
-                F.shiftright(F.col("__sig"), i * width)
-                .bitwiseAND(F.lit(mask))
+        chunk_cols = [
+            F.struct(
+                F.lit(i).alias("band"),
+                F.shiftright(F.col("__sig"), i * width).bitwiseAND(F.lit(mask)).alias("bv"),
             )
-            variants = [bv]
-            if expand and multiprobe >= 1:
-                variants += [bv.bitwiseXOR(F.lit(1 << j)) for j in range(width)]
-            chunk_cols += [
-                F.struct(F.lit(i).alias("band"), v.alias("bv")) for v in variants
-            ]
+            for i in range(bands)
+        ]
         return s.select(
             F.col(id_col).alias(idc),
             F.col(vec_col).alias(f"__v_{idc}"),
@@ -520,7 +506,7 @@ def lsh_topk(
         ).select(idc, f"__v_{idc}", "c.band", "c.bv")
 
     cb = banded(corpus, "cand_id")
-    pb = banded(probe, probe_id_col, expand=True)
+    pb = banded(probe, probe_id_col)
     cands = (
         cb.join(F.broadcast(pb), ["band", "bv"])
         .where(F.col("cand_id") != F.col(probe_id_col))

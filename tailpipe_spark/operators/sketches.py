@@ -163,22 +163,22 @@ def histogram_quantiles(
 # depth = ⌈ln 1/δ⌉. Both sides of the bound are pinned in
 # tests/test_rows_only_bounds.py.
 #
-# Hashing is the repo's portable md5 chain by default (conv of the
-# first 15 md5 hex chars — any SQL engine replays the bucket layout
-# bit-identically, so the registry entry carries a FULL hash oracle);
-# pass portable=False for seeded xxhash64 at ~10× less per-row cost
-# where cross-engine replay is not needed.
+# Hashing is the repo's portable md5 chain (conv of the first 15 md5
+# hex chars — any SQL engine replays the bucket layout bit-identically,
+# so the registry entry carries a FULL hash oracle).
 
 
-def _cm_bucket(item: Column, row: int, width: int, portable: bool) -> Column:
-    """Bucket of ``item`` in sketch row ``row`` (deterministic)."""
-    if portable:
+def _cm_cells(item: Column, depth: int, width: int) -> Column:
+    """``item``'s cell ``(row, bucket)`` in each of the ``depth`` sketch
+    rows, exploded as ``__cell`` (deterministic)."""
+    def bucket(row: int) -> Column:
         h = F.conv(
             F.substring(F.md5(F.concat(item, F.lit(f"#cm{row}"))), 1, 15), 16, 10
         ).cast("long")
-    else:
-        h = F.xxhash64(item, F.lit(row))
-    return F.pmod(h, F.lit(width))
+        return F.pmod(h, F.lit(width))
+
+    cells = [F.struct(F.lit(r).alias("row"), bucket(r).alias("bucket")) for r in range(depth)]
+    return F.explode(F.array(*cells)).alias("__cell")
 
 
 def countmin_sketch(
@@ -187,28 +187,15 @@ def countmin_sketch(
     group_cols: list[str] | None = None,
     depth: int = 4,
     width: int = 512,
-    portable: bool = True,
 ) -> DataFrame:
     """Sketch rows ``(*group_cols, row, bucket, cnt)``.
 
     One explode (×depth) + one shuffle on (group, row, bucket); output
     is bounded by group-count × depth × width, independent of both row
     count and vocabulary size."""
-    item = F.col(item_col)
-    cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("row"),
-                    _cm_bucket(item, r, width, portable).alias("bucket"),
-                )
-                for r in range(depth)
-            ]
-        )
-    ).alias("__cell")
     gcols = group_cols or []
     return (
-        items.select(*gcols, cells)
+        items.select(*gcols, _cm_cells(F.col(item_col), depth, width))
         .groupBy(*gcols, F.col("__cell.row").alias("row"), F.col("__cell.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -226,7 +213,6 @@ def countmin_estimate(
     item_col: str,
     depth: int = 4,
     width: int = 512,
-    portable: bool = True,
 ) -> DataFrame:
     """Point estimates for ``probes``: min over sketch rows of the
     probed cell. Probe rows explode ×depth and join the (depth×width)-
@@ -246,19 +232,7 @@ def countmin_estimate(
             f"exactly (row, bucket, cnt); got {sketch.columns}. "
             "Merge per-group sketches with countmin_merge first."
         )
-    item = F.col(item_col)
-    cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("row"),
-                    _cm_bucket(item, r, width, portable).alias("bucket"),
-                )
-                for r in range(depth)
-            ]
-        )
-    ).alias("__cell")
-    probe_cells = probes.select(item_col, cells).select(
+    probe_cells = probes.select(item_col, _cm_cells(F.col(item_col), depth, width)).select(
         item_col, F.col("__cell.row").alias("row"), F.col("__cell.bucket").alias("bucket")
     )
     joined = probe_cells.join(F.broadcast(sketch), ["row", "bucket"], "left")

@@ -374,7 +374,6 @@ def hash_embedding(
     dim: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = True,
 ) -> DataFrame:
     """Feature-hashing bag-of-words embedding (the "hashing trick"):
     each token lands in ``bucket = hash(token) % dim`` with a ±1 sign
@@ -384,36 +383,24 @@ def hash_embedding(
     EXACT — components are integer sums, so the result is bit-portable
     and oracle-checkable.
 
-    ``portable=True`` derives bucket/sign from md5 hex digits (any SQL
-    engine replays it); ``portable=False`` uses JVM-native xxhash64
-    (~10x cheaper, engine-specific values). Plan: explode → one
+    Bucket and sign come from md5 hex digits, so any SQL engine replays
+    them (``dim`` <= 256: two hex digits). Plan: explode → one
     (doc, bucket) aggregation → one per-doc map densification; shuffle
     volume is bounded by docs × dim.
     """
-    if portable and dim > 256:
-        raise ValueError("portable bucket derivation supports dim <= 256")
+    if dim > 256:
+        raise ValueError("md5 bucket derivation supports dim <= 256")
     toks = docs.select(
         F.col(id_col),
         F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
     ).where(F.col("tok") != "")
-    if portable:
-        hx = "0123456789abcdef"
-        b = (
-            f"((instr('{hx}', substr(md5(tok), 1, 1)) - 1) * 16"
-            f" + instr('{hx}', substr(md5(tok), 2, 1)) - 1) % {dim}"
-        )
-        s = f"1 - 2 * ((instr('{hx}', substr(md5(tok), 3, 1)) - 1) % 2)"
-        hashed = toks.select(
-            id_col, F.expr(b).alias("bucket"), F.expr(s).alias("sign")
-        )
-    else:
-        hashed = toks.select(
-            id_col,
-            F.pmod(F.xxhash64("tok"), F.lit(dim)).cast("int").alias("bucket"),
-            (1 - 2 * F.pmod(F.xxhash64("tok", F.lit(1)), F.lit(2)))
-            .cast("int")
-            .alias("sign"),
-        )
+    hx = "0123456789abcdef"
+    b = (
+        f"((instr('{hx}', substr(md5(tok), 1, 1)) - 1) * 16"
+        f" + instr('{hx}', substr(md5(tok), 2, 1)) - 1) % {dim}"
+    )
+    s = f"1 - 2 * ((instr('{hx}', substr(md5(tok), 3, 1)) - 1) % 2)"
+    hashed = toks.select(id_col, F.expr(b).alias("bucket"), F.expr(s).alias("sign"))
     per_bucket = hashed.groupBy(id_col, "bucket").agg(
         F.sum("sign").cast("long").alias("v")
     )

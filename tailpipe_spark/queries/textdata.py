@@ -383,9 +383,8 @@ def data_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     that budget-constant prefix (see the operator docstring's
     equivalence argument; values hash-identical at sf0.1/sf10). One
     featurize pass instead of sketch+offsets+rows branches: sf0.1
-    0.824 -> 0.229 s, sf10 1.66 -> 1.49 s honest per-execution — and
-    the persist_input cache (plus its session-lifetime ownership
-    burden, r13 ADVICE) is no longer needed at all."""
+    0.824 -> 0.229 s, sf10 1.66 -> 1.49 s honest per-execution, and
+    the input is read once, so no input cache is needed."""
     from tailpipe_spark.operators import sampling as sp
 
     feats = tx.quality_features(_docs(spark, sf_dir, parallel=True)).select(

@@ -235,9 +235,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — instead of the generic two-bucket explode join (two scans, three
     shuffles incl. the per-error groupBy). Results are identical
     (inner-join semantics restored by the ``n_following > 0`` filter);
-    measured 0.667 → 0.568 s min-of-9 interleaved at the 10× set. The
-    generic ``range_join_time`` remains the two-table path and keeps
-    its own operator tests.
+    measured 0.667 → 0.568 s min-of-9 interleaved at the 10× set.
 
     r11 sf10 A/B (SCALE_PROOF §q_range_join): the early-filtered
     two-bucket SMJ wins 13% single-node (3.15 vs 3.63 s) but shuffles

@@ -112,10 +112,15 @@ def _parse_bytes(v: str) -> int:
     return int(m.group(1)) * _SIZE_SUFFIX[m.group(2)]
 
 
-def run_with_oom_retry(spark, action, max_retries: int = 2):
-    """Run ``action()``; on an OOM-shaped failure, retry with smaller
-    units of work — halve ``files.maxPartitionBytes`` and double
-    ``shuffle.partitions`` per attempt (the reference reacts to DuckDB
+#: retries of an OOM-shaped failure in ``run_with_oom_retry``
+OOM_RETRIES = 2
+
+
+def run_with_oom_retry(spark, action):
+    """Run ``action()``; on an OOM-shaped failure, retry up to
+    ``OOM_RETRIES`` times with smaller units of work — halve
+    ``files.maxPartitionBytes`` and double ``shuffle.partitions`` per
+    attempt (the reference reacts to DuckDB
     conversion OOM by shrinking the conversion chunk; Spark's lever is
     task granularity). Conf is restored afterwards."""
     saved = {
@@ -123,11 +128,11 @@ def run_with_oom_retry(spark, action, max_retries: int = 2):
         for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions")
     }
     try:
-        for attempt in range(max_retries + 1):
+        for attempt in range(OOM_RETRIES + 1):
             try:
                 return action()
             except Exception as e:  # noqa: BLE001 — inspect then re-raise
-                if attempt >= max_retries or classify_engine_error(e) != "oom":
+                if attempt >= OOM_RETRIES or classify_engine_error(e) != "oom":
                     raise
                 cur_bytes = _parse_bytes(
                     spark.conf.get("spark.sql.files.maxPartitionBytes")

@@ -2,10 +2,11 @@
 
 The reference engine opens a single in-process DuckDB connection
 (reference: internal/database/duck_db.go:38-104); our equivalent is one
-SparkSession tuned for the local[N] harness but configured so the same
-code runs unmodified on a multi-executor cluster: AQE on (runtime
-re-planning, skew-join splitting, partition coalescing), shuffle
-partitions sized to cores, Arrow enabled for the few pandas-UDF paths.
+SparkSession on the master ``build_session`` is given, by default
+``local[$SPARK_GRAFT_CPUS]``, with settings that hold on a
+multi-executor cluster too: AQE on (runtime re-planning, skew-join
+splitting, partition coalescing), shuffle partitions sized to cores,
+Arrow enabled for the few pandas-UDF paths.
 """
 
 from __future__ import annotations
@@ -53,10 +54,11 @@ def build_session(
 ) -> SparkSession:
     """Build a tuned SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism. All settings are
-    cluster-safe: on a real cluster, pass ``master=None`` and submit with
-    ``spark-submit`` — the builder only sets a local master when none is
-    configured.
+    The builder always sets the master: ``master``, or with None
+    ``local[$SPARK_GRAFT_CPUS]`` (the box's core count when that is
+    unset), which also sizes the default shuffle partitions. On a
+    cluster, pass the cluster's master URL; the other settings hold
+    there too.
     """
     cpus = active_cpus()
     if master is None:
@@ -263,23 +265,16 @@ def tune_scan_splits(spark: SparkSession, total_bytes: int | None) -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
 
 
-def read_table(
-    spark: SparkSession,
-    path: str,
-    *,
-    cache: bool = True,
-    parallelize: bool = False,
-) -> DataFrame:
+def read_table(spark: SparkSession, path: str, *, parallelize: bool = False) -> DataFrame:
     """Read a parquet table, transparently converting nano-timestamp
     columns (unreadable by Spark's vectorized reader) to TimestampType.
 
-    ``cache=True`` memoizes the DataFrame (file listing + schema) per
-    (application, path), and serves it only while the path's parquet
-    files keep their names, sizes and mtimes; ``cache=False`` bypasses
-    the cache."""
+    The DataFrame (file listing + schema) is memoized per (application,
+    path) and served only while the path's parquet files keep their
+    names, sizes and mtimes."""
     app = spark.sparkContext.applicationId
     key = (app, path, parallelize)
-    listing = _listing(path) if cache else None
+    listing = _listing(path)
     if listing is not None:
         cached_listing, cached = _DF_CACHE.get(key, (None, None))
         if cached_listing == listing:

@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tailpipe_spark.config import FormatConfig, SourceConfig
+from tailpipe_spark.config import SourceConfig
 from tailpipe_spark.sources.formats import read_with_format
 from tailpipe_spark.sources.grok import compile_grok
 
@@ -152,13 +152,8 @@ class FileSource:
                 out.append(MatchedFile(p, fields, mtime))
         return out
 
-    def read(
-        self,
-        spark: SparkSession,
-        fmt: FormatConfig | None = None,
-        only_paths: list[str] | None = None,
-    ) -> DataFrame:
-        fmt = fmt or self.config.format
+    def read(self, spark: SparkSession, only_paths: list[str] | None = None) -> DataFrame:
+        fmt = self.config.format
         if fmt is None:
             raise ValueError("file source needs a format")
         files = self.list_files(spark)

@@ -8,9 +8,8 @@ Each reader returns a DataFrame whose plan keeps parsing JVM-side:
              yields every named capture group
 - grok     → grok→regex compilation (sources.grok), then the regex path
 
-Lines that don't match a regex/grok pattern yield all-NULL extracted
-columns and are dropped (the reference's plugins skip unparseable
-lines); pass ``keep_unparsed=True`` to keep them for quarantine.
+Lines that don't match a regex/grok pattern are dropped (the
+reference's plugins skip unparseable lines).
 """
 
 from __future__ import annotations
@@ -69,19 +68,14 @@ _NUL = "\u0000"
 
 
 def _extract_groups(
-    lines: DataFrame,
-    regex: str,
-    groups: dict[str, tuple[int, str | None]],
-    keep_unparsed: bool,
+    lines: DataFrame, regex: str, groups: dict[str, tuple[int, str | None]]
 ) -> DataFrame:
     """One column per ``groups`` entry (name → capture group index and
-    the type to cast to, or None) of each text line of ``lines``:
-    ``regexp_extract`` of that group on a line that ``regex`` matches,
-    NULL on one it does not. Then the line itself as ``_raw`` and the
-    match flag as ``_parsed``. Without ``keep_unparsed`` the lines that
-    ``regex`` does not match are dropped first, and the match flag is
-    known true: a filter on the projected flag would be pushed below
-    the projection and run the match twice per line.
+    the type to cast to, or None) of each text line of ``lines`` that
+    ``regex`` matches: ``regexp_extract`` of that group. The lines that
+    ``regex`` does not match are dropped first, by a filter on the match
+    itself: a filter on a projected match flag would be pushed below the
+    projection and run the match twice per line.
 
     The regex runs once per line for all fields, not once per field: one
     anchored ``regexp_replace`` rewrites a parsed line into its groups
@@ -96,9 +90,7 @@ def _extract_groups(
     The plan is built in two projections because the driver re-checks
     every regex literal of the plan at each DataFrame step."""
     value = F.col("value")
-    matched = value.rlike(regex)
-    if not keep_unparsed:
-        lines, matched = lines.filter(matched), F.lit(True)
+    lines = lines.filter(value.rlike(regex))
     anchored = f"^(?s:.*?)(?:{regex})(?s:.*)$"
     joined = _NUL.join(f"${gi}" for gi, _ in groups.values())
     try:
@@ -108,37 +100,24 @@ def _extract_groups(
     else:
         one_pass = F.split(F.regexp_replace(value, anchored, joined), _NUL, -1)
     split = lines.select(
-        value.alias("_raw"),
-        matched.alias("_parsed"),
-        F.when(matched & ~value.contains(_NUL), one_pass).alias("_g"),
+        value.alias("_raw"), F.when(~value.contains(_NUL), one_pass).alias("_g")
     )
-    line, parsed, parts = F.col("_raw"), F.col("_parsed"), F.col("_g")
+    line, parts = F.col("_raw"), F.col("_g")
     fields = []
     for i, (name, (gi, typ)) in enumerate(groups.items()):
-        c = F.when(parts.isNotNull(), parts[i]).when(
-            parsed, F.regexp_extract(line, regex, gi)
-        )
+        c = F.when(parts.isNotNull(), parts[i]).otherwise(F.regexp_extract(line, regex, gi))
         fields.append((c.cast(typ) if typ else c).alias(name))
-    return split.select(*fields, line, parsed)
+    return split.select(*fields)
 
 
-def read_regex(
-    spark: SparkSession,
-    paths: list[str],
-    fmt: FormatConfig,
-    keep_unparsed: bool = False,
-) -> DataFrame:
+def read_regex(spark: SparkSession, paths: list[str], fmt: FormatConfig) -> DataFrame:
     """Named capture groups → columns (core_formats.bats:148-199)."""
     regex, names = _java_named_groups(fmt.pattern)
     if not names:
         raise ValueError("regex format requires named capture groups")
-    df = _extract_groups(
-        spark.read.text(paths), regex, {n: (gi, None) for n, gi in names.items()},
-        keep_unparsed,
+    return _extract_groups(
+        spark.read.text(paths), regex, {n: (gi, None) for n, gi in names.items()}
     )
-    if keep_unparsed:
-        return df.drop("_parsed")
-    return df.drop("_raw", "_parsed")
 
 
 def read_grok(
@@ -146,19 +125,14 @@ def read_grok(
     paths: list[str],
     fmt: FormatConfig,
     extra_patterns: dict[str, str] | None = None,
-    keep_unparsed: bool = False,
 ) -> DataFrame:
     """Grok patterns incl. nested/optional (core_formats.bats:4-43)."""
     compiled = compile_grok(fmt.pattern, extra_patterns)
-    df = _extract_groups(
+    return _extract_groups(
         spark.read.text(paths),
         compiled.regex,
         {n: (gi, GROK_TYPE_CASTS.get(typ)) for n, (gi, typ) in compiled.fields.items()},
-        keep_unparsed,
     )
-    if keep_unparsed:
-        return df.drop("_raw")
-    return df.drop("_raw", "_parsed")
 
 
 def read_with_format(

@@ -1,7 +1,3 @@
-from tailpipe_spark.streaming.collect_stream import (
-    stream_collect,
-    windowed_counts,
-    session_windows,
-)
+from tailpipe_spark.streaming.collect_stream import session_windows, windowed_counts
 
-__all__ = ["stream_collect", "windowed_counts", "session_windows"]
+__all__ = ["windowed_counts", "session_windows"]

@@ -325,14 +325,14 @@ def test_provisioned_symlink_dir_serves_bucketed_scan(spark, two_tables, tmp_pat
     os.symlink(ws.table_dir("facts_b"), d / "facts_b.parquet")
 
     # before any layout exists the symlinked read takes the plain path
-    plain = rt(spark, str(d / "facts_a.parquet"), cache=False)
+    plain = rt(spark, str(d / "facts_a.parquet"))
     want = sorted((r.k, r.va) for r in plain.select("k", "va").collect())
 
     for t in ("facts_a", "facts_b"):
         bucket_rewrite(spark, ws, t, ["k"], 4)
 
-    a = rt(spark, str(d / "facts_a.parquet"), cache=False)
-    b = rt(spark, str(d / "facts_b.parquet"), cache=False)
+    a = rt(spark, str(d / "facts_a.parquet"))
+    b = rt(spark, str(d / "facts_b.parquet"))
     assert sorted((r.k, r.va) for r in a.select("k", "va").collect()) == want
     j = a.join(b, "k").select("k", "va", "vb")
     plan = _plan(j)

@@ -330,14 +330,15 @@ def test_render_streams_without_collect(spark, monkeypatch):
     full driver-side collect (reference A32 streams row-by-row)."""
     from pyspark.sql import DataFrame
 
-    from tailpipe_spark.cli import render_stream
+    from tailpipe_spark import cli
 
     df = spark.range(0, 5000).selectExpr("id", "id * 2 as dbl")
     monkeypatch.setattr(
         DataFrame, "collect",
         lambda self: (_ for _ in ()).throw(AssertionError("collect() called")),
     )
-    chunks = list(render_stream(df, "csv", page_size=500))
+    monkeypatch.setattr(cli, "PAGE_SIZE", 500)
+    chunks = list(cli.render_stream(df, "csv"))
     # header + ceil(5000/500) pages — page size respected
     assert len(chunks) == 1 + 10
     assert chunks[0] == "id,dbl"
@@ -346,12 +347,13 @@ def test_render_streams_without_collect(spark, monkeypatch):
     assert len(rows) == 5000 and rows[0] == "0,0"
 
 
-def test_render_stream_lazy_first_page(spark):
+def test_render_stream_lazy_first_page(spark, monkeypatch):
     """The first page is available without draining the iterator."""
-    from tailpipe_spark.cli import render_stream
+    from tailpipe_spark import cli
 
     df = spark.range(0, 100000).selectExpr("id")
-    gen = render_stream(df, "table", page_size=100)
+    monkeypatch.setattr(cli, "PAGE_SIZE", 100)
+    gen = cli.render_stream(df, "table")
     header = next(gen)
     rule = next(gen)
     first = next(gen)

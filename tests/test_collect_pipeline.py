@@ -684,8 +684,7 @@ def _key_facts(spark, workspace, table):
 
 
 def _assert_index_fresh(workspace, table):
-    """The maintained index equals a full rebuild, companion ``cols``
-    stats included."""
+    """The maintained index equals a full rebuild."""
     by_path = lambda idx: sorted(idx, key=lambda e: e["path"])  # noqa: E731
     maintained = by_path(workspace.load_file_index(table))
     workspace.refresh_partition_index(table)
@@ -1248,43 +1247,6 @@ def test_compaction_merges_a_file_dropped_behind_the_index(spark, workspace, tmp
     _assert_index_fresh(workspace, "t_drop")
 
 
-def _low_id_dirs(workspace, table):
-    """The key dirs of the files ``pruned_files`` keeps for ids 0-999,
-    and whether those files are a strict subset of the table's."""
-    import os
-
-    kept = workspace.pruned_files(table, predicates={"id": (0, 999)})
-    return {os.path.dirname(p) for p in kept}, len(kept) < len(workspace.files(table))
-
-
-@pytest.mark.parametrize("rewrite", ["bucket_rewrite", "reindex"])
-def test_whole_table_rewrite_keeps_zorder_stats(spark, workspace, tmp_path, rewrite):
-    """A whole-table rewrite after a z-ordered compaction keeps the
-    z-order companion stats on every index entry, so pruning on that
-    column still skips every key dir but the one holding the ids."""
-    from tailpipe_spark.compact import bucket_rewrite
-
-    _collect_rows(spark, workspace, tmp_path, "t_zs", [
-        [(1000 * k + 10 * b + i, f"k{k}", f"2024-05-0{i + 1}T0{b}:00:00")
-         for k in range(4) for i in range(5)]
-        for b in range(2)
-    ])
-    compact_table(spark, workspace, "t_zs", zorder_by=["tp_timestamp", "id"])
-    _assert_index_fresh(workspace, "t_zs")
-    before = _low_id_dirs(workspace, "t_zs")
-    assert len(before[0]) == 1 and before[1]
-    rows = workspace.row_count("t_zs")
-
-    if rewrite == "bucket_rewrite":
-        bucket_rewrite(spark, workspace, "t_zs", ["id"], 2, force=True)
-    else:
-        compact_table(spark, workspace, "t_zs", reindex_expr="idx")
-    assert all((e.get("cols") or {}).get("id") for e in workspace.load_file_index("t_zs"))
-    assert _low_id_dirs(workspace, "t_zs") == before
-    assert workspace.row_count("t_zs") == rows
-    _assert_index_fresh(workspace, "t_zs")
-
-
 def test_whole_table_rewrites_keep_index_fresh(spark, workspace, tmp_path):
     """A reindex compaction and a bucket_rewrite each commit a whole-table
     swap whose index equals a full rebuild, and record one snapshot."""
@@ -1313,7 +1275,7 @@ def test_whole_table_rewrites_keep_index_fresh(spark, workspace, tmp_path):
 def test_quarantine_keeps_index_equal_to_a_rebuild(spark, workspace, tmp_path):
     """Quarantining corrupt files re-indexes the dirs that lost one, a
     file at the table dir's top included: the index equals a full
-    rebuild, companion stats and all."""
+    rebuild."""
     import os
 
     from tailpipe_spark.repair import quarantine_invalid_files
@@ -1322,7 +1284,7 @@ def test_quarantine_keeps_index_equal_to_a_rebuild(spark, workspace, tmp_path):
         [(10 * b + i, idx, f"2024-05-0{i + 1}T00:00:00") for idx in ("a", "b") for i in range(3)]
         for b in range(2)
     ])
-    compact_table(spark, workspace, "t_q", zorder_by=["tp_timestamp", "id"])
+    compact_table(spark, workspace, "t_q")
     victim = sorted(workspace.pruned_files("t_q"))[0]
     with open(victim, "wb") as f:
         f.write(b"this is not parquet at all")
@@ -1331,5 +1293,38 @@ def test_quarantine_keeps_index_equal_to_a_rebuild(spark, workspace, tmp_path):
 
     assert len(quarantine_invalid_files(workspace, "t_q")) == 2
     assert workspace.pruned_files("t_q") is not None
-    assert all((e.get("cols") or {}).get("id") for e in workspace.load_file_index("t_q"))
     _assert_index_fresh(workspace, "t_q")
+
+
+def test_index_written_with_companion_stats_stays_fresh(spark, workspace, tmp_path):
+    """A workspace indexed when entries carried companion ``cols`` stats
+    and the manifest named them in ``indexed_columns`` keeps a fresh
+    index: it prunes the same files by time and compacts the same keys,
+    and the re-index of a rewritten key writes its entries without
+    ``cols``."""
+    import os
+
+    _collect_rows(spark, workspace, tmp_path, "t_old", [
+        [(i, idx, f"2024-05-0{i + 1}T00:00:00") for idx in ("a", "b") for i in range(3)],
+        [(10 + i, "a", f"2024-05-0{i + 4}T00:00:00") for i in range(2)],
+    ])
+    since = datetime(2024, 5, 4)
+    pruned = workspace.pruned_files("t_old", since)
+    assert len(pruned) == 1
+    old = [
+        {**e, "cols": {"id": {"min": e["rows"], "max": e["rows"], "nulls": 0}}}
+        for e in workspace.load_file_index("t_old")
+    ]
+    workspace._store_index("t_old", old)
+    manifest = workspace._load()
+    manifest["tables"]["t_old"]["indexed_columns"] = ["id"]
+    workspace._store(manifest)
+
+    assert workspace.pruned_files("t_old", since) == pruned
+    summary = compact_table(spark, workspace, "t_old")
+    assert summary["keys_rewritten"] == 1 and summary["files_merged"] == 2
+    index = workspace.load_file_index("t_old")
+    assert len(workspace.pruned_files("t_old", since)) == 1
+    rewritten = os.path.relpath(os.path.dirname(pruned[0]), workspace.table_dir("t_old"))
+    by_key = {os.path.dirname(e["path"]): "cols" in e for e in index}
+    assert by_key == {rewritten: False, rewritten.replace("tp_index=a", "tp_index=b"): True}

@@ -34,7 +34,7 @@ def test_variant_file_gives_rows_range_and_parallel_scan(spark, tmp_path):
     )
     assert parquet_row_count(d) == 100
     assert parquet_column_range(d, "id") == (0, 99)
-    df = read_table(spark, d, cache=False, parallelize=True)
+    df = read_table(spark, d, parallelize=True)
     par = spark.sparkContext.defaultParallelism
     assert df.select("id").rdd.getNumPartitions() == par
     assert df.count() == 100
@@ -83,7 +83,7 @@ def test_nano_timestamps_are_converted(spark, tmp_path):
     ts = pa.array([1_714_521_600_123_456_000], type=pa.timestamp("ns"))
     pq.write_table(pa.table({"ts": ts, "n": [1]}), p)
     assert footers(p)[0].nano_timestamp_cols() == ["ts"]
-    df = read_table(spark, p, cache=False)
+    df = read_table(spark, p)
     assert isinstance(df.schema["ts"].dataType, T.TimestampType)
     assert df.selectExpr("unix_micros(ts) AS u").first().u == 1_714_521_600_123_456
 

@@ -307,18 +307,14 @@ def test_grok_one_pass_matches_per_field_extract(spark, tmp_path):
     matched = F.col("value").rlike(g.regex)
     want_cols = []
     for name, (gi, typ) in g.fields.items():
-        c = F.when(matched, F.regexp_extract(F.col("value"), g.regex, gi))
+        c = F.regexp_extract(F.col("value"), g.regex, gi)
         want_cols.append((c.cast(GROK_TYPE_CASTS[typ]) if typ in GROK_TYPE_CASTS else c).alias(name))
-    want = text.select(*want_cols, matched.alias("_parsed"))
+    want = text.filter(matched).select(*want_cols)
 
-    for keep in (False, True):
-        got = read_grok(spark, [str(p)], fmt, keep_unparsed=keep)
-        expected = want if keep else want.filter("_parsed").drop("_parsed")
-        assert got.columns == expected.columns
-        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
-            map(tuple, expected.collect()), key=repr
-        )
-    got = read_grok(spark, [str(p)], fmt).collect()
+    got = read_grok(spark, [str(p)], fmt)
+    assert got.columns == want.columns
+    got = got.collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, want.collect()), key=repr)
     assert len(got) == 7
     assert {r["clientip"] for r in got} >= {"2001:db8::1", "198.51.100.7"}
     assert any(r["rawrequest"] == "\\x16\\x03" and r["bytes"] == "" for r in got)
@@ -326,9 +322,9 @@ def test_grok_one_pass_matches_per_field_extract(spark, tmp_path):
 
 
 def test_readers_match_each_line_once(spark, tmp_path):
-    """When unparsed lines are dropped, the grok and regex readers filter
-    on the match before extracting: the executed plan evaluates RLIKE in
-    a Filter and in no Project."""
+    """The grok and regex readers drop unparsed lines by filtering on the
+    match before extracting: the executed plan evaluates RLIKE in a
+    Filter and in no Project."""
     p = tmp_path / "access.log"
     p.write_text(
         '203.0.113.9 - frank [10/Oct/2024:13:55:36 -0700] '

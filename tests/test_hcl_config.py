@@ -267,6 +267,29 @@ def test_duplicate_partition_across_json_files_rejected(tmp_path):
         load_config(str(tmp_path))
 
 
+@pytest.mark.parametrize("config, refused", [
+    ({"tables": [{"name": "../evil"}]}, "invalid table name"),
+    ({"partitions": [{"table": "../evil", "name": "p"}]}, "invalid table name"),
+    ({"partitions": [{"table": "t", "name": "../evil"}]}, "invalid partition name"),
+    ({"tables": [{"name": "t"}, {"name": "t"}]}, "duplicate table"),
+    ({"partitions": [{"table": "t", "name": "p"}] * 2}, "duplicate partition"),
+])
+def test_json_config_runs_the_hcl_checks(config, refused):
+    """The JSON mirror refuses what the HCL builder refuses: a name that
+    is not a bare identifier (names become paths under the workspace)
+    and a table or partition defined twice. A JSON table that declares
+    columns maps no source field implicitly, as an HCL one does."""
+    from tailpipe_spark.config_io import load_json_text
+
+    with pytest.raises(ConfigValidationError, match=refused):
+        load_json_text(json.dumps(config))
+    hcl = load_hcl_text('table "t" {\n column "id" { type = "bigint" }\n}')["tables"]["t"]
+    js = load_json_text(json.dumps(
+        {"tables": [{"name": "t", "columns": [{"name": "id", "type": "bigint"}]}]}
+    ))["tables"]["t"]
+    assert js.map_fields == hcl.map_fields == []
+
+
 def test_cli_introspection_verbs(tmp_path, capsys):
     from tailpipe_spark import cli
 

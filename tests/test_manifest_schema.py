@@ -61,13 +61,10 @@ def test_collected_tables_read_with_their_file_schema(
     assert row.collect()[0]["m"] == "true"
 
 
-def test_migrated_and_streamed_tables_read_with_their_file_schema(
+def test_migrated_table_reads_with_its_file_schema(
     spark, workspace, tmp_path, assert_manifest_schema
 ):
-    from pyspark.sql import types as T
-
     from tailpipe_spark.migrate import migrate_legacy_table
-    from tailpipe_spark.streaming.collect_stream import stream_collect
 
     legacy_dir = str(tmp_path / "legacy")
     spark.createDataFrame(
@@ -78,22 +75,8 @@ def test_migrated_and_streamed_tables_read_with_their_file_schema(
         spark, workspace, legacy_dir, "migrated", timestamp_col="event_time"
     ) == 3
 
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "c0.json").write_text("\n".join(
-        json.dumps({"id": i, "tp_timestamp": "2024-05-01T00:00:00"}) for i in range(4)
-    ))
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("tp_timestamp", T.TimestampType()),
-    ])
-    q = stream_collect(spark, workspace, TableConfig(name="streamed"),
-                       PartitionConfig("streamed", "default"), str(land), schema)
-    q.awaitTermination(60)
-
-    for t in ("migrated", "streamed"):
-        assert_manifest_schema(workspace, t)
-        assert workspace.read_table(spark, t).schema == workspace.spark_schema(t)
+    assert_manifest_schema(workspace, "migrated")
+    assert workspace.read_table(spark, "migrated").schema == workspace.spark_schema("migrated")
 
 
 def test_entry_without_column_order_reads_in_file_order(

@@ -2,6 +2,7 @@
 similarity — checked against naive in-memory reference computations."""
 
 import math
+import warnings
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
@@ -12,7 +13,6 @@ from tailpipe_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_candidates,
 )
-from tailpipe_spark.operators.range_join import range_join_time
 from tailpipe_spark.operators.sessionize import sessionize
 from tailpipe_spark.operators.similarity import brute_force_topk, lsh_topk
 
@@ -34,74 +34,20 @@ def test_asof_join_backward(spark):
                     value_cols=["price"]).collect()
     got = {r["trade"]: r["price"] for r in out}
     assert got == {"t1": 100.0, "t2": 101.0, "t3": None}
-
-
-def test_asof_exact_match_toggle(spark):
+    # a right row at the left row's exact time matches
     left = spark.createDataFrame([(1, ts(5), "x")], ["k", "t", "tag"])
     right = spark.createDataFrame([(1, ts(5), 7.0)], ["k", "qt", "v"])
-    inc = asof_join(left, right, "k", "t", "qt", ["v"]).collect()[0]["v"]
-    exc = asof_join(left, right, "k", "t", "qt", ["v"],
-                    allow_exact_matches=False).collect()[0]["v"]
-    assert inc == 7.0 and exc is None
-
-
-def test_asof_join_forward(spark):
-    trades = spark.createDataFrame(
-        [(1, ts(5), "t1"), (1, ts(10), "t2"), (2, ts(3), "t3")],
-        ["k", "t", "trade"],
-    )
-    quotes = spark.createDataFrame(
-        [(1, ts(7), 100.0), (1, ts(12), 101.0), (2, ts(1), 50.0)],
-        ["k", "qt", "price"],
-    )
-    out = asof_join(trades, quotes, on="k", left_time="t", right_time="qt",
-                    value_cols=["price"], direction="forward").collect()
-    got = {r["trade"]: r["price"] for r in out}
-    assert got == {"t1": 100.0, "t2": 101.0, "t3": None}
-
-
-def test_asof_forward_exact_match_toggle(spark):
-    left = spark.createDataFrame([(1, ts(5), "x")], ["k", "t", "tag"])
-    right = spark.createDataFrame([(1, ts(5), 7.0), (1, ts(9), 8.0)], ["k", "qt", "v"])
-    inc = asof_join(left, right, "k", "t", "qt", ["v"],
-                    direction="forward").collect()[0]["v"]
-    exc = asof_join(left, right, "k", "t", "qt", ["v"], direction="forward",
-                    allow_exact_matches=False).collect()[0]["v"]
-    assert inc == 7.0 and exc == 8.0
-
-
-def test_range_join_matches_naive(spark):
-    import random
-
-    rnd = random.Random(7)
-    left = [(i, ts(rnd.randrange(0, 200))) for i in range(40)]
-    right = [(j, ts(rnd.randrange(0, 200))) for j in range(60)]
-    ldf = spark.createDataFrame(left, ["lid", "lt"])
-    rdf = spark.createDataFrame(right, ["rid", "rt"])
-    got = {
-        (r["lid"], r["rid"])
-        for r in range_join_time(ldf, rdf, "lt", "rt", span_seconds=600).collect()
-    }
-    want = {
-        (li, rj)
-        for li, lt in left
-        for rj, rt in right
-        if lt < rt <= lt + timedelta(seconds=600)
-    }
-    assert got == want
+    assert asof_join(left, right, "k", "t", "qt", ["v"]).collect()[0]["v"] == 7.0
 
 
 def test_following_window_agg_matches_self_range_join(spark):
-    """The window-frame rewrite must equal the generic bucketed
-    self-join + per-driver aggregation on randomized data (ties on
-    timestamps included)."""
+    """The window-frame rewrite must equal a naive self range join +
+    per-driver aggregation on randomized data (ties on timestamps
+    included)."""
     import random
     from datetime import datetime, timedelta
 
-    from tailpipe_spark.operators.range_join import (
-        following_window_agg,
-        range_join_time,
-    )
+    from tailpipe_spark.operators.range_join import following_window_agg
 
     rnd = random.Random(11)
     base = datetime(2024, 1, 1)
@@ -120,17 +66,11 @@ def test_following_window_agg_matches_self_range_join(spark):
         .filter(F.col("n") > 0)
         .collect()
     }
-    left = df.select(F.col("eid").alias("did"), "uid", F.col("t").alias("dt"))
-    right = df.select(F.col("eid").alias("fid"), "uid", F.col("t").alias("ft"))
-    via_join = {
-        (r["did"], r["n"], r["m"])
-        for r in range_join_time(
-            left, right, "dt", "ft", 60, extra_on=["uid"]
-        )
-        .groupBy("did")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("fid").alias("m"))
-        .collect()
+    following = {
+        d: [f for f, fu, ft in rows if fu == du and dt < ft <= dt + timedelta(seconds=60)]
+        for d, du, dt in rows
     }
+    via_join = {(d, len(fs), min(fs)) for d, fs in following.items() if fs}
     assert via_window == via_join
     assert via_window  # non-degenerate
 
@@ -473,32 +413,6 @@ def test_registry_ann_recall_vs_exact_ground_truth(spark):
     assert ivf_recall >= 0.7, ivf_recall
 
 
-def test_lsh_multiprobe_improves_recall(spark):
-    import numpy as np
-
-    from tailpipe_spark.operators.similarity import brute_force_topk, lsh_topk
-
-    rnd = np.random.RandomState(3)
-    vecs = rnd.randn(200, 16).astype("float32")
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(200)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    probe = df.filter(F.col("vec_id") == 0)
-
-    truth = {r["vec_id"] for r in brute_force_topk(df, probe, k=10).collect()}
-
-    def recall(multiprobe):
-        got = {
-            r["vec_id"]
-            for r in lsh_topk(df, probe, k=10, num_planes=16, bands=4,
-                              multiprobe=multiprobe).collect()
-        }
-        return len(got & truth) / len(truth)
-
-    r0, r1 = recall(0), recall(1)
-    assert r1 >= r0  # probe-side bucket expansion can only add candidates
-    assert r1 >= 0.5  # and at this layout it must clear single-probe's floor
-
-
 def test_cosine_pairs_auto_flips_to_lsh(spark, monkeypatch):
     import numpy as np
 
@@ -519,8 +433,8 @@ def test_cosine_pairs_auto_flips_to_lsh(spark, monkeypatch):
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
-    """Property test: asof_join == pandas.merge_asof on random inputs,
-    both directions x exact-match toggles (the reference semantics)."""
+    """Property test: asof_join == pandas.merge_asof (backward, exact
+    matches allowed) on random inputs (the reference semantics)."""
     import pandas as pd
     from hypothesis import given, settings, strategies as st
 
@@ -531,10 +445,8 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     @given(
         left=st.lists(st.tuples(keys, times), min_size=1, max_size=12),
         right=st.lists(st.tuples(keys, times), min_size=1, max_size=12),
-        direction=st.sampled_from(["backward", "forward"]),
-        exact=st.booleans(),
     )
-    def check(left, right, direction, exact):
+    def check(left, right):
         ldf = spark.createDataFrame(
             [(k, ts(t), i) for i, (k, t) in enumerate(left)], ["k", "t", "lid"]
         )
@@ -546,8 +458,7 @@ def test_asof_join_matches_pandas_merge_asof(spark):
             r["lid"]: r["rv"]
             for r in asof_join(
                 ldf, rdf, on="k", left_time="t", right_time="qt",
-                value_cols=["rv"], direction=direction,
-                allow_exact_matches=exact,
+                value_cols=["rv"],
             ).collect()
         }
         lp = pd.DataFrame(
@@ -560,7 +471,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         ).sort_values("qt", kind="stable")
         want_df = pd.merge_asof(
             lp, rp, left_on="t", right_on="qt", by="k",
-            direction=direction, allow_exact_matches=exact,
         )
         want = {
             int(r.lid): (None if pd.isna(r.rv) else float(r.rv))
@@ -629,9 +539,11 @@ def test_asof_null_keys_never_match(spark):
 def test_range_join_rejects_nonpositive_span(spark):
     import pytest
 
+    from tailpipe_spark.operators.range_join import following_window_agg
+
     df = spark.createDataFrame([(1, ts(0))], ["i", "t"])
     with pytest.raises(ValueError):
-        range_join_time(df, df, "t", "t", span_seconds=0)
+        following_window_agg(df, "t", 0, ["i"], {"n": F.count(F.lit(1))})
 
 
 def test_pii_scan_detects_and_redacts(spark):
@@ -727,13 +639,10 @@ def test_connected_components_star_chain_island_and_agreement(spark):
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (7, 5)], ["id_a", "id_b"]
     )
-    stats: dict = {}
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(edges, _stats=stats).collect()
-    }
+    with warnings.catch_warnings():  # an exhausted budget warns
+        warnings.filterwarnings("error", "connected_components_star exhausted")
+        got = {r["node"]: r["comp"] for r in connected_components_star(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 5: 5, 7: 5}
-    assert stats["converged"]
 
     # agreement with propagation on a denser random-ish graph
     import random
@@ -754,19 +663,20 @@ def test_connected_components_star_chain_island_and_agreement(spark):
 def test_connected_components_star_logarithmic_rounds(spark):
     """The algorithm's reason to exist: a 64-node path has diameter 63
     (63 propagation rounds) but the star contraction converges in
-    O(log) round-pairs — assert a wide margin, not an exact count."""
+    O(log) round-pairs — assert a wide margin, not an exact count: it
+    converges within 16 rounds, so that budget raises no warning."""
     from tailpipe_spark.operators.dedup import connected_components_star
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
     )
-    stats: dict = {}
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(edges, _stats=stats).collect()
-    }
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", "connected_components_star exhausted")
+        got = {
+            r["node"]: r["comp"]
+            for r in connected_components_star(edges, max_iterations=16).collect()
+        }
     assert got == {i: 0 for i in range(64)}
-    assert stats["converged"] and stats["rounds"] <= 16, stats
 
 
 def test_connected_components_star_self_loops_and_empty(spark):

@@ -53,26 +53,6 @@ def test_range_join_self_rewrite_is_single_shuffle_window(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_range_join_time_generic_is_equi_join(spark):
-    """The generic two-table operator stays a bucketed equi-join —
-    never a nested-loop or cartesian fallback."""
-    from tailpipe_spark.operators.range_join import range_join_time
-    from tailpipe_spark.session import read_table
-
-    e = read_table(spark, "/root/testdata/sf0.001/events.parquet")
-    left = e.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id", F.col("ts").alias("lt")
-    )
-    right = e.select(
-        F.col("event_id").alias("next_id"), "user_id", F.col("ts").alias("rt")
-    )
-    plan = _plan(
-        range_join_time(left, right, "lt", "rt", 300, extra_on=["user_id"])
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_dedup_exact_is_partial_agg(spark):
     from tailpipe_spark.operators.dedup import exact_dedup_stats
     from tailpipe_spark.session import read_table

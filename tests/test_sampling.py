@@ -284,34 +284,6 @@ def test_budget_select_unit_lower_bound_matches_generic(spark):
     assert cap_fallback.count() == 500
 
 
-def test_persisted_input_scope_and_pruned_path_flag(spark):
-    """r15 lifecycle formalization (r14 verdict ask #8 + ADVICE): the
-    persisted_input context manager persists for the scope and always
-    unpersists on exit; persist_input=True on the pruned budget_select
-    path warns (nothing to persist) and sets the handle to None so
-    attribute access can never raise."""
-    import warnings
-
-    df = spark.createDataFrame(
-        [(i, 5 + i % 3) for i in range(50)], ["doc_id", "tokens"]
-    )
-    with sampling.persisted_input(df) as cached:
-        assert cached.storageLevel.useMemory
-        out = sampling.budget_select(cached, ["doc_id"], "tokens", 60)
-        assert out.count() > 0
-    assert not df.storageLevel.useMemory  # unpersisted at scope exit
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pruned = sampling.budget_select(
-            df, ["doc_id"], "tokens", 60, unit_lower_bound=5,
-            persist_input=True,
-        )
-    assert any("persist_input" in str(w.message) for w in caught)
-    assert pruned._persisted_input is None
-    assert pruned.count() > 0
-
-
 def test_budget_select_unit_lower_bound_guard_fires(spark):
     """A row below the declared bound (or NULL, which the generic path
     counts as 0) must fail the job loudly, not silently truncate."""

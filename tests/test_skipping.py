@@ -151,35 +151,6 @@ def test_null_stat_files_always_kept(monthly_workspace):
     assert stats_less in kept
 
 
-def test_multi_column_index_prunes_on_companion_column(spark, tmp_path, workspace):
-    """Z-order + multi-column file index: a predicate on the companion
-    column must skip files via manifest stats alone, with identical
-    query results."""
-    from pyspark.sql import functions as F
-
-    from tailpipe_spark.plans.zorder import zorder_rewrite
-
-    # build a table dir by hand: z-ordered files over (ts-ish, cpu)
-    df = spark.range(20000).select(
-        F.col("id").alias("k"),
-        F.abs(F.xxhash64(F.col("id"))).bitwiseAND(F.lit(0xFFFF)).alias("cpu"),
-    )
-    tdir = workspace.table_dir("zt")
-    workspace.ensure_table("zt", {"k": "bigint", "cpu": "bigint"})
-    zorder_rewrite(df, ["k", "cpu"], 16).write.mode("overwrite").parquet(tdir)
-    n = workspace.refresh_partition_index("zt", columns=["cpu"])
-    assert n >= 16
-    all_files = workspace.pruned_files("zt")
-    narrow = workspace.pruned_files("zt", predicates={"cpu": (0, 2000)})
-    assert narrow is not None
-    assert len(narrow) < len(all_files)
-    # equality: union of kept files covers every qualifying row
-    kept = spark.read.parquet(*narrow).where(F.col("cpu") <= 2000)
-    full = spark.read.parquet(tdir).where(F.col("cpu") <= 2000)
-    assert kept.count() == full.count()
-    assert kept.agg(F.sum("k")).collect()[0][0] == full.agg(F.sum("k")).collect()[0][0]
-
-
 def test_pruned_files_accepts_tz_aware_bounds(monthly_workspace):
     """Relative CLI bounds (--from T-7d) arrive tz-aware; pruning must
     normalize instead of raising TypeError (r6 ADVICE, high)."""

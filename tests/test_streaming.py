@@ -3,48 +3,9 @@ from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tailpipe_spark.config import ColumnConfig, PartitionConfig, TableConfig
-from tailpipe_spark.streaming import session_windows, stream_collect, windowed_counts
-
-
-def test_stream_collect_available_now(spark, workspace, tmp_path):
-    land = tmp_path / "landing"
-    land.mkdir()
-    rows = [{"id": i, "time": f"2024-05-01T0{i}:00:00"} for i in range(4)]
-    (land / "chunk0.jsonl").write_text("\n".join(json.dumps(r) for r in rows[:2]))
-    (land / "chunk1.jsonl").write_text("\n".join(json.dumps(r) for r in rows[2:]))
-
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("time", T.StringType())]
-    )
-    table = TableConfig(
-        name="st",
-        columns=[
-            ColumnConfig(name="id", type="bigint"),
-            ColumnConfig(name="tp_timestamp", type="timestamp", source="time"),
-        ],
-        map_fields=[],
-    )
-    q = stream_collect(
-        spark, workspace, table, PartitionConfig("st", "default"),
-        str(land), schema,
-    )
-    q.awaitTermination(120)
-    df = workspace.read_table(spark, "st")
-    assert df.count() == 4
-    assert "tp_date" in df.columns
-
-    # resume: drop one more chunk; checkpoint skips the old ones
-    (land / "chunk2.jsonl").write_text(json.dumps({"id": 9, "time": "2024-05-02T00:00:00"}))
-    q2 = stream_collect(
-        spark, workspace, table, PartitionConfig("st", "default"),
-        str(land), schema,
-    )
-    q2.awaitTermination(120)
-    # exactly-once: no re-ingest of chunks 0/1
-    assert workspace.read_table(spark, "st").count() == 5
+from tailpipe_spark.streaming import session_windows, windowed_counts
 
 
 def test_windowed_counts_batch(spark):
@@ -70,36 +31,6 @@ def test_session_windows_batch(spark):
     assert ns == [1, 2]
 
 
-def test_stream_collect_registers_in_manifest(spark, workspace, tmp_path):
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from tailpipe_spark.config import PartitionConfig, TableConfig
-    from tailpipe_spark.streaming.collect_stream import stream_collect
-
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "c0.json").write_text(
-        "\n".join(_json.dumps({"id": i, "tp_timestamp": "2024-05-01T00:00:00"}) for i in range(4))
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("tp_timestamp", T.TimestampType())]
-    )
-    q = stream_collect(
-        spark, workspace, TableConfig(name="stream_t"),
-        PartitionConfig("stream_t", "default"), str(land), schema,
-    )
-    q.awaitTermination(60)
-    # streaming tables appear in the catalog like batch ones
-    assert "stream_t" in workspace.list_tables()
-    assert "tp_timestamp" in workspace.table_schema("stream_t")
-    assert workspace.read_table(spark, "stream_t").count() == 4
-    # and register_views serves them to SQL
-    workspace.register_views(spark)
-    assert spark.sql("select count(*) n from stream_t").collect()[0]["n"] == 4
-
-
 def _stream_table():
     return TableConfig(
         name="events",
@@ -111,83 +42,12 @@ def _stream_table():
     )
 
 
-_EVENTS_SCHEMA = T.StructType(
-    [T.StructField("id", T.LongType()), T.StructField("time", T.StringType())]
-)
-
-
-def _land_stream(spark, workspace, land):
-    q = stream_collect(
-        spark, workspace, _stream_table(), PartitionConfig("events", "default"),
-        str(land), _EVENTS_SCHEMA,
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-
-
 def _counts(spark, workspace):
     """(unbounded, time-bounded) row counts through Catalog.read_table."""
     bounded = workspace.read_table(
         spark, "events", time_from=datetime(2024, 1, 1), time_to=datetime(2025, 1, 1)
     )
     return workspace.read_table(spark, "events").count(), bounded.count()
-
-
-def test_streamed_and_batch_landings_share_one_table(spark, workspace, tmp_path):
-    """A stream landing followed by a batch collect into the same table:
-    every read sees all rows, before and after compaction, the stream
-    landing leaves a fresh file index, and no file-sink log is left to
-    hide the batch files from a directory read."""
-    import os
-
-    from tailpipe_spark.collect import collect
-    from tailpipe_spark.compact import compact_table
-    from tailpipe_spark.sources.formats import read_jsonl
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    (land / "c0.jsonl").write_text("\n".join(
-        json.dumps({"id": i, "time": f"2024-05-0{i + 1}T00:00:00"}) for i in range(3)
-    ))
-    _land_stream(spark, workspace, land)
-    assert workspace.pruned_files("events") is not None
-
-    batch = tmp_path / "batch.jsonl"
-    batch.write_text("\n".join(
-        json.dumps({"id": 10 + i, "time": f"2024-05-1{i}T00:00:00"}) for i in range(2)
-    ))
-    res = collect(spark, workspace, _stream_table(), PartitionConfig("events", "default"),
-                  source_df=read_jsonl(spark, [str(batch)]))
-    assert res.rows_written == 2
-    assert _counts(spark, workspace) == (5, 5)
-
-    assert compact_table(spark, workspace, "events")["keys_rewritten"] >= 1
-    assert _counts(spark, workspace) == (5, 5)
-    assert workspace.pruned_files("events") is not None
-    tdir = workspace.table_dir("events")
-    assert not [d for _root, dirs, _names in os.walk(tdir) for d in dirs
-                if d == "_spark_metadata"]
-
-
-def test_stream_replayed_batch_lands_once(spark, workspace, tmp_path):
-    """A micro-batch Spark replays because its commit was lost (the
-    rows had landed) is skipped by its recorded batch id."""
-    import os
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    (land / "c0.jsonl").write_text("\n".join(
-        json.dumps({"id": i, "time": "2024-05-01T00:00:00"}) for i in range(3)
-    ))
-    _land_stream(spark, workspace, land)
-    assert _counts(spark, workspace) == (3, 3)
-
-    commits = os.path.join(workspace.metadata_dir, "checkpoints", "events.default", "commits")
-    os.remove(os.path.join(commits, "0"))
-    if os.path.exists(os.path.join(commits, ".0.crc")):
-        os.remove(os.path.join(commits, ".0.crc"))
-    _land_stream(spark, workspace, land)
-    assert _counts(spark, workspace) == (3, 3)
 
 
 def test_landing_clears_a_file_sink_log(spark, workspace, tmp_path):
